@@ -44,7 +44,7 @@ def _write(out_dir, name, cols):
 def tables(out_dir, sf, seed, docs, vecs):
     """The star schema, events, documents and embeddings at scale `sf`."""
     os.makedirs(out_dir, exist_ok=True)
-    rng = np.random.default_rng([seed, 1])
+    rng = np.random.default_rng([seed % 2**63, 1])
     n_cust, n_supp = int(150_000 * sf), max(10, int(10_000 * sf))
     n_part, n_ord = int(200_000 * sf), int(1_500_000 * sf)
     n_li, n_ev = int(6_000_000 * sf), int(1_000_000 * sf)
@@ -182,7 +182,7 @@ def taxi(out_dir, target_bytes, seed, months=12):
     Returns the corpus bytes.
     """
     os.makedirs(out_dir, exist_ok=True)
-    rng = np.random.default_rng([seed, 2])
+    rng = np.random.default_rng([seed % 2**63, 2])
     row_len = 100
     per_month = max(1, int(target_bytes / row_len / (months - 1)))
     total = 0
