@@ -1,6 +1,7 @@
 """Build file of the benchmark: compiles the library's `src/main` and the
-benchmark's own Scala driver into one class directory with the Scala
-compiler that ships in the Spark distribution (no sbt, no downloads).
+benchmark's own Scala main (`scala/GraftBench.scala`) into one class
+directory with the Scala compiler that ships in the Spark distribution
+(no sbt, no downloads).
 
     python3 perfbench/build.py            # build into $CARGO_TARGET_DIR or .bench_build
 

@@ -5,23 +5,22 @@
 
 Run from the root of a checkout. It builds the library from `src/main`
 (see build.py), generates the workload's inputs from the seed, and runs
-the library in fresh JVMs at local[<cpus>] with the Tier-1 heap (2-8 g,
-half of RAM):
+the library in a fresh JVM at local[<cpus>] with the Tier-1 heap (2-8 g,
+half of RAM), in an empty working directory so stores and in-JVM memos
+start cold:
 
-  * a set-up probe and the main JVM, each in its own empty working
-    directory, so stores and in-JVM memos start cold; `setup_s` is the
-    median of their set-ups (JVM launch to session ready and one
-    warm-up op on tiny inputs, input generation excluded);
-  * the main JVM runs a check pass (every op once, its rows written for
-    the oracle compare), untimed warm passes, then timed passes over the
-    op list, one op at a time in a closed loop. The pass counts are fixed
+  * `setup_s` runs from JVM launch to a ready session and one warm-up op
+    on tiny inputs (input generation excluded);
+  * a check pass runs every op once and writes its rows for the oracle
+    compare; untimed warm passes follow, then timed passes over the op
+    list, one op at a time in a closed loop. The pass counts are fixed
     per workload (timed ones scale with `--seconds`), so every run does
     the same work.
 
-With `--trace 0` the last stdout line carries the end-to-end metrics;
-with `--trace 1` the per-layer ones, measured by a traced run that also
-states its own overhead. Lines before it print every metric by name and
-unit, plus `op_fail_frac`. Everything is written under `.bench_work/`
+With `--trace 0` the last stdout line carries the gated end-to-end
+metrics; with `--trace 1` the per-layer ones, measured by a traced run
+that also states its own overhead. Lines before it print every metric
+by name and unit, `op_fail_frac` included. Everything is written under `.bench_work/`
 and `.bench_out/` in the checkout.
 """
 import argparse
