@@ -55,16 +55,8 @@ object Bench {
     // invocations before C2 compiles them; sf0.001 volumes never get
     // there and the first timed query absorbs ~15s of JIT instead.
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", sfDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.envCores
+    val spark = GraftSession(cpus)
     // Force FULL execution through the noop sink, NOT count():
     // count() lets the optimizer ELIMINATE subtrees whose rows provably
     // don't change the cardinality — on the faithful flagship the

@@ -2,8 +2,6 @@ package graft
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
-
 /** GB-scale flagship benchmark, run in its OWN JVM.
   *
   * Why a separate process (r12 lesson): the flagship used to run last
@@ -26,16 +24,7 @@ import org.apache.spark.sql.SparkSession
 object FlagshipBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     try {
       val g0 = System.nanoTime()
       val glob = graft.sources.TaxiDataGen.ensureScaled(spark, sfDir)

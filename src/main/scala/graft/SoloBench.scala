@@ -2,8 +2,6 @@ package graft
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
-
 /** Standalone-timed tier for the heaviest suite queries (r14 verdict
   * #1), run ONE QUERY PER FRESH JVM — the gb_flagship protocol
   * ([[FlagshipBench]]) extended to individual queries.
@@ -49,16 +47,7 @@ object SoloBench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARMSWEEP_DIR",
       "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     try {
       val fn = SparkEntry.queries(name)
       // noop sink = full execution (Bench's methodology note: count()

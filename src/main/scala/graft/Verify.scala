@@ -1,34 +1,31 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (tools/check_oracle.py). A
+  * query that throws does not stop the others or the oracle dump; the
+  * run then names every failed query and exits non-zero. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     // Taxi oracles read the generated CSV corpus keyed by sfDir basename
     // — point them at the scale actually being verified.
     SparkEntry.oracleSfName = new java.io.File(sfDir).getName
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val failed = SparkEntry.queries.filterNot { case (name, fn) =>
+      val ok = try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        true
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        false
       }
       // operator-internal cache() lifecycles end with the query — don't
       // let storage memory grow across the multi-query run
       spark.catalog.clearCache()
-    }
+      ok
+    }.keys
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -45,5 +42,10 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} queries failed: " +
+        failed.toSeq.sorted.mkString(", "))
+      sys.exit(1)
+    }
   }
 }

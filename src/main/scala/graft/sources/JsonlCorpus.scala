@@ -47,40 +47,24 @@ object JsonlCorpus {
     """[1, 2, 3""",
     """{"text": "orphan object with no doc_id", "lang": "en"}""")
 
-  private val verified = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Ensure the JSONL corpus for `sfDir` exists and is current; returns
-    * the glob to read. Same stamp discipline as TaxiDataGen.ensure.
+  /** Ensure the JSONL corpus for `sfDir` exists and is current (see
+    * [[DerivedCorpus]]); returns the glob to read.
     */
-  def ensure(spark: SparkSession, sfDir: String): String = synchronized {
+  def ensure(spark: SparkSession, sfDir: String): String = {
     val dir = new File(BaseDir, new File(sfDir).getName)
-    val glob = new File(dir, "*.json").getAbsolutePath
-    if (sfDir == verified.get(dir.getAbsolutePath)) return glob
-    import spark.implicits._
-    val docs = graft.Tables.documents(spark, sfDir)
-    // null-keyed docs still serialize (they exercise the keyless-drop
-    // path at ingest) but cannot contribute to the content stamp
-    val ids = docs.select("doc_id").where(col("doc_id").isNotNull)
-      .as[Long].collect().sorted
-    val stamp = s"$Version n=${ids.length} sum=${ids.sum} max=${if (ids.isEmpty) 0 else ids.last}"
-    val marker = new File(dir, "_STAMP")
-    val current = marker.exists() &&
-      new String(Files.readAllBytes(marker.toPath), "UTF-8") == stamp
-    if (!current) {
-      System.err.println(s"[jsonlgen] generating corpus at $dir ($stamp)")
-      docs.select(col("doc_id"), col("text"), col("lang"), col("source"),
-          col("n_chars"))
-        .repartition(4)
-        .write.mode("overwrite").json(dir.getAbsolutePath)
+    // null-keyed docs still serialize: they exercise the keyless-drop
+    // path at ingest
+    val docs = graft.Tables.documents(spark, sfDir).select(col("doc_id"),
+      col("text"), col("lang"), col("source"), col("n_chars"))
+    DerivedCorpus.ensure(dir, sfDir, Version, docs, "jsonlgen") {
+      docs.repartition(4).write.mode("overwrite").json(dir.getAbsolutePath)
       // rename part-*.json? Spark already writes .json suffixes; add
       // the corrupt file AFTER the overwrite so it survives
       val corrupt = new File(dir, "zz_corrupt.json")
       Files.write(corrupt.toPath,
         (CorruptLines.mkString("\n") + "\n").getBytes("UTF-8"))
-      Files.write(marker.toPath, stamp.getBytes("UTF-8"))
     }
-    verified.put(dir.getAbsolutePath, sfDir)
-    glob
+    new File(dir, "*.json").getAbsolutePath
   }
 
   /** The ingest query: read the JSONL corpus permissively, keep keyed

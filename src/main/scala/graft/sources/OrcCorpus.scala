@@ -1,7 +1,6 @@
 package graft.sources
 
 import java.io.File
-import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -40,31 +39,16 @@ object OrcCorpus {
 
   private val Version = "orc-v1"
 
-  private val verified = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Ensure the ORC corpus for `sfDir` exists and is current; returns
-    * the directory to read. Same stamp discipline as JsonlCorpus.
+  /** Ensure the ORC corpus for `sfDir` exists and is current (see
+    * [[DerivedCorpus]]); returns the directory to read.
     */
-  def ensure(spark: SparkSession, sfDir: String): String = synchronized {
+  def ensure(spark: SparkSession, sfDir: String): String = {
     val dir = new File(BaseDir, new File(sfDir).getName)
-    if (sfDir == verified.get(dir.getAbsolutePath)) return dir.getAbsolutePath
-    import spark.implicits._
-    val docs = graft.Tables.documents(spark, sfDir)
-    val ids = docs.select("doc_id").where(col("doc_id").isNotNull)
-      .as[Long].collect().sorted
-    val stamp = s"$Version n=${ids.length} sum=${ids.sum} max=${if (ids.isEmpty) 0 else ids.last}"
-    val marker = new File(dir, "_STAMP")
-    val current = marker.exists() &&
-      new String(Files.readAllBytes(marker.toPath), "UTF-8") == stamp
-    if (!current) {
-      System.err.println(s"[orcgen] generating corpus at $dir ($stamp)")
-      docs.select(col("doc_id"), col("text"), col("lang"), col("source"),
-          col("n_chars"))
-        .repartition(4)
-        .write.mode("overwrite").orc(dir.getAbsolutePath)
-      Files.write(marker.toPath, stamp.getBytes("UTF-8"))
+    val docs = graft.Tables.documents(spark, sfDir).select(col("doc_id"),
+      col("text"), col("lang"), col("source"), col("n_chars"))
+    DerivedCorpus.ensure(dir, sfDir, Version, docs, "orcgen") {
+      docs.repartition(4).write.mode("overwrite").orc(dir.getAbsolutePath)
     }
-    verified.put(dir.getAbsolutePath, sfDir)
     dir.getAbsolutePath
   }
 

@@ -71,12 +71,13 @@ object TaxiCsv {
       val n = st.getPath.getName
       st.isFile && !n.startsWith("_") && !n.startsWith(".")
     }
-      .map { st =>
-        val u = st.getPath.toUri
-        s"${u.getScheme}://${Option(u.getAuthority).getOrElse("")}${u.getPath}"
-      }
+      .map(st => uriString(st.getPath.toUri))
       .toSeq.sorted
   }
+
+  /** `u` in input_file_name()'s scheme://authority/path form. */
+  private def uriString(u: java.net.URI): String =
+    s"${u.getScheme}://${Option(u.getAuthority).getOrElse("")}${u.getPath}"
 
   /** Raw accepted lines, still as a field array, with the source file.
     * Exactly the reference's accept rule: 17 fields + int-parsable field 0.
@@ -98,12 +99,7 @@ object TaxiCsv {
         val expanded = listFiles(spark, path)
         if (expanded.nonEmpty) expanded else Seq(path)
       } else Seq(path)
-    val lines = spark.read.text(paths: _*)
-      .select(input_file_name().as("file"), col("value"))
-    lines
-      .withColumn("fields", split(col("value"), ","))
-      .filter(size(col("fields")) === 17 &&
-        element_at(col("fields"), 1).try_cast("int").isNotNull)
+    accepted(spark, paths)
   }
 
   /** acceptedLines over an EXPLICIT URI list — the reference's
@@ -114,14 +110,16 @@ object TaxiCsv {
     * status-qualified first so the `file` column (input_file_name)
     * joins against them directly. */
   def acceptedLinesListed(spark: SparkSession,
-      paths: Seq[String]): DataFrame = {
-    val lines = spark.read.text(normalizeUris(spark, paths): _*)
+      paths: Seq[String]): DataFrame =
+    accepted(spark, normalizeUris(spark, paths))
+
+  /** The accept rule over the text lines of `paths`. */
+  private def accepted(spark: SparkSession, paths: Seq[String]): DataFrame =
+    spark.read.text(paths: _*)
       .select(input_file_name().as("file"), col("value"))
-    lines
       .withColumn("fields", split(col("value"), ","))
       .filter(size(col("fields")) === 17 &&
         element_at(col("fields"), 1).try_cast("int").isNotNull)
-  }
 
   /** Qualify each URI through its FileSystem's status (existence check
     * + the scheme://authority/path normal form `listFiles` emits). */
@@ -130,8 +128,7 @@ object TaxiCsv {
     val hconf = spark.sparkContext.hadoopConfiguration
     paths.map { p =>
       val hp = new org.apache.hadoop.fs.Path(p)
-      val u = hp.getFileSystem(hconf).getFileStatus(hp).getPath.toUri
-      s"${u.getScheme}://${Option(u.getAuthority).getOrElse("")}${u.getPath}"
+      uriString(hp.getFileSystem(hconf).getFileStatus(hp).getPath.toUri)
     }
   }
 

@@ -51,41 +51,24 @@ object TaxiDataGen {
   private val Version = "v1"
   private val TsFmt = DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
 
-  /** target corpus dir → source sfDir it was last verified against, so
-    * repeat ensure() calls within one JVM (Verify runs two taxi queries;
-    * Bench runs them twice each) skip the events collect and stamp
-    * check. Keyed by the TARGET dir: two different sfDirs sharing a
-    * basename map to the same corpus dir, and a memo hit must only
-    * short-circuit when the corpus was generated from the SAME source.
+  /** The corpus's source relation: every row is a pure function of an
+    * event id, so the ids are all the content it is derived from.
     */
-  private val verified = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private def eventIds(spark: SparkSession, sfDir: String) =
+    graft.Tables.events(spark, sfDir).select("event_id")
 
   /** Ensure the corpus for `sfDir` exists and is current; returns the
     * CSV glob to read. Generation is driver-side (the corpus is sf-bound:
-    * ~10 MB at sf0.1) and runs once per (sf, generator-version) — a
-    * content stamp makes cross-JVM re-runs metadata-only and a per-JVM
-    * memo makes same-session re-runs free.
+    * ~10 MB at sf0.1) and runs once per (source content, generator
+    * version) — see [[DerivedCorpus]].
     */
-  def ensure(spark: SparkSession, sfDir: String): String = synchronized {
+  def ensure(spark: SparkSession, sfDir: String): String = {
     val dir = new File(BaseDir, new File(sfDir).getName)
-    val glob0 = new File(dir, "*.csv").getAbsolutePath
-    if (sfDir == verified.get(dir.getAbsolutePath)) return glob0
-    import spark.implicits._
-    val ids = graft.Tables.events(spark, sfDir)
-      .select("event_id").as[Long].collect().sorted
-    val stamp = s"$Version n=${ids.length} sum=${ids.sum} max=${if (ids.isEmpty) 0 else ids.last}"
-    val marker = new File(dir, "_STAMP")
-    val current = marker.exists() &&
-      new String(Files.readAllBytes(marker.toPath), "UTF-8") == stamp
-    if (!current) {
-      // stamp the event: any stray stderr trace near corpus-(re)build
-      // time must be attributable to generation, not left an orphan
-      System.err.println(s"[taxigen] generating corpus at $dir ($stamp)")
-      generate(ids, dir)
-      Files.write(marker.toPath, stamp.getBytes("UTF-8"))
+    val source = eventIds(spark, sfDir)
+    DerivedCorpus.ensure(dir, sfDir, Version, source, "taxigen") {
+      generate(source.collect().map(_.getLong(0)).sorted, dir)
     }
-    verified.put(dir.getAbsolutePath, sfDir)
-    glob0
+    new File(dir, "*.csv").getAbsolutePath
   }
 
   /** Ensure a REFERENCE-VOLUME corpus (≥ `targetBytes`, default ~3.3 GB
@@ -97,39 +80,30 @@ object TaxiDataGen {
     * structure as the sf-bound corpus, so the ingest pipeline sees the
     * identical accept/filter surface at reference scale. Stamped like
     * `ensure` (generation is a one-time cost per machine; re-runs are
-    * metadata-only), written through streaming per-month writers — the
-    * multi-GB corpus never materializes in memory.
+    * metadata-only; `mult` is a function of the ids and `targetBytes`),
+    * written through streaming per-month writers — the multi-GB corpus
+    * never materializes in memory.
     */
   def ensureScaled(spark: SparkSession, sfDir: String,
-      targetBytes: Long = 3_300_000_000L): String = synchronized {
+      targetBytes: Long = 3_300_000_000L): String = {
     val dir = new File(BaseDir,
       new File(sfDir).getName + "_gb" + (targetBytes >> 30))
-    val glob0 = new File(dir, "*.csv").getAbsolutePath
-    if (sfDir == verified.get(dir.getAbsolutePath)) return glob0
-    import spark.implicits._
-    val ids = graft.Tables.events(spark, sfDir)
-      .select("event_id").as[Long].collect().sorted
-    // measure the actual mean row width on a sample of SYNTHETIC ids so
-    // mult lands the target within a few percent
-    val avgLen = if (ids.isEmpty) 100.0 else {
-      val sample = ids.take(1000)
-      sample.map(id => row(id * 1000, math.floorMod(id * 1000, 12).toInt + 1)
-        .length + 1).sum.toDouble / sample.length
-    }
-    val mult = math.min(1000, math.max(1,
-      math.ceil(targetBytes / (math.max(1, ids.length) * avgLen)).toLong.toInt))
-    val stamp = s"$Version scaled n=${ids.length} sum=${ids.sum} mult=$mult"
-    val marker = new File(dir, "_STAMP")
-    val current = marker.exists() &&
-      new String(Files.readAllBytes(marker.toPath), "UTF-8") == stamp
-    if (!current) {
-      System.err.println(
-        s"[taxigen] generating GB-scale corpus at $dir ($stamp)")
+    val source = eventIds(spark, sfDir)
+    DerivedCorpus.ensure(dir, sfDir, s"$Version scaled target=$targetBytes",
+        source, "taxigen") {
+      val ids = source.collect().map(_.getLong(0)).sorted
+      // measure the actual mean row width on a sample of SYNTHETIC ids so
+      // mult lands the target within a few percent
+      val avgLen = if (ids.isEmpty) 100.0 else {
+        val sample = ids.take(1000)
+        sample.map(id => row(id * 1000, math.floorMod(id * 1000, 12).toInt + 1)
+          .length + 1).sum.toDouble / sample.length
+      }
+      val mult = math.min(1000, math.max(1,
+        math.ceil(targetBytes / (math.max(1, ids.length) * avgLen)).toLong.toInt))
       generateScaled(ids, dir, mult)
-      Files.write(marker.toPath, stamp.getBytes("UTF-8"))
     }
-    verified.put(dir.getAbsolutePath, sfDir)
-    glob0
+    new File(dir, "*.csv").getAbsolutePath
   }
 
   /** Streaming writer for the scaled corpus: one pass over ids × mult,

@@ -21,11 +21,6 @@ class EntrySpec extends AnyFunSuite {
     }
   }
 
-  test("every oracleSql key has a matching query") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracleSql without queries: $missing")
-  }
-
   test("events faithful differs from weighted (two-level semantics active)") {
     val f = SparkEntry.queries("events_speed_faithful")(spark, sfDir)
       .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap

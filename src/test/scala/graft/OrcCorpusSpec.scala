@@ -57,4 +57,37 @@ class OrcCorpusSpec extends AnyFunSuite {
     assert(plan.contains("ReadSchema: struct<doc_id:bigint,lang:string>"),
       s"columns not pruned at the ORC scan:\n$plan")
   }
+
+  test("a source with the same doc_ids but different text regenerates both corpora") {
+    // two sf dirs sharing a basename map to the same corpus dirs; their
+    // documents differ only in text, so an id-only stamp would serve the
+    // second one the first one's corpus
+    val root = java.nio.file.Files.createTempDirectory("graft-stale").toFile
+    val name = "graft_stale_probe"
+    val corpora = Seq(new java.io.File(OrcCorpus.BaseDir, name),
+      new java.io.File(graft.sources.JsonlCorpus.BaseDir, name))
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles).foreach(_.foreach(rm)); f.delete()
+    }
+    try {
+      val Seq(sfA, sfB) = Seq("a", "b").map(d => s"$root/$d/$name")
+      val docs = Tables.documents(spark, sfDir)
+      docs.write.parquet(s"$sfA/documents.parquet")
+      docs.withColumn("text", concat(col("text"), lit(" edited")))
+        .write.parquet(s"$sfB/documents.parquet")
+      // (doc_id, text digest) pairs of `got` missing from `want`
+      def stale(got: org.apache.spark.sql.DataFrame,
+          want: org.apache.spark.sql.DataFrame) = got.exceptAll(want).count()
+      for (sf <- Seq(sfA, sfB)) {
+        val src = Tables.documents(spark, sf)
+          .select(col("doc_id"), md5(col("text")).as("m"))
+        val orc = spark.read.orc(OrcCorpus.ensure(spark, sf))
+          .select(col("doc_id"), md5(col("text")).as("m"))
+        assert(stale(orc, src) === 0 && orc.count() === src.count(), sf)
+        val jsonl = graft.sources.JsonlCorpus.ingest(spark, sf)
+          .select("doc_id", "text_md5")
+        assert(stale(jsonl, src) === 0, sf)
+      }
+    } finally (root +: corpora).foreach(rm)
+  }
 }

@@ -4,24 +4,13 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local SparkSession for the whole test run (guide: one
   * session per suite at most; sharing across suites avoids repeated
-  * JVM-wide init under sbt's forked test JVM).
+  * JVM-wide init under sbt's forked test JVM). The library's own
+  * extensions ride along in every spec — the injected optimizer rule is
+  * integration-exercised by the whole suite, not just its targeted plan
+  * test.
   */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      // the library's own extensions ride along in every spec — the
-      // injected optimizer rule is integration-exercised by the whole
-      // suite, not just its targeted plan test
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.warehouse.dir", "target/test-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession(cores = 4, conf = Map(
+    "spark.app.name" -> "graft-test",
+    "spark.sql.warehouse.dir" -> "target/test-warehouse"))
 }
