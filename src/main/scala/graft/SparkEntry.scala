@@ -109,7 +109,7 @@ object SparkEntry {
           (dayofweek(col("ts")) - 1).cast("int").as("day"), col("value")),
         col("grp"), col("day"), col("value"), 0 to 6,
         keyName = "day", outName = "avg_value",
-        groupsOpt = Some((0 to 3).toDF("_grp"))
+        groupsOpt = Some(TwoLevelMean.Groups(s, 0 to 3))
       ).orderBy("day")
     },
       // group domain is the fixed 0..3 (mirrors groupsOpt on the Spark

@@ -5,7 +5,7 @@ import java.time.ZoneId
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, Nondeterministic, TimeZoneAwareExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType, TimestampType}
+import org.apache.spark.sql.types.{DataType, IntegerType, StringType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Identity wrapper the optimizer treats as non-deterministic: a
@@ -198,5 +198,104 @@ object ParseTs19 {
         .atZone(zone).toInstant
       inst.getEpochSecond * 1000000L + inst.getNano / 1000L
     } catch { case _: java.time.DateTimeException => Long.MinValue }
+  }
+}
+
+/** Field count of a CSV line split on ',': `#commas + 1`, in one
+  * allocation-free pass over the line's bytes. Equal to
+  * `size(split(line, ",", -1))` on every input — the empty line is one
+  * empty field, and trailing empties count — because the byte 0x2C
+  * never occurs inside a multi-byte UTF-8 sequence and no invalid byte
+  * decodes to a comma.
+  *
+  * Why a kernel: `UTF8String.split` decodes the whole line to a Java
+  * String, runs `String.split` (one String per field) and re-encodes
+  * every field, and the accept filter's short-circuit codegen does no
+  * common-subexpression elimination, so each `split` in a line's accept
+  * rule and projection runs in full. Counting commas over the bytes
+  * emits as one static call inside WholeStageCodegen.
+  */
+case class CsvFieldCount(child: Expression) extends UnaryExpression
+    with ExpectsInputTypes {
+
+  override def inputTypes = Seq(StringType)
+  override def dataType: DataType = IntegerType
+  override def prettyName: String = "csv_field_count"
+
+  override def nullSafeEval(input: Any): Any =
+    CsvFieldCount.count(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.CsvFieldCount.count($c)")
+
+  override protected def withNewChildInternal(newChild: Expression): CsvFieldCount =
+    copy(child = newChild)
+}
+
+object CsvFieldCount {
+  def count(line: UTF8String): Int = {
+    val n = line.numBytes()
+    var fields = 1
+    var p = 0
+    while (p < n) {
+      if (line.getByte(p) == ',') fields += 1
+      p += 1
+    }
+    fields
+  }
+}
+
+/** Field `index` (0-based) of a CSV line split on ',', or NULL when the
+  * line has `index` commas or fewer. Equal to
+  * `try_element_at(split(line, ",", -1), index + 1)` on every input:
+  *   - an all-ASCII field is a zero-copy slice of the line's bytes;
+  *   - a field with any byte >= 0x80 takes `split`'s own UTF-8 decode
+  *     and re-encode, so invalid bytes become U+FFFD exactly as they do
+  *     in `split` (the decoder resynchronizes at every ASCII byte, so
+  *     decoding one field equals decoding the line and cutting it).
+  * See [[CsvFieldCount]] for why this is a kernel.
+  */
+case class CsvField(child: Expression, index: Int) extends UnaryExpression
+    with ExpectsInputTypes {
+  require(index >= 0, s"csv_field index must be >= 0, got $index")
+
+  override def inputTypes = Seq(StringType)
+  override def dataType: DataType = StringType
+  override def nullable: Boolean = true
+  override def prettyName: String = "csv_field"
+
+  override def nullSafeEval(input: Any): Any =
+    CsvField.field(input.asInstanceOf[UTF8String], index)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c => s"""
+      |${ev.value} = graft.functions.CsvField.field($c, $index);
+      |${ev.isNull} = ${ev.value} == null;
+      |""".stripMargin)
+
+  override protected def withNewChildInternal(newChild: Expression): CsvField =
+    copy(child = newChild)
+}
+
+object CsvField {
+  def field(line: UTF8String, index: Int): UTF8String = {
+    val n = line.numBytes()
+    var p = 0
+    var k = 0
+    while (k < index) {
+      while (p < n && line.getByte(p) != ',') p += 1
+      if (p == n) return null
+      p += 1
+      k += 1
+    }
+    val start = p
+    var ascii = true
+    while (p < n && line.getByte(p) != ',') {
+      if (line.getByte(p) < 0) ascii = false
+      p += 1
+    }
+    val slice = UTF8String.fromAddress(line.getBaseObject,
+      line.getBaseOffset + start, p - start)
+    if (ascii) slice else UTF8String.fromString(slice.toString)
   }
 }

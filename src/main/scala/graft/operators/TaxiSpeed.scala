@@ -64,11 +64,11 @@ object TaxiSpeed {
   def faithfulAvgByDowListed(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = {
     import spark.implicits._
-    val files = graft.sources.TaxiCsv.listFiles(spark, path).toDF("_grp")
+    val files = graft.sources.TaxiCsv.listFiles(spark, path)
     TwoLevelMean.faithful(withSpeed(graft.sources.TaxiCsv.trips(spark, path)),
       col("file"), col("day"), col("speed_mph"),
       0 to 6, keyName = "day", outName = "avg_speed_mph",
-      groupsOpt = Some(files))
+      groupsOpt = Some(TwoLevelMean.Groups(spark, files)))
   }
 
   /** Faithful mode over an EXPLICIT URI list — the reference's actual
@@ -87,7 +87,7 @@ object TaxiSpeed {
       withSpeed(graft.sources.TaxiCsv.tripsListed(spark, norm)),
       col("file"), col("day"), col("speed_mph"),
       0 to 6, keyName = "day", outName = "avg_speed_mph",
-      groupsOpt = Some(norm.toDF("_grp")))
+      groupsOpt = Some(TwoLevelMean.Groups(spark, norm)))
   }
 
   /** Weighted (corrected) mode: plain global mean per day — every trip

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's reduce semantics, generalized: an *unweighted mean of
@@ -22,6 +22,17 @@ import org.apache.spark.sql.functions._
   */
 object TwoLevelMean {
 
+  /** A group domain the caller already holds on the driver (a file
+    * listing, a fixed id range): the one-column `_grp` frame the facts
+    * are restricted to, and its size, known without a Spark job.
+    */
+  final case class Groups(frame: DataFrame, size: Int)
+
+  object Groups {
+    def apply[G: Encoder](spark: SparkSession, groups: Seq[G]): Groups =
+      Groups(spark.createDataset(groups).toDF("_grp"), groups.size)
+  }
+
   /** Unweighted mean-of-means of `valueCol` by `keyCol`, per-`groupCol`
     * means zero-filled over the dense key domain `keyDomain`.
     *
@@ -35,7 +46,7 @@ object TwoLevelMean {
   def faithful(df: DataFrame, groupCol: Column, keyCol: Column,
       valueCol: Column, keyDomain: Seq[Int],
       keyName: String = "key", outName: String = "mean",
-      groupsOpt: Option[DataFrame] = None): DataFrame = {
+      groupsOpt: Option[Groups] = None): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
 
@@ -52,10 +63,9 @@ object TwoLevelMean {
       //   avg over N groups of zero-filled means
       //     = sum(present per-group means) / N        (zeros add nothing)
       // — a single linear pipeline, one facts scan, no dense frame and
-      // no multi-branch subplan reuse. N comes from the (driver-built)
-      // groups frame.
-      case Some(g) =>
-        val n = g.count().toDouble
+      // no multi-branch subplan reuse. N is the driver-side domain's
+      // size, so building the plan runs no job.
+      case Some(Groups(g, n)) =>
         // Restrict to the declared domain (broadcast semi-join), don't
         // just take its count: data-derived groups OUTSIDE the domain
         // (e.g. a negative key modulo) must not leak into the sum —
@@ -68,7 +78,7 @@ object TwoLevelMean {
         // unsupported for BroadcastHashJoin and Spark drops it with a
         // HintErrorLogger warn, silently falling back to a shuffle.
         keys.join(broadcast(perKey), Seq(keyName), "left")
-          .select(col(keyName), (coalesce($"_s", lit(0.0)) / lit(n)).as(outName))
+          .select(col(keyName), (coalesce($"_s", lit(0.0)) / lit(n.toDouble)).as(outName))
 
       // Group domain derived from the data: dense (group × key) frame
       // left-joined to the aggregates, then the level-2 mean. The groups

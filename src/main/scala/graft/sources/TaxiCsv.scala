@@ -1,13 +1,14 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Shims
 
 /** NYC TLC Yellow-taxi CSV ingest with the reference's exact line-accept
   * contract (see /root/reference/ServerlessMapReduce/Sample.cs:146-166):
   *
   *   - the unit of input is a raw text line (Sample.cs:146-151);
-  *   - a line is KEPT iff it splits on ',' into exactly 17 fields AND
+  *   - a line is KEPT iff it has exactly 17 ','-separated fields AND
   *     field 0 parses as an int (Sample.cs:153-157) — this silently drops
   *     the header row, blank lines, and any malformed record;
   *   - only fields 0 (probe), 1 (pickup ts), 2 (dropoff ts) and
@@ -26,12 +27,18 @@ import org.apache.spark.sql.functions._
   *     ordinary column, so the two-level mean (SURVEY.md §2.2) is plain
   *     relational algebra downstream.
   *
-  * Note on Split semantics: Spark's `split(col, ",")` uses limit = -1,
-  * keeping trailing empty strings — identical to C# `string.Split(',')`.
+  * Field contract: a line's fields are its bytes cut at every ',', with
+  * empty and trailing empty fields kept — C# `string.Split(',')`, and
+  * Spark's string-split function with limit -1. The codegen'd kernels
+  * `CsvFieldCount` (the field count, `#commas + 1`) and `CsvField`
+  * (field i, a zero-copy slice for ASCII, NULL if absent) read it
+  * without materializing a field array, and equal the string-split
+  * function's answer on every input (see their docs).
   *
-  * All casts use `try_cast` / `try_to_timestamp` so the accept-probe is
-  * null-on-failure under Spark 4's default ANSI mode (the reference's
-  * `int.TryParse` probe, Sample.cs:154).
+  * The int probe is Spark's `try_cast(... AS int)` and the casts are
+  * `try_cast` / `ParseTs19`, so the accept-probe is null-on-failure under
+  * Spark 4's default ANSI mode (the reference's `int.TryParse` probe,
+  * Sample.cs:154).
   */
 object TaxiCsv {
 
@@ -79,7 +86,7 @@ object TaxiCsv {
   private def uriString(u: java.net.URI): String =
     s"${u.getScheme}://${Option(u.getAuthority).getOrElse("")}${u.getPath}"
 
-  /** Raw accepted lines, still as a field array, with the source file.
+  /** Raw accepted lines (`file`, `value`), with the source file.
     * Exactly the reference's accept rule: 17 fields + int-parsable field 0.
     * `file` is the raw input_file_name() URI (an opaque per-file key —
     * kept transform-free in the hot scan).
@@ -117,9 +124,15 @@ object TaxiCsv {
   private def accepted(spark: SparkSession, paths: Seq[String]): DataFrame =
     spark.read.text(paths: _*)
       .select(input_file_name().as("file"), col("value"))
-      .withColumn("fields", split(col("value"), ","))
-      .filter(size(col("fields")) === 17 &&
-        element_at(col("fields"), 1).try_cast("int").isNotNull)
+      .filter(fieldCount(col("value")) === columns.size &&
+        field(col("value"), 0).try_cast("int").isNotNull)
+
+  private def fieldCount(line: Column): Column =
+    Shims.column(graft.functions.CsvFieldCount(Shims.expression(line)))
+
+  /** 0-based field `i` of `line` (NULL if absent). */
+  private def field(line: Column, i: Int): Column =
+    Shims.column(graft.functions.CsvField(Shims.expression(line), i))
 
   /** Qualify each URI through its FileSystem's status (existence check
     * + the scheme://authority/path normal form `listFiles` emits). */
@@ -152,10 +165,9 @@ object TaxiCsv {
     * still fuses into the scan. See Opaque's doc for why the
     * filter-based barrier idioms (rand, opaque-true) fail.
     */
-  private def parseTs(c: org.apache.spark.sql.Column, opaque: Boolean = false) = {
-    val e = graft.functions.ParseTs19(org.apache.spark.sql.graft.Shims.expression(c))
-    org.apache.spark.sql.graft.Shims.column(
-      if (opaque) graft.functions.Opaque(e) else e)
+  private def parseTs(c: Column, opaque: Boolean = false) = {
+    val e = graft.functions.ParseTs19(Shims.expression(c))
+    Shims.column(if (opaque) graft.functions.Opaque(e) else e)
   }
 
   /** Typed trips projection: only the columns the reference consumes.
@@ -170,36 +182,38 @@ object TaxiCsv {
   def tripsListed(spark: SparkSession, paths: Seq[String]): DataFrame =
     tripsProjection(acceptedLinesListed(spark, paths))
 
-  private def tripsProjection(accepted: DataFrame): DataFrame =
+  private def tripsProjection(accepted: DataFrame): DataFrame = {
+    val line = col("value")
     accepted.select(
       col("file"),
-      parseTs(element_at(col("fields"), 2), opaque = true).as("pickup_ts"),
-      parseTs(element_at(col("fields"), 3)).as("dropoff_ts"),
-      element_at(col("fields"), 5).try_cast("double").as("trip_distance"))
+      parseTs(field(line, 1), opaque = true).as("pickup_ts"),
+      parseTs(field(line, 2)).as("dropoff_ts"),
+      field(line, 4).try_cast("double").as("trip_distance"))
+  }
 
   /** Fully-typed wide projection of all 17 columns (beyond the reference's
     * 4-column consumption — for the generalized engine surface).
     */
   def tripsWide(spark: SparkSession, path: String): DataFrame = {
-    val f = col("fields")
+    def f(i: Int) = field(col("value"), i)
     val typed = Seq(
-      element_at(f, 1).try_cast("int").as("vendor_id"),
-      parseTs(element_at(f, 2), opaque = true).as("tpep_pickup_datetime"),
-      parseTs(element_at(f, 3)).as("tpep_dropoff_datetime"),
-      element_at(f, 4).try_cast("int").as("passenger_count"),
-      element_at(f, 5).try_cast("double").as("trip_distance"),
-      element_at(f, 6).try_cast("int").as("ratecode_id"),
-      element_at(f, 7).as("store_and_fwd_flag"),
-      element_at(f, 8).try_cast("int").as("pu_location_id"),
-      element_at(f, 9).try_cast("int").as("do_location_id"),
-      element_at(f, 10).try_cast("int").as("payment_type"),
-      element_at(f, 11).try_cast("double").as("fare_amount"),
-      element_at(f, 12).try_cast("double").as("extra"),
-      element_at(f, 13).try_cast("double").as("mta_tax"),
-      element_at(f, 14).try_cast("double").as("tip_amount"),
-      element_at(f, 15).try_cast("double").as("tolls_amount"),
-      element_at(f, 16).try_cast("double").as("improvement_surcharge"),
-      element_at(f, 17).try_cast("double").as("total_amount"))
+      f(0).try_cast("int").as("vendor_id"),
+      parseTs(f(1), opaque = true).as("tpep_pickup_datetime"),
+      parseTs(f(2)).as("tpep_dropoff_datetime"),
+      f(3).try_cast("int").as("passenger_count"),
+      f(4).try_cast("double").as("trip_distance"),
+      f(5).try_cast("int").as("ratecode_id"),
+      f(6).as("store_and_fwd_flag"),
+      f(7).try_cast("int").as("pu_location_id"),
+      f(8).try_cast("int").as("do_location_id"),
+      f(9).try_cast("int").as("payment_type"),
+      f(10).try_cast("double").as("fare_amount"),
+      f(11).try_cast("double").as("extra"),
+      f(12).try_cast("double").as("mta_tax"),
+      f(13).try_cast("double").as("tip_amount"),
+      f(14).try_cast("double").as("tolls_amount"),
+      f(15).try_cast("double").as("improvement_surcharge"),
+      f(16).try_cast("double").as("total_amount"))
     acceptedLines(spark, path).select(col("file") +: typed: _*)
   }
 }

@@ -55,6 +55,33 @@ class TwoLevelMeanPropertySpec extends AnyFunSuite {
     }
   }
 
+  test("faithful over a driver-held group domain: no action at build, absent groups count") {
+    // group 4 never occurs in the data; it still divides every day's sum
+    val listener = ProgressListener.attach(spark)
+    def actions(): Int = {
+      org.apache.spark.sql.graft.Shims.drainListenerBus(spark.sparkContext)
+      listener.snapshot.size
+    }
+    try {
+      samples(5).foreach { rows =>
+        val df = rows.toDF("grp", "day", "v")
+        val before = actions()
+        val q = TwoLevelMean.faithful(df, col("grp"), col("day"), col("v"),
+          0 to 6, keyName = "day", outName = "m",
+          groupsOpt = Some(TwoLevelMean.Groups(spark, 0 to 4)))
+        assert(actions() === before, "building faithful must run no Dataset action")
+        val got = q.collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+        (0 to 6).foreach { d =>
+          val perGroup = (0 to 4).map { g =>
+            val vs = rows.filter(r => r._1 == g && r._2 == d).map(_._3)
+            if (vs.isEmpty) 0.0 else vs.sum / vs.size
+          }
+          assert(math.abs(got(d) - perGroup.sum / 5) < 1e-9, s"day $d rows=$rows")
+        }
+      }
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("weighted == plain global mean per key (random tables)") {
     samples(20).foreach { rows =>
       val df = rows.toDF("grp", "day", "v")
