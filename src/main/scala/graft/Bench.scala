@@ -137,171 +137,67 @@ object Bench {
         else t
       name -> v
     }
-    // s3 IVF build-vs-query split: the suite's s3 number amortizes the
-    // index across passes (pass 1 builds, pass 2 queries, min = query) —
-    // these two time the halves explicitly so the artifact states the
-    // amortization instead of implying it.
-    // METHODOLOGY NOTE (r10): the split runs use the noop-sink run()
-    // (full execution) — r9 and earlier used count(), which can elide
-    // non-cardinality-changing subtrees, so split numbers from r9-
-    // era artifacts are not comparable to r10+ ones.
-    val (ivfBuild, ivfQuery) = try {
-      graft.operators.Similarity.invalidateIvfIndexes()
-      val b0 = System.nanoTime()
-      val idx = graft.operators.Similarity.ivfIndexFor(spark, sfDir)
-      val b = (System.nanoTime() - b0) / 1e9
-      // noop sink, not count(): the split numbers must share the full-
-      // execution methodology of the per-query passes (count() lets the
-      // optimizer elide non-cardinality-changing subtrees)
-      val q0 = System.nanoTime()
-      run(graft.operators.Similarity.ivfTopK(spark, sfDir))
-      val q = (System.nanoTime() - q0) / 1e9
-      require(idx != null)
-      (b, q)
-    } catch { case NonFatal(e) =>
-      System.err.println("[bench] s3 ivf build/query split failed:")
-      e.printStackTrace()
-      (-1.0, -1.0)
+    // Build-vs-query and cold-vs-warm splits: the suite's s2/s3/s13 and
+    // q88/q91 numbers amortize an index build or a publish across passes
+    // (pass 1 builds, pass 2 queries, min = query); these time the two
+    // halves explicitly so the artifact states the amortization instead
+    // of implying it. `reset` drops the memoized index or the persisted
+    // table, then `first` and `second` are each timed after a
+    // clearCache. Both halves share the passes' noop-sink methodology
+    // (r9 and earlier used count(), which elides non-cardinality-
+    // changing subtrees; those split numbers are not comparable).
+    def secs(body: => Unit): Double = {
+      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
     }
-    // s2 LSH build-vs-query split, same contract as s3's.
-    val (lshBuild, lshQuery) = try {
-      graft.operators.Similarity.invalidateLshIndexes()
-      val b0 = System.nanoTime()
-      val idx = graft.operators.Similarity.lshIndexFor(spark, sfDir)
-      val b = (System.nanoTime() - b0) / 1e9
-      val q0 = System.nanoTime()
-      run(graft.operators.Similarity.lshTopK(spark, sfDir))
-      val q = (System.nanoTime() - q0) / 1e9
-      require(idx != null)
-      (b, q)
-    } catch { case NonFatal(e) =>
-      System.err.println("[bench] s2 lsh build/query split failed:")
-      e.printStackTrace()
-      (-1.0, -1.0)
-    }
-    // q88 cold-publish vs warm-read split (the s2/s3 amortization
-    // contract, on the lakehouse store): the suite's q88 number
-    // amortizes the two publishes across passes — these two state it.
-    // Cold = drop the table, run the full base-publish + merge-publish
-    // + read; warm = manifest-head resolve + versioned read only.
-    val (q88Cold, q88Warm) = try {
-      graft.operators.LakehouseMerge.invalidateOrdersSummary(spark, sfDir)
-      val c0 = System.nanoTime()
-      run(graft.operators.LakehouseMerge.upsertOrdersSummary(spark, sfDir))
-      val c = (System.nanoTime() - c0) / 1e9
-      spark.catalog.clearCache()
-      val w0 = System.nanoTime()
-      run(graft.operators.LakehouseMerge.upsertOrdersSummary(spark, sfDir))
-      val wv = (System.nanoTime() - w0) / 1e9
-      spark.catalog.clearCache()
-      (c, wv)
-    } catch { case NonFatal(e) =>
-      System.err.println("[bench] q88 cold/warm split failed:")
-      e.printStackTrace()
-      (-1.0, -1.0)
-    }
-    // q91 cold-erase vs warm-read split (same contract): cold = drop
-    // the COW store, publish base + erase + mixed-ownership read;
-    // warm = manifest resolve + partition-pruned read only.
-    val (q91Cold, q91Warm) = try {
-      graft.operators.CowErasure.invalidate(spark, sfDir)
-      val c0 = System.nanoTime()
-      run(graft.operators.CowErasure.erasedSummary(spark, sfDir))
-      val c = (System.nanoTime() - c0) / 1e9
-      spark.catalog.clearCache()
-      val w0 = System.nanoTime()
-      run(graft.operators.CowErasure.erasedSummary(spark, sfDir))
-      val wv = (System.nanoTime() - w0) / 1e9
-      spark.catalog.clearCache()
-      (c, wv)
-    } catch { case NonFatal(e) =>
-      System.err.println("[bench] q91 cold/warm split failed:")
-      e.printStackTrace()
-      (-1.0, -1.0)
-    }
-
-    // s13 IVF-PQ build-vs-query split, same contract as s3's: the
-    // build is timed DIRECTLY (the index call materializes it — the
-    // checkpointed code table and collected centroids are eager), not
-    // as a difference of two noisy end-to-end runs.
-    val (ivfPqBuild, ivfPqQuery) = try {
-      graft.operators.Similarity.invalidateIvfPqIndexes()
-      spark.catalog.clearCache()
-      val b0 = System.nanoTime()
-      val idx = graft.operators.Similarity.ivfPqIndexFor(spark, sfDir)
-      val b = (System.nanoTime() - b0) / 1e9
-      spark.catalog.clearCache()
-      val q0 = System.nanoTime()
-      run(graft.operators.Similarity.ivfPqTopK(spark, sfDir))
-      val q = (System.nanoTime() - q0) / 1e9
-      require(idx != null)
-      (b, q)
-    } catch { case NonFatal(e) =>
-      System.err.println("[bench] s13 ivfpq build/query split failed:")
-      e.printStackTrace()
-      (-1.0, -1.0)
-    }
-    // Accuracy of the approximate operators, machine-readable
-    // (r11 verdict #4): recall@5 vs the s1 exact baseline for the ANN
-    // family, HLL relative error for q27, Bloom false-negative count +
-    // extra-flag fraction for d14 — at THIS bench's SF, so the driver
-    // artifact carries the correctness story for the rows-only queries
-    // instead of it living only in spec info() lines. (s14 is not
-    // re-measured: it is s3's query over a persisted index, exact-
-    // parity-proven in IndexStoreSpec, so s3_recall_at5 covers it.)
-    val accJson = try {
-      import org.apache.spark.sql.functions.col
-      def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] = {
-        val s = df.select("query_id", "neighbor_id").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-        spark.catalog.clearCache(); s
+    def split(label: String, reset: => Unit, first: => Unit,
+        second: => Unit): (Double, Double) =
+      try {
+        reset
+        spark.catalog.clearCache()
+        val a = secs(first)
+        spark.catalog.clearCache()
+        val b = secs(second)
+        spark.catalog.clearCache()
+        (a, b)
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[bench] $label split failed:")
+        e.printStackTrace()
+        (-1.0, -1.0)
       }
-      val exact = pairSet(graft.operators.Similarity.bruteForceTopK(spark, sfDir))
-      def recall(df: org.apache.spark.sql.DataFrame): Double =
-        (exact intersect pairSet(df)).size.toDouble / exact.size
-      val rS2 = recall(graft.operators.Similarity.lshTopK(spark, sfDir))
-      val rS3 = recall(graft.operators.Similarity.ivfTopK(spark, sfDir))
-      val rS10 = recall(graft.operators.Similarity.pqTopK(spark, sfDir))
-      val rS13 = recall(graft.operators.Similarity.ivfPqTopK(spark, sfDir))
-      // s16's baseline is the exact all-pairs JOIN (s4), not s1's
-      // 5-query scan — every corpus row is a query here
-      val exactJoin = pairSet(graft.operators.Similarity.knnJoin(spark, sfDir))
-      val rS16 = (exactJoin intersect
-        pairSet(graft.operators.Similarity.ivfKnnJoin(spark, sfDir)))
-        .size.toDouble / exactJoin.size
-      val q27 = graft.operators.RelationalQueries2.approxDistinct(spark, sfDir)
-        .select("approx_orders", "exact_orders").head()
-      val hllErr =
-        math.abs(q27.getLong(0).toDouble - q27.getLong(1)) / q27.getLong(1)
-      val exFlags = graft.operators.CorpusOps.decontaminate(spark, sfDir)
-        .select(col("doc_id"), col("n_shared"))
-      val blFlags = graft.operators.CorpusOps.decontaminateBloom(spark, sfDir)
-        .select(col("doc_id"), col("n_shared_bloom"))
-      // superset contract: every exactly-flagged doc bloom-flagged with
-      // a >= shared-count; violations are FALSE NEGATIVES (must be 0)
-      val falseNeg = exFlags.as("e").join(blFlags.as("b"), Seq("doc_id"), "left")
-        .filter(col("b.n_shared_bloom").isNull ||
-          col("b.n_shared_bloom") < col("e.n_shared")).count()
-      val extra = blFlags.join(exFlags, Seq("doc_id"), "left_anti").count()
-      val corpus = Tables.documents(spark, sfDir).count()
-      // q87: sketch quantiles vs the exact order statistics, max
-      // relative error across all (event_type, percentile) cells
-      val approxQ = graft.operators.RelationalQueries4
-        .approxQuantiles(spark, sfDir)
-        .collect().map(r => r.getString(0) ->
-          (r.getDouble(1), r.getDouble(2), r.getDouble(3))).toMap
-      val exactQ = Tables.events(spark, sfDir)
-        .filter(col("value").isNotNull && col("event_type").isNotNull)
-        .groupBy(col("event_type"))
-        .agg(org.apache.spark.sql.functions.expr(
-          "percentile(value, array(0.5, 0.95, 0.99))").as("ps"))
-        .collect().map(r => r.getString(0) -> r.getSeq[Double](1)).toMap
-      val q87Err = exactQ.map { case (t, ex) =>
-        val (a50, a95, a99) = approxQ(t)
-        Seq(a50, a95, a99).zip(ex)
-          .map { case (a, e) => math.abs(a - e) / math.max(math.abs(e), 1e-12) }
-          .max
-      }.max
+    import graft.operators.{CowErasure, LakehouseMerge, Similarity}
+    // s3/s2/s13: the build is timed directly (the index call
+    // materializes it: checkpointed relations, collected centroids),
+    // not as a difference of two noisy end-to-end runs.
+    val (ivfBuild, ivfQuery) = split("s3 ivf build/query",
+      Similarity.invalidateIvfIndexes(),
+      require(Similarity.ivfIndexFor(spark, sfDir) != null),
+      run(Similarity.ivfTopK(spark, sfDir)))
+    val (lshBuild, lshQuery) = split("s2 lsh build/query",
+      Similarity.invalidateLshIndexes(),
+      require(Similarity.lshIndexFor(spark, sfDir) != null),
+      run(Similarity.lshTopK(spark, sfDir)))
+    // q88: cold = drop the table, base publish + merge publish + read;
+    // warm = manifest-head resolve + versioned read only.
+    val (q88Cold, q88Warm) = split("q88 cold/warm",
+      LakehouseMerge.invalidateOrdersSummary(spark, sfDir),
+      run(LakehouseMerge.upsertOrdersSummary(spark, sfDir)),
+      run(LakehouseMerge.upsertOrdersSummary(spark, sfDir)))
+    // q91: cold = drop the COW store, publish base + erase + mixed-
+    // ownership read; warm = manifest resolve + partition-pruned read.
+    val (q91Cold, q91Warm) = split("q91 cold/warm",
+      CowErasure.invalidate(spark, sfDir),
+      run(CowErasure.erasedSummary(spark, sfDir)),
+      run(CowErasure.erasedSummary(spark, sfDir)))
+    val (ivfPqBuild, ivfPqQuery) = split("s13 ivfpq build/query",
+      Similarity.invalidateIvfPqIndexes(),
+      require(Similarity.ivfPqIndexFor(spark, sfDir) != null),
+      run(Similarity.ivfPqTopK(spark, sfDir)))
+    // Accuracy of the approximate operators, machine-readable (r11
+    // verdict #4): every bound the registry declares, at THIS bench's
+    // SF, so the driver artifact carries the correctness story for the
+    // rows-only queries instead of it living only in the specs.
+    val accJson = try {
+      val measured = accuracy(spark, sfDir).map { case (_, b, v) => b.metric -> v }
       // g6's hub cap drops customers from pair generation silently
       // (r13 verdict #6) — publish how many, so the cap's coverage
       // loss at this SF is in the artifact, not just the contract
@@ -314,11 +210,11 @@ object Bench {
       val bloomFpr = graft.operators.DataSkipping.bloomFalsePositiveRate(
         spark, graft.operators.DataSkipping.ensureLinear(spark, sfDir))
       spark.catalog.clearCache()
-      System.err.println(f"[bench] accuracy: s2 $rS2%.3f s3 $rS3%.3f " +
-        f"s10 $rS10%.3f s13 $rS13%.3f s16 $rS16%.3f q27 ±$hllErr%.4f " +
-        f"d14 fn=$falseNeg extra=$extra/$corpus q87 ±$q87Err%.5f " +
-        f"g6 capped=$g6Capped bloom fpr=$bloomFpr%.3f")
-      s""""s2_recall_at5":$rS2,"s3_recall_at5":$rS3,"s10_recall_at5":$rS10,"s13_recall_at5":$rS13,"s16_recall_at3":$rS16,"q27_hll_rel_err":$hllErr,"d14_false_negatives":$falseNeg,"d14_extra_flag_frac":${extra.toDouble / corpus},"q87_max_rel_err":$q87Err,"g6_capped_customers":$g6Capped,"q101_bloom_fpr":$bloomFpr,"""
+      System.err.println("[bench] accuracy: " + measured.map { case (k, v) =>
+        f"$k=$v%.4f" }.mkString(" ") + s" g6 capped=$g6Capped" +
+        f" bloom fpr=$bloomFpr%.3f")
+      measured.map { case (k, v) => s""""$k":$v,""" }.mkString +
+        s""""g6_capped_customers":$g6Capped,"q101_bloom_fpr":$bloomFpr,"""
     } catch { case NonFatal(e) =>
       System.err.println("[bench] accuracy block failed:")
       e.printStackTrace()
@@ -359,6 +255,18 @@ object Bench {
     }
     spark.stop()
   }
+
+  /** Every accuracy bound the registry declares ([[SparkEntry.Approx]]),
+    * measured at `sfDir`: (query, bound, value) in registry order. The
+    * cache is cleared after each measure, as after each timed query.
+    */
+  def accuracy(spark: SparkSession,
+      sfDir: String): Seq[(String, SparkEntry.Bound, Double)] =
+    SparkEntry.approxBounds.map { case (query, bound) =>
+      val v = bound.measure(spark, sfDir)
+      spark.catalog.clearCache()
+      (query, bound, v)
+    }
 
   // Fork `mainClass args` into a fresh JVM (this JVM's flags and
   // classpath) and return the payload of its one `marker`-prefixed

@@ -35,18 +35,13 @@ object SparkEntry {
   @volatile var oracleSfName: String = "sf0.01"
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
-    * The reference's FULL faithful semantics (two-level zero-filled
-    * avg-of-averages by day-of-week, Sunday=0 — SURVEY.md §2.2) on the
-    * events table, user_id%4 standing in for the per-file grouping.
+    * The registered `events_speed_faithful`: the reference's FULL
+    * faithful semantics (two-level zero-filled avg-of-averages by
+    * day-of-week, Sunday=0 — SURVEY.md §2.2) on the events table,
+    * user_id%4 standing in for the per-file grouping.
     */
   def entry(spark: SparkSession): DataFrame =
-    TwoLevelMean.faithful(
-      ev(spark, "/root/testdata/sf0.001").select(
-        (col("user_id") % 4).as("grp"),
-        (dayofweek(col("ts")) - 1).cast("int").as("day"), col("value")),
-      col("grp"), col("day"), col("value"), 0 to 6,
-      keyName = "day", outName = "avg_value"
-    ).orderBy("day")
+    queries("events_speed_faithful")(spark, "/root/testdata/sf0.001")
 
   type Build = (SparkSession, String) => DataFrame
 
@@ -71,10 +66,26 @@ object SparkEntry {
   final case class SqlFn(build: () => String) extends Oracle
 
   /** No exact oracle: the query is approximate by design, engines
-    * legitimately differ, and the gate records a rows-only check. Each
-    * such entry states its accuracy contract and the spec asserting it.
+    * legitimately differ, and the gate records a rows-only check. Its
+    * correctness is the accuracy contract `bounds`, declared here once:
+    * Bench publishes each bound's metric ([[Bench.accuracy]]) and the
+    * specs assert each limit at sf0.001.
     */
-  case object Approximate extends Oracle
+  final case class Approx(bounds: Bound*) extends Oracle {
+    require(bounds.nonEmpty, "an approximate query declares at least one bound")
+  }
+
+  /** A measure of one query's accuracy over an sf dir. */
+  type Measure = (SparkSession, String) => Double
+
+  /** One accuracy bound: the metric's published name, how to measure
+    * it, and the limit it must meet.
+    */
+  final case class Bound(metric: String, measure: Measure, limit: Limit)
+
+  sealed trait Limit { def holds(v: Double): Boolean }
+  final case class AtLeast(x: Double) extends Limit { def holds(v: Double): Boolean = v >= x }
+  final case class AtMost(x: Double) extends Limit { def holds(v: Double): Boolean = v <= x }
 
   /** One registered query: its unique name, the Spark builder over an
     * sf dir, and the oracle the correctness gate checks it against.
@@ -98,22 +109,19 @@ object SparkEntry {
     // Faithful mode: unweighted mean of zero-filled per-group means;
     // user_id % 4 plays the reference's one-mapper-per-file grouping.
     // The group domain 0..3 is KNOWN up front (as the reference's file
-    // listing is), so it's passed via groupsOpt — the faithful zero-fill
-    // collapses algebraically to sum/N and the plan scans `events`
-    // exactly once (the data-derived-domain branch needs a second scan
-    // to discover the groups).
+    // listing is) — the faithful zero-fill collapses algebraically to
+    // sum/N and the plan scans `events` exactly once.
     QueryDef("events_speed_faithful", (s, dir) => {
       import s.implicits._
       TwoLevelMean.faithful(
         ev(s, dir).select((col("user_id") % 4).as("grp"),
           (dayofweek(col("ts")) - 1).cast("int").as("day"), col("value")),
         col("grp"), col("day"), col("value"), 0 to 6,
-        keyName = "day", outName = "avg_value",
-        groupsOpt = Some(TwoLevelMean.Groups(s, 0 to 3))
+        TwoLevelMean.Groups(s, 0 to 3), keyName = "day", outName = "avg_value"
       ).orderBy("day")
     },
-      // group domain is the fixed 0..3 (mirrors groupsOpt on the Spark
-      // side — the reference's "listing-known" file set, not data-derived)
+      // group domain is the fixed 0..3 (mirrors the Spark side's Groups —
+      // the reference's "listing-known" file set, not data-derived)
       Sql("""WITH base AS (
         |  SELECT user_id % 4 AS grp, CAST(dayofweek(ts) AS INT) AS day, value
         |  FROM events
@@ -476,9 +484,10 @@ object SparkEntry {
 
     // HLL sketches are engine-specific — Spark's and DuckDB's
     // approx_count_distinct disagree within their error bounds, so a hash
-    // compare is meaningless. The 5%-error-vs-exact gate lives in
-    // Relational2Spec ("q27 approx distinct is within HLL error").
-    QueryDef("q27_approx_distinct", RelationalQueries2.approxDistinct(_, _), Approximate),
+    // compare is meaningless. Contract: the sketch's distinct order count
+    // within 5 % of the exact one.
+    QueryDef("q27_approx_distinct", RelationalQueries2.approxDistinct(_, _),
+      Approx(Bound("q27_hll_rel_err", hllRelErr, AtMost(0.05)))),
 
     // Skew join, production shape: only DETECTED hot keys are salted
     // (none at this key cardinality → runtime tracks the plain join);
@@ -1566,8 +1575,10 @@ object SparkEntry {
         |ORDER BY d.event_type, d.day""")),
 
     // Mergeable quantile sketch (p50/p95/p99): approximate tier — no
-    // SQL oracle; error published per run as q87_max_rel_err
-    QueryDef("q87_approx_quantiles", RelationalQueries4.approxQuantiles(_, _), Approximate),
+    // SQL oracle. Contract: every (event_type, p) cell within the
+    // sketch's rank-error guarantee, n/accuracy + 2 ranks.
+    QueryDef("q87_approx_quantiles", RelationalQueries4.approxQuantiles(_, _),
+      Approx(Bound("q87_rank_err_ratio", quantileRankErrRatio, AtMost(1.0)))),
 
     // Write-audit-publish MERGE into a versioned persisted table:
     // base publish + delta merge + conservation audit, read through
@@ -2074,7 +2085,7 @@ object SparkEntry {
         |ORDER BY doc_id""")),
 
     // r13 verdict #1: registered form is the rational-idf companion
-    // (exact arithmetic, full hash oracle); ln idf is spec-gated
+    // (exact arithmetic, full hash oracle); ln idf drifts in the last ulp
     QueryDef("t6_tfidf", TextAnalysis.tfidfTopKLin(_, _),
       // t6 (rational-idf registered form): tfidf_lin is one double
       // divide of two exact bigint products — bit-identical; the exact
@@ -2583,8 +2594,8 @@ object SparkEntry {
         |ORDER BY rank""")),
 
     // Bigram fluency signal, registered as the exact count-moment +
-    // ratio-of-sums companion (r13 verdict #1); the per-pair -ln
-    // interpolated form is spec-gated
+    // ratio-of-sums companion (r13 verdict #1), free of per-pair -ln
+    // drift
     QueryDef("t16_bigram_logprob", TextAnalysis.bigramMoments(_, _),
       // t16 (count-moment registered form): zipped double-unnest of the
       // shifted token-list slices builds the adjacent pairs; the sums
@@ -2619,7 +2630,7 @@ object SparkEntry {
         |GROUP BY doc_id, n, v ORDER BY doc_id""")),
 
     // Zipf health check, registered as the exact rank-octave histogram
-    // (r13 verdict #1); the ln-ln OLS fit is spec-gated
+    // (r13 verdict #1), free of the ln-ln OLS fit's amplified ulp drift
     QueryDef("t17_zipf_fit", TextAnalysis.zipfOctaves(_, _),
       // t17 (octave-histogram registered form): ⌊log₂ rank⌋ via the same
       // integer CASE ladder as the Spark side — exact at power-of-two
@@ -2998,10 +3009,14 @@ object SparkEntry {
 
     // Bloom-filter decontamination (bounded broadcast). The sketch bytes
     // are engine-specific (Spark's bloom_filter_agg), so no cross-engine
-    // result equality exists; the contract — flags are a SUPERSET of
-    // exact d11's with bounded false-positive inflation — is asserted in
-    // DedupSimilaritySpec.
-    QueryDef("d14_decontaminate_bloom", CorpusOps.decontaminateBloom(_, _), Approximate),
+    // result equality exists. Contract: flags are a SUPERSET of exact
+    // d11's (no false negatives) with bounded false-positive inflation —
+    // this corpus's distinct bench shingles sit far under the 1.6M-bit
+    // filter's 100k design capacity, so bloom-only flags stay a sliver.
+    QueryDef("d14_decontaminate_bloom", CorpusOps.decontaminateBloom(_, _),
+      Approx(
+        Bound("d14_false_negatives", bloomFalseNegatives, AtMost(0)),
+        Bound("d14_extra_flag_frac", bloomExtraFlagFrac, AtMost(0.05)))),
 
     // Per-doc duplicated word-8-gram span fraction (exact-substring
     // dedup detection, Lee et al. 2022)
@@ -3628,14 +3643,19 @@ object SparkEntry {
         |WHERE rank <= 5 ORDER BY query_id, rank""")),
 
     // LSH-bucketed ANN: approximate by design → no SQL oracle. The
-    // contract is recall against the exact s1 baseline, asserted >= 0.8
-    // in DedupSimilaritySpec (r12 at sf0.1: s2 1.00, s3 0.80, s10 1.00,
-    // s13 0.96 — also emitted as machine-readable fields in the bench
-    // artifact), not result equality with any SQL oracle.
-    QueryDef("s2_ann_topk", Similarity.lshTopK(_, _), Approximate),
+    // contract is recall@5 >= 0.8 against the exact s1 baseline, not
+    // result equality with any SQL oracle. The sf corpora are hard for
+    // ANN (top-5 neighbors at cos 0.4-0.55, no cluster structure), so
+    // the default parameters must hold recall on unstructured data.
+    // Measured: s2 (4 bits × 8 tables, H-1 probing) 1.00 at sf0.001 and
+    // sf0.01; r12 at sf0.1: s2 1.00, s3 0.80, s10 1.00, s13 0.96.
+    QueryDef("s2_ann_topk", Similarity.lshTopK(_, _),
+      Approx(Bound("s2_recall_at5", recallVsS1(Similarity.lshTopK(_, _)), AtLeast(0.8)))),
 
-    // IVF-flat ANN: same contract as s2 (approximate, recall-spec'd).
-    QueryDef("s3_ivf_topk", Similarity.ivfTopK(_, _), Approximate),
+    // IVF-flat ANN: same contract as s2 (16 cells, nProbe 12: 0.92 at
+    // sf0.001).
+    QueryDef("s3_ivf_topk", Similarity.ivfTopK(_, _),
+      Approx(Bound("s3_recall_at5", recallVsS1(Similarity.ivfTopK(_, _)), AtLeast(0.8)))),
 
     // Exact k-NN self-join (tiled equi-join decomposition, no BNLJ)
     QueryDef("s4_knn_join", Similarity.knnJoin(_, _),
@@ -3649,9 +3669,12 @@ object SparkEntry {
         |SELECT query_id, rank, neighbor_id, cos FROM rk
         |WHERE rank <= 3 ORDER BY query_id, rank""")),
 
-    // Approximate k-NN JOIN via IVF cells — s4's 100 TB scale path;
-    // recall vs s4 spec-gated + emitted as a bench-artifact field
-    QueryDef("s16_ivf_knn_join", Similarity.ivfKnnJoin(_, _), Approximate),
+    // Approximate k-NN JOIN via IVF cells — s4's 100 TB scale path.
+    // Contract: recall@3 >= 0.8 against the exact all-pairs join s4 (not
+    // s1's 5-query scan — every corpus row is a query here).
+    QueryDef("s16_ivf_knn_join", Similarity.ivfKnnJoin(_, _),
+      Approx(Bound("s16_recall_at3", (s, dir) => Similarity.recall(
+        Similarity.knnJoin(s, dir), Similarity.ivfKnnJoin(s, dir)), AtLeast(0.8)))),
 
     // Per-label mean embedding (map-side-combined, no corpus explode)
     QueryDef("s5_centroids", Similarity.centroids(_, _),
@@ -3750,13 +3773,15 @@ object SparkEntry {
         |WHERE rank <= 5 ORDER BY query_id, rank""")),
 
     // Product-quantization ANN (8-byte codes + ADC): approximate by
-    // design -> rows-only like s2/s3; recall vs s1 gated in spec
-    QueryDef("s10_pq_topk", Similarity.pqTopK(_, _), Approximate),
+    // design -> rows-only like s2/s3, same recall@5 contract vs s1
+    QueryDef("s10_pq_topk", Similarity.pqTopK(_, _),
+      Approx(Bound("s10_recall_at5", recallVsS1(Similarity.pqTopK(_, _)), AtLeast(0.8)))),
 
     // IVF-PQ composite (the Faiss IndexIVFPQ deployment shape): coarse
     // cell prune, ADC over only the probed cells' codes, exact re-rank.
-    // Approximate by design -> rows-only; recall vs s1 gated in spec.
-    QueryDef("s13_ivfpq_topk", Similarity.ivfPqTopK(_, _), Approximate),
+    // Approximate by design -> rows-only, same recall@5 contract vs s1.
+    QueryDef("s13_ivfpq_topk", Similarity.ivfPqTopK(_, _),
+      Approx(Bound("s13_recall_at5", recallVsS1(Similarity.ivfPqTopK(_, _)), AtLeast(0.8)))),
 
     // Exact cosine radius (range) search around the query vectors —
     // map-only over the corpus, no shuffle at all
@@ -3783,9 +3808,10 @@ object SparkEntry {
 
     // s3's query answered by a PERSISTED index (save -> parquet+manifest
     // -> load -> query): exact equality with s3 gated in IndexStoreSpec;
-    // rows-only in the gate for the same reason as s3, whose
-    // recall is published in the bench artifact (s3_recall_at5)
-    QueryDef("s14_ivf_persisted_topk", IndexStore.ivfPersistedTopK(_, _), Approximate),
+    // rows-only in the gate for the same reason as s3, and s3's contract
+    QueryDef("s14_ivf_persisted_topk", IndexStore.ivfPersistedTopK(_, _),
+      Approx(Bound("s14_recall_at5",
+        recallVsS1(IndexStore.ivfPersistedTopK(_, _)), AtLeast(0.8)))),
 
     // MMR diversified re-rank of the exact top-nCand shortlist:
     // deterministic greedy over distributed-computed cosines -> full
@@ -4418,6 +4444,68 @@ object SparkEntry {
     case QueryDef(name, _, Sql(margin)) => name -> margin.stripMargin
     case QueryDef(name, _, SqlFn(build)) => name -> build()
   }.toMap
+
+  /** The registry's accuracy bounds as (query name, bound), in
+    * declaration order.
+    */
+  def approxBounds: Seq[(String, Bound)] = registry.flatMap {
+    case QueryDef(name, _, Approx(bounds @ _*)) => bounds.map(name -> _)
+    case _ => Nil
+  }
+
+  /** recall@5 of an approximate top-k against the exact s1 scan. */
+  private def recallVsS1(approx: Build): Measure =
+    (s, dir) => Similarity.recall(Similarity.bruteForceTopK(s, dir), approx(s, dir))
+
+  /** q27: |approx − exact| / exact distinct order count. */
+  private def hllRelErr(s: SparkSession, dir: String): Double = {
+    val r = RelationalQueries2.approxDistinct(s, dir)
+      .select("approx_orders", "exact_orders").head()
+    math.abs(r.getLong(0).toDouble - r.getLong(1)) / r.getLong(1)
+  }
+
+  /** Exact d11 flags (doc_id, n_shared) and d14's (doc_id, n_shared_bloom). */
+  private def decontaminationFlags(s: SparkSession, dir: String): (DataFrame, DataFrame) =
+    (CorpusOps.decontaminate(s, dir).select(col("doc_id"), col("n_shared")),
+      CorpusOps.decontaminateBloom(s, dir).select(col("doc_id"), col("n_shared_bloom")))
+
+  /** d14 false negatives: exactly-flagged docs the bloom form misses or
+    * flags with a smaller shared count (a bloom count can only inflate).
+    */
+  private def bloomFalseNegatives(s: SparkSession, dir: String): Double = {
+    val (exact, bloom) = decontaminationFlags(s, dir)
+    exact.as("e").join(bloom.as("b"), Seq("doc_id"), "left")
+      .filter(col("b.n_shared_bloom").isNull ||
+        col("b.n_shared_bloom") < col("e.n_shared")).count().toDouble
+  }
+
+  /** d14 bloom-only flags per corpus document. */
+  private def bloomExtraFlagFrac(s: SparkSession, dir: String): Double = {
+    val (exact, bloom) = decontaminationFlags(s, dir)
+    bloom.join(exact, Seq("doc_id"), "left_anti").count().toDouble /
+      Tables.documents(s, dir).count()
+  }
+
+  /** q87: the worst (event_type, p) cell's rank error as a share of the
+    * sketch's guarantee, |rank − p·n| / (⌊n / accuracy⌋ + 2), where rank
+    * counts the type's values ≤ the approximate quantile.
+    */
+  private def quantileRankErrRatio(s: SparkSession, dir: String): Double = {
+    val cells = RelationalQueries4.approxQuantiles(s, dir)
+      .select(col("event_type"), col("n_events"), explode(array(
+        Seq(0.5 -> "p50", 0.95 -> "p95", 0.99 -> "p99").map { case (p, c) =>
+          struct(lit(p).as("p"), col(c).as("q")) }: _*)).as("cell"))
+      .select(col("event_type"), col("n_events"), col("cell.p"), col("cell.q"))
+    val values = ev(s, dir)
+      .filter(col("value").isNotNull && col("event_type").isNotNull)
+      .select(col("event_type"), col("value"))
+    val slack = floor(col("n_events") / RelationalQueries4.QuantileAccuracy) + 2
+    cells.join(values, "event_type")
+      .groupBy(col("event_type"), col("n_events"), col("p"), col("q"))
+      .agg(count_if(col("value") <= col("q")).as("rank"))
+      .agg(coalesce(max(abs(col("rank") - col("p") * col("n_events")) / slack), lit(0.0)))
+      .head().getDouble(0)
+  }
 
   /** d34's chunking pipeline as prefixed CTEs over a doc slice —
     * emitted twice by the d35 oracle (store slice + incoming slice).

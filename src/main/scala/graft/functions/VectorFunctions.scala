@@ -64,6 +64,11 @@ object VectorFunctions {
     * L2SqDist (r15; bit-identical to [[l2sqHof]], which
     * VectorFunctionsSpec pins it against, including the HOF's
     * null-on-length-mismatch contract).
+    *
+    * Input contract: both sides are `array<float>` or `array<double>`.
+    * Any other element type (e.g. `array<int>`) is an analysis error,
+    * not an implicit widening as in [[l2sqHof]]; cast such a column to
+    * `array<double>` first.
     */
   def l2sq(a: Column, b: Column): Column = {
     import org.apache.spark.sql.graft.Shims

@@ -45,21 +45,9 @@ object TaxiSpeed {
 
   /** Faithful mode: unweighted mean of zero-filled per-file means,
     * keyed Sunday=0..Saturday=6. Output: (day int, avg_speed_mph double).
-    *
-    * Group domain = files observed in the surviving rows. For exact
-    * reference parity when a file might contribute ZERO accepted rows
-    * (it still counts as a zero vector, Sample.cs:196-199), use
-    * faithfulAvgByDowListed, which takes the file list from a
-    * metadata-only listing instead.
-    */
-  def faithfulAvgByDow(trips: DataFrame, fileCol: String = "file"): DataFrame =
-    TwoLevelMean.faithful(withSpeed(trips),
-      col(fileCol), col("day"), col("speed_mph"),
-      0 to 6, keyName = "day", outName = "avg_speed_mph")
-
-  /** Faithful mode with the group domain from the driver-side file
-    * listing (S2): all-zero files participate, and the facts are
-    * scanned exactly once.
+    * The group domain is the driver-side file listing (S2): all-zero
+    * files participate, as in the reference (Sample.cs:196-199), and the
+    * facts are scanned exactly once.
     */
   def faithfulAvgByDowListed(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = {
@@ -67,8 +55,8 @@ object TaxiSpeed {
     val files = graft.sources.TaxiCsv.listFiles(spark, path)
     TwoLevelMean.faithful(withSpeed(graft.sources.TaxiCsv.trips(spark, path)),
       col("file"), col("day"), col("speed_mph"),
-      0 to 6, keyName = "day", outName = "avg_speed_mph",
-      groupsOpt = Some(TwoLevelMean.Groups(spark, files)))
+      0 to 6, TwoLevelMean.Groups(spark, files),
+      keyName = "day", outName = "avg_speed_mph")
   }
 
   /** Faithful mode over an EXPLICIT URI list — the reference's actual
@@ -86,8 +74,8 @@ object TaxiSpeed {
     TwoLevelMean.faithful(
       withSpeed(graft.sources.TaxiCsv.tripsListed(spark, norm)),
       col("file"), col("day"), col("speed_mph"),
-      0 to 6, keyName = "day", outName = "avg_speed_mph",
-      groupsOpt = Some(TwoLevelMean.Groups(spark, norm)))
+      0 to 6, TwoLevelMean.Groups(spark, norm),
+      keyName = "day", outName = "avg_speed_mph")
   }
 
   /** Weighted (corrected) mode: plain global mean per day — every trip

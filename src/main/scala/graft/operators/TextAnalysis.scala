@@ -282,54 +282,14 @@ object TextAnalysis {
       .orderBy(col("doc_id"))
   }
 
-  /** t6 — top-k TF-IDF terms per document. The corpus statistics are
-    * classic two-phase aggregates: term frequency per (doc, term), doc
-    * length from a window over that (no second tokenize pass), document
-    * frequency from a per-term aggregate of the SAME tf table, and the
-    * corpus size as a broadcast one-row aggregate (kept lazy — no
-    * driver count() at plan time). Rank filter → WindowGroupLimit, so
-    * only k rows per doc survive the final shuffle. ~3 shuffles total
-    * (doc+term, term, doc) regardless of corpus size.
-    */
-  /** DEMOTED to spec-gated (r13 verdict #1): idf carries `ln`, and
-    * r12 proved JVM `Math.log` vs DuckDB libm drift in the last ulp
-    * on identical args — this form can never clear a bit-exact hash
-    * gate. The REGISTERED t6 is [[tfidfTopKLin]] (rational idf, exact
-    * arithmetic); TextAnalysisSpec gates this classic-idf form at
-    * 1e-9 against a driver-side scalar reference (the
-    * mixtureDriftJsd convention). */
-  def tfidfTopK(s: SparkSession, dir: String, k: Int = 3): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // df (per term) and doc length (per doc) as windows over the ONE tf
-    // table — a groupBy+self-join would plan the tokenize+aggregate
-    // subtree twice; windows keep it single-pass.
-    val tf = Tables.documents(s, dir)
-      .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
-      .groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("cnt"))
-      .withColumn("dfr", count(lit(1)).over(Window.partitionBy(col("term"))))
-      .withColumn("n_tok", sum(col("cnt")).over(Window.partitionBy(col("doc_id"))))
-    val nDocs = Tables.documents(s, dir).agg(count(lit(1)).as("nd"))
-    val w = Window.partitionBy(col("doc_id"))
-      .orderBy(col("tfidf").desc, col("term"))
-    tf.crossJoin(broadcast(nDocs))
-      .withColumn("tfidf",
-        (col("cnt") * lit(1.0) / col("n_tok")) *
-          log(col("nd") * lit(1.0) / col("dfr")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("doc_id"), col("rank"), col("term"), col("tfidf"))
-      .orderBy(col("doc_id"), col("rank"))
-  }
-
   /** t6 (REGISTERED form, r13 verdict #1) — top-k terms per document
     * under tf-idf with the RATIONAL idf variant: score = (cnt/n_tok)·
     * (nd/dfr), emitted as `tfidf_lin` = (cnt·nd)/(n_tok·dfr) — ONE
     * IEEE divide of two exact bigint products, bit-identical across
     * engines (the t28 lift-over-PMI / t32 TVD convention: a
     * transcendental-free companion is the hash-gated statistic; the
-    * classic ln-idf ranking survives as the spec-gated
-    * [[tfidfTopK]]). Linear idf is its own documented weighting, not
+    * classic ln-idf form's JVM `Math.log` drifts from DuckDB's libm in
+    * the last ulp). Linear idf is its own documented weighting, not
     * an approximation of ln: within a document it ranks by the exact
     * rational cnt/dfr (n_tok and nd are per-doc constants), which
     * up-weights rare terms more aggressively than ln-idf.
@@ -343,8 +303,14 @@ object TextAnalysis {
     * n_tok, nd) rides along so ANY idf weighting is recomputable
     * downstream without a corpus rescan.
     *
-    * Plan shape is [[tfidfTopK]]'s (~3 shuffles, rank filter →
-    * WindowGroupLimit); only the scoring expression changed.
+    * The corpus statistics are classic two-phase aggregates: term
+    * frequency per (doc, term), doc length and document frequency as
+    * windows over that ONE tf table (a groupBy + self-join would plan
+    * the tokenize + aggregate subtree twice), and the corpus size as a
+    * broadcast one-row aggregate (kept lazy — no driver count() at plan
+    * time). Rank filter → WindowGroupLimit, so only k rows per doc
+    * survive the final shuffle: ~3 shuffles (doc+term, term, doc)
+    * regardless of corpus size.
     */
   def tfidfTopKLin(s: SparkSession, dir: String, k: Int = 3): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -793,72 +759,6 @@ object TextAnalysis {
       .orderBy(col("rank"))
   }
 
-  /** t16 — bigram-interpolated LM score: each document's mean negative
-    * log-probability of its adjacent token pairs under a corpus bigram
-    * model with unigram back-off, p(w_i | w_{i-1}) = λ·c(w_{i-1},w_i)/
-    * c(w_{i-1}) + (1−λ)·(c(w_i)+1)/(N+V) — the next rung above t10's
-    * unigram proxy on the ladder toward a real LM perplexity gate
-    * (Jelinek–Mercer interpolation; both terms are corpus-derived, no
-    * model weights). Low = fluent/stereotyped word order, high =
-    * shuffled-token soup; unlike t10 it actually penalizes unnatural
-    * ORDER, which is the signal a machine-generated-gibberish filter
-    * needs. The bigram term needs no smoothing of its own: every scored
-    * pair occurs in the corpus it is counted against (c₂ ≥ 1), and λ<1
-    * keeps p bounded away from both 0 and 1.
-    *
-    * Scale posture: ONE tokenize pass materializes the token arrays
-    * (cached: the unigram stream, the pair stream, and the scoring
-    * re-scan all consume it — d11's cache-lifecycle contract); pairs
-    * stream out of a position-sequence generator exactly like t5/t9 (no
-    * per-doc gram array). The bigram count is one (w_prev, w_cur)
-    * shuffle with map-side combine; the three vocabulary joins move
-    * vocab-sized tables (≪ corpus by Heaps' law — broadcastable at
-    * 100 TB, same plan minus the shuffles); totals are a 1-row
-    * broadcast. Docs with <2 tokens have no pairs and are absent, on
-    * both engines, by construction.
-    */
-  /** DEMOTED to spec-gated (r13 verdict #1): the per-bigram `ln`
-    * terms carry engine last-ulp drift. The REGISTERED t16 is
-    * [[bigramMoments]] (exact integer count moments + ratio-of-sums
-    * scores); TextAnalysisSpec gates this interpolated-logprob form
-    * at 1e-9 against a driver-side scalar reference. */
-  def bigramLogprob(s: SparkSession, dir: String,
-      lambda: Double = 0.7): DataFrame = {
-    val d = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .transform(graft.Tables.spread(_, col("doc_id")))
-      .select(col("doc_id"), tokens(col("text")).as("toks"))
-      .cache()
-    val toks = d.select(col("doc_id"), explode(col("toks")).as("t"))
-    // cnt feeds BOTH vocabulary join sides (cp and cc) and the totals
-    // (r16): cached once where the uncached plan rebuilt the explode +
-    // aggregate subtree per consumer, and the totals derive from it
-    // (n = Σc, v = count(t)) — bit-identical, two corpus passes fewer.
-    val cnt = toks.groupBy(col("t")).agg(count(lit(1)).as("c")).cache()
-    val tot = cnt.agg(coalesce(sum(col("c")), lit(0L)).as("n"),
-      count(col("t")).as("v"))
-    val pairs = d
-      .select(col("doc_id"), col("toks"),
-        explode(when(size(col("toks")) >= 2,
-          sequence(lit(1), size(col("toks")) - 1))
-          .otherwise(array().cast("array<int>"))).as("i"))
-      .select(col("doc_id"),
-        element_at(col("toks"), col("i")).as("wp"),
-        element_at(col("toks"), col("i") + 1).as("wc"))
-    val bcnt = pairs.groupBy(col("wp"), col("wc")).agg(count(lit(1)).as("c2"))
-    val cp = cnt.select(col("t").as("wp"), col("c").as("cp"))
-    val cc = cnt.select(col("t").as("wc"), col("c").as("cc"))
-    pairs.join(bcnt, Seq("wp", "wc"))
-      .join(broadcast(cp), "wp").join(broadcast(cc), "wc")
-      .crossJoin(broadcast(tot))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).cast("int").as("n_bigrams"),
-        avg(-log(lit(lambda) * col("c2") / col("cp")
-          + lit(1.0 - lambda) * (col("cc") + lit(1.0)) / (col("n") + col("v"))))
-          .as("interp_neg_logprob"))
-      .orderBy(col("doc_id"))
-  }
-
   /** t16 (REGISTERED form, r13 verdict #1) — the bigram fluency
     * signal as EXACT count moments: per document the exact integer
     * sums of the three count components every interpolated LM score
@@ -876,14 +776,20 @@ object TextAnalysis {
     * order-sensitive remains and the hash oracle is full
     * (the t32 TVD convention). Same fluency axis — a shuffled-token
     * doc has low pooled_cond (its pairs are rare relative to their
-    * head words); the per-pair geometric mean survives as the
-    * spec-gated [[bigramLogprob]]. Exactness envelope: each sum ≤
+    * head words); a per-pair geometric mean of ln terms would carry
+    * engine last-ulp drift. Exactness envelope: each sum ≤
     * n_bigrams·max-count < 2^53 for ≲1e5-token docs against a
     * ≲1e12-token corpus; n_bigrams·(N+V) likewise.
     *
-    * Dataflow identical to [[bigramLogprob]] (one cached tokenize
-    * pass, pair-position generator, three vocab joins, broadcast
-    * totals).
+    * Scale posture: ONE tokenize pass materializes the token arrays
+    * (cached: the unigram stream, the pair stream and the scoring all
+    * consume it — d11's cache-lifecycle contract); pairs stream out of a
+    * position-sequence generator exactly like t5/t9 (no per-doc gram
+    * array). The bigram count is one (w_prev, w_cur) shuffle with
+    * map-side combine; the three vocabulary joins move vocab-sized
+    * tables (≪ corpus by Heaps' law — broadcastable at 100 TB, same plan
+    * minus the shuffles); totals are a 1-row broadcast. Docs with <2
+    * tokens have no pairs and are absent, on both engines.
     */
   def bigramMoments(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(s, dir)
@@ -892,8 +798,8 @@ object TextAnalysis {
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .cache()
     val toks = d.select(col("doc_id"), explode(col("toks")).as("t"))
-    // the bigramLogprob r16 consolidation: cached cnt (feeds cp, cc,
-    // totals), totals derived (n = Σc, v = count(t)) — bit-identical
+    // r16 consolidation: cached cnt (feeds cp, cc, totals), totals
+    // derived (n = Σc, v = count(t)) — bit-identical to a corpus pass
     val cnt = toks.groupBy(col("t")).agg(count(lit(1)).as("c")).cache()
     val tot = cnt.agg(coalesce(sum(col("c")), lit(0L)).as("n"),
       count(col("t")).as("v"))
@@ -928,43 +834,6 @@ object TextAnalysis {
       .orderBy(col("doc_id"))
   }
 
-  /** t17 — Zipf rank–frequency fit: OLS regression of ln(count) on
-    * ln(rank) over the corpus's top-R unigrams (Zipf's law predicts
-    * slope ≈ −1 on natural text; a natural-language corpus that fits
-    * badly — low R², shallow slope — is a machine-generated/templated
-    * red flag, the same distributional health check "What's in My Big
-    * Data?" (Elazar et al. 2024 — public) runs at corpus scale).
-    * Output: one row (n_terms, slope, intercept, r2).
-    *
-    * Scale posture: the term count is the t10 vocabulary aggregate (one
-    * shuffle, map-side combine); the head is TakeOrderedAndProject
-    * (distributed heap-R, never a vocabulary sort), and the rank window
-    * runs over the ≤ topR surviving rows — bounded like t15's final
-    * rank, not a scale concern. The regression is a single
-    * partial-aggregable pass over R rows (regr_* carry their moment
-    * sums through the merge).
-    */
-  /** DEMOTED to spec-gated (r13 verdict #1): the regression runs over
-    * `ln(rank)`/`ln(count)` and the closing divides AMPLIFY last-ulp
-    * drift ~77× (r12 measurement) — the worst ulp exposure in the
-    * suite. The REGISTERED t17 is [[zipfOctaves]] (exact integer
-    * rank-octave histogram); TextAnalysisSpec gates this OLS form at
-    * 1e-9 against a driver-side reference. */
-  def zipfFit(s: SparkSession, dir: String, topR: Int = 1000): DataFrame = {
-    val cnt = Tables.documents(s, dir)
-      .select(col("doc_id"), col("text"))
-      .transform(graft.Tables.spread(_, col("doc_id")))
-      .select(explode(tokens(col("text"))).as("t"))
-      .groupBy(col("t")).agg(count(lit(1)).as("c"))
-    val top = cnt.orderBy(col("c").desc, col("t")).limit(topR)
-      .withColumn("rank",
-        row_number().over(Window.orderBy(col("c").desc, col("t"))))
-    top.agg(count(lit(1)).cast("int").as("n_terms"),
-        regr_slope(log(col("c")), log(col("rank"))).as("slope"),
-        regr_intercept(log(col("c")), log(col("rank"))).as("intercept"),
-        regr_r2(log(col("c")), log(col("rank"))).as("r2"))
-  }
-
   /** t17 (REGISTERED form, r13 verdict #1) — the Zipf health check as
     * an EXACT rank-octave histogram: the top-R unigrams bucketed by
     * octave = ⌊log₂ rank⌋ (computed by an integer CASE ladder — no
@@ -974,14 +843,16 @@ object TextAnalysis {
     * sum_count across octaves is slope ≈ −1; a rising/falling trend
     * is the shallow/steep-slope red flag "What's in My Big Data?"
     * (Elazar et al. 2024) monitors — so the histogram carries the
-    * same distributional health signal as the OLS fit, in exact
-    * integers with a full hash oracle (the t32 TVD convention). The
-    * slope/intercept/r² regression survives as the spec-gated
-    * [[zipfFit]].
+    * same distributional health signal as an OLS fit of ln(count) on
+    * ln(rank), in exact integers with a full hash oracle (the t32 TVD
+    * convention; the regression's closing divides amplify last-ulp
+    * `ln` drift ~77×, r12).
     *
-    * Scale posture: identical to [[zipfFit]] (one vocab aggregate,
-    * TakeOrderedAndProject head, rank window over ≤topR rows); the
-    * octave aggregate groups ≤⌈log₂ topR⌉+1 rows.
+    * Scale posture: the term count is the t10 vocabulary aggregate (one
+    * shuffle, map-side combine); the head is TakeOrderedAndProject
+    * (distributed heap-R, never a vocabulary sort), and the rank window
+    * runs over the ≤ topR surviving rows; the octave aggregate groups
+    * ≤⌈log₂ topR⌉+1 rows.
     */
   def zipfOctaves(s: SparkSession, dir: String, topR: Int = 1000): DataFrame = {
     require(topR <= 4096, s"octave ladder covers topR <= 4096, got $topR")

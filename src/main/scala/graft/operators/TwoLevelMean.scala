@@ -34,19 +34,29 @@ object TwoLevelMean {
   }
 
   /** Unweighted mean-of-means of `valueCol` by `keyCol`, per-`groupCol`
-    * means zero-filled over the dense key domain `keyDomain`.
+    * means zero-filled over the dense key domain `keyDomain` and the
+    * group domain `groups`.
+    *
+    * The group domain is known up front (the reference's file LISTING:
+    * a file with zero surviving rows still contributes a zero vector,
+    * Sample.cs:196-199), so zero-fill + avg collapses algebraically:
+    *   avg over N groups of zero-filled means
+    *     = sum(present per-group means) / N        (zeros add nothing)
+    * — a single linear pipeline, one facts scan, no dense frame and no
+    * multi-branch subplan reuse. N is the driver-side domain's size, so
+    * building the plan runs no job.
     *
     * @param df        fact rows (already filtered)
     * @param groupCol  the "file" analog — level-1 grouping
     * @param keyCol    the "day of week" analog — must take values in keyDomain
     * @param valueCol  the measure
     * @param keyDomain dense key domain to zero-fill (e.g. 0 to 6)
+    * @param groups    the group domain; facts outside it are ignored
     * @return (key int, mean double) — one row per keyDomain element
     */
   def faithful(df: DataFrame, groupCol: Column, keyCol: Column,
-      valueCol: Column, keyDomain: Seq[Int],
-      keyName: String = "key", outName: String = "mean",
-      groupsOpt: Option[Groups] = None): DataFrame = {
+      valueCol: Column, keyDomain: Seq[Int], groups: Groups,
+      keyName: String = "key", outName: String = "mean"): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
 
@@ -55,44 +65,19 @@ object TwoLevelMean {
     val perGroup = facts.groupBy($"_grp", col(keyName))
       .agg(avg($"_v").as("_grp_mean"))
     val keys = keyDomain.toDF(keyName)
-
-    groupsOpt match {
-      // Group domain known up front (e.g. the file LISTING — a file with
-      // zero surviving rows still contributes a zero vector,
-      // Sample.cs:196-199). Then zero-fill + avg collapses algebraically:
-      //   avg over N groups of zero-filled means
-      //     = sum(present per-group means) / N        (zeros add nothing)
-      // — a single linear pipeline, one facts scan, no dense frame and
-      // no multi-branch subplan reuse. N is the driver-side domain's
-      // size, so building the plan runs no job.
-      case Some(Groups(g, n)) =>
-        // Restrict to the declared domain (broadcast semi-join), don't
-        // just take its count: data-derived groups OUTSIDE the domain
-        // (e.g. a negative key modulo) must not leak into the sum —
-        // the domain is the contract, exactly as the reference's file
-        // listing is.
-        val perKey = perGroup.join(broadcast(g), Seq("_grp"), "leftsemi")
-          .groupBy(col(keyName)).agg(sum($"_grp_mean").as("_s"))
-        // Broadcast the BUILD side (perKey, ≤ |keyDomain| rows after its
-        // agg) — a hint on the preserved left side of a left join is
-        // unsupported for BroadcastHashJoin and Spark drops it with a
-        // HintErrorLogger warn, silently falling back to a shuffle.
-        keys.join(broadcast(perKey), Seq(keyName), "left")
-          .select(col(keyName), (coalesce($"_s", lit(0.0)) / lit(n.toDouble)).as(outName))
-
-      // Group domain derived from the data: dense (group × key) frame
-      // left-joined to the aggregates, then the level-2 mean. The groups
-      // branch re-reads the facts (column pruning specializes its scan,
-      // so exchange reuse does not apply) — callers with a known domain
-      // should pass groupsOpt.
-      case None =>
-        val groups = perGroup.select($"_grp").distinct()
-        val dense = groups.crossJoin(broadcast(keys))
-        dense.join(perGroup, Seq("_grp", keyName), "left")
-          .select(col(keyName), coalesce($"_grp_mean", lit(0.0)).as("_filled"))
-          .groupBy(col(keyName))
-          .agg(avg($"_filled").as(outName))
-    }
+    // Restrict to the declared domain (broadcast semi-join), don't just
+    // take its count: data-derived groups OUTSIDE the domain (e.g. a
+    // negative key modulo) must not leak into the sum — the domain is
+    // the contract, exactly as the reference's file listing is.
+    val perKey = perGroup.join(broadcast(groups.frame), Seq("_grp"), "leftsemi")
+      .groupBy(col(keyName)).agg(sum($"_grp_mean").as("_s"))
+    // Broadcast the BUILD side (perKey, ≤ |keyDomain| rows after its
+    // agg) — a hint on the preserved left side of a left join is
+    // unsupported for BroadcastHashJoin and Spark drops it with a
+    // HintErrorLogger warn, silently falling back to a shuffle.
+    keys.join(broadcast(perKey), Seq(keyName), "left")
+      .select(col(keyName),
+        (coalesce($"_s", lit(0.0)) / lit(groups.size.toDouble)).as(outName))
   }
 
   /** The "corrected" global weighted mean: every input row counts once.

@@ -152,4 +152,29 @@ class ByteplaneExprsSpec extends AnyFunSuite {
       assert(r.getLong(6) == r.getLong(7), s"sig $r")
     }
   }
+
+  // Input-domain contract: a sample above 46340 squares past
+  // Int.MaxValue, so the kernel squares in long math. Hangul syllables
+  // (0xAC00-0xD7A3) reach 55203; the kernel must equal the driver-side
+  // Long sum of squares where an int*int HOF would overflow.
+  test("SliceSumSqLong squares samples > 46340 in long math (Hangul text)") {
+    import org.apache.spark.sql.graft.Shims.{column => kc, expression => ke}
+    val width = 16
+    val text = (0 until 40).map(i => (0xAC00 + i * 283).toChar).mkString
+    val codes = text.map(_.toInt)
+    assert(codes.count(_ > 46340) > width)
+    val rows = Seq(text).toDF("text")
+      .select(asciiCodesCol(col("text")).as("samples"),
+        explode(sequence(lit(1), lit(text.length - width + 1))).as("o"))
+      .select(col("o"), kc(graft.functions.SliceSumSqLong(
+        ke(col("samples")), ke(col("o")), width)).as("q"))
+      .collect()
+    assert(rows.length === text.length - width + 1)
+    rows.foreach { r =>
+      val o = r.getInt(0)
+      val want = codes.slice(o - 1, o - 1 + width).map(x => x.toLong * x).sum
+      assert(want > Int.MaxValue)
+      assert(r.getLong(1) === want, s"slice at $o")
+    }
+  }
 }

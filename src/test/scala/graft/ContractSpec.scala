@@ -28,9 +28,8 @@ class ContractSpec extends AnyFunSuite {
   }
 
   test("R2: result string matches the reference's format, typos verbatim") {
-    val out = TaxiSpeed.formatResult(
-      TaxiSpeed.faithfulAvgByDow(TaxiCsv.trips(spark, dir)))
-    assert(out.startsWith("Sun: 25.0, Mon: "))
+    val out = TaxiSpeed.formatResult(TaxiSpeed.faithfulAvgByDowListed(spark, dir))
+    assert(out.startsWith(s"Sun: ${50.0 / 3}, Mon: "))
     assert(out.contains(", Tue : "))   // Sample.cs:226 "Tue :"
     assert(out.contains(", wed: "))    // Sample.cs:226 lowercase "wed"
     assert(out.contains(", Thu: ") && out.contains(", Fri: ") && out.contains(", Sat: "))
@@ -40,7 +39,7 @@ class ContractSpec extends AnyFunSuite {
     val base = Paths.get("target", "test-tmp")
     Files.createDirectories(base)
     val out = Files.createTempDirectory(base, "sink").resolve("result").toString
-    val res = TaxiSpeed.faithfulAvgByDow(TaxiCsv.trips(spark, dir))
+    val res = TaxiSpeed.faithfulAvgByDowListed(spark, dir)
     TaxiSpeed.writeResult(res, out)
     val back = spark.read.parquet(out)
     assert(back.count() === 7)

@@ -75,12 +75,12 @@ class PlanChecksSpec extends AnyFunSuite with BeforeAndAfterEach {
   test("r11 ops plan the shapes their scaladocs promise") {
     // t17: vocabulary head via distributed heap-R, never a full sort
     assert(PlanChecks.hasTakeOrdered(
-      graft.operators.TextAnalysis.zipfFit(spark, sfDir)))
+      graft.operators.TextAnalysis.zipfOctaves(spark, sfDir)))
     // w7: first-purchase attribution is two-phase per-click top-1
     assert(PlanChecks.hasWindowGroupLimit(
       graft.streaming.EventsWindows.clickAttribution(spark, sfDir)))
     // t16: no nested-loop anywhere except the broadcast 1-row totals
-    val t16 = graft.operators.TextAnalysis.bigramLogprob(spark, sfDir)
+    val t16 = graft.operators.TextAnalysis.bigramMoments(spark, sfDir)
     try {
       assert(!PlanChecks.executedPlan(t16).contains("CartesianProduct"))
       // the three vocabulary joins hash-join (broadcast or shuffled),

@@ -10,10 +10,7 @@ class Relational2Spec extends AnyFunSuite {
   val sfDir = "/root/testdata/sf0.001"
 
   test("approx_count_distinct within 5% of exact") {
-    val r = RelationalQueries2.approxDistinct(spark, sfDir).head()
-    val approx = r.getAs[Long]("approx_orders").toDouble
-    val exact = r.getAs[Long]("exact_orders").toDouble
-    assert(math.abs(approx - exact) / exact < 0.05, s"approx=$approx exact=$exact")
+    ApproxContracts.assertHolds("q27_approx_distinct", info)
   }
 
   test("salted join equals plain join") {

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.sources.TaxiCsv
-import graft.operators.TaxiSpeed
+import graft.operators.{TaxiSpeed, TwoLevelMean}
 
 class TaxiSpeedSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -50,7 +50,13 @@ class TaxiSpeedSpec extends AnyFunSuite {
   }
 
   test("faithful mode: avg-of-averages with zero-fill, hand-computed") {
-    val got = TaxiSpeed.faithfulAvgByDow(TaxiCsv.trips(spark, dir))
+    import spark.implicits._
+    // group domain: the files with surviving rows (A and B)
+    val speeds = TaxiSpeed.withSpeed(TaxiCsv.trips(spark, dir))
+    val files = speeds.select("file").distinct().as[String].collect().toSeq
+    val got = TwoLevelMean.faithful(speeds, col("file"), col("day"),
+        col("speed_mph"), 0 to 6, TwoLevelMean.Groups(spark, files),
+        keyName = "day", outName = "avg_speed_mph")
       .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
     assert(got.keySet === (0 to 6).toSet)
     TaxiFixtures.faithfulExpected.foreach { case (d, exp) =>
@@ -77,10 +83,10 @@ class TaxiSpeedSpec extends AnyFunSuite {
   }
 
   test("faithful != weighted on skewed files (quirk is observable)") {
-    val f = TaxiSpeed.faithfulAvgByDow(TaxiCsv.trips(spark, dir))
+    val f = TaxiSpeed.faithfulAvgByDowListed(spark, dir)
       .filter(col("day") === 1).head().getDouble(1)
     val w = TaxiSpeed.weightedAvgByDow(TaxiCsv.trips(spark, dir))
       .filter(col("day") === 1).head().getDouble(1)
-    assert(math.abs(f - w) > 1.0) // 25/6 vs 25/3
+    assert(math.abs(f - w) > 1.0) // 25/9 vs 25/3
   }
 }

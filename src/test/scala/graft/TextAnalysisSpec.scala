@@ -189,36 +189,6 @@ class TextAnalysisSpec extends AnyFunSuite with BeforeAndAfterEach {
     }
   }
 
-  test("t6 ln-idf tfidf (spec-gated form) matches a driver-side reference") {
-    import org.apache.spark.sql.functions.col
-    val docs = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("text")).collect()
-      .map(r => (r.getLong(0), r.getString(1).toLowerCase
-        .split("\\s+").filter(_.nonEmpty).toSeq))
-    val nd = docs.length.toLong
-    val dfr = docs.flatMap(_._2.distinct).groupBy(identity)
-      .map { case (t, xs) => t -> xs.length.toLong }
-    val expected = docs.flatMap { case (id, toks) =>
-      if (toks.isEmpty) Nil
-      else {
-        val nTok = toks.size.toLong
-        toks.groupBy(identity).toSeq.map { case (t, xs) =>
-          // the same double ops the operator runs, in the same order
-          val score = (xs.length * 1.0 / nTok) * math.log(nd * 1.0 / dfr(t))
-          (id, t, score)
-        }.sortBy { case (_, t, sc) => (-sc, t) }.take(3).zipWithIndex
-          .map { case ((i, t, sc), r) => (i, r + 1, t, sc) }
-      }
-    }.sortBy(x => (x._1, x._2))
-    val got = TextAnalysis.tfidfTopK(spark, sfDir).collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getDouble(3)))
-    assert(got.length == expected.length, s"${got.length} != ${expected.length}")
-    got.zip(expected).foreach { case ((gi, gr, gt, gs), (ei, er, et, es)) =>
-      assert(gi == ei && gr == er && gt == et, s"($gi,$gr,$gt) != ($ei,$er,$et)")
-      assert(math.abs(gs - es) < 1e-9, s"doc $gi term $gt: $gs != $es")
-    }
-  }
-
   test("t6 registered lin-idf form: exact integer evidence and one-divide score") {
     val rows = TextAnalysis.tfidfTopKLin(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getLong(3),
@@ -405,35 +375,6 @@ class TextAnalysisSpec extends AnyFunSuite with BeforeAndAfterEach {
     assert(at6.exists { case (id, (_, c, p)) => p < c })
   }
 
-  test("t17 zipf fit matches a driver-side OLS reference") {
-    import org.apache.spark.sql.functions.col
-    val docs = Tables.documents(spark, sfDir)
-      .select(col("text")).collect()
-      .flatMap(_.getString(0).toLowerCase.split("\\s+").filter(_.nonEmpty))
-    val counts = docs.groupBy(identity).map { case (t, xs) => (t, xs.length) }
-      .toSeq.sortBy { case (t, c) => (-c, t) }.take(1000)
-    val pts = counts.zipWithIndex.map { case ((_, c), i) =>
-      (math.log(i + 1.0), math.log(c.toDouble))
-    }
-    val n = pts.length.toDouble
-    val (sx, sy) = (pts.map(_._1).sum, pts.map(_._2).sum)
-    val sxx = pts.map(p => p._1 * p._1).sum
-    val sxy = pts.map(p => p._1 * p._2).sum
-    val syy = pts.map(p => p._2 * p._2).sum
-    val slope = (n * sxy - sx * sy) / (n * sxx - sx * sx)
-    val intercept = sy / n - slope * sx / n
-    val r2 = math.pow(n * sxy - sx * sy, 2) /
-      ((n * sxx - sx * sx) * (n * syy - sy * sy))
-    val row = TextAnalysis.zipfFit(spark, sfDir).head()
-    assert(row.getInt(0) == pts.length)
-    assert(math.abs(row.getDouble(1) - slope) < 1e-9,
-      s"slope ${row.getDouble(1)} != $slope")
-    assert(math.abs(row.getDouble(2) - intercept) < 1e-9)
-    assert(math.abs(row.getDouble(3) - r2) < 1e-9)
-    // word-soup corpus still has a frequency head: slope must be negative
-    assert(row.getDouble(1) < 0.0)
-  }
-
   test("t18 heaps curve matches a driver-side sequential reference") {
     import org.apache.spark.sql.functions.col
     val nB = 10
@@ -464,41 +405,6 @@ class TextAnalysisSpec extends AnyFunSuite with BeforeAndAfterEach {
     // (new-vocab per token never increases bucket over bucket on this
     // corpus's head-heavy distribution)
     assert(got.map(_._3).zip(got.map(_._3).tail).forall { case (a, b) => b >= a })
-  }
-
-  test("t16 bigram logprob matches a driver-side scalar reference") {
-    val lambda = 0.7
-    import org.apache.spark.sql.functions.col
-    val docs = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("text")).collect()
-      .map(r => (r.getLong(0), r.getString(1).toLowerCase
-        .split("\\s+").filter(_.nonEmpty).toSeq))
-    val uni = docs.flatMap(_._2).groupBy(identity).map { case (t, xs) => t -> xs.length.toLong }
-    val n = docs.map(_._2.size.toLong).sum
-    val v = uni.size.toLong
-    val bi = docs.flatMap(_._2.sliding(2).filter(_.size == 2).map(p => (p(0), p(1))))
-      .groupBy(identity).map { case (p, xs) => p -> xs.length.toLong }
-    val expected = docs.flatMap { case (id, toks) =>
-      val pairs = toks.sliding(2).filter(_.size == 2).toSeq
-      if (pairs.isEmpty) None
-      else {
-        val nll = pairs.map { p =>
-          val (wp, wc) = (p(0), p(1))
-          -math.log(lambda * bi((wp, wc)) / uni(wp)
-            + (1.0 - lambda) * (uni(wc) + 1.0) / (n + v))
-        }
-        Some(id -> ((pairs.length, nll.sum / nll.length)))
-      }
-    }.toMap
-    val got = TextAnalysis.bigramLogprob(spark, sfDir).collect()
-      .map(r => r.getLong(0) -> ((r.getInt(1), r.getDouble(2)))).toMap
-    assert(got.keySet == expected.keySet, "doc coverage mismatch")
-    assert(got.nonEmpty)
-    got.foreach { case (id, (nb, sc)) =>
-      val (rnb, ref) = expected(id)
-      assert(nb == rnb, s"doc $id: n_bigrams $nb != $rnb")
-      assert(math.abs(sc - ref) < 1e-9, s"doc $id: $sc != $ref")
-    }
   }
 
   test("t20 DSIR weights: target-language docs score target-like") {

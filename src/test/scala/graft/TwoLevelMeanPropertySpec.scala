@@ -34,11 +34,11 @@ class TwoLevelMeanPropertySpec extends AnyFunSuite {
   test("faithful == definitional avg-of-zero-filled-averages (random tables)") {
     samples(20).foreach { rows =>
       val df = rows.toDF("grp", "day", "v")
+      val groups = rows.map(_._1).distinct
       val got = TwoLevelMean.faithful(df, col("grp"), col("day"), col("v"),
-          0 to 6, keyName = "day", outName = "m")
+          0 to 6, TwoLevelMean.Groups(spark, groups), keyName = "day", outName = "m")
         .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
 
-      val groups = rows.map(_._1).distinct
       val expected: Map[Int, Double] = (0 to 6).map { d =>
         val perGroup = groups.map { g =>
           val vs = rows.filter(r => r._1 == g && r._2 == d).map(_._3)
@@ -67,8 +67,7 @@ class TwoLevelMeanPropertySpec extends AnyFunSuite {
         val df = rows.toDF("grp", "day", "v")
         val before = actions()
         val q = TwoLevelMean.faithful(df, col("grp"), col("day"), col("v"),
-          0 to 6, keyName = "day", outName = "m",
-          groupsOpt = Some(TwoLevelMean.Groups(spark, 0 to 4)))
+          0 to 6, TwoLevelMean.Groups(spark, 0 to 4), keyName = "day", outName = "m")
         assert(actions() === before, "building faithful must run no Dataset action")
         val got = q.collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
         (0 to 6).foreach { d =>

@@ -93,4 +93,18 @@ class VectorFunctionsSpec extends AnyFunSuite {
       if (!r.isNullAt(0)) assert(r.getDouble(0) == r.getDouble(1), r.toString)
     }
   }
+
+  test("l2sq takes float/double arrays only: array<int> fails analysis, a cast restores it") {
+    import spark.implicits._
+    val df = Seq((Seq(1, 2, 3), Seq(4, 6, 3))).toDF("a", "b")
+    val err = intercept[org.apache.spark.sql.AnalysisException](
+      df.select(VectorFunctions.l2sq(col("a"), col("b"))))
+    assert(err.getMessage.contains("graft_l2sq expects array<float> or array<double>"))
+    // the caller widens explicitly, as the HOF form did implicitly
+    val got = df.select(VectorFunctions.l2sq(col("a").cast("array<double>"),
+      col("b").cast("array<double>")), VectorFunctions.l2sqHof(col("a"), col("b")))
+      .head()
+    assert(got.getDouble(0) === 25.0)
+    assert(got.getDouble(1) === 25.0)
+  }
 }
