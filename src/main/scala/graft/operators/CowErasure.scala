@@ -26,17 +26,15 @@ import graft.Tables
   * `v=2` and owner=1 partitions from `v=1` — the unaffected
   * partitions are served from the ORIGINAL files forever.
   *
-  * Crash safety (spec-pinned): a crash after the `v=2` rewrite but
-  * before the manifest write leaves `manifest_v1` as the head —
+  * Crash safety (spec-pinned): manifests follow the
+  * [[VersionedStore]] publish protocol. A crash after the `v=2`
+  * rewrite but before the publish leaves `manifest_v1` as the head —
   * readers still see the pre-erasure corpus, consistently; re-running
-  * the erasure overwrites `v=2` and publishes, self-healing (q88's
-  * contract). A crash DURING the manifest write leaves a marker-less
-  * `manifest_v2` directory — unpublished by definition (head stays 1)
-  * — which the re-run clears before its own errorifexists publish
-  * ([[LakehouseMerge.clearUnpublishedManifest]]), so every crash
-  * window heals on re-run. The audit gate before publish: each rewritten
-  * partition's read-back count must equal its v1 count minus its
-  * planned deletions (row conservation per partition).
+  * the erasure overwrites `v=2` and publishes, self-healing, and
+  * marker-less manifest debris is cleared by the re-run's publish.
+  * The audit gate before publish: each rewritten partition's
+  * read-back count must equal its v1 count minus its planned
+  * deletions (row conservation per partition).
   *
   * Exactness: counts are bigint, n_chars sums are exact bigint — the
   * oracle recomputes the post-erasure per-partition summary from the
@@ -58,6 +56,7 @@ import graft.Tables
   * re-expressed on plain parquet + Hadoop FS.
   */
 object CowErasure {
+  import VersionedStore.head
 
   private[graft] def tablePath(s: SparkSession, dir: String, mod: Int,
       rem: Int): String = {
@@ -66,28 +65,12 @@ object CowErasure {
     s"target/graft_table/documents_cow/$tag"
   }
 
-  private def fs(s: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-
-  private def manifestHead(s: SparkSession, path: String): Int = {
-    val f = fs(s, path)
-    val base = new org.apache.hadoop.fs.Path(path)
-    if (!f.exists(base)) 0
-    else f.listStatus(base).toSeq
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith("manifest_v") =>
-        n.stripPrefix("manifest_v").toInt }
-      .filter(v => f.exists(
-        new org.apache.hadoop.fs.Path(s"$path/manifest_v$v/_SUCCESS")))
-      .sorted.lastOption.getOrElse(0)
-  }
-
   /** Drop the persisted table (bench cold-path probe). */
   def invalidate(s: SparkSession, dir: String, mod: Int = 50,
       rem: Int = 7): Unit = {
     val path = tablePath(s, dir, mod, rem)
-    fs(s, path).delete(new org.apache.hadoop.fs.Path(path), true)
+    VersionedStore.fs(s, path)
+      .delete(new org.apache.hadoop.fs.Path(path), true)
     ()
   }
 
@@ -106,12 +89,7 @@ object CowErasure {
     val m = s.read.parquet(s"$path/v=1")
       .groupBy(col("source")).agg(count(lit(1)).as("n_rows"))
       .select(col("source"), lit(1).as("owner_version"), col("n_rows"))
-    // a crash DURING a manifest write leaves a marker-less directory
-    // (unresolvable, hence unpublished) — clear it so the self-healing
-    // re-run's errorifexists write can land (LakehouseMerge's shared
-    // healing rule)
-    LakehouseMerge.clearUnpublishedManifest(s, s"$path/manifest_v1")
-    m.coalesce(1).write.mode("errorifexists").parquet(s"$path/manifest_v1")
+    VersionedStore.publish(s, path, 1, m)
   }
 
   /** The copy-on-write erasure: rewrite ONLY partitions containing a
@@ -146,7 +124,7 @@ object CowErasure {
           s"${nV1 - nDel} (v1 $nV1 - deletions $nDel) — NOT publishing")
     }
     if (publish) {
-      val m1 = s.read.parquet(s"$path/manifest_v1")
+      val m1 = VersionedStore.manifest(s, path, 1)
       val affectedSet = affected.toSet
       val delBySrc = plan.map(p => p._1 -> p._3).toMap
       import s.implicits._
@@ -156,10 +134,8 @@ object CowErasure {
           (src, 2, r.getLong(2) - delBySrc(src))
         else (src, 1, r.getLong(2))
       }.toSeq
-      LakehouseMerge.clearUnpublishedManifest(s, s"$path/manifest_v2")
-      rows.toDF("source", "owner_version", "n_rows")
-        .coalesce(1).write.mode("errorifexists")
-        .parquet(s"$path/manifest_v2")
+      VersionedStore.publish(s, path, 2,
+        rows.toDF("source", "owner_version", "n_rows"))
     }
   }
 
@@ -167,9 +143,9 @@ object CowErasure {
     * `v=2`, owner=1 partitions from `v=1` (partition-pruned — the
     * deleted partitions' original files are never opened again). */
   private[graft] def readTable(s: SparkSession, path: String): DataFrame = {
-    val head = manifestHead(s, path)
-    require(head > 0, s"no published version at $path")
-    readTableAt(s, path, head)
+    val v = head(s, path)
+    require(v > 0, s"no published version at $path")
+    readTableAt(s, path, v)
   }
 
   /** Time travel: read the table as of published version `v`. A
@@ -178,11 +154,9 @@ object CowErasure {
     * see [[vacuum]]), never with a half-resolved dangling read. */
   private[graft] def readTableAt(s: SparkSession, path: String,
       v: Int): DataFrame = {
-    val f = fs(s, path)
-    require(f.exists(
-      new org.apache.hadoop.fs.Path(s"$path/manifest_v$v/_SUCCESS")),
+    require(VersionedStore.isPublished(s, path, v),
       s"version $v at $path is not published (or expired by vacuum)")
-    val owners = s.read.parquet(s"$path/manifest_v$v")
+    val owners = VersionedStore.manifest(s, path, v)
       .select(col("source"), col("owner_version")).collect()
       .map(r => r.getString(0) -> r.getInt(1))
     def slice(v: Int): Option[DataFrame] = {
@@ -209,10 +183,9 @@ object CowErasure {
   def erasedSummary(s: SparkSession, dir: String, mod: Int = 50,
       rem: Int = 7): DataFrame = {
     val path = tablePath(s, dir, mod, rem)
-    if (manifestHead(s, path) < 1) publishBase(s, dir, path)
-    if (manifestHead(s, path) < 2) eraseCow(s, dir, path, mod, rem)
-    val head = manifestHead(s, path)
-    val owners = s.read.parquet(s"$path/manifest_v$head")
+    if (head(s, path) < 1) publishBase(s, dir, path)
+    if (head(s, path) < 2) eraseCow(s, dir, path, mod, rem)
+    val owners = VersionedStore.manifest(s, path, head(s, path))
       .select(col("source"), col("owner_version"))
     readTable(s, path)
       .groupBy(col("source"))
@@ -258,24 +231,20 @@ object CowErasure {
     */
   private[graft] def vacuum(s: SparkSession, path: String,
       retainFrom: Int): (Int, Int) = {
-    val f = fs(s, path)
-    val head = manifestHead(s, path)
-    require(head >= retainFrom,
-      s"retention head $retainFrom is past the published head $head")
+    val f = VersionedStore.fs(s, path)
+    val h = head(s, path)
+    require(h >= retainFrom,
+      s"retention head $retainFrom is past the published head $h")
     val base = new org.apache.hadoop.fs.Path(path)
     // 1. expire manifests below the retention head (incl. marker-less
     // debris of crashed writers — unpublished by definition)
-    val expired = f.listStatus(base).toSeq.map(_.getPath)
-      .filter { p =>
-        val n = p.getName
-        n.startsWith("manifest_v") &&
-          n.stripPrefix("manifest_v").toInt < retainFrom
-      }
-    expired.foreach(p => f.delete(p, true))
+    val expired = VersionedStore.versions(s, path).filter(_ < retainFrom)
+    expired.foreach(v => f.delete(
+      new org.apache.hadoop.fs.Path(VersionedStore.manifestDir(path, v)), true))
     // 2. the live census: (owner_version, source) across every
     // retained manifest — partition-count-bounded metadata
-    val referenced = (retainFrom to head).flatMap { v =>
-      s.read.parquet(s"$path/manifest_v$v")
+    val referenced = (retainFrom to h).flatMap { v =>
+      VersionedStore.manifest(s, path, v)
         .select(col("owner_version"), col("source")).collect()
         .map(r => (r.getInt(0), r.getString(1)))
     }.toSet
@@ -316,12 +285,11 @@ object CowErasure {
   def vacuumedSummary(s: SparkSession, dir: String, mod: Int = 50,
       rem: Int = 7): DataFrame = {
     val path = tablePath(s, dir, mod, rem)
-    if (manifestHead(s, path) < 1) publishBase(s, dir, path)
-    if (manifestHead(s, path) < 2) eraseCow(s, dir, path, mod, rem)
-    vacuum(s, path, retainFrom = manifestHead(s, path))
-    val head = manifestHead(s, path)
-    val f = fs(s, path)
-    val owners = s.read.parquet(s"$path/manifest_v$head")
+    if (head(s, path) < 1) publishBase(s, dir, path)
+    if (head(s, path) < 2) eraseCow(s, dir, path, mod, rem)
+    vacuum(s, path, retainFrom = head(s, path))
+    val f = VersionedStore.fs(s, path)
+    val owners = VersionedStore.manifest(s, path, head(s, path))
       .select(col("source"), col("owner_version")).collect()
       .map(r => (r.getString(0), r.getInt(1)))
     import s.implicits._

@@ -38,17 +38,18 @@ import graft.Tables
   *     construction (every inserted key set its bits); false
   *     positives only cost an extra file open.
   *
-  * Store layout (the LakehouseMerge L2 idiom, stats-last = publish):
+  * Store layout (the [[VersionedStore]] protocol, with `filestats` as
+  * the manifest prefix):
   * {{{
   *   <path>/data_v1_<token>/part-*.parquet   staged, writer-unique
-  *   <path>/filestats_v1/                    1 row per file + _SUCCESS
+  *   <path>/filestats_v1/                    1 row per file, published
   * }}}
-  * The stats manifest is written LAST and doubles as the publish
-  * marker: a crash before it lands leaves only inert staged files,
-  * and a reader never resolves a half-written version. Stats rows
-  * are derived by reading the STAGED FILES BACK (`_metadata
-  * .file_path`, one aggregate pass), not from the writer's intent —
-  * the manifest describes what is actually on disk.
+  * The stats manifest is written LAST and is the publish: a crash
+  * before it lands leaves only inert staged files, and a reader never
+  * resolves a half-written version. Stats rows are derived by reading
+  * the STAGED FILES BACK (`_metadata.file_path`, one aggregate pass),
+  * not from the writer's intent — the manifest describes what is
+  * actually on disk.
   *
   * Scale posture: the stats manifest is O(files), not O(rows) — at
   * 100 TB / 1 GB files that is 10^5 rows of a few hundred bytes,
@@ -66,35 +67,19 @@ import graft.Tables
   */
 object DataSkipping {
 
-  private def fs(s: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
+  import VersionedStore.head
+
+  /** The manifest prefix: the head `filestats_vN` snapshot IS the
+    * published view of the store — readers plan from its rows alone,
+    * so a compaction ([[optimizeStore]]) supersedes old data files
+    * simply by publishing the next snapshot. */
+  private val Stats = "filestats"
 
   private def tablePath(s: SparkSession, dir: String, kind: String): String = {
     val tag = s"${dir.replaceAll("[^A-Za-z0-9.]", "_")}_${kind}_" +
       IndexStore.corpusTag(s, dir, "orders.parquet")
     s"target/graft_table/orders_skip/$kind/L1_$tag"
   }
-
-  /** Highest `filestats_vN` with a `_SUCCESS` marker; 0 if none.
-    * The stats snapshot IS the published view of the store — readers
-    * resolve the head version and plan from its rows alone, so a
-    * compaction ([[optimizeStore]]) supersedes old data files simply
-    * by publishing the next snapshot. */
-  private[graft] def statsVersion(s: SparkSession, path: String): Int = {
-    val f = fs(s, path)
-    val base = new org.apache.hadoop.fs.Path(path)
-    if (!f.exists(base)) 0
-    else f.listStatus(base).toSeq.map(_.getPath.getName)
-      .collect { case n if n.startsWith("filestats_v") =>
-        n.stripPrefix("filestats_v").toInt }
-      .filter(v => f.exists(
-        new org.apache.hadoop.fs.Path(s"$path/filestats_v$v/_SUCCESS")))
-      .sorted.lastOption.getOrElse(0)
-  }
-
-  private def published(s: SparkSession, path: String): Boolean =
-    statsVersion(s, path) >= 1
 
   // ---------------------------------------------------------------
   // Morton (Z-order) interleave
@@ -194,53 +179,56 @@ object DataSkipping {
         col("mask")))).as("bloom"))
       .withColumn("bloom_m", lit(m))
 
-  /** Publish the clustered table + its per-file stats manifest.
-    * `cluster` orders the write (range-partition + in-file sort);
-    * stats are read BACK from the staged files: per file min/max of
-    * both predicate dimensions, row count, and the o_orderkey bloom
-    * bitset as 256 `bit_or`-aggregated words. */
-  private def publish(s: SparkSession, dir: String, kind: String,
+  /** The per-file stats rows of staged directory `dataDir`, read
+    * BACK from the files (stats describe the bytes on disk, not the
+    * intent): per file min/max of both predicate dimensions, row
+    * count, and the o_orderkey bloom bitset with m sized from the
+    * layout's largest file — one stats schema for the initial publish,
+    * the per-batch stream ingest and OPTIMIZE. */
+  private def fileStats(s: SparkSession, path: String,
+      dataDir: String): DataFrame = {
+    val back = s.read.parquet(s"$path/$dataDir")
+      .withColumn("file", col("_metadata.file_path"))
+    // one pass for ranges + rows; bloom needs the explode, so a
+    // second grouped pass over the same scan builds the bitsets
+    val ranges = back.groupBy(col("file"))
+      .agg(min(col("o_custkey")).as("min_custkey"),
+        max(col("o_custkey")).as("max_custkey"),
+        min(col("o_orderdate")).as("min_orderdate"),
+        max(col("o_orderdate")).as("max_orderdate"),
+        count(lit(1)).as("n_rows"))
+    val maxRows = ranges.agg(max(col("n_rows"))).head().getLong(0)
+    ranges.join(bloomRelation(back, bloomBitsFor(maxRows)), Seq("file"))
+      .withColumn("data_dir", lit(dataDir))
+  }
+
+  /** The store for `kind`, published on first use. */
+  private def ensureStore(s: SparkSession, dir: String, kind: String,
       cluster: DataFrame => DataFrame, nFiles: Int): String = {
     val path = tablePath(s, dir, kind)
-    if (!published(s, path)) {
-      val orders = Tables.orders(s, dir)
-        .select(col("o_orderkey").cast("long").as("o_orderkey"),
-          col("o_custkey").cast("long").as("o_custkey"),
-          col("o_totalprice"), col("o_orderdate").cast("date")
-            .as("o_orderdate"))
-      val dataDir = s"data_v1_" +
-        java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-      cluster(orders.repartition(nFiles))
-        .write.mode("errorifexists").parquet(s"$path/$dataDir")
-      // read back: stats describe the bytes on disk, not the intent
-      val back = s.read.parquet(s"$path/$dataDir")
-        .withColumn("file", col("_metadata.file_path"))
-      // one pass for ranges + rows; bloom needs the explode, so a
-      // second grouped pass over the same scan builds the bitsets
-      val ranges = back.groupBy(col("file"))
-        .agg(min(col("o_custkey")).as("min_custkey"),
-          max(col("o_custkey")).as("max_custkey"),
-          min(col("o_orderdate")).as("min_orderdate"),
-          max(col("o_orderdate")).as("max_orderdate"),
-          count(lit(1)).as("n_rows"))
-      // m sized from the layout's largest file (one metadata-sized
-      // agg at publish time); the bitset pass carries it per row
-      val maxRows = ranges.agg(max(col("n_rows"))).head().getLong(0)
-      val blooms = bloomRelation(back, bloomBitsFor(maxRows))
-      val stats = ranges.join(blooms, Seq("file"))
-        .withColumn("data_dir", lit(dataDir))
-      LakehouseMerge.clearUnpublishedManifest(s, s"$path/filestats_v1")
-      stats.coalesce(1).write.mode("errorifexists")
-        .parquet(s"$path/filestats_v1")
-    }
+    if (head(s, path, Stats) < 1) publishAt(s, dir, path, cluster, nFiles)
     path
+  }
+
+  /** Publish the clustered table + its per-file stats manifest as v1.
+    * `cluster` orders the write (range-partition + in-file sort). */
+  private[graft] def publishAt(s: SparkSession, dir: String, path: String,
+      cluster: DataFrame => DataFrame, nFiles: Int): Unit = {
+    val orders = Tables.orders(s, dir)
+      .select(col("o_orderkey").cast("long").as("o_orderkey"),
+        col("o_custkey").cast("long").as("o_custkey"),
+        col("o_totalprice"), col("o_orderdate").cast("date")
+          .as("o_orderdate"))
+    val dataDir = VersionedStore.stage(cluster(orders.repartition(nFiles)),
+      path, "v1")
+    VersionedStore.publish(s, path, 1, fileStats(s, path, dataDir), Stats)
   }
 
   /** The linear store: range-clustered + sorted on `o_custkey` alone
     * (q97's OPTIMIZE layout — one dimension perfect, the other
     * scattered). */
   private[graft] def ensureLinear(s: SparkSession, dir: String): String =
-    publish(s, dir, "lin",
+    ensureStore(s, dir, "lin",
       df => df.repartitionByRange(16, col("o_custkey"))
         .sortWithinPartitions(col("o_custkey")), 16)
 
@@ -262,7 +250,7 @@ object DataSkipping {
     * equi-width on exact bounds is the same contract at this data
     * shape and costs one metadata-sized aggregate. */
   private[graft] def ensureZorder(s: SparkSession, dir: String): String =
-    publish(s, dir, "zord",
+    ensureStore(s, dir, "zord",
       df => {
         val days = datediff(col("o_orderdate"),
           lit("1992-01-01").cast("date")).cast("long")
@@ -285,8 +273,7 @@ object DataSkipping {
   // ---------------------------------------------------------------
 
   private[graft] def statsDf(s: SparkSession, path: String): DataFrame = {
-    val v = math.max(statsVersion(s, path), 1)
-    s.read.parquet(s"$path/filestats_v$v")
+    VersionedStore.manifest(s, path, math.max(head(s, path, Stats), 1), Stats)
   }
 
   /** Files whose stats row says the predicate CAN match, as full
@@ -426,7 +413,7 @@ object DataSkipping {
 
   /** CONTINUOUS ingest into a stats-skipping store: every micro-batch
     * lands one clustered data file plus its read-back stats row
-    * (ranges + bloom, the same schema [[publish]] writes), appended
+    * (ranges + bloom, [[fileStats]]'s one schema), appended
     * to the store's stats directory — so the metadata-pruned read
     * path stays correct while the table grows. The per-batch order
     * is data-then-stats (stats-last = the batch's publish marker):
@@ -450,29 +437,15 @@ object DataSkipping {
     stream.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
       if (!batch.isEmpty) {
         val s = batch.sparkSession
-        val dataDir = s"data_b${id}_" +
-          java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-        batch.coalesce(1).sortWithinPartitions(col("o_custkey"))
-          .write.mode("errorifexists").parquet(s"$path/$dataDir")
-        val back = s.read.parquet(s"$path/$dataDir")
-          .withColumn("file", col("_metadata.file_path"))
-        val ranges = back.groupBy(col("file"))
-          .agg(min(col("o_custkey")).as("min_custkey"),
-            max(col("o_custkey")).as("max_custkey"),
-            min(col("o_orderdate")).as("min_orderdate"),
-            max(col("o_orderdate")).as("max_orderdate"),
-            count(lit(1)).as("n_rows"))
-        // one data file per batch: m sized from its row count
-        val maxRows = ranges.agg(max(col("n_rows"))).head().getLong(0)
-        val blooms = bloomRelation(back, bloomBitsFor(maxRows))
+        val dataDir = VersionedStore.stage(
+          batch.coalesce(1).sortWithinPartitions(col("o_custkey")),
+          path, s"b$id")
         // append to the HEAD snapshot (post-OPTIMIZE batches land in
         // the new version's stats; Spark's append commit refreshes
-        // the _SUCCESS marker, so the first-ever batch also publishes)
-        val v = math.max(statsVersion(s, path), 1)
-        ranges.join(blooms, Seq("file"))
-          .withColumn("data_dir", lit(dataDir))
-          .coalesce(1).write.mode("append")
-          .parquet(s"$path/filestats_v$v")
+        // the publish marker, so the first-ever batch also publishes)
+        val v = math.max(head(s, path, Stats), 1)
+        fileStats(s, path, dataDir).coalesce(1).write.mode("append")
+          .parquet(VersionedStore.manifestDir(path, v, Stats))
         ()
       }
     }
@@ -481,7 +454,7 @@ object DataSkipping {
     * drifts into one small file per micro-batch; this rewrites ALL
     * currently-published files into `targetFiles` range-clustered,
     * key-sorted files and publishes the NEXT stats snapshot — data
-    * first, stats last (`errorifexists` + `_SUCCESS`), so a crash
+    * first, stats last ([[VersionedStore.publish]]), so a crash
     * anywhere leaves the old snapshot serving and the new files as
     * vacuumable orphans (the store-wide crash contract). Row
     * conservation is audited against the read-back before the
@@ -493,39 +466,23 @@ object DataSkipping {
     * indefinitely. */
   private[graft] def optimizeStore(s: SparkSession, path: String,
       targetFiles: Int): Unit = {
-    val head = statsVersion(s, path)
-    require(head >= 1, s"no published stats at $path")
+    val h = head(s, path, Stats)
+    require(h >= 1, s"no published stats at $path")
     val old = statsDf(s, path)
     val oldFiles = old.select(col("file")).collect()
       .map(_.getString(0)).toSeq
     val expRows = old.agg(sum(col("n_rows"))).head().getLong(0)
-    val dataDir = s"data_opt${head + 1}_" +
-      java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-    s.read.parquet(oldFiles: _*)
+    val dataDir = VersionedStore.stage(s.read.parquet(oldFiles: _*)
       .repartitionByRange(targetFiles, col("o_custkey"))
-      .sortWithinPartitions(col("o_custkey"))
-      .write.mode("errorifexists").parquet(s"$path/$dataDir")
-    val back = s.read.parquet(s"$path/$dataDir")
-      .withColumn("file", col("_metadata.file_path"))
-    val gotRows = back.count()
+      .sortWithinPartitions(col("o_custkey")), path, s"opt${h + 1}")
+    val gotRows = s.read.parquet(s"$path/$dataDir").count()
     require(gotRows == expRows,
       s"OPTIMIZE audit failed at $path: rewrote $gotRows rows, " +
         s"expected $expRows — NOT publishing")
-    val ranges = back.groupBy(col("file"))
-      .agg(min(col("o_custkey")).as("min_custkey"),
-        max(col("o_custkey")).as("max_custkey"),
-        min(col("o_orderdate")).as("min_orderdate"),
-        max(col("o_orderdate")).as("max_orderdate"),
-        count(lit(1)).as("n_rows"))
-    // compacted files are larger: m re-sized from the new rows/file
-    val maxRows = ranges.agg(max(col("n_rows"))).head().getLong(0)
-    val blooms = bloomRelation(back, bloomBitsFor(maxRows))
-    LakehouseMerge.clearUnpublishedManifest(s,
-      s"$path/filestats_v${head + 1}")
-    ranges.join(blooms, Seq("file"))
-      .withColumn("data_dir", lit(dataDir))
-      .coalesce(1).write.mode("errorifexists")
-      .parquet(s"$path/filestats_v${head + 1}")
+    // compacted files are larger: fileStats re-sizes m from the new
+    // rows/file
+    VersionedStore.publish(s, path, h + 1, fileStats(s, path, dataDir),
+      Stats)
   }
 
   // ---------------------------------------------------------------
@@ -546,7 +503,7 @@ object DataSkipping {
     * is pure space reclamation, safe at any time; returns the count
     * removed. O(files) listing + set difference — metadata-tier. */
   private[graft] def vacuumOrphans(s: SparkSession, path: String): Int = {
-    val f = fs(s, path)
+    val f = VersionedStore.fs(s, path)
     val named = statsDf(s, path).select(col("file")).collect()
       .map(r => new org.apache.hadoop.fs.Path(r.getString(0)).getParent
         .getName).toSet

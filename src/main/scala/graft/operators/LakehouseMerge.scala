@@ -17,47 +17,19 @@ import graft.Tables
   * requires exact conservation) and the IndexStore manifest-last
   * convention, generalized to MULTIPLE immutable versions.
   *
-  * Table layout under one directory (the Iceberg/Delta split of
-  * DATA vs METADATA, public):
-  *   `data_vN_<token>/`  immutable parquet data files, STAGED under a
-  *                       writer-unique random token — two concurrent
-  *                       writers racing for the same version number
-  *                       write disjoint directories and can never
-  *                       clobber each other's files; only the
-  *                       manifest commit is contended.
-  *   `manifest_vN/`      1-row parquet (version, n_rows, orders_mass,
-  *                       price_mass, data_dir) — written LAST; its
-  *                       `_SUCCESS` marker IS the publish, and its
-  *                       `data_dir` names the winning staged
-  *                       directory. Manifests are append-only:
-  *                       publishing N never touches N−1, so a reader
-  *                       holds a consistent snapshot for as long as
-  *                       it wants (time travel falls out free).
-  *
-  * Crash safety (spec-pinned): a crash BEFORE publish leaves staged
-  * data files but no `manifest_vN/_SUCCESS` — readers keep serving
-  * N−1, and the next writer run stages fresh files and publishes,
-  * self-healing. A crash DURING the manifest write leaves a
-  * marker-less `manifest_vN` directory — unpublished by definition —
-  * which the re-run clears before its own errorifexists publish
-  * ([[clearUnpublishedManifest]]), same story. Orphaned staged
-  * directories (crashed or rebased writers) are invisible to every
-  * reader and removed by the q94 vacuum contract ([[CowErasure]]'s
-  * retention sweep is the same idea on the partition-owned store).
-  *
-  * Concurrent writers (r13 verdict #8, closed r15): publish performs
-  * an OPTIMISTIC version check — it re-lists published manifests and
-  * throws [[PublishConflictException]] if the head moved past the
-  * version this writer based its merge on, or if the target manifest
-  * already published. [[mergeDeltaWithRebase]] is the retry loop on
-  * top: the loser deletes its own staged files, re-reads the NEW
-  * head, re-derives the merge against it, re-audits, re-publishes —
-  * so interleaved writers both land and the final mass audit carries
-  * BOTH deltas (spec-pinned with an injected interleaving). The
-  * remaining race is two manifests landing the same version in the
-  * same instant; closing it needs the store's conditional-put/rename
-  * primitive (HDFS atomic rename, S3 If-None-Match), a deployment
-  * binding, not plan logic.
+  * Storage is the [[VersionedStore]] protocol (staged writer-unique
+  * `data_vN_<token>/` directories, append-only `manifest_vN/` rows
+  * naming them, the publish marker, debris healing, the optimistic
+  * head check and the rebase loop): this file keeps the merge, its
+  * mass audit and its manifest columns (version, n_rows, orders_mass,
+  * price_mass, data_dir). Manifests are append-only — publishing N
+  * never touches N−1, so time travel falls out free. Concurrent
+  * writers rebase: the loser re-reads the NEW head, re-derives the
+  * merge, re-audits and re-publishes, so interleaved writers both land
+  * and the final mass audit carries BOTH deltas (spec-pinned with an
+  * injected interleaving). Orphaned staged directories (crashed or
+  * rebased writers) are invisible to every reader and removed by
+  * [[expireVersions]].
   *
   * Scale posture: the merge is ONE full-outer join of the current
   * version with the delta summary, both keyed on the merge key (at
@@ -77,12 +49,7 @@ import graft.Tables
   * exact below 1e26 cents, i.e. always.
   */
 object LakehouseMerge {
-
-  /** The optimistic-concurrency verdict: another writer published
-    * first; the caller must rebase (re-merge against the new head)
-    * and retry — [[mergeDeltaWithRebase]] does exactly that. */
-  final class PublishConflictException(msg: String)
-    extends RuntimeException(msg)
+  import VersionedStore.{head, readVersion}
 
   // layout L2 (r15): staged data_vN_<token> dirs + manifest data_dir
   // column — a path bump so stores persisted under the v=N layout are
@@ -105,68 +72,6 @@ object LakehouseMerge {
     s"target/graft_table/orders_summary_opt/L2_$tag"
   }
 
-  private def fs(s: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-
-  /** Highest version with a complete (SUCCESS-marked) manifest; 0 if
-    * none. Probed through the Hadoop FS API (HDFS/S3 paths work). */
-  private[graft] def publishedVersion(s: SparkSession, path: String): Int = {
-    val f = fs(s, path)
-    val base = new org.apache.hadoop.fs.Path(path)
-    if (!f.exists(base)) 0
-    else f.listStatus(base).toSeq
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith("manifest_v") =>
-        n.stripPrefix("manifest_v").toInt }
-      .filter(v => f.exists(
-        new org.apache.hadoop.fs.Path(s"$path/manifest_v$v/_SUCCESS")))
-      .sorted.lastOption.getOrElse(0)
-  }
-
-  /** Clear an UNPUBLISHED manifest directory (exists but has no
-    * `_SUCCESS`) so the subsequent `errorifexists` write can land.
-    * A manifest without its marker is by definition the debris of a
-    * writer that crashed MID-manifest-write — `publishedVersion`
-    * never resolves it, so deleting it changes nothing a reader can
-    * see, and leaving it would turn the self-healing re-run into a
-    * path-already-exists failure. A manifest WITH `_SUCCESS` is left
-    * alone — the errorifexists write then throws, which is exactly
-    * the optimistic-concurrency guard (another writer published
-    * first). Shared by this store and [[CowErasure]]'s. */
-  private[operators] def clearUnpublishedManifest(s: SparkSession,
-      manifestDir: String): Unit = {
-    val f = fs(s, manifestDir)
-    val p = new org.apache.hadoop.fs.Path(manifestDir)
-    if (f.exists(p) &&
-        !f.exists(new org.apache.hadoop.fs.Path(s"$manifestDir/_SUCCESS"))) {
-      f.delete(p, true)
-      ()
-    }
-  }
-
-  /** STAGE version data WITHOUT publishing — the crash-window state
-    * the spec drives directly. Every call writes a fresh
-    * writer-unique directory (concurrent writers can never clobber
-    * each other's files) and returns its name for [[auditAndPublish]];
-    * a directory no manifest ever names is inert orphan debris. */
-  private[graft] def writeVersion(df: DataFrame, path: String,
-      v: Int): String = {
-    val dir = s"data_v${v}_" +
-      java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-    df.write.mode("errorifexists").parquet(s"$path/$dir")
-    dir
-  }
-
-  /** The staged directory the published manifest for `v` names. */
-  private[graft] def dataDirOf(s: SparkSession, path: String,
-      v: Int): String =
-    s.read.parquet(s"$path/manifest_v$v").head().getString(4)
-
-  private[graft] def readVersion(s: SparkSession, path: String,
-      v: Int): DataFrame =
-    s.read.parquet(s"$path/${dataDirOf(s, path, v)}")
-
   /** Read version `v` UNDER a (possibly newer) schema: columns the
     * version predates come back as typed nulls — the Iceberg/Delta
     * read-schema-merge primitive, what makes time travel work across
@@ -182,34 +87,20 @@ object LakehouseMerge {
   }
 
   /** TIMESTAMP-based time travel (the Delta `TIMESTAMP AS OF` /
-    * Iceberg snapshot-at-timestamp primitive, public): resolve the
-    * newest version whose PUBLISH instant is ≤ `ts` and read it.
-    * The publish instant is the `_SUCCESS` marker's filesystem
-    * modification time — the atomic event that made the version
-    * visible — so no manifest schema change is needed and the
-    * mapping is exactly "what a reader at that wall-clock moment
-    * saw". Versions published after `ts` are invisible; a `ts`
-    * before the first publish throws (no table existed). O(versions)
-    * metadata probes, no data touched until the read.
+    * Iceberg snapshot-at-timestamp primitive, public): the newest
+    * version whose PUBLISH instant is ≤ `ts` ([[VersionedStore.head]]
+    * with `asOf`) — no manifest schema change is needed, and the
+    * mapping is exactly "what a reader at that wall-clock moment saw".
+    * A `ts` before the first publish throws (no table existed).
+    * O(versions) metadata probes, no data touched until the read.
     * Deterministic given the store's history, but wall-clock-keyed —
     * spec-driven (Round15OpsSpec brackets each publish with clock
     * readings), not oracle-registered. */
   private[graft] def versionAsOf(s: SparkSession, path: String,
       ts: Long): Int = {
-    val f = fs(s, path)
-    val base = new org.apache.hadoop.fs.Path(path)
-    require(f.exists(base), s"no table at $path")
-    val candidates = f.listStatus(base).toSeq.map(_.getPath.getName)
-      .collect { case n if n.startsWith("manifest_v") =>
-        n.stripPrefix("manifest_v").toInt }
-      .filter { v =>
-        val m = new org.apache.hadoop.fs.Path(
-          s"$path/manifest_v$v/_SUCCESS")
-        f.exists(m) && f.getFileStatus(m).getModificationTime <= ts
-      }
-    require(candidates.nonEmpty,
-      s"no version of $path was published at or before $ts")
-    candidates.max
+    val v = head(s, path, asOf = ts)
+    require(v > 0, s"no version of $path was published at or before $ts")
+    v
   }
 
   private[graft] def readTableAsOf(s: SparkSession, path: String,
@@ -236,18 +127,18 @@ object LakehouseMerge {
   private[graft] def expireVersions(s: SparkSession, path: String,
       keepLast: Int): (Int, Int) = {
     require(keepLast >= 1, "must retain at least the head")
-    val f = fs(s, path)
-    val head = publishedVersion(s, path)
-    require(head >= 1, s"no published version at $path")
-    val cutoff = head - keepLast + 1
-    val expired = (1 until cutoff).filter(v => f.exists(
-      new org.apache.hadoop.fs.Path(s"$path/manifest_v$v/_SUCCESS")))
+    val f = VersionedStore.fs(s, path)
+    val h = head(s, path)
+    require(h >= 1, s"no published version at $path")
+    val cutoff = h - keepLast + 1
+    val expired =
+      (1 until cutoff).filter(VersionedStore.isPublished(s, path, _))
     expired.foreach { v =>
-      f.delete(new org.apache.hadoop.fs.Path(s"$path/manifest_v$v"), true)
+      f.delete(new org.apache.hadoop.fs.Path(
+        VersionedStore.manifestDir(path, v)), true)
     }
-    val survivors = (1 to head).filter(v => f.exists(
-      new org.apache.hadoop.fs.Path(s"$path/manifest_v$v/_SUCCESS")))
-      .map(v => dataDirOf(s, path, v)).toSet
+    val survivors = (1 to h).filter(VersionedStore.isPublished(s, path, _))
+      .map(VersionedStore.dataDirOf(s, path, _)).toSet
     val orphans = f.listStatus(new org.apache.hadoop.fs.Path(path))
       .toSeq.map(_.getPath)
       .filter(p => p.getName.startsWith("data_v") &&
@@ -261,26 +152,26 @@ object LakehouseMerge {
   def invalidateOrdersSummary(s: SparkSession, dir: String,
       mod: Int = 3): Unit = {
     val path = tablePath(s, dir, mod)
-    fs(s, path).delete(new org.apache.hadoop.fs.Path(path), true)
+    VersionedStore.fs(s, path)
+      .delete(new org.apache.hadoop.fs.Path(path), true)
     ()
   }
 
   /** The published view of the table: resolves the manifest head,
     * then reads that version's files. */
   def readTable(s: SparkSession, path: String): DataFrame = {
-    val v = publishedVersion(s, path)
+    val v = head(s, path)
     require(v > 0, s"no published version at $path")
     readVersion(s, path, v)
   }
 
   /** AUDIT then PUBLISH version `v` from its staged directory: read
     * the just-written files BACK from storage, compare (rows,
-    * orders_mass, price_mass) against the caller's expectation,
-    * optimistically re-check the version head, and only then write
-    * `manifest_vN` naming `dataDir` (the publish). A failed audit
+    * orders_mass, price_mass) against the caller's expectation, and
+    * only then publish `manifest_vN` naming `dataDir`. A failed audit
     * throws with both sides — the staged files are inert. A moved
     * head (or a lost manifest-write race) throws
-    * [[PublishConflictException]] — rebase and retry. */
+    * [[VersionedStore.PublishConflictException]] — rebase and retry. */
   private[graft] def auditAndPublish(s: SparkSession, path: String, v: Int,
       dataDir: String, expRows: Long, expOrders: Long,
       expPrice: java.math.BigDecimal): Unit = {
@@ -294,32 +185,15 @@ object LakehouseMerge {
       s"audit failed for v$v at $path: read back ($gotRows rows, " +
         s"$gotOrders orders, $gotPrice) expected ($expRows, $expOrders, " +
         s"$expPrice) — NOT publishing")
-    // optimistic concurrency check (r13 verdict #8): conflict rather
-    // than publish over a version another writer landed first
-    val head = publishedVersion(s, path)
-    if (head != v - 1)
-      throw new PublishConflictException(
-        s"publish conflict at $path: head is v$head, this writer merged " +
-          s"from v${v - 1} — rebase required")
     import s.implicits._
-    clearUnpublishedManifest(s, s"$path/manifest_v$v")
-    try Seq((v, gotRows, gotOrders, gotPrice.toPlainString, dataDir))
-      .toDF("version", "n_rows", "orders_mass", "price_mass", "data_dir")
-      .coalesce(1).write.mode("errorifexists").parquet(s"$path/manifest_v$v")
-    catch { case scala.util.control.NonFatal(e) =>
-      // errorifexists lost the manifest race: if a COMPLETE manifest
-      // now sits there, another writer won — conflict; anything else
-      // (an IO failure) propagates as itself
-      if (publishedVersion(s, path) >= v)
-        throw new PublishConflictException(
-          s"publish conflict at $path: another writer landed v$v first")
-      else throw e
-    }
+    VersionedStore.publish(s, path, v,
+      Seq((v, gotRows, gotOrders, gotPrice.toPlainString, dataDir))
+        .toDF("version", "n_rows", "orders_mass", "price_mass", "data_dir"))
   }
 
   private def readManifestRow(s: SparkSession, path: String,
       v: Int): (Long, Long, java.math.BigDecimal) = {
-    val r = s.read.parquet(s"$path/manifest_v$v").head()
+    val r = VersionedStore.manifest(s, path, v).head()
     (r.getLong(1), r.getLong(2), new java.math.BigDecimal(r.getString(3)))
   }
 
@@ -374,50 +248,31 @@ object LakehouseMerge {
   }
 
   /** Merge a summarized `delta` into the table under
-    * write-audit-publish with OPTIMISTIC RETRY (r14 verdict #6): on a
-    * publish conflict the loser deletes its own staged files, re-reads
+    * write-audit-publish with OPTIMISTIC RETRY
+    * ([[VersionedStore.withRebase]], r14 verdict #6): a loser re-reads
     * the NEW head, re-derives the merge against it, re-audits and
-    * re-publishes — so every writer's delta lands exactly once and
-    * the manifest chain's mass audit carries all of them. Returns the
-    * version this writer published. `beforePublish` is the spec's
-    * interleaving injection point (runs after staging, before the
-    * audit+publish — where a concurrent winner lands). */
+    * re-publishes — so every writer's delta lands exactly once and the
+    * manifest chain's mass audit carries all of them. Returns the
+    * version this writer published. */
   private[graft] def mergeDeltaWithRebase(s: SparkSession, path: String,
       delta: DataFrame, maxRetries: Int = 3,
       beforePublish: Int => Unit = _ => ()): Int = {
     val (_, omD, pmD) = massOf(delta)
-    var attempt = 0
-    var published = -1
-    while (published < 0) {
-      val head = publishedVersion(s, path)
-      require(head > 0, s"no published version at $path to merge into")
-      val merged = mergeInto(readVersion(s, path, head), delta)
-      val v = head + 1
-      val dataDir = writeVersion(merged, path, v)
-      val (_, omH, pmH) = readManifestRow(s, path, head)
+    VersionedStore.withRebase(s, path, maxRetries, beforePublish) { h =>
+      val merged = mergeInto(readVersion(s, path, h), delta)
+      val dataDir = VersionedStore.stage(merged, path, s"v${h + 1}")
+      val (_, omH, pmH) = readManifestRow(s, path, h)
       val expRows = merged.count()
-      beforePublish(attempt)
-      try {
-        auditAndPublish(s, path, v, dataDir, expRows, omH + omD,
-          pmH.add(pmD))
-        published = v
-      } catch { case e: PublishConflictException =>
-        // drop this attempt's staged files (they are ours alone —
-        // writer-unique dir) and rebase onto whatever head won
-        fs(s, path).delete(
-          new org.apache.hadoop.fs.Path(s"$path/$dataDir"), true)
-        attempt += 1
-        if (attempt > maxRetries) throw e
-      }
+      (dataDir, () => auditAndPublish(s, path, h + 1, dataDir, expRows,
+        omH + omD, pmH.add(pmD)))
     }
-    published
   }
 
   /** First publish of a table: summarize, stage, audit, publish v1. */
   private def publishBaseVersion(s: SparkSession, path: String,
       base: DataFrame): Unit = {
     val (r, om, pm) = massOf(base)
-    val dataDir = writeVersion(base, path, 1)
+    val dataDir = VersionedStore.stage(base, path, "v1")
     auditAndPublish(s, path, 1, dataDir, r, om, pm)
   }
 
@@ -446,14 +301,21 @@ object LakehouseMerge {
     */
   def upsertOrdersStream(streamOrders: DataFrame, path: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    streamOrders.writeStream.foreachBatch {
+    upsertStream(streamOrders, path, batch => summarize(batch
+      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
+        col("o_orderdate"))))
+
+  /** Every non-empty micro-batch: summarize, then publish it as the
+    * base version or merge it into the head. */
+  private def upsertStream(stream: DataFrame, path: String,
+      summarizeBatch: DataFrame => DataFrame)
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    stream.writeStream.foreachBatch {
       (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) {
           val s = batch.sparkSession
-          val delta = summarize(batch
-            .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-              col("o_orderdate"))).cache()
-          if (publishedVersion(s, path) == 0)
+          val delta = summarizeBatch(batch).cache()
+          if (head(s, path) == 0)
             publishBaseVersion(s, path, delta)
           else
             mergeDeltaWithRebase(s, path, delta)
@@ -476,21 +338,9 @@ object LakehouseMerge {
     */
   def upsertOrdersStreamEvolved(streamOrders: DataFrame, path: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    streamOrders.writeStream.foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          val delta = summarizeUrgent(batch
-            .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-              col("o_orderdate"), col("o_orderpriority"))).cache()
-          if (publishedVersion(s, path) == 0)
-            publishBaseVersion(s, path, delta)
-          else
-            mergeDeltaWithRebase(s, path, delta)
-          delta.unpersist()
-          ()
-        }
-    }
+    upsertStream(streamOrders, path, batch => summarizeUrgent(batch
+      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
+        col("o_orderdate"), col("o_orderpriority"))))
 
   /** q89 — TIME-TRAVEL version diff: read versions 1 and 2 of the
     * published table CONCURRENTLY (immutable staged directories make
@@ -516,21 +366,32 @@ object LakehouseMerge {
   def versionDiff(s: SparkSession, dir: String, mod: Int = 3): DataFrame = {
     upsertOrdersSummary(s, dir, mod) // ensure v1+v2 are published
     val path = tablePath(s, dir, mod)
-    val v1 = readVersion(s, path, 1).as("a")
-    val v2 = readVersion(s, path, 2).as("b")
-    v2.join(v1, Seq("o_custkey"), "left")
+    changedRows(readVersion(s, path, 2), readVersion(s, path, 1))
+      .orderBy(col("o_custkey"))
+  }
+
+  /** The rows a publish touched, from version `cur` over its
+    * predecessor `prev`: a customer absent from `prev` is an insert, a
+    * changed `n_orders` an update (the merge only adds mass, so
+    * "touched" ≡ "n_orders grew" and deletes cannot occur), with exact
+    * bigint/decimal deltas — and the `n_urgent` delta, null-filled
+    * history counting as zero, when `cur` carries the evolved column.
+    * Shared by q89, q96 and q100. */
+  private def changedRows(cur: DataFrame, prev: DataFrame): DataFrame =
+    cur.as("b").join(prev.as("a"), Seq("o_custkey"), "left")
       .filter(col("a.n_orders").isNull ||
         col("b.n_orders") =!= col("a.n_orders"))
-      .select(col("o_custkey"),
+      .select(Seq(col("o_custkey"),
         when(col("a.n_orders").isNull, lit("insert"))
           .otherwise(lit("update")).as("change"),
         (col("b.n_orders") - coalesce(col("a.n_orders"), lit(0L)))
           .as("n_orders_delta"),
         (col("b.total_dec") -
           coalesce(col("a.total_dec"), lit(0).cast("decimal(28,2)")))
-          .cast("double").as("price_delta"))
-      .orderBy(col("o_custkey"))
-  }
+          .cast("double").as("price_delta")) ++
+        (if (!cur.columns.contains("n_urgent")) Nil
+        else Seq((coalesce(col("b.n_urgent"), lit(0L)) -
+          coalesce(col("a.n_urgent"), lit(0L))).as("n_urgent_delta"))): _*)
 
   /** q92 — table HISTORY: the audit log of every published version
     * (the DESCRIBE HISTORY primitive of a lakehouse table) read
@@ -550,10 +411,7 @@ object LakehouseMerge {
     */
   def tableHistory(s: SparkSession, dir: String, mod: Int = 3): DataFrame = {
     upsertOrdersSummary(s, dir, mod) // ensure v1+v2 are published
-    val path = tablePath(s, dir, mod)
-    val head = publishedVersion(s, path)
-    (1 to head).map(v => s.read.parquet(s"$path/manifest_v$v"))
-      .reduce(_ unionByName _)
+    VersionedStore.manifests(s, tablePath(s, dir, mod))
       .select(col("version"), col("n_rows"), col("orders_mass"),
         col("price_mass").cast("double").as("price_mass"))
       .orderBy(col("version"))
@@ -575,10 +433,10 @@ object LakehouseMerge {
     val orders = Tables.orders(s, dir)
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
         col("o_orderdate"))
-    if (publishedVersion(s, path) < 1)
+    if (head(s, path) < 1)
       publishBaseVersion(s, path, summarize(
         orders.filter(pmod(col("o_orderkey"), lit(mod)) =!= 0)))
-    if (publishedVersion(s, path) < 2)
+    if (head(s, path) < 2)
       mergeDeltaWithRebase(s, path, summarize(
         orders.filter(pmod(col("o_orderkey"), lit(mod)) === 0)))
     readTable(s, path)
@@ -625,17 +483,17 @@ object LakehouseMerge {
     val orders = Tables.orders(s, dir)
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
         col("o_orderdate"))
-    if (publishedVersion(s, path) < 1)
+    if (head(s, path) < 1)
       // v1 deliberately FRAGMENTED: written at high parallelism — the
       // small-files state continuous ingest drifts into
       publishBaseVersion(s, path, summarize(orders).repartition(64))
-    if (publishedVersion(s, path) < 2) {
+    if (head(s, path) < 2) {
       val current = readVersion(s, path, 1)
       val optimized = current
         .repartitionByRange(targetFiles, col("o_custkey"))
         .sortWithinPartitions(col("o_custkey"))
       val (r1, om1, pm1) = readManifestRow(s, path, 1)
-      val dataDir = writeVersion(optimized, path, 2)
+      val dataDir = VersionedStore.stage(optimized, path, "v2")
       // data-preserving by audit: v2 must carry v1's masses EXACTLY
       auditAndPublish(s, path, 2, dataDir, r1, om1, pm1)
     }
@@ -683,11 +541,11 @@ object LakehouseMerge {
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
         col("o_orderdate"), col("o_orderpriority"))
     def slice(k: Int) = orders.filter(pmod(col("o_orderkey"), lit(3)) === k)
-    if (publishedVersion(s, path) < 1)
+    if (head(s, path) < 1)
       publishBaseVersion(s, path, summarize(slice(1)))
-    if (publishedVersion(s, path) < 2)
+    if (head(s, path) < 2)
       mergeDeltaWithRebase(s, path, summarize(slice(2)))
-    if (publishedVersion(s, path) < 3)
+    if (head(s, path) < 3)
       mergeDeltaWithRebase(s, path, summarizeUrgent(slice(0)))
     readTable(s, path)
       .select(col("o_custkey"), col("n_orders"),
@@ -730,34 +588,20 @@ object LakehouseMerge {
   def changeFeed(s: SparkSession, dir: String): DataFrame = {
     evolvedOrdersSummary(s, dir) // ensure v1..v3 are published
     val path = evoTablePath(s, dir)
-    val head = publishedVersion(s, path)
-    val headSchema = readVersion(s, path, head).schema
-    val zeroDec = lit(0).cast("decimal(28,2)")
+    val h = head(s, path)
+    val headSchema = readVersion(s, path, h).schema
     def deltasOf(v: Int): DataFrame = {
-      val cur = readVersionAs(s, path, v, headSchema).as("b")
+      val cur = readVersionAs(s, path, v, headSchema)
       if (v == 1)
         cur.select(lit(1).as("version"), col("o_custkey"),
           lit("insert").as("change"),
           col("n_orders").as("n_orders_delta"),
           col("total_dec").cast("double").as("price_delta"),
           coalesce(col("n_urgent"), lit(0L)).as("n_urgent_delta"))
-      else {
-        val prev = readVersionAs(s, path, v - 1, headSchema).as("a")
-        cur.join(prev, Seq("o_custkey"), "left")
-          .filter(col("a.n_orders").isNull ||
-            col("b.n_orders") =!= col("a.n_orders"))
-          .select(lit(v).as("version"), col("o_custkey"),
-            when(col("a.n_orders").isNull, lit("insert"))
-              .otherwise(lit("update")).as("change"),
-            (col("b.n_orders") - coalesce(col("a.n_orders"), lit(0L)))
-              .as("n_orders_delta"),
-            (col("b.total_dec") - coalesce(col("a.total_dec"), zeroDec))
-              .cast("double").as("price_delta"),
-            (coalesce(col("b.n_urgent"), lit(0L)) -
-              coalesce(col("a.n_urgent"), lit(0L))).as("n_urgent_delta"))
-      }
+      else changedRows(cur, readVersionAs(s, path, v - 1, headSchema))
+        .select(lit(v).as("version"), col("*"))
     }
-    (1 to head).map(deltasOf).reduce(_.unionByName(_))
+    (1 to h).map(deltasOf).reduce(_.unionByName(_))
       .orderBy(col("version"), col("o_custkey"))
   }
 
@@ -775,20 +619,7 @@ object LakehouseMerge {
     evolvedOrdersSummary(s, dir) // ensure v1..v3 are published
     val path = evoTablePath(s, dir)
     val v3 = readVersion(s, path, 3)
-    val v2 = readVersionAs(s, path, 2, v3.schema)
-    v3.as("b").join(v2.as("a"), Seq("o_custkey"), "left")
-      .filter(col("a.n_orders").isNull ||
-        col("b.n_orders") =!= col("a.n_orders"))
-      .select(col("o_custkey"),
-        when(col("a.n_orders").isNull, lit("insert"))
-          .otherwise(lit("update")).as("change"),
-        (col("b.n_orders") - coalesce(col("a.n_orders"), lit(0L)))
-          .as("n_orders_delta"),
-        (col("b.total_dec") -
-          coalesce(col("a.total_dec"), lit(0).cast("decimal(28,2)")))
-          .cast("double").as("price_delta"),
-        (coalesce(col("b.n_urgent"), lit(0L)) -
-          coalesce(col("a.n_urgent"), lit(0L))).as("n_urgent_delta"))
+    changedRows(v3, readVersionAs(s, path, 2, v3.schema))
       .orderBy(col("o_custkey"))
   }
 }

@@ -15,9 +15,11 @@ import graft.Tables
   * expectation — the published version must carry
   * `rows(v1) + inserts − deletes` rows and the post-image balance
   * mass, both derived from the action frame BEFORE the write and
-  * re-checked against the staged files AFTER (write-audit-publish,
-  * the store-wide idiom). The action counts land IN the manifest, so
-  * q92-style history reads as a DML ledger (rows in/out per publish).
+  * re-checked against the staged files AFTER, then published through
+  * [[VersionedStore]] (staging, the publish marker, debris healing,
+  * the optimistic head check and the rebase loop live there). The
+  * action counts land IN the manifest, so q92-style history reads as
+  * a DML ledger (rows in/out per publish).
   *
   * The demo table is the customer dimension keyed `c_custkey`:
   *   - v1 = customers with `c_custkey % 4 != 0` (the pre-existing
@@ -53,10 +55,7 @@ import graft.Tables
   * category (storage/DML), pure extension.
   */
 object MergeDml {
-
-  private def fs(s: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
+  import VersionedStore.{head, readVersion}
 
   private[graft] def tablePath(s: SparkSession, dir: String): String = {
     val tag = s"${dir.replaceAll("[^A-Za-z0-9.]", "_")}_dml_" +
@@ -64,36 +63,9 @@ object MergeDml {
     s"target/graft_table/customer_dml/L1_$tag"
   }
 
-  private[graft] def publishedVersion(s: SparkSession, path: String): Int = {
-    val f = fs(s, path)
-    val base = new org.apache.hadoop.fs.Path(path)
-    if (!f.exists(base)) 0
-    else f.listStatus(base).toSeq.map(_.getPath.getName)
-      .collect { case n if n.startsWith("manifest_v") =>
-        n.stripPrefix("manifest_v").toInt }
-      .filter(v => f.exists(
-        new org.apache.hadoop.fs.Path(s"$path/manifest_v$v/_SUCCESS")))
-      .sorted.lastOption.getOrElse(0)
-  }
-
-  private def dataDirOf(s: SparkSession, path: String, v: Int): String =
-    s.read.parquet(s"$path/manifest_v$v").head().getString(3)
-
-  private[graft] def readVersion(s: SparkSession, path: String,
-      v: Int): DataFrame =
-    s.read.parquet(s"$path/${dataDirOf(s, path, v)}")
-
-  private def stage(df: DataFrame, path: String, v: Int): String = {
-    val d = s"data_v${v}_" +
-      java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-    df.write.mode("errorifexists").parquet(s"$path/$d")
-    d
-  }
-
   /** Audit the staged post-image against the classification-derived
-    * expectation, then publish manifest v (with the DML ledger
-    * columns). The same optimistic head check + marker-less-debris
-    * healing as the q88 store. */
+    * expectation, then publish manifest v with the DML ledger
+    * columns. */
   private def auditAndPublish(s: SparkSession, path: String, v: Int,
       dataDir: String, expRows: Long, expMass: java.math.BigDecimal,
       nIns: Long, nUpd: Long, nDel: Long): Unit = {
@@ -105,22 +77,11 @@ object MergeDml {
     require(gotRows == expRows && gotMass.compareTo(expMass) == 0,
       s"DML audit failed for v$v at $path: staged ($gotRows rows, " +
         s"$gotMass mass) expected ($expRows, $expMass) — NOT publishing")
-    if (publishedVersion(s, path) != v - 1)
-      throw new LakehouseMerge.PublishConflictException(
-        s"publish conflict at $path: head moved past v${v - 1} — " +
-          "rebase required")
     import s.implicits._
-    LakehouseMerge.clearUnpublishedManifest(s, s"$path/manifest_v$v")
-    try Seq((v, gotRows, gotMass.toPlainString, dataDir, nIns, nUpd, nDel))
-      .toDF("version", "n_rows", "acct_mass", "data_dir",
-        "n_inserted", "n_updated", "n_deleted")
-      .coalesce(1).write.mode("errorifexists").parquet(s"$path/manifest_v$v")
-    catch { case scala.util.control.NonFatal(e) =>
-      if (publishedVersion(s, path) >= v)
-        throw new LakehouseMerge.PublishConflictException(
-          s"publish conflict at $path: another writer landed v$v first")
-      else throw e
-    }
+    VersionedStore.publish(s, path, v,
+      Seq((v, gotRows, gotMass.toPlainString, dataDir, nIns, nUpd, nDel))
+        .toDF("version", "n_rows", "acct_mass", "data_dir",
+          "n_inserted", "n_updated", "n_deleted"))
   }
 
   private def customers(s: SparkSession, dir: String): DataFrame =
@@ -160,28 +121,22 @@ object MergeDml {
       .filter(pmod(col("c_custkey"), lit(4)) =!= 0)
     val m = base.agg(count(lit(1)),
       sum(col("c_acctbal")).cast("decimal(28,2)")).head()
-    val d = stage(base, path, 1)
+    val d = VersionedStore.stage(base, path, "v1")
     auditAndPublish(s, path, 1, d, m.getLong(0), m.getDecimal(1),
       m.getLong(0), 0L, 0L)
   }
 
   /** One MERGE of [[mergeSource]] into the table at `path`, with
-    * OPTIMISTIC RETRY (the q88 rebase contract, on DML): on a publish
-    * conflict the loser deletes its own staged files, RE-CLASSIFIES
-    * against the head that won — MERGE actions are defined against
-    * the table as it IS, so rebasing is re-running the classification,
-    * never replaying stale actions — re-audits and re-publishes.
-    * `beforePublish` is the spec's interleaving injection point.
-    * Returns the published version. */
+    * OPTIMISTIC RETRY ([[VersionedStore.withRebase]]): a loser
+    * RE-CLASSIFIES against the head that won — MERGE actions are
+    * defined against the table as it IS, so rebasing is re-running the
+    * classification, never replaying stale actions — re-audits and
+    * re-publishes. Returns the published version. */
   private[graft] def mergeStepAt(s: SparkSession, dir: String,
       path: String, maxRetries: Int = 3,
-      beforePublish: Int => Unit = _ => ()): Int = {
-    var attempt = 0
-    var published = -1
-    while (published < 0) {
-      val head = publishedVersion(s, path)
-      require(head >= 1, s"no published version at $path")
-      val cls = classify(readVersion(s, path, head), mergeSource(s, dir))
+      beforePublish: Int => Unit = _ => ()): Int =
+    VersionedStore.withRebase(s, path, maxRetries, beforePublish) { h =>
+      val cls = classify(readVersion(s, path, h), mergeSource(s, dir))
         .cache()
       val post = cls.filter(col("action").isin("keep", "update", "insert"))
         .select(col("c_custkey"),
@@ -205,31 +160,16 @@ object MergeDml {
           .cast("decimal(28,2)")).head()
       val (nIns, nUpd, nDel, nKeep) =
         (e.getLong(0), e.getLong(1), e.getLong(2), e.getLong(3))
-      val v = head + 1
-      val d = stage(post, path, v)
-      beforePublish(attempt)
-      try {
-        auditAndPublish(s, path, v, d, nKeep + nUpd + nIns,
-          e.getDecimal(4), nIns, nUpd, nDel)
-        published = v
-      } catch { case _: LakehouseMerge.PublishConflictException =>
-        fs(s, path).delete(
-          new org.apache.hadoop.fs.Path(s"$path/$d"), true)
-        attempt += 1
-        if (attempt > maxRetries)
-          throw new LakehouseMerge.PublishConflictException(
-            s"DML merge at $path lost $attempt publish races — giving up")
-      }
+      val d = VersionedStore.stage(post, path, s"v${h + 1}")
       cls.unpersist()
-      ()
+      (d, () => auditAndPublish(s, path, h + 1, d, nKeep + nUpd + nIns,
+        e.getDecimal(4), nIns, nUpd, nDel))
     }
-    published
-  }
 
   private def ensureMerged(s: SparkSession, dir: String): String = {
     val path = tablePath(s, dir)
-    if (publishedVersion(s, path) < 1) publishBaseAt(s, dir, path)
-    if (publishedVersion(s, path) < 2) { mergeStepAt(s, dir, path); () }
+    if (head(s, path) < 1) publishBaseAt(s, dir, path)
+    if (head(s, path) < 2) { mergeStepAt(s, dir, path); () }
     path
   }
 
@@ -241,7 +181,7 @@ object MergeDml {
     * row-for-row. */
   def mergedCustomers(s: SparkSession, dir: String): DataFrame = {
     val path = ensureMerged(s, dir)
-    readVersion(s, path, publishedVersion(s, path))
+    readVersion(s, path, head(s, path))
       .select(col("c_custkey"), col("c_name"), col("c_nationkey"),
         col("c_acctbal").cast("double").as("acctbal"))
       .orderBy(col("c_custkey"))
@@ -317,11 +257,7 @@ object MergeDml {
   }
 
   /** The DML ledger (manifest history) — spec surface. */
-  private[graft] def history(s: SparkSession, dir: String): DataFrame = {
-    val path = ensureMerged(s, dir)
-    (1 to publishedVersion(s, path))
-      .map(v => s.read.parquet(s"$path/manifest_v$v"))
-      .reduce(_.unionByName(_)).drop("data_dir")
+  private[graft] def history(s: SparkSession, dir: String): DataFrame =
+    VersionedStore.manifests(s, ensureMerged(s, dir)).drop("data_dir")
       .orderBy(col("version"))
-  }
 }

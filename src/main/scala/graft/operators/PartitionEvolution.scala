@@ -44,28 +44,10 @@ import graft.Tables
   */
 object PartitionEvolution {
 
-  private def fs(s: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-
   private def tablePath(s: SparkSession, dir: String): String = {
     val tag = s"${dir.replaceAll("[^A-Za-z0-9.]", "_")}_pevo_" +
       IndexStore.corpusTag(s, dir, "orders.parquet")
     s"target/graft_table/orders_pevo/L1_$tag"
-  }
-
-  private def published(s: SparkSession, path: String, v: Int): Boolean =
-    fs(s, path).exists(
-      new org.apache.hadoop.fs.Path(s"$path/manifest_v$v/_SUCCESS"))
-
-  private def publish(s: SparkSession, path: String, v: Int,
-      spec: String, dataDir: String, nRows: Long): Unit = {
-    import s.implicits._
-    LakehouseMerge.clearUnpublishedManifest(s, s"$path/manifest_v$v")
-    Seq((v, spec, dataDir, nRows))
-      .toDF("version", "partition_spec", "data_dir", "n_rows")
-      .coalesce(1).write.mode("errorifexists")
-      .parquet(s"$path/manifest_v$v")
   }
 
   private def orders(s: SparkSession, dir: String): DataFrame =
@@ -74,31 +56,33 @@ object PartitionEvolution {
         .as("o_orderdate"))
 
   /** v1 under spec `p_year` (1995-1997 history), v2 under the evolved
-    * spec `(p_year, p_month)` (1998+). Data files land via Spark's
-    * own `partitionBy` so the directory layout IS the spec. */
+    * spec `(p_year, p_month)` (1998+). */
   private[graft] def ensurePublished(s: SparkSession,
       dir: String): String = {
     val path = tablePath(s, dir)
-    if (!published(s, path, 1)) {
-      val old = orders(s, dir)
-        .filter(year(col("o_orderdate")) < 1998)
-        .withColumn("p_year", year(col("o_orderdate")))
-      val d = "data_v1"
-      old.write.mode("overwrite").partitionBy("p_year")
-        .parquet(s"$path/$d")
-      publish(s, path, 1, "p_year", d, old.count())
-    }
-    if (!published(s, path, 2)) {
-      val recent = orders(s, dir)
-        .filter(year(col("o_orderdate")) >= 1998)
-        .withColumn("p_year", year(col("o_orderdate")))
-        .withColumn("p_month", month(col("o_orderdate")))
-      val d = "data_v2"
-      recent.write.mode("overwrite").partitionBy("p_year", "p_month")
-        .parquet(s"$path/$d")
-      publish(s, path, 2, "p_year,p_month", d, recent.count())
-    }
+    Seq(1, 2).filterNot(VersionedStore.isPublished(s, path, _))
+      .foreach(publishVersion(s, dir, path, _))
     path
+  }
+
+  /** Write version `v`'s data under its own spec and publish its
+    * manifest (the [[VersionedStore]] protocol). Data files land via
+    * Spark's own `partitionBy`, so the directory layout IS the spec. */
+  private[graft] def publishVersion(s: SparkSession, dir: String,
+      path: String, v: Int): Unit = {
+    val yr = year(col("o_orderdate"))
+    val (spec, rows) =
+      if (v == 1) (Seq("p_year"),
+        orders(s, dir).filter(yr < 1998).withColumn("p_year", yr))
+      else (Seq("p_year", "p_month"),
+        orders(s, dir).filter(yr >= 1998).withColumn("p_year", yr)
+          .withColumn("p_month", month(col("o_orderdate"))))
+    val d = s"data_v$v"
+    rows.write.mode("overwrite").partitionBy(spec: _*).parquet(s"$path/$d")
+    import s.implicits._
+    VersionedStore.publish(s, path, v,
+      Seq((v, spec.mkString(","), d, rows.count()))
+        .toDF("version", "partition_spec", "data_dir", "n_rows"))
   }
 
   /** Read (year, months ∈ [moLo, moHi]) across both specs, each
@@ -125,7 +109,7 @@ object PartitionEvolution {
     * spec pins (0 for v1 at 1998, 3 for v2 at 1998 Q1). */
   private[graft] def matchingDirs(s: SparkSession, path: String,
       v: Int, yr: Int, moLo: Int, moHi: Int): Seq[String] = {
-    val f = fs(s, path)
+    val f = VersionedStore.fs(s, path)
     val base = new org.apache.hadoop.fs.Path(s"$path/data_v$v")
     val years = f.listStatus(base).toSeq.map(_.getPath)
       .filter(_.getName == s"p_year=$yr")

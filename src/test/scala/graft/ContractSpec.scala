@@ -68,7 +68,7 @@ class ContractSpec extends AnyFunSuite {
     // when values are bit-identical. Allowlist the types it
     // demonstrably normalizes; anything else (decimal, array, map,
     // struct, float, binary) must be cast/flattened before
-    // registration. Building the DataFrame is lazy — no execution.
+    // registration. The schemas come from the shared registry run.
     import org.apache.spark.sql.types._
     val safe: DataType => Boolean = {
       case StringType | IntegerType | LongType | DoubleType |
@@ -76,12 +76,10 @@ class ContractSpec extends AnyFunSuite {
       case _: TimestampType | _: TimestampNTZType => true
       case _ => false
     }
-    val sfDir = "/root/testdata/sf0.001"
-    val bad = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      val offending = fn(spark, sfDir).schema.fields
+    val bad = RegistryRun.measured.sortBy(_._1).flatMap { case (name, _, schema) =>
+      val offending = schema.fields
         .filterNot(f => safe(f.dataType))
         .map(f => s"${f.name}: ${f.dataType.simpleString}")
-      spark.catalog.clearCache()
       if (offending.isEmpty) None else Some(s"$name -> ${offending.mkString(", ")}")
     }
     assert(bad.isEmpty, s"gate-unsafe output columns:\n${bad.mkString("\n")}")

@@ -11,13 +11,8 @@ class EntrySpec extends AnyFunSuite {
   }
 
   test("every query runs on sf0.001 and returns rows") {
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val n = fn(spark, sfDir).count()
+    RegistryRun.measured.foreach { case (name, n, _) =>
       assert(n > 0, s"query $name returned no rows")
-      // Operator-internal cache() calls (Dedup's shingle table) persist
-      // in the session CacheManager; clear per query so no later query
-      // silently reuses a neighbor's cached subtree (matches Bench/Verify).
-      spark.catalog.clearCache()
     }
   }
 

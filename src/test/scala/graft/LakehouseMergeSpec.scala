@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.LakehouseMerge
+import graft.operators.{LakehouseMerge, VersionedStore}
 
 /** q88 write-audit-publish: crash safety, audit gating, optimistic
   * publish, and end-to-end conservation against a full recompute.
@@ -32,18 +32,18 @@ class LakehouseMergeSpec extends AnyFunSuite {
     val path = tmpTable()
     val v1 = planted(Seq((1L, 2L, "10.00", "1997-01-01"),
       (2L, 1L, "5.00", "1997-02-01")))
-    val d1 = LakehouseMerge.writeVersion(v1, path, 1)
+    val d1 = VersionedStore.stage(v1, path, "v1")
     LakehouseMerge.auditAndPublish(spark, path, 1, d1,
       2L, 3L, new java.math.BigDecimal("15.00"))
-    assert(LakehouseMerge.publishedVersion(spark, path) == 1)
+    assert(VersionedStore.head(spark, path) == 1)
     assert(LakehouseMerge.readTable(spark, path).count() == 2)
 
     // CRASH WINDOW: v2 files land (staged), publish never runs —
     // readers must keep serving v1
     val v2 = planted(Seq((1L, 3L, "12.00", "1997-03-01"),
       (2L, 1L, "5.00", "1997-02-01"), (3L, 1L, "7.00", "1997-04-01")))
-    val d2 = LakehouseMerge.writeVersion(v2, path, 2)
-    assert(LakehouseMerge.publishedVersion(spark, path) == 1,
+    val d2 = VersionedStore.stage(v2, path, "v2")
+    assert(VersionedStore.head(spark, path) == 1,
       "unpublished files must not move the head")
     assert(LakehouseMerge.readTable(spark, path)
       .agg(sum(col("n_orders"))).head().getLong(0) == 3L,
@@ -52,39 +52,39 @@ class LakehouseMergeSpec extends AnyFunSuite {
     // the writer re-runs (self-heal): publish succeeds, head moves
     LakehouseMerge.auditAndPublish(spark, path, 2, d2,
       3L, 5L, new java.math.BigDecimal("24.00"))
-    assert(LakehouseMerge.publishedVersion(spark, path) == 2)
+    assert(VersionedStore.head(spark, path) == 2)
     assert(LakehouseMerge.readTable(spark, path).count() == 3)
   }
 
   test("a failed audit refuses to publish") {
     val path = tmpTable()
-    val d1 = LakehouseMerge.writeVersion(
-      planted(Seq((1L, 1L, "10.00", "1997-01-01"))), path, 1)
+    val d1 = VersionedStore.stage(
+      planted(Seq((1L, 1L, "10.00", "1997-01-01"))), path, "v1")
     val e = intercept[IllegalArgumentException] {
       // wrong expected mass: files are corrupt/incomplete by hypothesis
       LakehouseMerge.auditAndPublish(spark, path, 1, d1,
         1L, 1L, new java.math.BigDecimal("999.00"))
     }
     assert(e.getMessage.contains("NOT publishing"))
-    assert(LakehouseMerge.publishedVersion(spark, path) == 0,
+    assert(VersionedStore.head(spark, path) == 0,
       "no manifest may land after a failed audit")
   }
 
   test("optimistic publish refuses a moved head and a double publish") {
     val path = tmpTable()
     val v1 = planted(Seq((1L, 1L, "10.00", "1997-01-01")))
-    val d1 = LakehouseMerge.writeVersion(v1, path, 1)
+    val d1 = VersionedStore.stage(v1, path, "v1")
     LakehouseMerge.auditAndPublish(spark, path, 1, d1,
       1L, 1L, new java.math.BigDecimal("10.00"))
     // double publish of v1: head is already 1, not 0 → conflict
-    val e = intercept[LakehouseMerge.PublishConflictException] {
+    val e = intercept[VersionedStore.PublishConflictException] {
       LakehouseMerge.auditAndPublish(spark, path, 1, d1,
         1L, 1L, new java.math.BigDecimal("10.00"))
     }
     assert(e.getMessage.contains("conflict"))
     // skipping a version (publish v3 while head is 1) → conflict
-    val d3 = LakehouseMerge.writeVersion(v1, path, 3)
-    val e2 = intercept[LakehouseMerge.PublishConflictException] {
+    val d3 = VersionedStore.stage(v1, path, "v3")
+    val e2 = intercept[VersionedStore.PublishConflictException] {
       LakehouseMerge.auditAndPublish(spark, path, 3, d3,
         1L, 1L, new java.math.BigDecimal("10.00"))
     }
@@ -94,9 +94,8 @@ class LakehouseMergeSpec extends AnyFunSuite {
   test("two interleaved writers: the loser rebases and BOTH deltas land in the final mass") {
     val path = tmpTable()
     LakehouseMerge.auditAndPublish(spark, path, 1,
-      LakehouseMerge.writeVersion(
-        planted(Seq((1L, 2L, "10.00", "1997-01-01"),
-          (2L, 1L, "5.00", "1997-02-01"))), path, 1),
+      VersionedStore.stage(planted(Seq((1L, 2L, "10.00", "1997-01-01"),
+          (2L, 1L, "5.00", "1997-02-01"))), path, "v1"),
       2L, 3L, new java.math.BigDecimal("15.00"))
 
     // writer A's delta and writer B's delta, disjoint + overlapping keys
@@ -115,7 +114,7 @@ class LakehouseMergeSpec extends AnyFunSuite {
           bPublished = LakehouseMerge.mergeDeltaWithRebase(spark, path, deltaB))
     assert(bPublished == 2, "writer B must win v2")
     assert(vA == 3, "writer A must rebase onto B's head and land v3")
-    assert(LakehouseMerge.publishedVersion(spark, path) == 3)
+    assert(VersionedStore.head(spark, path) == 3)
 
     // the final mass audit carries BOTH deltas: v1 + A + B exactly
     val got = LakehouseMerge.readTable(spark, path)
@@ -133,7 +132,7 @@ class LakehouseMergeSpec extends AnyFunSuite {
     val dataDirs = f.listStatus(new org.apache.hadoop.fs.Path(path))
       .map(_.getPath.getName).filter(_.startsWith("data_v")).toSet
     val named = (1 to 3)
-      .map(v => LakehouseMerge.dataDirOf(spark, path, v)).toSet
+      .map(v => VersionedStore.dataDirOf(spark, path, v)).toSet
     assert(dataDirs == named,
       s"orphaned staged dirs left behind: ${dataDirs -- named}")
   }
@@ -207,7 +206,7 @@ class LakehouseMergeSpec extends AnyFunSuite {
       .start()
     try { q.processAllAvailable() } finally q.stop()
 
-    assert(graft.operators.LakehouseMerge.publishedVersion(spark, path) == 2,
+    assert(VersionedStore.head(spark, path) == 2,
       "two non-empty batches must publish exactly v1 and v2")
     val got = graft.operators.LakehouseMerge.readTable(spark, path)
       .select(col("o_custkey"), col("n_orders"),

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.CowErasure
+import graft.operators.{CowErasure, VersionedStore}
 
 /** Round-15 operators: q94 vacuum/retention on the copy-on-write
   * store — the q91+q94 composition proving right-to-be-forgotten ends
@@ -130,8 +130,8 @@ class Round15OpsSpec extends AnyFunSuite {
     val q1 = LakehouseMerge.upsertOrdersStream(
       spark.readStream.schema(oldSchema).parquet(oldDir), path).start()
     try { q1.processAllAvailable() } finally q1.stop()
-    assert(LakehouseMerge.publishedVersion(spark, path) == 1)
-    assert(!LakehouseMerge.readVersion(spark, path, 1)
+    assert(VersionedStore.head(spark, path) == 1)
+    assert(!VersionedStore.readVersion(spark, path, 1)
       .columns.contains("n_urgent"))
 
     // the UPGRADED writer streams the remaining feed (2 files → 2
@@ -143,7 +143,7 @@ class Round15OpsSpec extends AnyFunSuite {
       spark.readStream.schema(orders.schema)
         .option("maxFilesPerTrigger", "1").parquet(newDir), path).start()
     try { q2.processAllAvailable() } finally q2.stop()
-    assert(LakehouseMerge.publishedVersion(spark, path) == 3,
+    assert(VersionedStore.head(spark, path) == 3,
       "one widened version per post-upgrade batch")
 
     // the final table equals the one-shot evolution recompute: full
@@ -211,9 +211,9 @@ class Round15OpsSpec extends AnyFunSuite {
         graft.operators.IndexStore.corpusTag(spark, sfDir, "orders.parquet")
       s"target/graft_table/orders_summary_opt/L2_$tag"
     }
-    assert(LakehouseMerge.publishedVersion(spark, path) == 2)
-    val v1Files = filesOf(LakehouseMerge.readVersion(spark, path, 1))
-    val v2Files = filesOf(LakehouseMerge.readVersion(spark, path, 2))
+    assert(VersionedStore.head(spark, path) == 2)
+    val v1Files = filesOf(VersionedStore.readVersion(spark, path, 1))
+    val v2Files = filesOf(VersionedStore.readVersion(spark, path, 2))
     assert(v1Files.length > 10, s"v1 should be fragmented: ${v1Files.length}")
     assert(v2Files.length <= 2, s"v2 should be compacted: ${v2Files.length}")
     // range-clustering: v2's per-file custkey ranges are DISJOINT
@@ -227,8 +227,8 @@ class Round15OpsSpec extends AnyFunSuite {
       case _ =>
     }
     // a data-preserving rewrite: the version diff v1 -> v2 is EMPTY
-    val v1 = LakehouseMerge.readVersion(spark, path, 1).as("a")
-    val v2 = LakehouseMerge.readVersion(spark, path, 2).as("b")
+    val v1 = VersionedStore.readVersion(spark, path, 1).as("a")
+    val v2 = VersionedStore.readVersion(spark, path, 2).as("b")
     assert(v2.join(v1, Seq("o_custkey"), "full_outer")
       .filter(col("a.n_orders").isNull || col("b.n_orders").isNull ||
         col("a.n_orders") =!= col("b.n_orders") ||
@@ -398,7 +398,7 @@ class Round15OpsSpec extends AnyFunSuite {
       .select("c_custkey")
     assert(deleted.count() === v2.getLong(5))
     assert(got.join(deleted, Seq("c_custkey")).count() === 0)
-    val v1df = MergeDml.readVersion(spark, mergePath(spark), 1)
+    val v1df = VersionedStore.readVersion(spark, mergePath(spark), 1)
     assert(v1df.join(deleted, Seq("c_custkey")).count() ===
       v2.getLong(5))
   }
@@ -457,7 +457,7 @@ class Round15OpsSpec extends AnyFunSuite {
     val got = spark.table("dml_mv")
     assert(got.count() > 0)
     val path = mergePath(spark)
-    def agg(v: Int) = MergeDml.readVersion(spark, path, v)
+    def agg(v: Int) = VersionedStore.readVersion(spark, path, v)
       .groupBy("c_nationkey").agg(count(lit(1)).as("n"),
         sum(col("c_acctbal")).cast("decimal(28,2)").as("m"))
     val zero = lit(0).cast("decimal(28,2)")
@@ -524,7 +524,7 @@ class Round15OpsSpec extends AnyFunSuite {
     // vacuumable debris, and post-OPTIMIZE ingest appends to the new
     // head
     DataSkipping.optimizeStore(spark, store, targetFiles = 2)
-    assert(DataSkipping.statsVersion(spark, store) === 2)
+    assert(VersionedStore.head(spark, store, "filestats") === 2)
     val stats2 = DataSkipping.statsDf(spark, store)
     assert(stats2.count() === 2)
     val (_, t3, pruned3) =
@@ -542,7 +542,7 @@ class Round15OpsSpec extends AnyFunSuite {
       spark.readStream.schema(orders.schema).parquet(extraDir), store)
       .start()
     try { q2.processAllAvailable() } finally q2.stop()
-    assert(DataSkipping.statsVersion(spark, store) === 2)
+    assert(VersionedStore.head(spark, store, "filestats") === 2)
     assert(DataSkipping.statsDf(spark, store).count() === 3)
   }
 
@@ -613,7 +613,7 @@ class Round15OpsSpec extends AnyFunSuite {
       }, path).start()
     try { q2.processAllAvailable() } finally q2.stop()
     val t2 = System.currentTimeMillis()
-    assert(LakehouseMerge.publishedVersion(spark, path) === 2)
+    assert(VersionedStore.head(spark, path) === 2)
     // before the first publish: no table for that reader
     intercept[IllegalArgumentException] {
       LakehouseMerge.versionAsOf(spark, path, t0)
@@ -622,7 +622,7 @@ class Round15OpsSpec extends AnyFunSuite {
     assert(LakehouseMerge.versionAsOf(spark, path, t1) === 1)
     assert(LakehouseMerge.versionAsOf(spark, path, t2) === 2)
     assert(LakehouseMerge.readTableAsOf(spark, path, t1).count() ===
-      LakehouseMerge.readVersion(spark, path, 1).count())
+      VersionedStore.readVersion(spark, path, 1).count())
   }
 
   test("expire snapshots: expired versions fail cleanly, head readers untouched, crash debris swept") {
@@ -643,14 +643,14 @@ class Round15OpsSpec extends AnyFunSuite {
         .option("maxFilesPerTrigger", "1").parquet(s"$feed/b*"), path)
       .start()
     try { q.processAllAvailable() } finally q.stop()
-    assert(LakehouseMerge.publishedVersion(spark, path) === 3)
+    assert(VersionedStore.head(spark, path) === 3)
     val headCount = LakehouseMerge.readTable(spark, path).count()
 
     val (expired, swept) = LakehouseMerge.expireVersions(spark, path, 1)
     assert(expired === 2 && swept === 2)
     // head untouched; expired versions fail cleanly at resolution
     assert(LakehouseMerge.readTable(spark, path).count() === headCount)
-    intercept[Exception] { LakehouseMerge.readVersion(spark, path, 1) }
+    intercept[Exception] { VersionedStore.readVersion(spark, path, 1) }
     // idempotent
     assert(LakehouseMerge.expireVersions(spark, path, 1) === ((0, 0)))
     // crash window: a manifest-less data dir (phase-1 crash debris)
@@ -675,8 +675,8 @@ class Round15OpsSpec extends AnyFunSuite {
     assert(v === 3)
     // idempotence: re-applying MERGE actions against the already-
     // merged head changes nothing — v3 equals v2 row-for-row
-    val v2 = MergeDml.readVersion(spark, path, 2)
-    val v3 = MergeDml.readVersion(spark, path, 3)
+    val v2 = VersionedStore.readVersion(spark, path, 2)
+    val v3 = VersionedStore.readVersion(spark, path, 3)
     assert(v3.count() === v2.count())
     assert(v3.exceptAll(v2).count() === 0)
     // and the v3 ledger records the no-op shape: nothing inserted or
