@@ -49,32 +49,32 @@ import graft.Tables
   * `saveAsTable` calls at a real metastore and the layout becomes
   * genuinely write-once. Bucket count 8 keeps test files sane; a
   * 100 TB table wants O(10³-10⁴) buckets sized to executor memory.
+  *
+  * Table names follow [[VersionedStore]]'s one store-identity rule
+  * (`storePath`), so each dir and snapshot gets its own pair.
   */
 object BucketedLayout {
 
   val NumBuckets = 8
 
-  private def safe(s: String) = s.toLowerCase.replaceAll("[^a-z0-9]", "_")
-
   /** Create the bucketed twins of orders/lineitem for this sf dir if
-    * this session hasn't yet (names carry the sf basename, so
-    * different scale dirs coexist in one warehouse).
+    * this session hasn't yet. Both names carry the pair's identity
+    * over both tables, in the catalog's form (`.` mapped to `_`,
+    * lower case, as the managed table's location is).
     */
   def ensure(s: SparkSession, dir: String): (String, String) = {
-    val sf = safe(new java.io.File(dir).getName)
-    val oT = s"graft_orders_bkt_$sf"
-    val lT = s"graft_lineitem_bkt_$sf"
+    def name(table: String) = VersionedStore.storePath(s, s"graft_${table}_",
+      dir, Seq("orders.parquet", "lineitem.parquet"), s"bkt$NumBuckets")
+      .replace('.', '_').toLowerCase
+    val (oT, lT) = (name("orders"), name("lineitem"))
     // in-memory catalog: a PREVIOUS JVM's managed-table files survive
     // on disk while the catalog entry died with it — CREATE then fails
     // with LOCATION_ALREADY_EXISTS. The orphaned location is ours
     // (warehouse path derived from the table name we own), so drop it
     // and rebuild. Hadoop FS, not java.io — the r12 IndexStore lesson.
     def clearOrphan(t: String): Unit = {
-      val wh = s.sessionState.conf.getConfString(
-        "spark.sql.warehouse.dir", "spark-warehouse")
-      val p = new org.apache.hadoop.fs.Path(wh, t)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
+      val p = new org.apache.hadoop.fs.Path(VersionedStore.warehouse(s), t)
+      VersionedStore.fs(s, p.toString).delete(p, true)
     }
     if (!s.catalog.tableExists(oT)) {
       clearOrphan(oT)

@@ -28,37 +28,33 @@ import graft.Tables
   * range-clustering invariant (contiguous key slices ⇒ across files,
   * Σ distinct-langs-per-file ≤ nLangs + nFiles − 1, since only
   * boundary langs can straddle two adjacent files).
+  *
+  * Where both tables live and when each counts as built is
+  * [[VersionedStore]]'s one rule (`storePath`, `buildOnce`).
   */
 object Compaction {
-
-  private def safe(s: String) = s.toLowerCase.replaceAll("[^a-z0-9]", "_")
 
   val FragmentCount = 64
   /** Test-scale target; a deployment uses ~1 GB. */
   val TargetFileBytes: Long = 4L * 1024 * 1024
 
-  private def warehousePath(s: SparkSession, name: String, dir: String) = {
-    val wh = s.sessionState.conf.getConfString(
-      "spark.sql.warehouse.dir", "spark-warehouse")
-    s"$wh/${name}_${safe(new java.io.File(dir).getName)}"
-  }
-
-  private def exists(s: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
-  }
+  /** Where the `name` rewrite of `dir`'s documents under `params`
+    * lives, in the warehouse dir. */
+  private def storePath(s: SparkSession, name: String, dir: String,
+      params: String) =
+    VersionedStore.storePath(s, s"${VersionedStore.warehouse(s)}/${name}_",
+      dir, Seq("documents.parquet"), params)
 
   /** The deterministic "badly ingested" state: documents hash-sprayed
     * across 64 fragment files (what a 64-task append leaves behind).
     */
   def ensureFragmented(s: SparkSession, dir: String): String = {
-    val path = warehousePath(s, "graft_frag_docs", dir)
-    if (!exists(s, path)) {
+    val path = storePath(s, "graft_frag_docs", dir, s"n$FragmentCount")
+    VersionedStore.buildOnce(s, path, path) {
       Tables.documents(s, dir)
         .repartition(FragmentCount, col("doc_id"))
-        .write.mode("overwrite").parquet(path)
+        .write.parquet(path)
     }
-    path
   }
 
   /** Compact the fragmented table: size the output file count from the
@@ -66,18 +62,17 @@ object Compaction {
     */
   def ensureCompacted(s: SparkSession, dir: String): String = {
     val fragPath = ensureFragmented(s, dir)
-    val path = warehousePath(s, "graft_compact_docs", dir)
-    if (!exists(s, path)) {
+    val path = storePath(s, "graft_compact_docs", dir,
+      s"t$TargetFileBytes")
+    VersionedStore.buildOnce(s, path, path) {
       val fp = new org.apache.hadoop.fs.Path(fragPath)
-      val fs = fp.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val bytes = fs.listStatus(fp).filter(_.getPath.getName.startsWith("part-"))
-        .map(_.getLen).sum
+      val bytes = VersionedStore.fs(s, fragPath).listStatus(fp)
+        .filter(_.getPath.getName.startsWith("part-")).map(_.getLen).sum
       val nOut = math.max(1L, (bytes + TargetFileBytes - 1) / TargetFileBytes).toInt
       s.read.parquet(fragPath)
         .repartitionByRange(nOut, col("lang"), col("source"), col("doc_id"))
-        .write.mode("overwrite").parquet(path)
+        .write.parquet(path)
     }
-    path
   }
 
   /** d33 — the compacted table's content, fingerprinted: compaction

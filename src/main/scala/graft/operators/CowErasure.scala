@@ -59,11 +59,9 @@ object CowErasure {
   import VersionedStore.head
 
   private[graft] def tablePath(s: SparkSession, dir: String, mod: Int,
-      rem: Int): String = {
-    val tag = s"${dir.replaceAll("[^A-Za-z0-9.]", "_")}_e${mod}_${rem}_" +
-      IndexStore.corpusTag(s, dir, "documents.parquet")
-    s"target/graft_table/documents_cow/$tag"
-  }
+      rem: Int): String =
+    VersionedStore.storePath(s, "target/graft_table/documents_cow/", dir,
+      Seq("documents.parquet"), s"e${mod}_$rem")
 
   /** Drop the persisted table (bench cold-path probe). */
   def invalidate(s: SparkSession, dir: String, mod: Int = 50,

@@ -75,11 +75,9 @@ object DataSkipping {
     * simply by publishing the next snapshot. */
   private val Stats = "filestats"
 
-  private def tablePath(s: SparkSession, dir: String, kind: String): String = {
-    val tag = s"${dir.replaceAll("[^A-Za-z0-9.]", "_")}_${kind}_" +
-      IndexStore.corpusTag(s, dir, "orders.parquet")
-    s"target/graft_table/orders_skip/$kind/L1_$tag"
-  }
+  private def tablePath(s: SparkSession, dir: String, kind: String): String =
+    VersionedStore.storePath(s, s"target/graft_table/orders_skip/$kind/L1_",
+      dir, Seq("orders.parquet"), kind)
 
   // ---------------------------------------------------------------
   // Morton (Z-order) interleave
@@ -224,13 +222,37 @@ object DataSkipping {
     VersionedStore.publish(s, path, 1, fileStats(s, path, dataDir), Stats)
   }
 
-  /** The linear store: range-clustered + sorted on `o_custkey` alone
+  /** Cluster `df` into `n` files by the exact n-quantiles of `key`,
+    * sorted on `key` within each file: file b holds the keys in
+    * (q_b, q_b+1]. The boundaries depend on the data alone —
+    * `repartitionByRange` samples with a seed drawn from the RDD id,
+    * so its files moved with whatever ran earlier in the JVM. Each
+    * row's bucket id is its partition id (HashPartitioner is the
+    * identity on 0 until n). The exact quantile pass is a sort of one
+    * column; at 100 TB a small relative error keeps it one
+    * metadata-sized sketch, still a function of the data. */
+  private[graft] def rangeFiles(df: DataFrame, key: Column,
+      n: Int): DataFrame = {
+    val keyed = df.withColumn("_key", key)
+    val bounds = keyed.stat.approxQuantile("_key",
+      (1 until n).map(_.toDouble / n).toArray, 0.0).distinct
+    val bucketed = keyed.withColumn("_bucket", bounds.foldLeft(lit(0))(
+      (b, q) => b + when(col("_key") > q, 1).otherwise(0)))
+    val at = bucketed.schema.fieldIndex("_bucket")
+    val rows = bucketed.rdd.keyBy(_.getInt(at))
+      .partitionBy(new org.apache.spark.HashPartitioner(n)).values
+    df.sparkSession.createDataFrame(rows, bucketed.schema)
+      .sortWithinPartitions(col("_key")).drop("_key", "_bucket")
+  }
+
+  /** The linear layout: range-clustered + sorted on `o_custkey` alone
     * (q97's OPTIMIZE layout — one dimension perfect, the other
     * scattered). */
+  private[graft] val linear: DataFrame => DataFrame =
+    rangeFiles(_, col("o_custkey"), 16)
+
   private[graft] def ensureLinear(s: SparkSession, dir: String): String =
-    ensureStore(s, dir, "lin",
-      df => df.repartitionByRange(16, col("o_custkey"))
-        .sortWithinPartitions(col("o_custkey")), 16)
+    ensureStore(s, dir, "lin", linear, 16)
 
   /** The Z-ordered store: range-clustered + sorted on the Morton
     * code of (custkey, days(orderdate)) — both dimensions locally
@@ -249,24 +271,21 @@ object DataSkipping {
     * sampled quantile boundaries instead of exact min/max at scale;
     * equi-width on exact bounds is the same contract at this data
     * shape and costs one metadata-sized aggregate. */
+  private[graft] val zorder: DataFrame => DataFrame = df => {
+    val days = datediff(col("o_orderdate"),
+      lit("1992-01-01").cast("date")).cast("long")
+    val b = df.agg(min(col("o_custkey")), max(col("o_custkey")),
+      min(days), max(days)).head()
+    val (cLo, cHi) = (b.getLong(0), b.getLong(1))
+    val (dLo, dHi) = (b.getLong(2), b.getLong(3))
+    def norm(c: Column, lo: Long, hi: Long): Column =
+      ((c - lit(lo)) * lit(2048L) / lit(hi - lo + 1L)).cast("long")
+    rangeFiles(df, morton21(norm(col("o_custkey"), cLo, cHi),
+      norm(days, dLo, dHi)), 16)
+  }
+
   private[graft] def ensureZorder(s: SparkSession, dir: String): String =
-    ensureStore(s, dir, "zord",
-      df => {
-        val days = datediff(col("o_orderdate"),
-          lit("1992-01-01").cast("date")).cast("long")
-        val b = df.agg(min(col("o_custkey")), max(col("o_custkey")),
-          min(days), max(days)).head()
-        val (cLo, cHi) = (b.getLong(0), b.getLong(1))
-        val (dLo, dHi) = (b.getLong(2), b.getLong(3))
-        def norm(c: Column, lo: Long, hi: Long): Column =
-          ((c - lit(lo)) * lit(2048L) / lit(hi - lo + 1L)).cast("long")
-        val z = morton21(norm(col("o_custkey"), cLo, cHi),
-          norm(days, dLo, dHi))
-        df.withColumn("zcode", z)
-          .repartitionByRange(16, col("zcode"))
-          .sortWithinPartitions(col("zcode"))
-          .drop("zcode")
-      }, 16)
+    ensureStore(s, dir, "zord", zorder, 16)
 
   // ---------------------------------------------------------------
   // Pruned read
@@ -472,9 +491,9 @@ object DataSkipping {
     val oldFiles = old.select(col("file")).collect()
       .map(_.getString(0)).toSeq
     val expRows = old.agg(sum(col("n_rows"))).head().getLong(0)
-    val dataDir = VersionedStore.stage(s.read.parquet(oldFiles: _*)
-      .repartitionByRange(targetFiles, col("o_custkey"))
-      .sortWithinPartitions(col("o_custkey")), path, s"opt${h + 1}")
+    val dataDir = VersionedStore.stage(rangeFiles(
+      s.read.parquet(oldFiles: _*), col("o_custkey"), targetFiles),
+      path, s"opt${h + 1}")
     val gotRows = s.read.parquet(s"$path/$dataDir").count()
     require(gotRows == expRows,
       s"OPTIMIZE audit failed at $path: rewrote $gotRows rows, " +

@@ -19,7 +19,10 @@ import graft.operators.Similarity.{IvfIndex, LshIndex}
   * and every build parameter. Load validates family + version + the
   * parameters the caller's query plan depends on (dim etc.) and fails
   * fast on mismatch — a dim-48 index silently answering dim-64 queries
-  * is the failure mode the manifest exists to prevent.
+  * is the failure mode the manifest exists to prevent. Where each
+  * registered query's index lives, and when a build counts as
+  * complete, is [[VersionedStore]]'s one rule (`storePath`,
+  * `buildOnce`).
   *
   * Scale posture: save is `df.write.parquet` — the relations keep
   * their natural partitioning and a loaded index queries from a plain
@@ -46,18 +49,20 @@ object IndexStore {
   /** Bumped on any layout/semantics change; load refuses other versions. */
   val FormatVersion = 1
 
-  /** Does a complete index manifest exist at `path`? Probed through
-    * the Hadoop FileSystem API, not `java.io.File` (r12 verdict #6):
-    * a `java.io.File` probe silently never-sees HDFS/S3/`file:` URIs,
-    * so a cluster run would rebuild the index every session — the
-    * exact cost the store exists to avoid. The manifest is written
-    * LAST by every builder, so its presence marks a complete index.
+  /** Does a complete index manifest exist at `path`? The manifest is
+    * written LAST by every builder, so its committed write — the
+    * [[VersionedStore.isComplete]] probe, through the Hadoop FS API
+    * so HDFS/S3/`file:` URIs are seen — marks a complete index; a
+    * `manifest/` torn by a crash is not one.
     */
-  private[graft] def manifestExists(s: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/manifest")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.getFileStatus(p).isDirectory
-  }
+  private[graft] def manifestExists(s: SparkSession, path: String): Boolean =
+    VersionedStore.isComplete(s, s"$path/manifest")
+
+  /** Build the index at `path` unless its manifest is complete,
+    * clearing a torn build first. */
+  private def buildOnce(s: SparkSession, path: String)(
+      build: => Unit): String =
+    VersionedStore.buildOnce(s, path, s"$path/manifest")(build)
 
   private def writeManifest(s: SparkSession, path: String, family: String,
       params: Map[String, String]): Unit = {
@@ -182,40 +187,16 @@ object IndexStore {
     * the same corpus+params (indexes are immutable once written —
     * rebuilding per call would defeat the point of persistence).
     */
-  /** The corpus FINGERPRINT is part of an index identity: an index is
-    * valid for one corpus snapshot, and the test corpora are
-    * regenerated in place — a path keyed on dir+params alone would
-    * happily serve an index built from superseded bytes.
-    */
-  private[graft] def corpusTag(s: SparkSession, dir: String,
-      table: String): String = {
-    // Hadoop-FS enumeration (like manifestExists): (name, length,
-    // modification time) triples are identical to java.io.File's on a
-    // local path, so existing local index tags stay valid — but the
-    // probe now also sees file:/hdfs:/s3a: corpora.
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$table")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val files =
-      if (!fs.exists(p)) Seq.empty
-      else if (fs.getFileStatus(p).isDirectory) fs.listStatus(p).toSeq
-      else Seq(fs.getFileStatus(p))
-    java.lang.Long.toHexString(files.map(f =>
-      s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}")
-      .sorted.mkString("|").hashCode.toLong & 0xFFFFFFFFL)
-  }
-
   def ivfPersistedTopK(s: SparkSession, dir: String, k: Int = 5,
       nQueries: Int = 5, nCells: Int = 16, nProbe: Int = 12,
       dim: Int = 64, lloydIters: Int = 2): DataFrame = {
-    val fp = corpusTag(s, dir, "embeddings.parquet")
-    val tag = s"${dir.replaceAll("[^A-Za-z0-9.]", "_")}_c${nCells}_d${dim}_l${lloydIters}_$fp"
-    val path = s"target/graft_index/ivf/$tag"
-    if (!manifestExists(s, path)) {
-      val built = Similarity.ivfIndexFor(s, dir, nCells, dim, lloydIters)
-      if (built.centroids.isEmpty) // degenerate corpus: nothing to persist
-        return Similarity.bruteForceTopK(s, dir, k, nQueries)
-      saveIvf(built, path)
-    }
+    val path = VersionedStore.storePath(s, "target/graft_index/ivf/", dir,
+      Seq("embeddings.parquet"), s"c${nCells}_d${dim}_l$lloydIters")
+    lazy val built = Similarity.ivfIndexFor(s, dir, nCells, dim, lloydIters)
+    // degenerate corpus: nothing to persist
+    if (!manifestExists(s, path) && built.centroids.isEmpty)
+      return Similarity.bruteForceTopK(s, dir, k, nQueries)
+    buildOnce(s, path)(saveIvf(built, path))
     val index = loadIvf(s, path)
     val queries = index.corpus
       .filter(col("neighbor_id") < nQueries)
@@ -348,13 +329,12 @@ object IndexStore {
     */
   def persistedLshPairs(s: SparkSession, dir: String,
       mod: Int = 3, t: Double = 0.5): DataFrame = {
-    val tag = s"${dir.replaceAll("[^A-Za-z0-9.]", "_")}_m${mod}_" +
-      corpusTag(s, dir, "documents.parquet")
-    val path = s"target/graft_index/lsh/$tag"
+    val path = VersionedStore.storePath(s, "target/graft_index/lsh/", dir,
+      Seq("documents.parquet"), s"m$mod")
     val docs = graft.Tables.documents(s, dir)
       .select(col("doc_id"), col("text"))
     val slice = pmod(col("doc_id"), lit(mod))
-    if (!manifestExists(s, path)) {
+    buildOnce(s, path) {
       // relations first (initial slice, then the incremental append),
       // manifest LAST: the manifest is the build-complete marker, so a
       // crash between the two writes leaves a rebuildable directory —
@@ -383,11 +363,10 @@ object IndexStore {
     // bit-identical either way (materialization of a deterministic
     // projection). The trailing orderBy is a presentation sort over
     // the low-thousands pair output — negligible next to the probe.
-    val probeDir = s"$path/probe"
-    if (!manifestExists(s, probeDir)) {
+    val probeDir = buildOnce(s, s"$path/probe") {
       Dedup.signDocs(docs.filter(slice === 0))
-        .write.mode("overwrite").parquet(s"$probeDir/signed")
-      writeManifest(s, probeDir, "minhash-probe",
+        .write.mode("overwrite").parquet(s"$path/probe/signed")
+      writeManifest(s, s"$path/probe", "minhash-probe",
         minhashScheme + ("mod" -> mod.toString))
     }
     Dedup.minhashCandidatesSigned(s.read.parquet(s"$probeDir/signed"),
@@ -398,14 +377,13 @@ object IndexStore {
   def persistedCrossDedup(s: SparkSession, dir: String,
       mod: Int = 3): DataFrame = {
     import graft.functions.TextFunctions.fingerprint
-    val tag = s"${dir.replaceAll("[^A-Za-z0-9.]", "_")}_m${mod}_" +
-      corpusTag(s, dir, "documents.parquet")
-    val path = s"target/graft_index/fp/$tag"
+    val path = VersionedStore.storePath(s, "target/graft_index/fp/", dir,
+      Seq("documents.parquet"), s"m$mod")
     val docs = graft.Tables.documents(s, dir)
       .select(col("doc_id"), fingerprint(col("text")).as("fp"))
-    if (!manifestExists(s, path))
+    buildOnce(s, path)(
       saveFingerprints(docs.filter(pmod(col("doc_id"), lit(mod)) =!= 0),
-        path, Map("mod" -> mod.toString))
+        path, Map("mod" -> mod.toString)))
     Dedup.crossDedupFrom(
       docs.filter(pmod(col("doc_id"), lit(mod)) === 0),
       loadFingerprints(s, path))
@@ -492,15 +470,14 @@ object IndexStore {
       w: Int = 8, m: Int = 64): DataFrame = {
     // chunker params ride the tag: a different (w, m) builds ITS OWN
     // store; the manifest scheme check guards externally-shared paths
-    val tag = s"${dir.replaceAll("[^A-Za-z0-9.]", "_")}_m${mod}_w${w}c$m" +
-      s"_${corpusTag(s, dir, "documents.parquet")}"
-    val path = s"target/graft_index/chunks/$tag"
+    val path = VersionedStore.storePath(s, "target/graft_index/chunks/",
+      dir, Seq("documents.parquet"), s"m${mod}_w${w}c$m")
     val docs = graft.Tables.documents(s, dir)
     def chunkHashes(slice: DataFrame): DataFrame =
       Dedup.cdcChunks(slice, w, m)
         .select(md5(col("chunk")).as("chunk_md5"),
           length(col("chunk")).cast("long").as("chunk_len"))
-    if (!manifestExists(s, path)) {
+    buildOnce(s, path) {
       // relations first, manifest LAST (the persistedLshPairs
       // build-complete-marker convention): saveChunks stamps the
       // manifest itself, so using it here would publish the store

@@ -14,7 +14,7 @@ import graft.Tables
   * manifest lands only after the written files are read back and
   * audited. Builds on q74's mergeability gate (the audit re-derives
   * the new version's mass from the previous manifest + the delta and
-  * requires exact conservation) and the IndexStore manifest-last
+  * requires exact conservation) and the persisted-index manifest-last
   * convention, generalized to MULTIPLE immutable versions.
   *
   * Storage is the [[VersionedStore]] protocol (staged writer-unique
@@ -54,23 +54,17 @@ object LakehouseMerge {
   // layout L2 (r15): staged data_vN_<token> dirs + manifest data_dir
   // column — a path bump so stores persisted under the v=N layout are
   // simply abandoned, never half-read
-  private def tablePath(s: SparkSession, dir: String, mod: Int): String = {
-    val tag = s"${dir.replaceAll("[^A-Za-z0-9.]", "_")}_m${mod}_" +
-      IndexStore.corpusTag(s, dir, "orders.parquet")
-    s"target/graft_table/orders_summary/L2_$tag"
-  }
+  private def tablePath(s: SparkSession, dir: String, mod: Int): String =
+    VersionedStore.storePath(s, "target/graft_table/orders_summary/L2_",
+      dir, Seq("orders.parquet"), s"m$mod")
 
-  private def evoTablePath(s: SparkSession, dir: String): String = {
-    val tag = s"${dir.replaceAll("[^A-Za-z0-9.]", "_")}_evo_" +
-      IndexStore.corpusTag(s, dir, "orders.parquet")
-    s"target/graft_table/orders_summary_evo/L2_$tag"
-  }
+  private def evoTablePath(s: SparkSession, dir: String): String =
+    VersionedStore.storePath(s, "target/graft_table/orders_summary_evo/L2_",
+      dir, Seq("orders.parquet"), "evo")
 
-  private def optTablePath(s: SparkSession, dir: String): String = {
-    val tag = s"${dir.replaceAll("[^A-Za-z0-9.]", "_")}_opt_" +
-      IndexStore.corpusTag(s, dir, "orders.parquet")
-    s"target/graft_table/orders_summary_opt/L2_$tag"
-  }
+  private[graft] def optTablePath(s: SparkSession, dir: String): String =
+    VersionedStore.storePath(s, "target/graft_table/orders_summary_opt/L2_",
+      dir, Seq("orders.parquet"), "opt")
 
   /** Read version `v` UNDER a (possibly newer) schema: columns the
     * version predates come back as typed nulls — the Iceberg/Delta

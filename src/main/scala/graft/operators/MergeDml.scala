@@ -57,11 +57,9 @@ import graft.Tables
 object MergeDml {
   import VersionedStore.{head, readVersion}
 
-  private[graft] def tablePath(s: SparkSession, dir: String): String = {
-    val tag = s"${dir.replaceAll("[^A-Za-z0-9.]", "_")}_dml_" +
-      IndexStore.corpusTag(s, dir, "customer.parquet")
-    s"target/graft_table/customer_dml/L1_$tag"
-  }
+  private[graft] def tablePath(s: SparkSession, dir: String): String =
+    VersionedStore.storePath(s, "target/graft_table/customer_dml/L1_", dir,
+      Seq("customer.parquet"), "dml")
 
   /** Audit the staged post-image against the classification-derived
     * expectation, then publish manifest v with the DML ledger

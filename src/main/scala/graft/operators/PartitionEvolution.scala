@@ -44,11 +44,9 @@ import graft.Tables
   */
 object PartitionEvolution {
 
-  private def tablePath(s: SparkSession, dir: String): String = {
-    val tag = s"${dir.replaceAll("[^A-Za-z0-9.]", "_")}_pevo_" +
-      IndexStore.corpusTag(s, dir, "orders.parquet")
-    s"target/graft_table/orders_pevo/L1_$tag"
-  }
+  private def tablePath(s: SparkSession, dir: String): String =
+    VersionedStore.storePath(s, "target/graft_table/orders_pevo/L1_", dir,
+      Seq("orders.parquet"), "pevo")
 
   private def orders(s: SparkSession, dir: String): DataFrame =
     Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"),

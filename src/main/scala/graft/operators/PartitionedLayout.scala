@@ -27,29 +27,25 @@ import graft.Tables
   * date: tasks × dates small files — the classic small-files
   * explosion). At 100 TB you'd `repartition(N, event_date, salt)` to
   * keep write parallelism while bounding files-per-partition.
+  *
+  * Where the layout lives and when it counts as built is
+  * [[VersionedStore]]'s one rule (`storePath`, `buildOnce`).
   */
 object PartitionedLayout {
 
-  private def safe(s: String) = s.toLowerCase.replaceAll("[^a-z0-9]", "_")
-
   /** Materialize events partitioned by event_date under the warehouse
-    * dir (once per corpus; `_SUCCESS` is the completion probe — parquet
-    * commit writes it LAST, so a crashed write rebuilds).
+    * dir, once per events snapshot.
     */
   def ensure(s: SparkSession, dir: String): String = {
-    val wh = s.sessionState.conf.getConfString(
-      "spark.sql.warehouse.dir", "spark-warehouse")
-    val path = s"$wh/graft_events_bydate_${safe(new java.io.File(dir).getName)}"
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS"))) {
-      if (fs.exists(p)) fs.delete(p, true) // partial write from a crash
+    val path = VersionedStore.storePath(s,
+      s"${VersionedStore.warehouse(s)}/graft_events_bydate_", dir, Seq("events.parquet"),
+      "event_date")
+    VersionedStore.buildOnce(s, path, path) {
       Tables.events(s, dir)
         .withColumn("event_date", to_date(col("ts")))
         .repartition(col("event_date"))
         .write.partitionBy("event_date").parquet(path)
     }
-    path
   }
 
   /** q79 — one-week activity summary THROUGH the date-partitioned
@@ -86,14 +82,10 @@ object PartitionedLayout {
     * boolean-simplified back to the bare attribute before the
     * PartitionPruning batch runs.
     */
-  def ensureCampaignDim(s: SparkSession, dir: String): String = {
-    val wh = s.sessionState.conf.getConfString(
-      "spark.sql.warehouse.dir", "spark-warehouse")
-    val path = s"$wh/graft_campaign_dim_${safe(new java.io.File(dir).getName)}"
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS"))) {
-      if (fs.exists(p)) fs.delete(p, true)
+  def ensureCampaignDim(s: SparkSession): String = {
+    // constant content, so one copy serves every sf dir
+    val path = s"${VersionedStore.warehouse(s)}/graft_campaign_dim"
+    VersionedStore.buildOnce(s, path, path) {
       s.range(1, 32).toDF("d")
         .select(
           to_date(concat(lit("2024-01-"), lpad(col("d").cast("string"), 2, "0")))
@@ -102,7 +94,6 @@ object PartitionedLayout {
             .when(col("d").between(20, 22), "B").as("flight"))
         .coalesce(1).write.parquet(path)
     }
-    path
   }
 
   /** q81 — DYNAMIC partition pruning: the dates to read are not a
@@ -123,7 +114,7 @@ object PartitionedLayout {
     */
   def campaignSummary(s: SparkSession, dir: String): DataFrame = {
     val facts = s.read.parquet(ensure(s, dir))
-    val dim = s.read.parquet(ensureCampaignDim(s, dir))
+    val dim = s.read.parquet(ensureCampaignDim(s))
       .filter(col("flight").isin("A", "B"))
     facts.join(broadcast(dim), facts("event_date") === dim("cal_date"))
       .groupBy(col("event_date"), col("event_type"))

@@ -4,12 +4,25 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
-/** The one on-disk protocol of the versioned lakehouse stores
-  * ([[LakehouseMerge]], [[MergeDml]], [[CowErasure]],
-  * [[PartitionEvolution]], [[DataSkipping]]): what a published
+/** The one on-disk protocol of every store derived from an sf dir's
+  * tables: where it lives ([[storePath]]), when it is complete
+  * ([[isComplete]], [[buildOnce]]) and — for the versioned lakehouse
+  * stores ([[LakehouseMerge]], [[MergeDml]], [[CowErasure]],
+  * [[PartitionEvolution]], [[DataSkipping]]) — what a published
   * version is, how data is staged, and how a version is published.
   * Each store keeps only its own audit, expected masses and manifest
   * columns.
+  *
+  * Identity: a derived store is valid for one snapshot of the tables
+  * it was read from. [[storePath]] names it by the sf dir as given,
+  * the store's parameters, and a fingerprint of each source table's
+  * files (name, length, modification time) — so another dir with the
+  * same basename, or a table regenerated in place, gets a store of
+  * its own instead of a predecessor's.
+  *
+  * Completion: a store (or a store's last-written relation) is
+  * complete iff its `_SUCCESS` marker exists — parquet's commit
+  * writes it last, so a crashed write is debris, never a store.
   *
   * Layout under one store directory:
   *   `data_<label>_<token>/`  data STAGED under a writer-unique 12-hex
@@ -49,13 +62,62 @@ object VersionedStore {
   def fs(s: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(s.sparkContext.hadoopConfiguration)
 
+  /** The fingerprint of `dir/table`: a hash of its files' (name,
+    * length, modification time), listed through the Hadoop FS API so
+    * `file:`/`hdfs:`/`s3a:` corpora are seen too. */
+  private def corpusTag(s: SparkSession, dir: String,
+      table: String): String = {
+    val p = new Path(s"$dir/$table")
+    val f = fs(s, dir)
+    val files =
+      if (!f.exists(p)) Seq.empty
+      else if (f.getFileStatus(p).isDirectory) f.listStatus(p).toSeq
+      else Seq(f.getFileStatus(p))
+    java.lang.Long.toHexString(files.map(st =>
+      s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
+      .sorted.mkString("|").hashCode.toLong & 0xFFFFFFFFL)
+  }
+
+  /** The location of the store derived from `tables` of sf dir `dir`
+    * under `params`: `root` (a directory ending in `/`, or a name stem
+    * like `…/L2_` or `graft_orders_`) followed by
+    * `<dir, non-alphanumerics as _>_<params>_<fingerprint of each
+    * table>`. */
+  def storePath(s: SparkSession, root: String, dir: String,
+      tables: Seq[String], params: String): String =
+    root + (dir.replaceAll("[^A-Za-z0-9.]", "_") +: params +:
+      tables.map(corpusTag(s, dir, _))).mkString("_")
+
+  /** The session's warehouse dir, root of the layout stores. */
+  def warehouse(s: SparkSession): String =
+    s.sessionState.conf.getConfString("spark.sql.warehouse.dir",
+      "spark-warehouse")
+
+  /** Has the write into `dir` committed (its `_SUCCESS` marker
+    * exists)? */
+  def isComplete(s: SparkSession, dir: String): Boolean =
+    fs(s, dir).exists(new Path(dir, "_SUCCESS"))
+
+  /** Build the store at `path` once: unless `done` — the store's
+    * last-written directory, `path` itself for a single relation — is
+    * complete, delete what a crashed build left at `path` and run
+    * `build`. Returns `path`. */
+  def buildOnce(s: SparkSession, path: String, done: String)(
+      build: => Unit): String = {
+    if (!isComplete(s, done)) {
+      fs(s, path).delete(new Path(path), true)
+      build
+    }
+    path
+  }
+
   /** The manifest directory of version `v`. */
   def manifestDir(path: String, v: Int,
       prefix: String = "manifest"): String =
     s"$path/${prefix}_v$v"
 
   private def marker(path: String, v: Int, prefix: String): Path =
-    new Path(s"${manifestDir(path, v, prefix)}/_SUCCESS")
+    new Path(manifestDir(path, v, prefix), "_SUCCESS")
 
   /** Every version that has a manifest directory, published or
     * marker-less debris, ascending. */
@@ -72,7 +134,7 @@ object VersionedStore {
 
   def isPublished(s: SparkSession, path: String, v: Int,
       prefix: String = "manifest"): Boolean =
-    fs(s, path).exists(marker(path, v, prefix))
+    isComplete(s, manifestDir(path, v, prefix))
 
   /** The highest published version; 0 if none. With `asOf`, the
     * highest version whose PUBLISH instant (its marker's modification

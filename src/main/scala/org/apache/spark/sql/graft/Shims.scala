@@ -95,18 +95,16 @@ object Shims {
           Some(Statistics(sizeInBytes = BigInt(math.max(1L, sizeInBytes)))),
           None)
         org.apache.spark.sql.classic.Dataset.ofRows(spark, pinned)
-      case _ =>
+      case other =>
         // A non-LogicalRDD checkpoint plan means a Spark upgrade changed
         // the shape this shim pins stats through — the exponential-stats
-        // optimizer stall it prevents would silently return. Warn loudly
-        // so the regression is found here, not as an unexplained hang
-        // (GraphCCSpec asserts the pinned path is taken).
-        System.err.println(
-          "[graft] WARN localCheckpointWithStats: checkpoint plan is " +
-            s"${cp.queryExecution.analyzed.getClass.getSimpleName}, not " +
-            "LogicalRDD — stats NOT pinned; iterative fixpoints may stall " +
-            "the optimizer (see Shims.scala)")
-        cp
+        // optimizer stall it prevents would silently return, so fail
+        // here rather than as an unexplained hang (GraphCCSpec asserts
+        // the pinned path is taken).
+        throw new IllegalStateException(
+          "localCheckpointWithStats: checkpoint plan is " +
+            s"${other.getClass.getSimpleName}, not LogicalRDD — cannot " +
+            "pin its stats (see Shims.scala)")
     }
   }
 }

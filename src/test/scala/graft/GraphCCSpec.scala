@@ -96,9 +96,9 @@ class GraphCCSpec extends AnyFunSuite with BeforeAndAfterEach {
   test("localCheckpointWithStats pins the declared size on a LogicalRDD leaf") {
     // The fixpoint depends on this shim taking the stats-pinning branch:
     // if a Spark upgrade changes the checkpoint plan shape, the shim
-    // falls back to a plain checkpoint (with a stderr warning) and the
-    // exponential-stats optimizer stall silently returns. Fail HERE
-    // instead. Covers both eager and lazy forms.
+    // throws rather than returning an unpinned checkpoint (whose
+    // exponential-stats optimizer stall would silently return). Pin
+    // the taken branch HERE. Covers both eager and lazy forms.
     import spark.implicits._
     for (eager <- Seq(true, false)) {
       val df = (1 to 10).toDF("x")

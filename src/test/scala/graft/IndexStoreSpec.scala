@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{IndexStore, Similarity}
+import graft.operators.{IndexStore, Similarity, VersionedStore}
 
 /** ANN index persistence: save→load→query must EXACTLY equal
   * build→query for every index family — a loaded index is the same
@@ -166,6 +166,26 @@ class IndexStoreSpec extends AnyFunSuite with BeforeAndAfterEach {
     val appended = rows(graft.operators.Dedup.crossDedupFrom(
       incoming, IndexStore.loadFingerprints(spark, path)))
     assert(appended === d23)
+  }
+
+  test("s14 and d28: a torn manifest is rebuilt, never trusted") {
+    // a crash during the manifest's own write leaves `manifest/`
+    // holding only the committer's `_temporary`
+    def tornThenHealed(store: String, query: => DataFrame): Unit = {
+      val want = rows(query)
+      val manifest = new org.apache.hadoop.fs.Path(s"$store/manifest")
+      val fs = VersionedStore.fs(spark, store)
+      assert(fs.delete(manifest, true), s"no manifest at $store")
+      fs.mkdirs(new org.apache.hadoop.fs.Path(manifest, "_temporary/0"))
+      assert(rows(query) === want)
+      assert(IndexStore.manifestExists(spark, store))
+    }
+    tornThenHealed(VersionedStore.storePath(spark, "target/graft_index/ivf/",
+        sfDir, Seq("embeddings.parquet"), "c16_d64_l2"),
+      IndexStore.ivfPersistedTopK(spark, sfDir))
+    tornThenHealed(VersionedStore.storePath(spark, "target/graft_index/fp/",
+        sfDir, Seq("documents.parquet"), "m3"),
+      IndexStore.persistedCrossDedup(spark, sfDir))
   }
 
   test("d30: persisted LSH pairs equal the direct index; save+append+load round-trips") {

@@ -205,12 +205,7 @@ class Round15OpsSpec extends AnyFunSuite {
       .collect()
     // rebuild readVersion views through the public-ish internals: the
     // optimize table is the one the registered query just published
-    val path = {
-      // resolve via the manifest the flow wrote: version 2 is head
-      val tag = s"${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}_opt_" +
-        graft.operators.IndexStore.corpusTag(spark, sfDir, "orders.parquet")
-      s"target/graft_table/orders_summary_opt/L2_$tag"
-    }
+    val path = LakehouseMerge.optTablePath(spark, sfDir)
     assert(VersionedStore.head(spark, path) == 2)
     val v1Files = filesOf(VersionedStore.readVersion(spark, path, 1))
     val v2Files = filesOf(VersionedStore.readVersion(spark, path, 2))
@@ -325,6 +320,30 @@ class Round15OpsSpec extends AnyFunSuite {
     val want = Tables.orders(spark, sfDir)
       .filter(col("o_orderdate").cast("date").between(lo, hi)).count()
     assert(zdf.count() === want)
+  }
+
+  test("q97/q99 layouts: file boundaries depend on the data alone, not on what ran before in the JVM") {
+    import graft.operators.DataSkipping
+    // sf0.01: enough rows per file that sampled range boundaries move
+    val dir = "/root/testdata/sf0.01"
+    def published(cluster: org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame): Seq[String] = {
+      val path = tmpTable()
+      DataSkipping.publishAt(spark, dir, path, cluster, 16)
+      // file names and data_dir tokens are writer-unique; bloom
+      // entries are compared as a set
+      DataSkipping.statsDf(spark, path).drop("file", "data_dir")
+        .withColumn("bloom", array_sort(map_entries(col("bloom"))))
+        .collect().map(_.toString).sorted.toSeq
+    }
+    for ((name, cluster) <- Seq("linear" -> DataSkipping.linear,
+        "z-order" -> DataSkipping.zorder)) {
+      val first = published(cluster)
+      assert(first.size === 16, s"$name: ${first.size} files")
+      // unrelated range-partitioned work between the two publishes
+      spark.range(100000).repartitionByRange(7, col("id") % 1013).count()
+      assert(published(cluster) === first, s"$name: file stats moved")
+    }
   }
 
   test("q101 bloom skipping: zero false negatives, real pruning, absent keys prune hardest") {

@@ -17,9 +17,15 @@ Three tiers per query:
           carries a straddle risk documented at its operator;
   FAIL  — anything else (exit 1).
 A query NOT on the allowlist must be bit-exact — this is what would
-have caught t32 before the r12 round gate. Dev tool only — not part
-of the engine."""
-import sys, json, glob, math, struct
+have caught t32 before the r12 round gate. Queries replay in a pool of
+worker processes (one per CPU, each with its own DuckDB connection
+and views); lines print in query-name order, followed by the summary
+and the five slowest queries. Dev tool only — not part of the
+engine.
+
+Usage: check_oracle.py [sf_dir] [verify_out_dir]"""
+import sys, json, glob, math, os, struct, time
+from multiprocessing import Pool
 import duckdb
 
 # Queries allowed to drift at the ulp level (and why). Shrink this
@@ -41,13 +47,20 @@ ULP_DRIFT_ALLOWED = {
 
 sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 out_dir = sys.argv[2] if len(sys.argv) > 2 else "target/verify_out"
+WORKERS = os.cpu_count() or 1
 
-con = duckdb.connect()
-for f in glob.glob(f"{sf_dir}/*.parquet"):
-    name = f.split("/")[-1].removesuffix(".parquet")
-    con.execute(f"create view {name} as select * from read_parquet('{f}')")
+con = None  # each worker's own connection, opened by connect_views
 
-oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+
+def connect_views():
+    global con
+    con = duckdb.connect()
+    # the pool supplies the parallelism; one thread per connection
+    # keeps WORKERS connections from oversubscribing the CPUs
+    con.execute("set threads = 1")
+    for f in glob.glob(f"{sf_dir}/*.parquet"):
+        name = f.split("/")[-1].removesuffix(".parquet")
+        con.execute(f"create view {name} as select * from read_parquet('{f}')")
 
 def bits(v):
     return struct.unpack("<q", struct.pack("<d", v))[0]
@@ -93,23 +106,22 @@ def sig12(rows):
             else c for c in r))
     return sorted(out)
 
-fails = warns = 0
-for name, sql in sorted(oracle.items()):
+def compare(name, sql):
+    """The query's verdict line, which begins with OK, WARN or FAIL."""
     spark_files = glob.glob(f"{out_dir}/{name}/*.parquet")
     if not spark_files:
-        print(f"FAIL {name}: no spark output"); fails += 1; continue
+        return f"FAIL {name}: no spark output"
     got = con.execute(f"select * from read_parquet('{out_dir}/{name}/*.parquet')").df()
     want = con.execute(sql).df()
     gc, gr = norm(got)
     wc, wr = norm(want)
     if gc != wc:
-        print(f"FAIL {name}: columns {gc} != {wc}"); fails += 1; continue
+        return f"FAIL {name}: columns {gc} != {wc}"
     if len(gr) != len(wr):
-        print(f"FAIL {name}: rows {len(gr)} != {len(wr)}"); fails += 1; continue
+        return f"FAIL {name}: rows {len(gr)} != {len(wr)}"
     bad = [(a, b) for a, b in zip(gr, wr) if a != b]
     if not bad:
-        print(f"OK   {name} ({len(gr)} rows)")
-        continue
+        return f"OK   {name} ({len(gr)} rows)"
     # ulp diagnostics: max ulp distance across all mismatched cells
     # that are float-parseable (hex floats parse via float.fromhex).
     # Cell-wise over sorted-row pairs — a coarse pairing, so treat the
@@ -123,14 +135,30 @@ for name, sql in sorted(oracle.items()):
                 if d is not None:
                     max_ulp = max(max_ulp, d)
     if name in ULP_DRIFT_ALLOWED and sig12(gr) == sig12(wr):
-        print(f"WARN {name}: bitwise drift in {len(bad)} rows "
-              f"(max ulp ~{max_ulp}), matches at 12 sig digits — "
-              f"allowlisted engine-drift family")
-        warns += 1
-    else:
-        note = f" (max float ulp diff ~{max_ulp})" if max_ulp else ""
-        print(f"FAIL {name}: {len(bad)} mismatched rows{note}; first: {bad[0]}")
-        fails += 1
-print(f"\n{len(oracle) - fails}/{len(oracle)} queries match "
-      f"({len(oracle) - fails - warns} bit-exact, {warns} allowlisted ulp-drift)")
-sys.exit(1 if fails else 0)
+        return (f"WARN {name}: bitwise drift in {len(bad)} rows "
+                f"(max ulp ~{max_ulp}), matches at 12 sig digits — "
+                f"allowlisted engine-drift family")
+    note = f" (max float ulp diff ~{max_ulp})" if max_ulp else ""
+    return f"FAIL {name}: {len(bad)} mismatched rows{note}; first: {bad[0]}"
+
+
+def timed_compare(item):
+    start = time.perf_counter()
+    line = compare(*item)
+    return item[0], line, time.perf_counter() - start
+
+
+if __name__ == "__main__":
+    oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    with Pool(WORKERS, initializer=connect_views) as pool:
+        results = pool.map(timed_compare, sorted(oracle.items()), chunksize=1)
+    for _, line, _ in results:
+        print(line)
+    fails = sum(line.startswith("FAIL") for _, line, _ in results)
+    warns = sum(line.startswith("WARN") for _, line, _ in results)
+    print(f"\n{len(oracle) - fails}/{len(oracle)} queries match "
+          f"({len(oracle) - fails - warns} bit-exact, {warns} allowlisted ulp-drift)")
+    print(f"slowest ({WORKERS} workers):")
+    for name, _, secs in sorted(results, key=lambda r: -r[2])[:5]:
+        print(f"  {secs:7.1f} s  {name}")
+    sys.exit(1 if fails else 0)
