@@ -111,29 +111,30 @@ object SparkEntry {
     // The group domain 0..3 is KNOWN up front (as the reference's file
     // listing is) — the faithful zero-fill collapses algebraically to
     // sum/N and the plan scans `events` exactly once.
-    QueryDef("events_speed_faithful", (s, dir) => {
-      import s.implicits._
+    QueryDef("events_speed_faithful", (s, dir) =>
       TwoLevelMean.faithful(
         ev(s, dir).select((col("user_id") % 4).as("grp"),
           (dayofweek(col("ts")) - 1).cast("int").as("day"), col("value")),
         col("grp"), col("day"), col("value"), 0 to 6,
-        TwoLevelMean.Groups(s, 0 to 3), keyName = "day", outName = "avg_value"
-      ).orderBy("day")
-    },
-      // group domain is the fixed 0..3 (mirrors the Spark side's Groups —
-      // the reference's "listing-known" file set, not data-derived)
+        0 to 3, keyName = "day", outName = "avg_value"
+      ).orderBy("day"),
+      // group domain is the fixed 0..3 (mirrors the Spark side's — the
+      // reference's "listing-known" file set, not data-derived). As on
+      // the Spark side, the per-group means are taken before the
+      // zero-fill join (a join ahead of the avg reorders its sum) and
+      // are summed in ascending grp order.
       Sql("""WITH base AS (
         |  SELECT user_id % 4 AS grp, CAST(dayofweek(ts) AS INT) AS day, value
         |  FROM events
         |), groups AS (SELECT * FROM (VALUES (0),(1),(2),(3)) g(grp)),
         |days AS (SELECT * FROM (VALUES (CAST(0 AS INT)),(1),(2),(3),(4),(5),(6)) d(day)),
+        |means AS (SELECT grp, day, avg(value) AS m FROM base GROUP BY grp, day),
         |per_grp AS (
-        |  SELECT g.grp, d.day, coalesce(avg(b.value), 0.0) AS per_grp_avg
+        |  SELECT g.grp, d.day, coalesce(m.m, 0.0) AS per_grp_avg
         |  FROM groups g CROSS JOIN days d
-        |  LEFT JOIN base b ON b.grp = g.grp AND b.day = d.day
-        |  GROUP BY g.grp, d.day
+        |  LEFT JOIN means m ON m.grp = g.grp AND m.day = d.day
         |)
-        |SELECT day, avg(per_grp_avg) AS avg_value
+        |SELECT day, avg(per_grp_avg ORDER BY grp) AS avg_value
         |FROM per_grp GROUP BY day ORDER BY day""")),
 
     // Weighted (corrected) mode: plain global mean per day.
@@ -158,16 +159,19 @@ object SparkEntry {
       // Re-reads the SAME generated CSV bytes (read_text → line split) and
       // re-applies only the accept/speed/aggregation semantics — the gate
       // checks the pipeline, not the generator. The corpus path is keyed
-      // by oracleSfName, the scale Verify ran the Spark side on.
+      // by oracleSfName, the scale Verify ran the Spark side on. As on
+      // the Spark side, each file's means are taken in line order before
+      // the zero-fill join (a join ahead of the avg reorders its sum) and
+      // are summed in filename order, the Spark side's listing order.
       SqlFn(() => s"""WITH $taxiKept,
         |files AS (SELECT DISTINCT filename FROM raw),
         |days AS (SELECT * FROM (VALUES (CAST(0 AS INT)),(1),(2),(3),(4),(5),(6)) d(day)),
+        |means AS (SELECT filename, day, avg(speed_mph) AS m FROM kept GROUP BY filename, day),
         |per_file AS (
-        |  SELECT fi.filename, d.day, coalesce(avg(k.speed_mph), 0.0) AS pf
+        |  SELECT fi.filename, d.day, coalesce(m.m, 0.0) AS pf
         |  FROM files fi CROSS JOIN days d
-        |  LEFT JOIN kept k ON k.filename = fi.filename AND k.day = d.day
-        |  GROUP BY fi.filename, d.day)
-        |SELECT day, avg(pf) AS avg_speed_mph
+        |  LEFT JOIN means m ON m.filename = fi.filename AND m.day = d.day)
+        |SELECT day, avg(pf ORDER BY filename) AS avg_speed_mph
         |FROM per_file GROUP BY day ORDER BY day""".stripMargin)),
 
     QueryDef("taxi_avg_speed_weighted", (s, dir) =>
@@ -4682,10 +4686,13 @@ object SparkEntry {
     // seed mirrors kcenterCoreset's validity filter (non-null, nonzero
     // norm); the unrolled CTE cannot express the Spark side's
     // early-stop when fewer than k valid vectors exist — the oracle
-    // assumes >= k, which the generated corpora satisfy.
+    // assumes >= k, which the generated corpora satisfy. Each pick
+    // references every earlier one, so the picks are MATERIALIZED:
+    // inlined, DuckDB re-plans the whole chain per reference and the
+    // cost grows several-fold per pick.
     val sb = new StringBuilder
     sb ++= """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-      |p1 AS (SELECT vec_id AS id, emb FROM e
+      |p1 AS MATERIALIZED (SELECT vec_id AS id, emb FROM e
       |  WHERE emb IS NOT NULL AND list_reduce(list_prepend(0.0,
       |    [x * x for x in emb]), (a, v) -> a + v) > 0
       |  ORDER BY vec_id LIMIT 1)""".stripMargin
@@ -4697,7 +4704,7 @@ object SparkEntry {
       val prior = (1 until r).map(j => s"SELECT id FROM p$j")
         .mkString(" UNION ALL ")
       sb ++= s""",
-        |p$r AS (SELECT v.vec_id AS id, v.emb, $mind AS mind
+        |p$r AS MATERIALIZED (SELECT v.vec_id AS id, v.emb, $mind AS mind
         |  FROM e v WHERE v.vec_id NOT IN ($prior)
         |  ORDER BY mind DESC, v.vec_id LIMIT 1)""".stripMargin
     }

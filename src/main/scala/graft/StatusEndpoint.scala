@@ -141,7 +141,11 @@ object StatusEndpoint {
     private[graft] def size: Int = runs.size
   }
 
-  private def jsonEscape(s: String): String =
+  /** JSON string-body escape: backslash, quote, and ALL control chars
+    * (< 0x20) — a tab or CR left raw (in a run's error, or in the oracle
+    * SQL Verify writes) would make a strict JSON reader reject the
+    * document. */
+  private[graft] def jsonEscape(s: String): String =
     s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"

@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.sources.TaxiCsv
 
 /** The reference's flagship query: average NYC-taxi trip speed (mph) by
   * day of week (Sample.cs:137-240, README.md:105-110), in both the
@@ -45,36 +47,23 @@ object TaxiSpeed {
 
   /** Faithful mode: unweighted mean of zero-filled per-file means,
     * keyed Sunday=0..Saturday=6. Output: (day int, avg_speed_mph double).
-    * The group domain is the driver-side file listing (S2): all-zero
-    * files participate, as in the reference (Sample.cs:196-199), and the
+    * `path` is a glob, a directory or a file; `paths` an explicit URI
+    * list — the reference's actual dataflow (`Sample.cs:70-75`: the
+    * lister's URI array fans out to the mappers verbatim) and the
+    * required form for listing-less transports (http(s) via
+    * [[graft.sources.HttpReadFileSystem]], where globs cannot expand).
+    * Either is resolved once, by `TaxiCsv.resolve`; that listing is both
+    * what the scan reads and the group domain, so all-zero files
+    * participate, as in the reference (Sample.cs:196-199), and the
     * facts are scanned exactly once.
     */
-  def faithfulAvgByDowListed(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = {
-    import spark.implicits._
-    val files = graft.sources.TaxiCsv.listFiles(spark, path)
-    TwoLevelMean.faithful(withSpeed(graft.sources.TaxiCsv.trips(spark, path)),
-      col("file"), col("day"), col("speed_mph"),
-      0 to 6, TwoLevelMean.Groups(spark, files),
-      keyName = "day", outName = "avg_speed_mph")
-  }
+  def faithfulAvgByDowListed(spark: SparkSession, path: String): DataFrame =
+    faithfulAvgByDowListed(spark, Seq(path))
 
-  /** Faithful mode over an EXPLICIT URI list — the reference's actual
-    * dataflow (`Sample.cs:70-75`: the lister's URI array fans out to
-    * the mappers verbatim), and the required form for listing-less
-    * transports (http(s) via [[graft.sources.HttpReadFileSystem]],
-    * where globs cannot expand). The group domain is the given list:
-    * an all-rejected file still contributes its zero row, exactly as
-    * in the glob form.
-    */
-  def faithfulAvgByDowListed(spark: org.apache.spark.sql.SparkSession,
-      paths: Seq[String]): DataFrame = {
-    import spark.implicits._
-    val norm = graft.sources.TaxiCsv.normalizeUris(spark, paths)
-    TwoLevelMean.faithful(
-      withSpeed(graft.sources.TaxiCsv.tripsListed(spark, norm)),
-      col("file"), col("day"), col("speed_mph"),
-      0 to 6, TwoLevelMean.Groups(spark, norm),
+  def faithfulAvgByDowListed(spark: SparkSession, paths: Seq[String]): DataFrame = {
+    val files = TaxiCsv.resolve(spark, paths)
+    TwoLevelMean.faithful(withSpeed(TaxiCsv.trips(TaxiCsv.accepted(spark, files))),
+      col("file"), col("day"), col("speed_mph"), 0 to 6, files,
       keyName = "day", outName = "avg_speed_mph")
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The reference's reduce semantics, generalized: an *unweighted mean of
@@ -12,26 +12,16 @@ import org.apache.spark.sql.functions._
   *   - across files, the unweighted mean of those per-file means — each
   *     file counts equally regardless of row count (Sample.cs:218-233).
   *
-  * Scale design (100 TB posture): the naive shape would left-join the
-  * raw fact rows onto the dense (group × key) frame and aggregate twice.
-  * Instead we aggregate FIRST — `groupBy(group, key)` gets map-side
-  * partial aggregation, collapsing billions of rows to (#groups × #keys)
-  * — and only then join the tiny dense frame (broadcast) to zero-fill.
-  * The only wide shuffle is keyed by (group, key); everything after
-  * operates on #groups × #keys rows.
+  * Scale design (100 TB posture): aggregate FIRST — `groupBy(group, key)`
+  * gets map-side partial aggregation, collapsing billions of rows to at
+  * most #groups × #keys per-group means; that is the only wide shuffle
+  * over facts. Everything after it is a fold over those means per key:
+  * one more shuffle of #groups × #keys rows, no join and no broadcast.
+  * The group domain is a list the caller already holds in memory (a
+  * file listing, a fixed id range); the scan's file index holds the
+  * same list, so taking it as a literal adds nothing asymptotically.
   */
 object TwoLevelMean {
-
-  /** A group domain the caller already holds on the driver (a file
-    * listing, a fixed id range): the one-column `_grp` frame the facts
-    * are restricted to, and its size, known without a Spark job.
-    */
-  final case class Groups(frame: DataFrame, size: Int)
-
-  object Groups {
-    def apply[G: Encoder](spark: SparkSession, groups: Seq[G]): Groups =
-      Groups(spark.createDataset(groups).toDF("_grp"), groups.size)
-  }
 
   /** Unweighted mean-of-means of `valueCol` by `keyCol`, per-`groupCol`
     * means zero-filled over the dense key domain `keyDomain` and the
@@ -42,42 +32,53 @@ object TwoLevelMean {
     * Sample.cs:196-199), so zero-fill + avg collapses algebraically:
     *   avg over N groups of zero-filled means
     *     = sum(present per-group means) / N        (zeros add nothing)
-    * — a single linear pipeline, one facts scan, no dense frame and no
-    * multi-branch subplan reuse. N is the driver-side domain's size, so
+    * — one facts scan, no dense frame, and N = `groups.size`, so
     * building the plan runs no job.
+    *
+    * The sum is one fold per key over the per-group means in ascending
+    * group order (for a file listing, the listing order), so the result
+    * is the same double whatever the partitioning, the shuffle order or
+    * the directory the files live in — unlike the reference's
+    * unsynchronized `Parallel.For` reducer (Sample.cs:208-240). The
+    * DuckDB oracles fold in the same order (`avg(... ORDER BY group)`).
     *
     * @param df        fact rows (already filtered)
     * @param groupCol  the "file" analog — level-1 grouping
-    * @param keyCol    the "day of week" analog — must take values in keyDomain
+    * @param keyCol    the "day of week" analog
     * @param valueCol  the measure
     * @param keyDomain dense key domain to zero-fill (e.g. 0 to 6)
-    * @param groups    the group domain; facts outside it are ignored
-    * @return (key int, mean double) — one row per keyDomain element
+    * @param groups    the group domain; facts outside it, or with a key
+    *                  outside keyDomain, are ignored
+    * @return (key int, mean double) — one row per keyDomain element,
+    *         in key order
     */
   def faithful(df: DataFrame, groupCol: Column, keyCol: Column,
-      valueCol: Column, keyDomain: Seq[Int], groups: Groups,
+      valueCol: Column, keyDomain: Seq[Int], groups: Seq[Any],
       keyName: String = "key", outName: String = "mean"): DataFrame = {
+    require(groups.nonEmpty, "faithful needs a non-empty group domain")
     val spark = df.sparkSession
     import spark.implicits._
-
-    val facts = df.select(groupCol.as("_grp"), keyCol.as(keyName), valueCol.as("_v"))
-    // Level 1a: per-(group, key) mean — one shuffle, partial-agg combined.
-    val perGroup = facts.groupBy($"_grp", col(keyName))
-      .agg(avg($"_v").as("_grp_mean"))
-    val keys = keyDomain.toDF(keyName)
-    // Restrict to the declared domain (broadcast semi-join), don't just
-    // take its count: data-derived groups OUTSIDE the domain (e.g. a
-    // negative key modulo) must not leak into the sum — the domain is
-    // the contract, exactly as the reference's file listing is.
-    val perKey = perGroup.join(broadcast(groups.frame), Seq("_grp"), "leftsemi")
-      .groupBy(col(keyName)).agg(sum($"_grp_mean").as("_s"))
-    // Broadcast the BUILD side (perKey, ≤ |keyDomain| rows after its
-    // agg) — a hint on the preserved left side of a left join is
-    // unsupported for BroadcastHashJoin and Spark drops it with a
-    // HintErrorLogger warn, silently falling back to a shuffle.
-    keys.join(broadcast(perKey), Seq(keyName), "left")
-      .select(col(keyName),
-        (coalesce($"_s", lit(0.0)) / lit(groups.size.toDouble)).as(outName))
+    // Level 1: per-(group, key) mean — one shuffle, partial-agg combined.
+    // Restricted to the declared domain by a literal IN (an InSet), not
+    // counted from the data: groups OUTSIDE the domain (e.g. a negative
+    // key modulo) must not leak into the sum — the domain is the
+    // contract, exactly as the reference's file listing is.
+    val perGroup = df.select(groupCol.as("_grp"), keyCol.as(keyName), valueCol.as("_v"))
+      .groupBy($"_grp", col(keyName)).agg(avg($"_v").as("_m"))
+      .where($"_grp".isin(groups: _*) && col(keyName).isin(keyDomain: _*))
+      .select(col(keyName), struct($"_grp", $"_m").as("_gm"))
+    // Zero-fill: one NULL entry per key, which collect_list skips — every
+    // key gets its row, and an absent (group, key) adds nothing.
+    val everyKey = keyDomain.toDF(keyName)
+      .select(col(keyName), lit(null).cast(perGroup.schema("_gm").dataType).as("_gm"))
+    // Level 2: per key, fold the means in ascending group order, then
+    // divide by N. The collected array holds at most #groups entries.
+    // The |keyDomain| result rows come as one partition in key order, so
+    // a caller's orderBy(key) plans no further exchange.
+    perGroup.unionByName(everyKey).groupBy(col(keyName))
+      .agg((aggregate(array_sort(collect_list($"_gm")), lit(0.0),
+        (acc, g) => acc + g.getField("_m")) / lit(groups.size.toDouble)).as(outName))
+      .coalesce(1).sortWithinPartitions(keyName)
   }
 
   /** The "corrected" global weighted mean: every input row counts once.

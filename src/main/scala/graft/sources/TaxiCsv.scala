@@ -52,35 +52,50 @@ object TaxiCsv {
 
 
   /** S2 — source enumeration (GetFileListAsync analog,
-    * Sample.cs:109-126): list the files a path/glob resolves to WITHOUT
-    * scanning their bytes — driver-side Hadoop FileSystem listing, the
-    * same metadata-only operation the reference's blob-prefix listing
-    * performs. Needed by faithful mode: files with zero accepted rows
-    * still contribute zero vectors.
+    * Sample.cs:109-126): the ONE listing every taxi entry point reads.
+    * Each of `paths` is a glob, a directory, a file or a URI; together
+    * they resolve to the sorted, distinct list of files they name, in
+    * `input_file_name()`'s scheme://authority/path form (e.g.
+    * "file:///x/y.csv"), so the scan's `file` column and the group
+    * domain built from this list are the same strings. Hadoop
+    * FileSystem metadata calls only — no bytes are scanned, as in the
+    * reference's blob-prefix listing. Faithful mode needs it: files with
+    * zero accepted rows still contribute zero vectors.
     *
-    * Returns URI strings in `input_file_name()`'s format
-    * (scheme://authority/path, e.g. "file:///x/y.csv") so the two can
-    * join directly — no per-row path normalization in the scan.
+    * A glob or a directory expands to its files, skipping metadata and
+    * hidden files (_SUCCESS, .crc, ...) as Spark's own file index does; a
+    * file or URI named explicitly is taken as named (qualified through
+    * its FileSystem's status — the only form a listing-less transport
+    * such as http(s) supports, see [[HttpReadFileSystem]]). A glob that
+    * matches nothing, or an input that names no file, fails here,
+    * naming it.
     */
-  def listFiles(spark: SparkSession, path: String): Seq[String] = {
+  private[graft] def resolve(spark: SparkSession, paths: Seq[String]): Seq[String] = {
     val hconf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(hconf)
-    val statuses =
-      if (path.exists("*?[{".contains(_))) fs.globStatus(p)
-      else {
-        val st = fs.getFileStatus(p)
-        if (st.isDirectory) fs.listStatus(p) else Array(st)
-      }
-    statuses.filter { st =>
-      // skip metadata/hidden files (_SUCCESS, .crc, ...) — same
-      // convention Spark's own file index applies to data sources
+    def visible(st: org.apache.hadoop.fs.FileStatus) = {
       val n = st.getPath.getName
       st.isFile && !n.startsWith("_") && !n.startsWith(".")
     }
-      .map(st => uriString(st.getPath.toUri))
-      .toSeq.sorted
+    val files = paths.flatMap { path =>
+      val p = new org.apache.hadoop.fs.Path(path)
+      val fs = p.getFileSystem(hconf)
+      val statuses =
+        if (path.exists("*?[{".contains(_)))
+          Option(fs.globStatus(p)).toSeq.flatten.filter(visible)
+        else {
+          val st = fs.getFileStatus(p)
+          if (st.isDirectory) fs.listStatus(p).toSeq.filter(visible) else Seq(st)
+        }
+      if (statuses.isEmpty)
+        throw new java.io.FileNotFoundException(s"no taxi CSV file matches $path")
+      statuses.map(st => uriString(st.getPath.toUri))
+    }
+    files.distinct.sorted
   }
+
+  /** The files one glob, directory or file names (see [[resolve]]). */
+  def listFiles(spark: SparkSession, path: String): Seq[String] =
+    resolve(spark, Seq(path))
 
   /** `u` in input_file_name()'s scheme://authority/path form. */
   private def uriString(u: java.net.URI): String =
@@ -91,38 +106,16 @@ object TaxiCsv {
     * `file` is the raw input_file_name() URI (an opaque per-file key —
     * kept transform-free in the hot scan).
     */
-  def acceptedLines(spark: SparkSession, path: String): DataFrame = {
-    // Expand a glob to explicit files via the S2 listing (driver-side
-    // metadata op) instead of handing the raw pattern to the reader:
-    // Spark's FileStreamSink.hasMetadata probe getFileStatus()es a
-    // SINGLE path verbatim — a glob string "does not exist" as a file,
-    // and the probe logs that FileNotFoundException with a full stack
-    // (the unattributable stderr trace in the r8 bench artifact). With
-    // an explicit multi-file list the probe is skipped entirely; an
-    // empty expansion falls through to the original path so the
-    // reader's PATH_NOT_FOUND contract is unchanged.
-    val paths =
-      if (path.exists("*?[{".contains(_))) {
-        val expanded = listFiles(spark, path)
-        if (expanded.nonEmpty) expanded else Seq(path)
-      } else Seq(path)
-    accepted(spark, paths)
-  }
+  def acceptedLines(spark: SparkSession, path: String): DataFrame =
+    accepted(spark, listFiles(spark, path))
 
-  /** acceptedLines over an EXPLICIT URI list — the reference's
-    * lister→mapper hand-off (`Sample.cs:70-75` passes the lister's URI
-    * array to the mappers verbatim), and the only enumeration form a
-    * listing-less transport supports (http(s): plain HTTP has no
-    * directory protocol — see [[HttpReadFileSystem]]). URIs are
-    * status-qualified first so the `file` column (input_file_name)
-    * joins against them directly. */
-  def acceptedLinesListed(spark: SparkSession,
-      paths: Seq[String]): DataFrame =
-    accepted(spark, normalizeUris(spark, paths))
-
-  /** The accept rule over the text lines of `paths`. */
-  private def accepted(spark: SparkSession, paths: Seq[String]): DataFrame =
-    spark.read.text(paths: _*)
+  /** The accept rule over the text lines of `files`, a [[resolve]]d
+    * listing. Handing the reader explicit files also skips Spark's
+    * FileStreamSink.hasMetadata probe, which getFileStatus()es a single
+    * path verbatim and logs a glob's FileNotFoundException with a full
+    * stack. */
+  private[graft] def accepted(spark: SparkSession, files: Seq[String]): DataFrame =
+    spark.read.text(files: _*)
       .select(input_file_name().as("file"), col("value"))
       .filter(fieldCount(col("value")) === columns.size &&
         field(col("value"), 0).try_cast("int").isNotNull)
@@ -133,17 +126,6 @@ object TaxiCsv {
   /** 0-based field `i` of `line` (NULL if absent). */
   private def field(line: Column, i: Int): Column =
     Shims.column(graft.functions.CsvField(Shims.expression(line), i))
-
-  /** Qualify each URI through its FileSystem's status (existence check
-    * + the scheme://authority/path normal form `listFiles` emits). */
-  private[graft] def normalizeUris(spark: SparkSession,
-      paths: Seq[String]): Seq[String] = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    paths.map { p =>
-      val hp = new org.apache.hadoop.fs.Path(p)
-      uriString(hp.getFileSystem(hconf).getFileStatus(hp).getPath.toUri)
-    }
-  }
 
   /** Strict fixed-layout timestamp parse (custom codegen'd expression —
     * `gettimestamp`'s DateTimeFormatter path was the dominant cost of
@@ -176,13 +158,10 @@ object TaxiCsv {
     * operate on these columns, never on re-derived parse chains.
     */
   def trips(spark: SparkSession, path: String): DataFrame =
-    tripsProjection(acceptedLines(spark, path))
+    trips(acceptedLines(spark, path))
 
-  /** trips over an explicit URI list (see acceptedLinesListed). */
-  def tripsListed(spark: SparkSession, paths: Seq[String]): DataFrame =
-    tripsProjection(acceptedLinesListed(spark, paths))
-
-  private def tripsProjection(accepted: DataFrame): DataFrame = {
+  /** The typed trips projection of accepted lines. */
+  private[graft] def trips(accepted: DataFrame): DataFrame = {
     val line = col("value")
     accepted.select(
       col("file"),

@@ -44,6 +44,19 @@ class PlanChecksSpec extends AnyFunSuite with BeforeAndAfterEach {
       graft.operators.TaxiSpeed.faithfulAvgByDowListed(spark, glob)) === 1)
   }
 
+  test("faithful flagship and taxi pipeline: no broadcast, no join in the executed plan") {
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val glob = graft.sources.TaxiDataGen.ensure(spark, sfDir)
+    for (q <- Seq(SparkEntry.queries("events_speed_faithful")(spark, sfDir),
+        graft.operators.TaxiSpeed.faithfulAvgByDowListed(spark, glob))) {
+      q.collect() // the final adaptive plan
+      val ns = PlanChecks.allNodes(q.queryExecution.executedPlan)
+      assert(!ns.exists(_.isInstanceOf[BroadcastExchangeLike]), PlanChecks.executedPlan(q))
+      assert(!ns.exists(_.isInstanceOf[BaseJoinExec]), PlanChecks.executedPlan(q))
+    }
+  }
+
   test("containment dedup never plans a nested-loop or cartesian join") {
     val d8 = graft.operators.Dedup.containmentPairs(spark, sfDir)
     assert(!PlanChecks.hasBroadcastNestedLoop(d8))

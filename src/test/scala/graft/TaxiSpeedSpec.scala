@@ -55,7 +55,7 @@ class TaxiSpeedSpec extends AnyFunSuite {
     val speeds = TaxiSpeed.withSpeed(TaxiCsv.trips(spark, dir))
     val files = speeds.select("file").distinct().as[String].collect().toSeq
     val got = TwoLevelMean.faithful(speeds, col("file"), col("day"),
-        col("speed_mph"), 0 to 6, TwoLevelMean.Groups(spark, files),
+        col("speed_mph"), 0 to 6, files,
         keyName = "day", outName = "avg_speed_mph")
       .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
     assert(got.keySet === (0 to 6).toSet)
@@ -88,5 +88,53 @@ class TaxiSpeedSpec extends AnyFunSuite {
     val w = TaxiSpeed.weightedAvgByDow(TaxiCsv.trips(spark, dir))
       .filter(col("day") === 1).head().getDouble(1)
     assert(math.abs(f - w) > 1.0) // 25/9 vs 25/3
+  }
+
+  // the 12-file corpus generated from the sf0.001 tables: per-file means
+  // are arbitrary doubles, so a summation order that moved would show in
+  // the last bits
+  private lazy val corpus = graft.sources.TaxiDataGen.ensure(spark, RegistryRun.sfDir)
+  private def faithfulBits(paths: String): Seq[(Int, Long)] =
+    TaxiSpeed.faithfulAvgByDowListed(spark, paths).collect().toSeq
+      .map(r => r.getInt(0) -> java.lang.Double.doubleToLongBits(r.getDouble(1))).sorted
+
+  test("faithful rows do not depend on the directory the corpus lives in") {
+    import java.nio.file.{Files, Paths}
+    val files = TaxiCsv.listFiles(spark, corpus).map(u => Paths.get(new java.net.URI(u)))
+    val base = Files.createDirectories(Paths.get("target", "test-tmp"))
+    val root = Files.createTempDirectory(base, "faithful-dirs")
+    val runs = Seq("a", "b", "corpus", "copy_2", "x/y/z", "taxi-2017").map { name =>
+      val dir = Files.createDirectories(root.resolve(name))
+      files.foreach(f => Files.copy(f, dir.resolve(f.getFileName)))
+      name -> faithfulBits(dir.toString)
+    }
+    val (_, first) = runs.head
+    runs.foreach { case (name, bits) => assert(bits === first, s"copy in $name") }
+    assert(first === faithfulBits(corpus))
+  }
+
+  test("faithful rows are bit-identical across shuffle partitions and AQE") {
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    val saved = keys.map(k => k -> spark.conf.get(k))
+    try {
+      val runs = for (parts <- Seq(1, 7, 32); aqe <- Seq(true, false)) yield {
+        spark.conf.set(keys(0), parts.toString)
+        spark.conf.set(keys(1), aqe.toString)
+        s"partitions=$parts aqe=$aqe" -> faithfulBits(corpus)
+      }
+      val (_, first) = runs.head
+      runs.foreach { case (conf, bits) => assert(bits === first, conf) }
+    } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
+  test("an input that names no file fails at build, naming it") {
+    val empty = java.nio.file.Files.createTempDirectory(
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get("target", "test-tmp")),
+      "taxi-empty").toString
+    for (path <- Seq(s"$dir/*.nomatch", empty)) {
+      val e = intercept[java.io.FileNotFoundException](
+        TaxiSpeed.faithfulAvgByDowListed(spark, path))
+      assert(e.getMessage.contains(path))
+    }
   }
 }

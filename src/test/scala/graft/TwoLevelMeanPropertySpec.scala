@@ -36,7 +36,7 @@ class TwoLevelMeanPropertySpec extends AnyFunSuite {
       val df = rows.toDF("grp", "day", "v")
       val groups = rows.map(_._1).distinct
       val got = TwoLevelMean.faithful(df, col("grp"), col("day"), col("v"),
-          0 to 6, TwoLevelMean.Groups(spark, groups), keyName = "day", outName = "m")
+          0 to 6, groups, keyName = "day", outName = "m")
         .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
 
       val expected: Map[Int, Double] = (0 to 6).map { d =>
@@ -67,7 +67,7 @@ class TwoLevelMeanPropertySpec extends AnyFunSuite {
         val df = rows.toDF("grp", "day", "v")
         val before = actions()
         val q = TwoLevelMean.faithful(df, col("grp"), col("day"), col("v"),
-          0 to 6, TwoLevelMean.Groups(spark, 0 to 4), keyName = "day", outName = "m")
+          0 to 6, 0 to 4, keyName = "day", outName = "m")
         assert(actions() === before, "building faithful must run no Dataset action")
         val got = q.collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
         (0 to 6).foreach { d =>
@@ -79,6 +79,31 @@ class TwoLevelMeanPropertySpec extends AnyFunSuite {
         }
       }
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("faithful's level 2 is a fold in ascending group order over Spark's per-group means, bit for bit") {
+    // 40 groups, a few rows each: the per-group means are arbitrary
+    // doubles, so any other summation order shows in the last bits
+    val wide = for {
+      grp <- Gen.chooseNum(0, 39)
+      day <- Gen.chooseNum(0, 6)
+      v <- Gen.chooseNum(-100.0, 100.0)
+    } yield (grp, day, v)
+    val domain = 0 to 41 // two groups never occur: they divide, add nothing
+    (0 until 5).foreach { i =>
+      val rows = Gen.listOfN(300, wide).apply(Gen.Parameters.default, Seed(7L + i)).get
+      val df = rows.toDF("grp", "day", "v")
+      val means = df.groupBy("grp", "day").agg(avg("v")).collect()
+        .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
+      val got = TwoLevelMean.faithful(df, col("grp"), col("day"), col("v"),
+          0 to 6, domain, keyName = "day", outName = "m")
+        .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+      (0 to 6).foreach { d =>
+        val want = domain.flatMap(g => means.get((g, d))).foldLeft(0.0)(_ + _) / domain.size
+        assert(java.lang.Double.doubleToLongBits(got(d)) ===
+          java.lang.Double.doubleToLongBits(want), s"seed ${7 + i} day $d: ${got(d)} vs $want")
+      }
+    }
   }
 
   test("weighted == plain global mean per key (random tables)") {
