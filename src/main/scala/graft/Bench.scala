@@ -37,7 +37,7 @@ object Bench {
     // GB-scale flagship FIRST, in a forked fresh JVM, BEFORE this
     // process builds its own 48g SparkSession: the one comparison
     // BASELINE.md publishes at like volume (reference: 481 s over
-    // ~3.2 GB taxi CSV). Fork rationale in FlagshipBench; ordering
+    // ~3.2 GB taxi CSV). Fork rationale in `Dev.flagship`; ordering
     // rationale: when the child ran AFTER the suite, the parent's
     // resident heap halved the machine's free memory and the child's
     // ramp measured 4× slower (336 s vs 78 s standalone) — a one-shot
@@ -268,12 +268,11 @@ object Bench {
       (query, bound, v)
     }
 
-  // Fork `mainClass args` into a fresh JVM (this JVM's flags and
+  // Fork `graft.Dev args` into a fresh JVM (this JVM's flags and
   // classpath) and return the payload of its one `marker`-prefixed
   // stdout line, None on any failure (stderr is inherited so child
   // traces stay attributable).
-  private def forkMain(mainClass: String, args: Seq[String],
-      marker: String): Option[String] =
+  private def forkDev(args: Seq[String], marker: String): Option[String] =
     try {
       val javaBin = new java.io.File(
         new java.io.File(System.getProperty("java.home"), "bin"), "java")
@@ -285,7 +284,7 @@ object Bench {
       cmd.addAll(jvmArgs)
       cmd.add("-cp")
       cmd.add(System.getProperty("java.class.path"))
-      cmd.add(mainClass)
+      cmd.add("graft.Dev")
       args.foreach(cmd.add)
       val pb = new ProcessBuilder(cmd)
       pb.redirectErrorStream(false)
@@ -295,11 +294,11 @@ object Bench {
       val rc = proc.waitFor()
       val line = out.linesIterator.find(_.startsWith(marker))
       if (line.isEmpty)
-        System.err.println(s"[bench] $mainClass ${args.mkString(" ")} " +
+        System.err.println(s"[bench] graft.Dev ${args.mkString(" ")} " +
           s"exited rc=$rc without a $marker line")
       line.map(_.stripPrefix(marker))
     } catch { case NonFatal(e) =>
-      System.err.println(s"[bench] fork of $mainClass failed:")
+      System.err.println(s"[bench] fork of graft.Dev ${args.mkString(" ")} failed:")
       e.printStackTrace()
       None
     }
@@ -309,7 +308,7 @@ object Bench {
   // SPARK_GRAFT_GB=0.
   private def runFlagshipForked(): String =
     if (sys.env.getOrElse("SPARK_GRAFT_GB", "1") == "0") ""
-    else forkMain("graft.FlagshipBench", Nil, "GBJSON:").getOrElse("")
+    else forkDev(Seq("flagship"), "GBJSON:").getOrElse("")
 
   // The heaviest r14 queries by in-suite time (the whole graph family)
   // plus the verdict-named m12/m13/d29/t35 — the set whose in-suite
@@ -327,7 +326,7 @@ object Bench {
     "g7_backbone_components", "d36_quality_keeper",
     "d8_containment_pairs", "q36_window_range")
 
-  // One fresh JVM per solo query ([[SoloBench]] protocol); returns the
+  // One fresh JVM per solo query (`graft.Dev time`); returns the
   // `"solo":{...},` fragment, "" when disabled or fully failed.
   private def runSoloForked(): String =
     if (sys.env.getOrElse("SPARK_GRAFT_SOLO", "1") == "0") ""
@@ -337,7 +336,7 @@ object Bench {
         .getOrElse(defaultSoloQueries)
         .filter(SparkEntry.queries.contains)
       val entries = names.flatMap { q =>
-        forkMain("graft.SoloBench", Seq(q), "SOLOJSON:")
+        forkDev(Seq("time", q), "SOLOJSON:")
           .map(j => "\"" + q + "\":" + j)
       }
       if (entries.isEmpty) ""

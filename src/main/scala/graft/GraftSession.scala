@@ -3,9 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one place a graft SparkSession is built. Every entry point —
-  * Bench, Verify, SoloBench, FlagshipBench, PlanDump and the test
-  * suite's shared session — runs under this configuration, so a plan
-  * or timing seen through one of them is the plan the others run.
+  * Bench, Verify, Dev and the test suite's shared session — runs under
+  * this configuration, so a plan or timing seen through one of them is
+  * the plan the others run.
   */
 object GraftSession {
 

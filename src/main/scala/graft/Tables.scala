@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Shims
 import org.apache.spark.sql.types.{LongType, TimestampNTZType}
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
@@ -12,8 +13,16 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType}
   * without touching operator code.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** One table. A single-file table's schema is read from its footer
+    * on the driver, so building a query over it schedules no job.
+    */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    Shims.parquetFileSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+  }
 
   /** Hash-spread a DataFrame across the configured shuffle parallelism
     * before CPU-heavy per-row work. The partition count is explicit on

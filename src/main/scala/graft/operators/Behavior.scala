@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.SparkEntry.{QueryDef, Sql}
 
 /** User-behavior analytics over the `events` feed — the product-facing
   * rung next to TimeSeries' monitoring rung: cohort retention (how many
@@ -193,4 +194,113 @@ object Behavior {
       .withColumn("is_inactive", col("silent_hours") >= gapHours)
       .orderBy(col("user_id"))
   }
+}
+
+/** The registered queries that call [[Behavior]]: name, builder and oracle.
+  * A separate object, so that building the registry loads these lists
+  * and not the operator object, which loads when a query runs.
+  */
+object BehaviorQueries {
+  import Behavior._
+
+  def queries: Seq[QueryDef] = Seq(
+    // Weekly cohort retention: DISTINCT (user, week) collapse first,
+    // then a window-min cohort assignment — no countDistinct expansion
+    QueryDef("q63_retention", retention(_, _),
+      // q63: same DISTINCT-first collapse and week arithmetic; both
+      // engines truncate weeks to Monday, so the day difference is an
+      // exact multiple of 7 (`//` in DuckDB, exact double div in Spark)
+      Sql("""WITH uw AS (SELECT DISTINCT user_id,
+        |    date_trunc('week', CAST(ts AS TIMESTAMP)) AS w
+        |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
+        |wc AS (SELECT user_id, w,
+        |    min(w) OVER (PARTITION BY user_id) AS cw
+        |  FROM uw)
+        |SELECT cw AS cohort_week,
+        |  CAST(date_diff('day', cw, w) // 7 AS INT) AS week_offset,
+        |  count(*) AS n_users
+        |FROM wc GROUP BY 1, 2 ORDER BY 1, 2""")),
+
+    // Ordered view→click→purchase funnel: three-level conditional-min
+    // chain, identical relational shape on both engines (tie-rule by
+    // shape, not by sort order)
+    QueryDef("q64_funnel", funnel(_, _),
+      // q64: the identical three-level conditional-min chain as the
+      // Spark side — step k is min(ts) at-or-after step k-1's pick, so
+      // equal-timestamp ties resolve the same way on both engines
+      Sql("""WITH ev AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts,
+        |    event_type
+        |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
+        |v AS (SELECT user_id, min(ts) AS v_ts FROM ev
+        |  WHERE event_type = 'view' GROUP BY 1),
+        |c AS (SELECT e.user_id, min(e.ts) AS c_ts
+        |  FROM ev e JOIN v USING (user_id)
+        |  WHERE e.event_type = 'click' AND e.ts >= v.v_ts GROUP BY 1),
+        |p AS (SELECT e.user_id, min(e.ts) AS p_ts
+        |  FROM ev e JOIN c USING (user_id)
+        |  WHERE e.event_type = 'purchase' AND e.ts >= c.c_ts GROUP BY 1)
+        |SELECT 1 AS step, 'view' AS event_type, count(*) AS n_users FROM v
+        |UNION ALL SELECT 2, 'click', count(*) FROM c
+        |UNION ALL SELECT 3, 'purchase', count(*) FROM p
+        |ORDER BY step""")),
+
+    // Conversion lag over q64's chain: integer-microsecond sums (exact
+    // regardless of merge order), one presentation divide
+    QueryDef("q65_conversion_lag", conversionLag(_, _),
+      // q65: q64's chain verbatim, then integer-microsecond lags (the
+      // sum is exact — no merge-order drift to guard against) and one
+      // presentation divide in the same literal order as the Spark side
+      Sql("""WITH ev AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts,
+        |    event_type
+        |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
+        |v AS (SELECT user_id, min(ts) AS v_ts FROM ev
+        |  WHERE event_type = 'view' GROUP BY 1),
+        |c AS (SELECT e.user_id, min(e.ts) AS c_ts
+        |  FROM ev e JOIN v USING (user_id)
+        |  WHERE e.event_type = 'click' AND e.ts >= v.v_ts GROUP BY 1),
+        |p AS (SELECT e.user_id, min(e.ts) AS p_ts
+        |  FROM ev e JOIN c USING (user_id)
+        |  WHERE e.event_type = 'purchase' AND e.ts >= c.c_ts GROUP BY 1),
+        |lag AS (SELECT date_diff('microseconds', v.v_ts, p.p_ts) AS lag_us
+        |  FROM v JOIN p USING (user_id))
+        |SELECT count(*) AS n_converted,
+        |  CAST(sum(lag_us) AS DOUBLE) / CAST(count(*) AS DOUBLE)
+        |    / 1000000.0 AS mean_lag_sec,
+        |  CAST(min(lag_us) AS DOUBLE) / 1000000.0 AS min_lag_sec,
+        |  CAST(max(lag_us) AS DOUBLE) / 1000000.0 AS max_lag_sec
+        |FROM lag""")),
+
+    // DAU / trailing-7d WAU / stickiness: sliding distinct restated as
+    // a bounded contribution explode of the collapsed (user, day) set
+    QueryDef("q66_stickiness", stickiness(_, _),
+      // q66: the same contribution-explode restatement — each distinct
+      // (user, day) row feeds target days d..d+6, so trailing WAU is a
+      // plain distinct count; stickiness divides the two exact integers
+      Sql("""WITH ud AS (SELECT DISTINCT user_id,
+        |    CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d
+        |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
+        |dau AS (SELECT d, count(*) AS dau FROM ud GROUP BY d),
+        |contrib AS (SELECT DISTINCT user_id, d + CAST(i AS INTEGER) AS td
+        |  FROM ud, range(0, 7) r(i)),
+        |wau AS (SELECT td, count(*) AS wau FROM contrib GROUP BY td)
+        |SELECT d AS day, dau, wau,
+        |  CAST(dau AS DOUBLE) / CAST(wau AS DOUBLE) AS stickiness
+        |FROM dau JOIN wau ON d = td ORDER BY day""")),
+
+    // Inactivity report (churn triage): batch mirror of the streaming
+    // timeout-timer alerts — integer epoch-hour silence arithmetic
+    QueryDef("w9_inactive_users", inactiveUsers(_, _),
+      // w9: silence measured in integer epoch-ms arithmetic; the verdict
+      // derives from the SAME integer on both engines.
+      Sql("""WITH e AS (SELECT user_id, ts FROM events
+        |  WHERE user_id IS NOT NULL AND ts IS NOT NULL),
+        |c AS (SELECT max(ts) AS cutoff FROM e),
+        |u AS (SELECT user_id, max(ts) AS last_seen FROM e GROUP BY 1)
+        |SELECT user_id, last_seen,
+        |  (epoch_ms(c.cutoff) - epoch_ms(u.last_seen)) // 3600000
+        |    AS silent_hours,
+        |  ((epoch_ms(c.cutoff) - epoch_ms(u.last_seen)) // 3600000) >= 24
+        |    AS is_inactive
+        |FROM u, c ORDER BY user_id""")),
+  )
 }

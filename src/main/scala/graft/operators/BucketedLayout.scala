@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.SparkEntry.{QueryDef, Sql}
 
 /** Bucketed table layout — the write-once-shuffle-never join strategy
   * for the 100 TB fact⋈fact case (SURVEY §2.3 "physical layout"
@@ -121,4 +122,27 @@ object BucketedLayout {
         sum(col("rev")).cast("double").as("revenue"))
       .orderBy(col("o_orderpriority"))
   }
+}
+
+/** The registered queries that call [[BucketedLayout]]: name, builder and oracle.
+  * A separate object, so that building the registry loads these lists
+  * and not the operator object, which loads when a query runs.
+  */
+object BucketedLayoutQueries {
+  import BucketedLayout._
+
+  def queries: Seq[QueryDef] = Seq(
+    // Bucketed-layout fact⋈fact join: scan-satisfied SMJ, zero
+    // Exchange/Sort below the join (the write-once-shuffle-never path)
+    QueryDef("q78_bucketed_join", revenueByPriority(_, _),
+      // q78: the oracle runs the logically identical join/agg over the
+      // PLAIN parquet views — bucketing changes the plan, not the answer.
+      // Revenue folds as DECIMAL(18,4) on both engines (q58 convention);
+      // only the exact total casts to double.
+      Sql("""SELECT o_orderpriority, count(*) AS n_lines,
+        |  CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
+        |    AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+        |FROM orders JOIN lineitem ON l_orderkey = o_orderkey
+        |GROUP BY 1 ORDER BY 1""")),
+  )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.SparkEntry.{QueryDef, Sql}
 
 /** Small-files compaction — the maintenance operator every long-lived
   * 100 TB table needs (the reference re-lists and re-reads whatever
@@ -88,4 +89,23 @@ object Compaction {
         md5(col("text")).as("payload_md5"))
       .orderBy(col("doc_id"))
   }
+}
+
+/** The registered queries that call [[Compaction]]: name, builder and oracle.
+  * A separate object, so that building the registry loads these lists
+  * and not the operator object, which loads when a query runs.
+  */
+object CompactionQueries {
+  import Compaction._
+
+  def queries: Seq[QueryDef] = Seq(
+    // Small-files compaction (64 fragments → right-sized range-
+    // clustered files); the oracle proves the rewrite is physical-only
+    QueryDef("d33_compact_shards", compactedContent(_, _),
+      // d33: content fingerprint of the ORIGINAL table — the compaction
+      // path (fragment 64-way, rewrite range-clustered) must be a
+      // physical-only rewrite, so its output rows equal the source's.
+      Sql("""SELECT doc_id, lang, source, n_chars, md5(text) AS payload_md5
+        |FROM documents ORDER BY doc_id""")),
+  )
 }

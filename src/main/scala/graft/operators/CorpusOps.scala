@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.TextFunctions._
+import graft.SparkEntry.{Approx, AtMost, Bound, QueryDef, Sql, SqlFn}
 
 /** Corpus-curation operators: the steps a training-data pipeline runs
   * between raw ingest and dedup/mix — benchmark decontamination and
@@ -747,5 +748,360 @@ object CorpusOps {
           .when(col("fp_old") =!= col("fp_new"), lit("changed"))
           .otherwise(lit("unchanged")).as("status"))
       .orderBy(col("doc_id"))
+  }
+}
+
+/** The registered queries that call [[CorpusOps]]: name, builder and oracle.
+  * A separate object, so that building the registry loads these lists
+  * and not the operator object, which loads when a query runs.
+  */
+object CorpusOpsQueries {
+  import CorpusOps._
+
+  def queries: Seq[QueryDef] = Seq(
+    // Stratified per-language hash sampling (training-mix rebalance)
+    QueryDef("q51_stratified_sample", stratifiedSample(_, _),
+      // Same md5-hash-predicate idiom as q24, applied to the salted
+      // stratified key with the per-language rate from CorpusOps.
+      Sql("""SELECT doc_id, lang, source FROM documents
+        |WHERE CAST('0x' || substr(md5('strat_' || doc_id), 1, 15) AS BIGINT) % 1000 <
+        |  CASE WHEN lang = 'en' THEN 200 ELSE 600 END
+        |ORDER BY doc_id""")),
+
+    // Mix rates as a broadcast config TABLE, not plan literals
+    QueryDef("q52_weighted_mix", weightedMix(_, _),
+      Sql("""WITH w(lang, keep_permille) AS (
+        |  VALUES ('en', 150), ('de', 800), ('zh', 400))
+        |SELECT d.doc_id, d.lang, d.source,
+        |  CAST(coalesce(w.keep_permille, 600) AS BIGINT) AS keep_permille
+        |FROM documents d LEFT JOIN w USING (lang)
+        |WHERE CAST('0x' || substr(md5('mix_' || d.doc_id), 1, 15) AS BIGINT) % 1000 <
+        |  coalesce(w.keep_permille, 600)
+        |ORDER BY d.doc_id""")),
+
+    // Benchmark decontamination: broadcast the held-out shingle set
+    QueryDef("d11_decontaminate", decontaminate(_, _),
+      // d11: the same word-3-gram shingle derivation as d2/d3, split on
+      // doc_id % 20 — bench side's distinct shingles probed by the corpus
+      // side (the Spark plan broadcasts the bench set; semantics are this
+      // plain join+group).
+      Sql("""WITH words AS (SELECT doc_id,
+        |  list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS w
+        |  FROM documents),
+        |sh AS (SELECT doc_id, list_distinct(
+        |    CASE WHEN len(w) >= 3
+        |      THEN [w[i] || ' ' || w[i+1] || ' ' || w[i+2] for i in range(1, len(w) - 1)]
+        |      ELSE [] END) AS t
+        |  FROM words),
+        |bench AS (SELECT DISTINCT g FROM (
+        |  SELECT unnest(t) AS g FROM sh WHERE doc_id % 20 = 0) u),
+        |corpus AS (SELECT doc_id, len(t) AS n_shingles, unnest(t) AS g
+        |  FROM sh WHERE doc_id % 20 <> 0)
+        |SELECT c.doc_id, CAST(c.n_shingles AS BIGINT) AS n_shingles,
+        |  count(*) AS n_shared,
+        |  CAST(count(*) AS DOUBLE) / c.n_shingles AS contamination
+        |FROM corpus c JOIN bench b USING (g)
+        |GROUP BY c.doc_id, c.n_shingles
+        |ORDER BY c.doc_id""")),
+
+    // End-to-end curation: dedup → quality gate → stratified sample,
+    // one declarative plan (single scan, two data shuffles)
+    QueryDef("d12_curate", curate(_, _),
+      // Composition of the d1 fingerprint, t8 score/median, and q51
+      // hash-sample idioms — each already hash-proven individually.
+      Sql("""WITH t AS (SELECT doc_id, lang, source, text,
+        |  list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS toks,
+        |  md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
+        |  FROM documents),
+        |scored AS (SELECT doc_id, lang, source, fp,
+        |  0.5 * (CAST(len(list_filter(toks, x -> x IN ('the','a','and','of','to','in','is'))) AS DOUBLE) / len(toks))
+        |   + 0.3 * (1.0 - CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS DOUBLE) / length(text))
+        |   + 0.2 * least(CAST(len(toks) AS DOUBLE) / 100.0, 1.0) AS quality_score
+        |  FROM t),
+        |dedup AS (SELECT doc_id, lang, source, quality_score FROM (
+        |  SELECT *, row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS rn
+        |  FROM scored) WHERE rn = 1),
+        |med AS (SELECT lang, quantile_cont(quality_score, 0.5) AS lang_median
+        |  FROM dedup GROUP BY lang)
+        |SELECT d.doc_id, d.lang, d.source, d.quality_score, m.lang_median
+        |FROM dedup d JOIN med m USING (lang)
+        |WHERE d.quality_score > m.lang_median
+        |  AND CAST('0x' || substr(md5('curate_' || d.doc_id), 1, 15) AS BIGINT) % 1000 <
+        |      CASE WHEN d.lang = 'en' THEN 500 ELSE 900 END
+        |ORDER BY d.doc_id""")),
+
+    // Bloom-filter decontamination (bounded broadcast). The sketch bytes
+    // are engine-specific (Spark's bloom_filter_agg), so no cross-engine
+    // result equality exists. Contract: flags are a SUPERSET of exact
+    // d11's (no false negatives) with bounded false-positive inflation —
+    // this corpus's distinct bench shingles sit far under the 1.6M-bit
+    // filter's 100k design capacity, so bloom-only flags stay a sliver.
+    QueryDef("d14_decontaminate_bloom", decontaminateBloom(_, _),
+      Approx(
+        Bound("d14_false_negatives", bloomFalseNegatives, AtMost(0)),
+        Bound("d14_extra_flag_frac", bloomExtraFlagFrac, AtMost(0.05)))),
+
+    // Quality-representative fuzzy dedup: keep the best-quality member
+    // of each d9 cluster (ties to smaller id), not the lowest id
+    QueryDef("d18_quality_dedup", qualityDedup(_, _),
+      // d18: d9's component closure + t3's quality formula, argmax per
+      // component as a rank-1 window (quality DESC with a -1e18 NULL
+      // sentinel in the ORDER — matching the Spark struct-min sort key —
+      // then doc_id ASC; the emitted kept_quality is the UN-coalesced
+      // score, so unscoreable winners stay NULL on both engines).
+      SqlFn(() => s"""WITH RECURSIVE
+        |${DedupQueries.jaccardComponents},
+        |lab AS (SELECT d.doc_id,
+        |    CAST(coalesce(least(c.doc_id, c.mn), d.doc_id) AS BIGINT)
+        |      AS component
+        |  FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id),
+        |q AS (SELECT doc_id,
+        |    0.5 * (CAST(len(list_filter(toks, x -> x IN ('the','a','and','of','to','in','is'))) AS DOUBLE) / len(toks))
+        |     + 0.3 * (1.0 - CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS DOUBLE) / length(text))
+        |     + 0.2 * least(CAST(len(toks) AS DOUBLE) / 100.0, 1.0) AS quality_score
+        |  FROM (SELECT doc_id, text,
+        |      list_filter(string_split_regex(lower(text), '\\s+'),
+        |        x -> x <> '') AS toks
+        |    FROM documents)),
+        |r AS (SELECT component, l.doc_id, quality_score,
+        |    row_number() OVER (PARTITION BY component
+        |      ORDER BY coalesce(quality_score, -1e18) DESC, l.doc_id) AS rn,
+        |    count(*) OVER (PARTITION BY component) AS cluster_size
+        |  FROM lab l JOIN q ON l.doc_id = q.doc_id)
+        |SELECT component, doc_id AS kept_doc_id,
+        |  quality_score AS kept_quality, cluster_size
+        |FROM r WHERE rn = 1 ORDER BY component""".stripMargin)),
+
+    // Leakage-safe split assignment: near-dup clusters, not docs, are
+    // the split unit — fuzzy copies can never straddle train/test
+    QueryDef("d19_split_assign", leakageSafeSplit(_, _),
+      // d19: d9's component closure + the engine's md5-derived 60-bit
+      // hash convention on the salted component id — the same per-mille
+      // predicate the q51/q52 oracles mirror.
+      SqlFn(() => s"""WITH RECURSIVE
+        |${DedupQueries.jaccardComponents},
+        |lab AS (SELECT d.doc_id,
+        |    CAST(coalesce(least(c.doc_id, c.mn), d.doc_id) AS BIGINT)
+        |      AS component
+        |  FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id),
+        |h AS (SELECT doc_id, component,
+        |    CAST('0x' || substr(md5('split_' || component), 1, 15) AS BIGINT)
+        |      % 1000 AS hv
+        |  FROM lab)
+        |SELECT doc_id, component,
+        |  CASE WHEN hv < 100 THEN 'test'
+        |       WHEN hv < 200 THEN 'val'
+        |       ELSE 'train' END AS split
+        |FROM h ORDER BY doc_id""".stripMargin)),
+
+    // Per-source doc cap (C4-style anti-domination), WindowGroupLimit
+    QueryDef("d20_domain_cap", domainCap(_, _),
+      Sql("""SELECT doc_id, source, rk FROM (
+        |  SELECT doc_id, source, CAST(ROW_NUMBER() OVER (
+        |      PARTITION BY source
+        |      ORDER BY CAST('0x' || substr(md5('cap_' || doc_id), 1, 15)
+        |        AS BIGINT), doc_id) AS INT) AS rk
+        |  FROM documents)
+        |WHERE rk <= 10 ORDER BY doc_id""")),
+
+    // Duplicate-aware down-weighting: 1/cluster_size training weights
+    QueryDef("d21_soft_dedup", softDedupWeights(_, _),
+      SqlFn(() => s"""WITH RECURSIVE
+        |${DedupQueries.jaccardComponents},
+        |lab AS (SELECT d.doc_id,
+        |    CAST(coalesce(least(c.doc_id, c.mn), d.doc_id) AS BIGINT)
+        |      AS component
+        |  FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id)
+        |SELECT doc_id, component,
+        |  count(*) OVER (PARTITION BY component) AS cluster_size,
+        |  CAST(1.0 AS DOUBLE) / count(*) OVER (PARTITION BY component)
+        |    AS weight
+        |FROM lab ORDER BY doc_id""".stripMargin)),
+
+    // The full curation sequence as ONE plan: dedup -> quality gate ->
+    // decontaminate -> domain cap -> split (the corpus manifest)
+    QueryDef("d22_curation_pipeline", curationPipeline(_, _),
+      // d22: the stage CTEs are the verbatim oracles of the pieces —
+      // d1's keep-first window, t8's score + per-lang median, d11's
+      // shingle/bench join, d20's cap window, d19's split rule on doc_id.
+      Sql("""WITH base AS (SELECT doc_id, lang, source, text,
+        |    list_filter(string_split_regex(lower(text), '\s+'),
+        |      x -> x <> '') AS toks,
+        |    md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
+        |  FROM documents),
+        |scored AS (SELECT doc_id, lang, source, toks, fp,
+        |    0.5 * (CAST(len(list_filter(toks,
+        |        x -> x IN ('the','a','and','of','to','in','is'))) AS DOUBLE)
+        |      / len(toks))
+        |     + 0.3 * (1.0 - CAST(len(regexp_extract_all(text, '[.,;:!?]'))
+        |        AS DOUBLE) / length(text))
+        |     + 0.2 * least(CAST(len(toks) AS DOUBLE) / 100.0, 1.0)
+        |      AS quality_score
+        |  FROM base),
+        |dedup AS (SELECT * FROM (SELECT s.*, ROW_NUMBER() OVER (
+        |    PARTITION BY fp ORDER BY doc_id) AS rn FROM scored s)
+        |  WHERE rn = 1),
+        |med AS (SELECT lang, quantile_cont(quality_score, 0.5)
+        |    AS lang_median FROM dedup GROUP BY lang),
+        |quality AS (SELECT d.* FROM dedup d JOIN med m USING (lang)
+        |  WHERE d.quality_score > m.lang_median),
+        |benchsh AS (SELECT DISTINCT g FROM (
+        |  SELECT unnest(list_distinct(CASE WHEN len(w) >= 3
+        |      THEN [w[i] || ' ' || w[i+1] || ' ' || w[i+2]
+        |        for i in range(1, len(w) - 1)] ELSE [] END)) AS g
+        |  FROM (SELECT list_filter(string_split_regex(lower(text), '\s+'),
+        |      x -> x <> '') AS w
+        |    FROM documents WHERE doc_id % 20 = 0)) u),
+        |contaminated AS (SELECT c.doc_id FROM (
+        |  SELECT doc_id, len(t) AS n_shingles, unnest(t) AS g FROM (
+        |    SELECT doc_id, list_distinct(CASE WHEN len(toks) >= 3
+        |        THEN [toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
+        |          for i in range(1, len(toks) - 1)] ELSE [] END) AS t
+        |    FROM quality WHERE doc_id % 20 <> 0)) c
+        |  JOIN benchsh b USING (g)
+        |  GROUP BY c.doc_id, c.n_shingles
+        |  HAVING CAST(count(*) AS DOUBLE) / c.n_shingles > 0.2),
+        |clean AS (SELECT q.* FROM quality q
+        |  WHERE q.doc_id % 20 <> 0
+        |    AND q.doc_id NOT IN (SELECT doc_id FROM contaminated)),
+        |capped AS (SELECT * FROM (SELECT c.*, ROW_NUMBER() OVER (
+        |    PARTITION BY source ORDER BY
+        |      CAST('0x' || substr(md5('cap_' || doc_id), 1, 15) AS BIGINT),
+        |      doc_id) AS rk FROM clean c)
+        |  WHERE rk <= 20)
+        |SELECT doc_id, lang, source, quality_score,
+        |  CASE WHEN hv < 100 THEN 'test'
+        |       WHEN hv < 200 THEN 'val'
+        |       ELSE 'train' END AS split
+        |FROM (SELECT *, CAST('0x' || substr(md5('split_' || doc_id), 1, 15)
+        |    AS BIGINT) % 1000 AS hv FROM capped)
+        |ORDER BY doc_id""")),
+
+    // Snapshot diff: added/removed/changed/unchanged audit between two
+    // corpus versions via one co-partitioned full-outer fp join
+    QueryDef("d31_snapshot_diff", snapshotDiff(_, _),
+      // d31: both snapshots and the revision are the same deterministic
+      // construction; fingerprints share the md5(normalized) convention
+      // with a 'null' sentinel for null texts on BOTH engines.
+      Sql("""WITH old AS (SELECT doc_id,
+        |    coalesce(md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))),
+        |      'null') AS fp_old
+        |  FROM documents WHERE doc_id % 4 <> 3),
+        |neu AS (SELECT doc_id,
+        |    coalesce(md5(trim(regexp_replace(lower(
+        |      CASE WHEN doc_id % 5 = 0 THEN text || ' rev2' ELSE text END),
+        |      '\s+', ' ', 'g'))), 'null') AS fp_new
+        |  FROM documents WHERE doc_id % 9 <> 8)
+        |SELECT coalesce(old.doc_id, neu.doc_id) AS doc_id,
+        |  CASE WHEN fp_old IS NULL THEN 'added'
+        |    WHEN fp_new IS NULL THEN 'removed'
+        |    WHEN fp_old <> fp_new THEN 'changed'
+        |    ELSE 'unchanged' END AS status
+        |FROM old FULL OUTER JOIN neu ON old.doc_id = neu.doc_id
+        |ORDER BY doc_id""")),
+
+    // Output shard manifest: deterministic hash sharding + per-shard
+    // doc/byte totals (the write-side planning step)
+    QueryDef("d24_shard_manifest", shardManifest(_, _),
+      // d24: the d19 hash rule ('0x' + 15 md5 hex chars → 60-bit
+      // nonnegative BIGINT, so plain % equals pmod) on the salted doc
+      // key, then per-shard totals
+      Sql("""WITH h AS (SELECT
+        |    CAST(CAST('0x' || substr(md5('shard_' || doc_id), 1, 15)
+        |      AS BIGINT) % 64 AS INT) AS shard_id,
+        |    n_chars
+        |  FROM documents)
+        |SELECT shard_id, count(*) AS n_docs,
+        |  CAST(sum(n_chars) AS BIGINT) AS total_chars
+        |FROM h GROUP BY shard_id ORDER BY shard_id""")),
+
+    // Deterministic per-epoch training order: salted-hash permutation,
+    // per-shard rank — reproducible without any global sort
+    QueryDef("d27_epoch_shuffle", epochShuffle(_, _),
+      // d27: the hash key is the shared md5 convention, the rank is a
+      // total order (key, doc_id) — positions identical on both engines.
+      Sql("""WITH h AS (SELECT doc_id,
+        |    CAST('0x' || substr(md5('epoch1_' || doc_id), 1, 15)
+        |      AS BIGINT) AS k
+        |  FROM documents),
+        |s AS (SELECT doc_id, k,
+        |    CAST(k % 64 AS INT) AS shard_id FROM h)
+        |SELECT doc_id, shard_id,
+        |  CAST(row_number() OVER (PARTITION BY shard_id
+        |    ORDER BY k, doc_id) AS INT) AS pos
+        |FROM s ORDER BY shard_id, pos""")),
+
+    // Eval-side contamination report: per benchmark doc, the fraction
+    // of its shingles found in the training corpus (zero rows kept)
+    QueryDef("d25_contamination_report", contaminationReport(_, _),
+      // d25: same shingle convention as d11, reversed direction — report
+      // rows for EVERY eval doc, zero-overlap included.
+      Sql("""WITH words AS (SELECT doc_id,
+        |  list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS w
+        |  FROM documents),
+        |sh AS (SELECT doc_id, list_distinct(
+        |    CASE WHEN len(w) >= 3
+        |      THEN [w[i] || ' ' || w[i+1] || ' ' || w[i+2] for i in range(1, len(w) - 1)]
+        |      ELSE [] END) AS t
+        |  FROM words),
+        |train AS (SELECT DISTINCT g FROM (
+        |  SELECT unnest(t) AS g FROM sh WHERE doc_id % 20 <> 0) u),
+        |ex AS (SELECT doc_id, unnest(t) AS g FROM sh WHERE doc_id % 20 = 0),
+        |hits AS (SELECT doc_id, count(*) AS n_hit
+        |  FROM ex JOIN train USING (g) GROUP BY doc_id)
+        |SELECT e.doc_id, CAST(len(e.t) AS BIGINT) AS n_shingles,
+        |  CAST(coalesce(h.n_hit, 0) AS BIGINT) AS n_hit,
+        |  CASE WHEN len(e.t) = 0 THEN 0.0
+        |    ELSE CAST(coalesce(h.n_hit, 0) AS DOUBLE) / len(e.t)
+        |  END AS contamination
+        |FROM sh e LEFT JOIN hits h USING (doc_id)
+        |WHERE e.doc_id % 20 = 0
+        |ORDER BY e.doc_id""")),
+
+    // Temperature-sampled domain mixture (p_d ∝ √n_d): integer-exact
+    // per-doc repeat factors, hash-gated fractional epochs
+    QueryDef("d26_temperature_mix", temperatureMix(_, _),
+      // d26: floor(sqrt) is the exact integer square root for bigint
+      // counts (IEEE sqrt correctly rounded, n < 2^52); // and % on
+      // non-negatives truncate identically to Spark's div/%; the extra-
+      // epoch gate rides the corpus-standard salted md5 hash.
+      Sql("""WITH c AS (SELECT lang, count(*) AS n_lang FROM documents
+        |  GROUP BY lang),
+        |w AS (SELECT lang, n_lang,
+        |    CAST(floor(sqrt(n_lang)) AS BIGINT) AS w_lang FROM c),
+        |t AS (SELECT CAST(sum(w_lang) AS BIGINT) AS tw,
+        |    CAST(sum(n_lang) AS BIGINT) AS tn FROM w),
+        |s AS (SELECT lang, n_lang, w_lang,
+        |    (tn * w_lang) // tw AS target_docs FROM w, t)
+        |SELECT d.doc_id, d.lang, s.n_lang, s.w_lang, s.target_docs,
+        |  s.target_docs // s.n_lang AS base_epochs,
+        |  s.target_docs // s.n_lang + CASE WHEN
+        |      CAST('0x' || substr(md5('tmix_' || d.doc_id), 1, 15) AS BIGINT)
+        |        % s.n_lang < s.target_docs % s.n_lang
+        |    THEN 1 ELSE 0 END AS repeats
+        |FROM documents d JOIN s USING (lang)
+        |ORDER BY doc_id""")),
+  )
+
+  /** Exact d11 flags (doc_id, n_shared) and d14's (doc_id, n_shared_bloom). */
+  private def decontaminationFlags(s: SparkSession, dir: String): (DataFrame, DataFrame) =
+    (decontaminate(s, dir).select(col("doc_id"), col("n_shared")),
+      decontaminateBloom(s, dir).select(col("doc_id"), col("n_shared_bloom")))
+
+  /** d14 false negatives: exactly-flagged docs the bloom form misses or
+    * flags with a smaller shared count (a bloom count can only inflate).
+    */
+  private def bloomFalseNegatives(s: SparkSession, dir: String): Double = {
+    val (exact, bloom) = decontaminationFlags(s, dir)
+    exact.as("e").join(bloom.as("b"), Seq("doc_id"), "left")
+      .filter(col("b.n_shared_bloom").isNull ||
+        col("b.n_shared_bloom") < col("e.n_shared")).count().toDouble
+  }
+
+  /** d14 bloom-only flags per corpus document. */
+  private def bloomExtraFlagFrac(s: SparkSession, dir: String): Double = {
+    val (exact, bloom) = decontaminationFlags(s, dir)
+    bloom.join(exact, Seq("doc_id"), "left_anti").count().toDouble /
+      Tables.documents(s, dir).count()
   }
 }

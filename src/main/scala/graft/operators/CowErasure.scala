@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.SparkEntry.{QueryDef, Sql}
 
 /** q91 — RIGHT-TO-BE-FORGOTTEN erasure by partition-targeted
   * COPY-ON-WRITE: delete a list of doc_ids from a persisted,
@@ -303,4 +304,57 @@ object CowErasure {
         col("n_chars"), col("v1_files_present"))
       .orderBy(col("source"))
   }
+}
+
+/** The registered queries that call [[CowErasure]]: name, builder and oracle.
+  * A separate object, so that building the registry loads these lists
+  * and not the operator object, which loads when a query runs.
+  */
+object CowErasureQueries {
+  import CowErasure._
+
+  def queries: Seq[QueryDef] = Seq(
+    // Right-to-be-forgotten erasure by partition-targeted copy-on-
+    // write: only hit partitions rewrite; manifest maps each partition
+    // to its owning version; read resolves the mixed-ownership head
+    QueryDef("q91_erase_cow", erasedSummary(_, _),
+      // q91: post-erasure summary recomputed with the deletion predicate
+      // anti-applied; owner_version falls out as "partition had any
+      // hit". The engine side must conserve rows through base publish +
+      // copy-on-write rewrite + mixed-ownership manifest read for the
+      // hashes to agree. All-integer: bit-exact. (Envelope: a partition
+      // with EVERY row erased would drop from the engine's summary while
+      // the oracle keeps a zero row — impossible under the registered
+      // mod-50 list at 25+ docs/partition, and documented at the
+      // operator.)
+      Sql("""SELECT source,
+        |  CAST(CASE WHEN max(CASE WHEN doc_id % 50 = 7 THEN 1 ELSE 0 END)
+        |    = 1 THEN 2 ELSE 1 END AS INT) AS owner_version,
+        |  CAST(sum(CASE WHEN doc_id % 50 = 7 THEN 0 ELSE 1 END) AS BIGINT)
+        |    AS n_docs,
+        |  CAST(sum(CASE WHEN doc_id % 50 = 7 THEN 0 ELSE n_chars END)
+        |    AS BIGINT) AS n_chars
+        |FROM documents GROUP BY source ORDER BY source""")),
+
+    // VACUUM/retention: expire pre-head manifests, physically remove
+    // unreferenced partition files — the erasure's bytes are GONE;
+    // the v1_files_present witness column is probed from the FS
+    QueryDef("q94_vacuum_retention", vacuumedSummary(_, _),
+      // q94: q91's post-erasure summary, plus the physical-deletion
+      // witness — after vacuum, v1 partition files exist iff the
+      // partition had no deletion hit (owner stayed 1). The engine
+      // probes the FILESYSTEM for the witness; the oracle derives it
+      // from the predicate — a missed (or over-eager) vacuum deletion
+      // hash-mismatches.
+      Sql("""SELECT source,
+        |  CAST(CASE WHEN max(CASE WHEN doc_id % 50 = 7 THEN 1 ELSE 0 END)
+        |    = 1 THEN 2 ELSE 1 END AS INT) AS owner_version,
+        |  CAST(sum(CASE WHEN doc_id % 50 = 7 THEN 0 ELSE 1 END) AS BIGINT)
+        |    AS n_docs,
+        |  CAST(sum(CASE WHEN doc_id % 50 = 7 THEN 0 ELSE n_chars END)
+        |    AS BIGINT) AS n_chars,
+        |  max(CASE WHEN doc_id % 50 = 7 THEN 1 ELSE 0 END) = 0
+        |    AS v1_files_present
+        |FROM documents GROUP BY source ORDER BY source""")),
+  )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.SparkEntry.{QueryDef, Sql}
 
 /** q93 — declarative DATA-QUALITY constraint validation: evaluate a
   * fixed suite of table constraints (not-null, key uniqueness,
@@ -90,4 +91,56 @@ object DataQuality {
       .withColumn("pass", col("n_violations") === 0L)
       .orderBy(col("constraint_name"))
   }
+}
+
+/** The registered queries that call [[DataQuality]]: name, builder and oracle.
+  * A separate object, so that building the registry loads these lists
+  * and not the operator object, which loads when a query runs.
+  */
+object DataQualityQueries {
+  import DataQuality._
+
+  def queries: Seq[QueryDef] = Seq(
+    // Declarative constraint suite: per-table checks folded into one
+    // conditional aggregate per scan; RI as a broadcast anti probe
+    QueryDef("q93_quality_constraints", constraintReport(_, _),
+      // q93: each check restated as plain SQL over the raw tables; the
+      // verdict is count = 0. NULL status rows count as non-violations
+      // in both engines (CASE WHEN NULL → ELSE). All-integer: bit-exact.
+      Sql("""WITH o AS (SELECT
+        |    CAST(sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END)
+        |      AS BIGINT) AS null_custkey,
+        |    CAST(sum(CASE WHEN o_orderstatus NOT IN ('O','F','P')
+        |      THEN 1 ELSE 0 END) AS BIGINT) AS bad_status,
+        |    count(*) - count(DISTINCT o_orderkey) AS dup_orderkey
+        |  FROM orders),
+        |l AS (SELECT
+        |    CAST(sum(CASE WHEN l_quantity < 1 OR l_quantity > 50
+        |      THEN 1 ELSE 0 END) AS BIGINT) AS bad_quantity,
+        |    CAST(sum(CASE WHEN l_discount < 0 OR l_discount > 0.1
+        |      THEN 1 ELSE 0 END) AS BIGINT) AS bad_discount
+        |  FROM lineitem),
+        |ri AS (SELECT count(*) AS orphan_custkey FROM orders o
+        |  LEFT JOIN customer c ON o.o_custkey = c.c_custkey
+        |  WHERE c.c_custkey IS NULL),
+        |tc AS (SELECT CAST(sum(CASE WHEN l.l_shipdate < o.o_orderdate
+        |    THEN 1 ELSE 0 END) AS BIGINT) AS ship_before_order
+        |  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey),
+        |rows_ AS (
+        |  SELECT 'orders.o_custkey not_null' AS constraint_name,
+        |    null_custkey AS n_violations FROM o
+        |  UNION ALL SELECT 'orders.o_orderstatus accepted_values',
+        |    bad_status FROM o
+        |  UNION ALL SELECT 'orders.o_orderkey unique', dup_orderkey FROM o
+        |  UNION ALL SELECT 'lineitem.l_quantity range_1_50',
+        |    bad_quantity FROM l
+        |  UNION ALL SELECT 'lineitem.l_discount range_0_0.1',
+        |    bad_discount FROM l
+        |  UNION ALL SELECT 'orders.o_custkey references customer',
+        |    orphan_custkey FROM ri
+        |  UNION ALL SELECT 'lineitem.l_shipdate >= orders.o_orderdate',
+        |    ship_before_order FROM tc)
+        |SELECT constraint_name, n_violations, n_violations = 0 AS pass
+        |FROM rows_ ORDER BY constraint_name""")),
+  )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.SparkEntry.{QueryDef, Sql}
 
 /** File-statistics DATA SKIPPING on the versioned store — the
   * metadata-pruned read path that makes a 100 TB table answer
@@ -666,4 +667,85 @@ object DataSkipping {
         .as("total_price"), col("o_orderdate"))
       .orderBy(col("o_orderkey"))
   }
+}
+
+/** The registered queries that call [[DataSkipping]]: name, builder and oracle.
+  * A separate object, so that building the registry loads these lists
+  * and not the operator object, which loads when a query runs.
+  */
+object DataSkippingQueries {
+  import DataSkipping._
+
+  def queries: Seq[QueryDef] = Seq(
+    // Per-file min/max statistics + metadata-pruned range read on the
+    // range-clustered store (Delta data-skipping / Iceberg manifest
+    // pruning): the scan opens only files whose stats intersect the
+    // predicate — O(files) planning, never O(rows)
+    QueryDef("q98_stats_skipping", skippingRead(_, _),
+      // q98: skipping must be invisible in the data — the pruned-path
+      // read equals the plain filtered recompute exactly; the file-
+      // count witness (scanned < total, skipped ranges disjoint from
+      // the predicate) is spec-pinned, not SQL-observable.
+      Sql("""SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_orders,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+        |    AS total_price,
+        |  max(CAST(o_orderdate AS DATE)) AS last_orderdate
+        |FROM orders WHERE o_custkey BETWEEN 100 AND 220
+        |GROUP BY o_custkey ORDER BY o_custkey""")),
+
+    // Z-ORDER clustering (Morton over normalized range-ranks) + the
+    // same stats tier: predicates on EITHER dimension prune, which
+    // linear clustering can't do (spec-witnessed)
+    QueryDef("q99_zorder_skipping", zorderRead(_, _),
+      // q99: same contract on the Z-ordered store's date dimension —
+      // the curve layout must not change a single row.
+      Sql("""SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_orders,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+        |    AS total_price,
+        |  max(CAST(o_orderdate AS DATE)) AS last_orderdate
+        |FROM orders
+        |WHERE CAST(o_orderdate AS DATE) BETWEEN DATE '1995-01-01'
+        |  AND DATE '1995-03-31'
+        |GROUP BY o_custkey ORDER BY o_custkey""")),
+
+    // Per-file bloom bitsets over the UNclustered key: point lookups
+    // prune files where min/max is useless; no false negatives by
+    // construction
+    QueryDef("q101_bloom_lookup", bloomLookup(_, _),
+      // q101: bloom pruning has NO false negatives by construction, so
+      // the point-lookup equals the IN-list recompute row-for-row;
+      // false-positive file opens are invisible here (the residual
+      // filter drops their rows) and only measurable in the spec's
+      // file-count witness.
+      Sql("""SELECT o_orderkey, o_custkey,
+        |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE)
+        |    AS total_price,
+        |  CAST(o_orderdate AS DATE) AS o_orderdate
+        |FROM orders
+        |WHERE o_orderkey IN (1, 7, 32, 321, 888, 1203, 1497)
+        |ORDER BY o_orderkey""")),
+
+    // Metadata-only COUNT: wholly-covered files answer from manifest
+    // row counts, only boundary files are opened (count-from-manifests)
+    QueryDef("q106_metadata_count", metadataCount(_, _),
+      // q106: the number must be identical whether it came from
+      // manifest metadata or a scan — the shortcut is unobservable in
+      // SQL; which files were opened is the spec's witness.
+      Sql("""SELECT CAST(count(*) AS BIGINT) AS n_orders
+        |FROM orders WHERE o_custkey BETWEEN 64 AND 640""")),
+
+    // JOIN-driven runtime file pruning: the filtered dim's key range
+    // prunes fact files through the stats manifest before the scan
+    // (dynamic pruning on unpartitioned files)
+    QueryDef("q107_join_pruned", joinPrunedRead(_, _),
+      // q107: runtime pruning must be invisible — the join equals the
+      // plain recompute; which fact files were opened is the spec's
+      // witness, not SQL-observable.
+      Sql("""SELECT c.c_custkey, c.c_name, o.o_orderkey,
+        |  CAST(CAST(o.o_totalprice AS DECIMAL(18,2)) AS DOUBLE)
+        |    AS total_price
+        |FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+        |WHERE c.c_nationkey = 7 AND c.c_acctbal > 5000.0
+        |ORDER BY c.c_custkey, o.o_orderkey""")),
+  )
 }

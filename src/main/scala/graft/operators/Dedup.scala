@@ -8,6 +8,7 @@ import org.apache.spark.sql.graft.Shims
 import graft.Tables
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions
+import graft.SparkEntry.{QueryDef, Sql, SqlFn}
 
 /** Deduplication suite over `documents` / `embeddings` — the core
   * training-data-pipeline extension (north star; absent in the
@@ -1682,4 +1683,433 @@ object Dedup {
       w: Int = 8, m: Int = 64): DataFrame =
     chunkNoveltyAgainst(
       streamDocs.select(col("doc_id"), col("text")), store, w, m)
+}
+
+/** The registered queries that call [[Dedup]]: name, builder and oracle.
+  * A separate object, so that building the registry loads these lists
+  * and not the operator object, which loads when a query runs.
+  */
+object DedupQueries {
+  import Dedup._
+
+  def queries: Seq[QueryDef] = Seq(
+    // Content-defined chunking dedup: rolling-hash boundaries,
+    // cross-corpus repeated-chunk groups (the rsync/LBFS shape)
+    QueryDef("d34_cdc_chunks", cdcChunkDedup(_, _),
+      // d34: the identical rolling-hash boundary rule (init-free
+      // list_reduce == Spark's 0-seeded fold, first step < P), char-
+      // array slicing for reassembly (never substring), md5 group keys.
+      Sql("""WITH d AS (SELECT doc_id, string_split(text, '') AS chars,
+        |    CAST(length(text) AS INT) AS n
+        |  FROM documents WHERE length(text) > 0),
+        |cd AS (SELECT doc_id, chars, n,
+        |    [CAST(ascii(x) AS BIGINT) for x in chars] AS codes FROM d),
+        |b AS (SELECT doc_id, chars, n,
+        |    CASE WHEN n >= 8 THEN
+        |      [i for i in range(8, n + 1) if
+        |        list_reduce(codes[i-7:i],
+        |          (a, c) -> (a * 1000003 + c) % 2147483647) % 64 = 0]
+        |    ELSE CAST([] AS BIGINT[]) END AS bnd
+        |  FROM cd),
+        |sp AS (SELECT doc_id, chars,
+        |    list_prepend(CAST(0 AS BIGINT), bnd) AS ss,
+        |    list_append(bnd, CAST(n AS BIGINT)) AS ee
+        |  FROM b),
+        |ch AS (SELECT doc_id,
+        |    unnest([array_to_string(chars[CAST(ss[k] + 1 AS INT):
+        |        CAST(ee[k] AS INT)], '')
+        |      for k in range(1, len(ss) + 1) if ee[k] > ss[k]]) AS chunk
+        |  FROM sp)
+        |SELECT md5(chunk) AS chunk_md5, count(*) AS n_copies,
+        |  CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
+        |  CAST(min(length(chunk)) AS BIGINT) AS chunk_len,
+        |  min(doc_id) AS keep_doc
+        |FROM ch GROUP BY 1 HAVING count(*) >= 2
+        |ORDER BY n_copies DESC, chunk_md5""")),
+
+    // Token-sort-invariant dedup: word-reordered docs collapse at
+    // d1's one-shuffle cost (the pre-shingle gate)
+    QueryDef("d38_token_sort_dedup", tokenSortDedup(_, _),
+      // d38: identical string algebra — regex tokenize, lexicographic
+      // list sort, md5 of the space-joined sorted tokens (the d34 md5
+      // group-key convention).
+      Sql("""WITH t AS (SELECT doc_id, text,
+        |    md5(array_to_string(list_sort(list_filter(
+        |      string_split_regex(lower(text), '\s+'), x -> x <> '')), ' '))
+        |      AS sig
+        |  FROM documents)
+        |SELECT sig, min(doc_id) AS keeper_id, count(*) AS n_docs,
+        |  count(DISTINCT text) AS n_distinct_texts
+        |FROM t GROUP BY sig ORDER BY sig""")),
+
+    QueryDef("d1_exact_dedup", exactDedup(_, _),
+      Sql("""SELECT min(doc_id) AS keep_doc_id, fp, count(*) AS n_copies FROM (
+        |  SELECT doc_id, md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
+        |  FROM documents)
+        |GROUP BY fp ORDER BY keep_doc_id""")),
+
+    QueryDef("d2_jaccard_pairs", jaccardPairs(_, _),
+      SqlFn(() => jaccardPairsOracle)),
+
+    // LSH prunes candidates; exact verify makes output == d2's oracle
+    QueryDef("d3_minhash_pairs", minhashLshPairs(_, _),
+      // The MinHash-LSH operator verifies candidates with exact Jaccard;
+      // with 64 bands x 2 rows the miss probability at the J>=0.9 data
+      // pairs is ~1e-46, so its output equals the exact-pairs oracle.
+      SqlFn(() => jaccardPairsOracle)),
+
+    QueryDef("d7_chargram_pairs", charGramPairs(_, _),
+      Sql("""WITH s AS (SELECT doc_id,
+        |    trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t
+        |  FROM documents),
+        |sh AS (SELECT doc_id, list_distinct(
+        |    CASE WHEN length(t) >= 5
+        |      THEN [substr(t, i, 5) for i in range(1, length(t) - 3)]
+        |      ELSE [] END) AS g
+        |  FROM s),
+        |sz AS (SELECT doc_id, g, len(g) AS n FROM sh WHERE len(g) > 0)
+        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+        |  len(list_intersect(a.g, b.g)) * 1.0 / (a.n + b.n - len(list_intersect(a.g, b.g))) AS jaccard
+        |FROM sz a JOIN sz b ON a.doc_id < b.doc_id
+        |WHERE len(list_intersect(a.g, b.g)) * 1.0 / (a.n + b.n - len(list_intersect(a.g, b.g))) >= 0.7
+        |ORDER BY doc_a, doc_b""")),
+
+    QueryDef("d4_simhash", simhashSignatures(_, _),
+      SqlFn(() => s"""WITH bits AS (
+        |  SELECT doc_id, i,
+        |    sum(CASE WHEN (hv >> i) & 1 = 1 THEN 1 ELSE -1 END) AS s
+        |  FROM ($simhashTokenHashes)
+        |  CROSS JOIN (SELECT unnest(range(60)) AS i)
+        |  GROUP BY doc_id, i)
+        |SELECT doc_id,
+        |  CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << i) ELSE 0 END) AS BIGINT) AS simhash
+        |FROM bits GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+
+    QueryDef("d5_simhash_pairs", simhashPairs(_, _),
+      SqlFn(() => s"""WITH bits AS (
+        |  SELECT doc_id, i,
+        |    sum(CASE WHEN (hv >> i) & 1 = 1 THEN 1 ELSE -1 END) AS s
+        |  FROM ($simhashTokenHashes)
+        |  CROSS JOIN (SELECT unnest(range(60)) AS i)
+        |  GROUP BY doc_id, i),
+        |sig AS (
+        |  SELECT doc_id,
+        |    CAST(sum(CASE WHEN s > 0 THEN (1::BIGINT << i) ELSE 0 END) AS BIGINT) AS simhash
+        |  FROM bits GROUP BY doc_id)
+        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+        |  CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
+        |FROM sig a JOIN sig b ON a.doc_id < b.doc_id
+        |WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
+        |ORDER BY doc_a, doc_b""".stripMargin)),
+
+    QueryDef("d6_embedding_dedup", embeddingNearDupPairs(_, _),
+      SqlFn(() => s"""$embPairsOracle
+        |ORDER BY vec_a, vec_b""".stripMargin)),
+
+    // Overlap-coefficient (sub-document) dedup, lossless prefix blocking
+    QueryDef("d8_containment_pairs", containmentPairs(_, _),
+      SqlFn(() => s"""$shingleSets
+        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+        |  len(list_intersect(a.t, b.t)) * 1.0 / least(a.n, b.n) AS containment
+        |FROM sz a JOIN sz b ON a.doc_id < b.doc_id
+        |WHERE len(list_intersect(a.t, b.t)) * 1.0 / least(a.n, b.n) >= 0.8
+        |ORDER BY doc_a, doc_b""".stripMargin)),
+
+    // Edit-distance pairs: Ed-Join constant-length prefix filter +
+    // banded short-doc block + threshold-bandwidth levenshtein verify
+    QueryDef("d29_edit_distance_pairs", editDistancePairs(_, _),
+      // d29: exact integer edit distance — the engines' levenshtein DPs
+      // agree exactly; the oracle brute-forces with the lossless length
+      // filter standing in for the Spark side's prefix blocking
+      Sql("""WITH s AS (SELECT doc_id,
+        |    trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t
+        |  FROM documents)
+        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+        |  CAST(levenshtein(a.t, b.t) AS INT) AS edit_dist
+        |FROM s a JOIN s b ON a.doc_id < b.doc_id
+        |  AND abs(length(a.t) - length(b.t)) <= 10
+        |WHERE levenshtein(a.t, b.t) <= 10
+        |ORDER BY doc_a, doc_b""")),
+
+    // Pair graph → canonical keeper per cluster (iterative min-label CC)
+    QueryDef("d9_dedup_clusters", dedupClusters(_, _),
+      // Transitive closure over the (small) pair graph via a recursive
+      // CTE, then min reachable id per doc — every doc not in a pair is
+      // its own component. Mirrors the Spark min-label fixpoint exactly.
+      SqlFn(() => s"""WITH RECURSIVE
+        |$jaccardComponents
+        |SELECT d.doc_id,
+        |  CAST(coalesce(least(c.doc_id, c.mn), d.doc_id) AS BIGINT) AS component
+        |FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id
+        |ORDER BY d.doc_id""".stripMargin)),
+
+    // Quality-keeper consolidation: each near-dup cluster keeps its
+    // highest-t3-quality member, not the min id
+    QueryDef("d36_quality_keeper", qualityKeeperDedup(_, _),
+      // d36: d9's closure + t3's quality expression + the keeper window
+      // (score desc, doc_id) — exact-dup cluster members carry equal
+      // scores and resolve on id identically on both engines.
+      SqlFn(() => s"""WITH RECURSIVE
+        |$jaccardComponents,
+        |lab AS (SELECT d.doc_id,
+        |    CAST(coalesce(least(c.doc_id, c.mn), d.doc_id) AS BIGINT)
+        |      AS component
+        |  FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id),
+        |tq AS (SELECT doc_id, text,
+        |    list_filter(string_split_regex(lower(text), '\\s+'),
+        |      x -> x <> '') AS toks
+        |  FROM documents),
+        |q AS (SELECT doc_id,
+        |  0.5 * (CAST(len(list_filter(toks,
+        |      x -> x IN ('the','a','and','of','to','in','is'))) AS DOUBLE)
+        |    / len(toks))
+        |   + 0.3 * (1.0 - CAST(len(regexp_extract_all(text, '[.,;:!?]'))
+        |      AS DOUBLE) / length(text))
+        |   + 0.2 * least(CAST(len(toks) AS DOUBLE) / 100.0, 1.0)
+        |    AS quality_score
+        |  FROM tq),
+        |r AS (SELECT l.doc_id, l.component, q.quality_score,
+        |    row_number() OVER (PARTITION BY l.component
+        |      ORDER BY q.quality_score DESC, l.doc_id) AS rn,
+        |    count(*) OVER (PARTITION BY l.component) AS cs
+        |  FROM lab l JOIN q USING (doc_id))
+        |SELECT doc_id, component, CAST(cs AS BIGINT) AS cluster_size,
+        |  quality_score, rn = 1 AS keep
+        |FROM r ORDER BY doc_id""".stripMargin)),
+
+    // URL-canonicalization dedup: tracking-param scrub, host lowering,
+    // param sort — the cheapest (pre-content) web-corpus dedup tier
+    QueryDef("d37_url_canonical", urlCanonicalDedup(_, _),
+      // d37: same synthetic URL derivation, same normalization algebra —
+      // anchored regexp splits, substr prefix tests (no LIKE
+      // metacharacters), lexicographic param sort. Pure string ops:
+      // bit-exact.
+      Sql("""WITH u AS (SELECT doc_id,
+        |    'https://' ||
+        |    CASE WHEN doc_id % 3 = 0 THEN upper(source) ELSE source END ||
+        |    '.example.com/articles/' || CAST(doc_id % 100 AS VARCHAR) ||
+        |    CASE WHEN doc_id % 2 = 0 THEN '/' ELSE '' END ||
+        |    CASE WHEN doc_id % 5 = 0 THEN '?utm_source=feed&b=2&a=1'
+        |         WHEN doc_id % 5 = 1 THEN '?a=1&ref=home&b=2'
+        |         WHEN doc_id % 5 = 2 THEN '?b=2&a=1' ELSE '' END ||
+        |    CASE WHEN doc_id % 7 = 0 THEN '#section-2' ELSE '' END
+        |      AS raw_url
+        |  FROM documents),
+        |nf AS (SELECT doc_id, raw_url,
+        |    regexp_replace(raw_url, '#.*$', '') AS nofrag FROM u),
+        |parts AS (SELECT doc_id, raw_url,
+        |    lower(regexp_extract(nofrag, '^(https?://[^/?]*)', 1)) AS sh,
+        |    regexp_replace(regexp_extract(nofrag,
+        |      '^https?://[^/?]*([^?]*)', 1), '/+$', '') AS path,
+        |    regexp_extract(nofrag, '\?(.*)$', 1) AS query
+        |  FROM nf),
+        |canon AS (SELECT doc_id, raw_url,
+        |    sh || path || CASE WHEN len(kept) = 0 THEN ''
+        |      ELSE '?' || array_to_string(kept, '&') END AS canonical_url
+        |  FROM (SELECT *, list_sort(list_filter(string_split(query, '&'),
+        |      p -> p <> '' AND substr(p, 1, 4) <> 'utm_'
+        |        AND substr(p, 1, 4) <> 'ref=')) AS kept
+        |    FROM parts))
+        |SELECT canonical_url, min(doc_id) AS keeper_id,
+        |  count(*) AS n_dups,
+        |  CAST(sum(CASE WHEN raw_url <> canonical_url THEN 1 ELSE 0 END)
+        |    AS BIGINT) AS n_noisy
+        |FROM canon GROUP BY 1 ORDER BY 1""")),
+
+    // The deduplicated corpus: one representative per cluster + size
+    QueryDef("d10_dedup_corpus", dedupCorpus(_, _),
+      // Same component relation as d9, aggregated to the kept corpus:
+      // the representative IS the component label (min id), so grouping
+      // the d9 closure by component yields (kept doc, cluster size).
+      SqlFn(() => s"""WITH RECURSIVE
+        |$jaccardComponents,
+        |lab AS (SELECT d.doc_id,
+        |    CAST(coalesce(least(c.doc_id, c.mn), d.doc_id) AS BIGINT)
+        |      AS component
+        |  FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id)
+        |SELECT component AS doc_id, count(*) AS cluster_size
+        |FROM lab GROUP BY component ORDER BY doc_id""".stripMargin)),
+
+    // d9's CC fixpoint over the d6 embedding pair graph (semantic dups)
+    QueryDef("d13_embedding_clusters", embeddingClusters(_, _),
+      // d9's recursive-CTE closure over the d6 pair graph instead of the
+      // jaccard one — the Spark side shares one CC fixpoint the same way.
+      SqlFn(() => s"""WITH RECURSIVE
+        |p AS (SELECT vec_a, vec_b FROM ($embPairsOracle)),
+        |edges(src, dst) AS (
+        |  SELECT vec_a, vec_b FROM p UNION SELECT vec_b, vec_a FROM p),
+        |reach(src, dst) AS (
+        |  SELECT src, dst FROM edges
+        |  UNION
+        |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
+        |comp AS (SELECT src AS vid, min(dst) AS mn FROM reach GROUP BY src)
+        |SELECT v.vec_id,
+        |  CAST(coalesce(least(c.vid, c.mn), v.vec_id) AS BIGINT) AS component
+        |FROM embeddings v LEFT JOIN comp c ON v.vec_id = c.vid
+        |ORDER BY v.vec_id""".stripMargin)),
+
+    // Per-doc duplicated word-8-gram span fraction (exact-substring
+    // dedup detection, Lee et al. 2022)
+    QueryDef("d15_ngram_spans", ngramSpanStats(_, _),
+      // d15: both engines split on a single space and build word-8-grams
+      // positionally (DuckDB 1-based inclusive slice == Spark slice(ws,i,8)),
+      // so the gram groups are string-identical; dup_frac is explicit
+      // double division on both sides.
+      Sql("""WITH w AS (SELECT doc_id, string_split(text, ' ') AS words
+        |           FROM documents),
+        |g AS (SELECT doc_id,
+        |    array_to_string(words[CAST(i AS INT):CAST(i+7 AS INT)], ' ') AS gram
+        |  FROM w, UNNEST(generate_series(1, len(words)-7)) AS t(i)
+        |  WHERE len(words) >= 8),
+        |df AS (SELECT gram FROM g GROUP BY gram
+        |       HAVING count(DISTINCT doc_id) > 1),
+        |pd AS (SELECT g.doc_id, count(*) AS n_grams,
+        |    sum(CASE WHEN df.gram IS NOT NULL THEN 1 ELSE 0 END) AS dup_grams
+        |  FROM g LEFT JOIN df USING (gram) GROUP BY 1)
+        |SELECT d.doc_id,
+        |  CAST(coalesce(pd.n_grams, 0) AS BIGINT) AS n_grams,
+        |  CAST(coalesce(pd.dup_grams, 0) AS BIGINT) AS dup_grams,
+        |  CASE WHEN coalesce(pd.n_grams, 0) = 0 THEN 0.0
+        |       ELSE CAST(pd.dup_grams AS DOUBLE) / CAST(pd.n_grams AS DOUBLE)
+        |  END AS dup_frac
+        |FROM documents d LEFT JOIN pd USING (doc_id)
+        |ORDER BY doc_id""")),
+
+    // Exact-substring span REMOVAL (keep-first): merged duplicate
+    // intervals cut from the text — the consumer of d15's detection
+    QueryDef("d16_ngram_span_removal", ngramSpanRemoval(_, _),
+      // d16: same gram formation as d15; keep-first via row_number over
+      // (doc_id, pos) per gram; gaps-and-islands interval merge; the cut
+      // is NOT EXISTS containment; text rebuilt as kept words joined —
+      // both engines rebuild from the same split, so spacing normalizes
+      // identically.
+      Sql("""WITH w AS (SELECT doc_id, string_split(text, ' ') AS words
+        |           FROM documents),
+        |g AS (SELECT doc_id, CAST(i AS INT) AS pos,
+        |    array_to_string(words[CAST(i AS INT):CAST(i+7 AS INT)], ' ') AS gram
+        |  FROM w, UNNEST(generate_series(1, len(words)-7)) AS t(i)
+        |  WHERE len(words) >= 8),
+        |m AS (SELECT doc_id, pos AS s, pos + 7 AS e FROM
+        |    (SELECT doc_id, pos, row_number() OVER (
+        |       PARTITION BY gram ORDER BY doc_id, pos) AS rn FROM g)
+        |  WHERE rn > 1),
+        |i AS (SELECT doc_id, s, e, max(e) OVER (PARTITION BY doc_id
+        |    ORDER BY s, e ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+        |    AS pme FROM m),
+        |i2 AS (SELECT doc_id, s, e, sum(CASE WHEN pme IS NULL OR s > pme + 1
+        |    THEN 1 ELSE 0 END) OVER (PARTITION BY doc_id ORDER BY s, e
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
+        |  FROM i),
+        |mi AS (SELECT doc_id, island, min(s) AS s, max(e) AS e
+        |  FROM i2 GROUP BY 1, 2),
+        |wp AS (SELECT doc_id, CAST(i AS INT) AS idx, words[CAST(i AS INT)] AS word
+        |  FROM w, UNNEST(generate_series(1, len(words))) AS t(i)),
+        |kept AS (SELECT wp.* FROM wp WHERE NOT EXISTS
+        |  (SELECT 1 FROM mi WHERE mi.doc_id = wp.doc_id
+        |     AND wp.idx BETWEEN mi.s AND mi.e)),
+        |rb AS (SELECT doc_id, string_agg(word, ' ' ORDER BY idx) AS text_clean
+        |  FROM kept GROUP BY 1),
+        |st AS (SELECT doc_id, count(*) AS n_spans, sum(e - s + 1) AS cut_words
+        |  FROM mi GROUP BY 1)
+        |SELECT d.doc_id,
+        |  CAST(coalesce(st.n_spans, 0) AS BIGINT) AS n_spans,
+        |  CAST(coalesce(st.cut_words, 0) AS BIGINT) AS cut_words,
+        |  coalesce(rb.text_clean, '') AS text_clean
+        |FROM documents d LEFT JOIN st USING (doc_id) LEFT JOIN rb USING (doc_id)
+        |ORDER BY doc_id""")),
+
+    // Incremental ingest: dedup the incoming batch against itself,
+    // then anti-join the existing corpus's fingerprints
+    QueryDef("d23_cross_dedup", crossDedup(_, _), crossDedupOracle),
+
+    // Winnowing (MOSS) local-overlap fingerprint pairs: window-min
+    // k-gram hashes + inverted-index join, boilerplate df-cap
+    QueryDef("d32_winnow_pairs", winnowPairs(_, _),
+      // d32: the identical winnowing comprehension over the identical
+      // md5-convention gram hashes; slice h[i : i+w-1] (inclusive) is
+      // Spark's slice(h, i, w); df-cap and minShared mirrored.
+      Sql("""WITH wds AS (SELECT doc_id,
+        |    list_filter(string_split_regex(lower(text), '\s+'),
+        |      x -> x <> '') AS w
+        |  FROM documents),
+        |h AS (SELECT doc_id,
+        |    [CAST(CAST('0x' || substr(md5(w[i] || ' ' || w[i+1] || ' '
+        |        || w[i+2]), 1, 15) AS BIGINT) AS BIGINT)
+        |      for i in range(1, len(w) - 1)] AS h
+        |  FROM wds WHERE len(w) >= 6),
+        |fp AS (SELECT doc_id, unnest(list_distinct(
+        |    [list_min(h[i:i+3]) for i in range(1, len(h) - 2)])) AS fp
+        |  FROM h),
+        |rare AS (SELECT fp FROM fp GROUP BY fp HAVING count(*) <= 50),
+        |kept AS (SELECT f.doc_id, f.fp FROM fp f JOIN rare USING (fp))
+        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+        |  count(*) AS n_shared
+        |FROM kept a JOIN kept b ON a.fp = b.fp AND a.doc_id < b.doc_id
+        |GROUP BY 1, 2 HAVING count(*) >= 3
+        |ORDER BY doc_a, doc_b""")),
+  )
+
+  /** Word-3-gram shingle sets per doc (shared by d2/d3 oracles). */
+  private[operators] val shingleSets: String =
+    """WITH words AS (SELECT doc_id,
+      |  list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS w
+      |  FROM documents),
+      |sh AS (SELECT doc_id, list_distinct(
+      |    CASE WHEN len(w) >= 3
+      |      THEN [w[i] || ' ' || w[i+1] || ' ' || w[i+2] for i in range(1, len(w) - 1)]
+      |      ELSE [] END) AS t
+      |  FROM words),
+      |sz AS (SELECT doc_id, t, len(t) AS n FROM sh WHERE len(t) > 0)""".stripMargin
+
+  private[operators] val jaccardPairsOracle: String =
+    s"""$shingleSets
+      |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+      |  len(list_intersect(a.t, b.t)) * 1.0 / (a.n + b.n - len(list_intersect(a.t, b.t))) AS jaccard
+      |FROM sz a JOIN sz b ON a.doc_id < b.doc_id
+      |WHERE len(list_intersect(a.t, b.t)) * 1.0 / (a.n + b.n - len(list_intersect(a.t, b.t))) >= 0.5
+      |ORDER BY doc_a, doc_b""".stripMargin
+
+  /** The near-dup pair graph's components, as CTEs for a `WITH
+    * RECURSIVE` (shared by the d9/d10/d18/d19/d21/d36 oracles):
+    * `comp(doc_id, mn)` is each paired doc's least reachable id.
+    */
+  private[operators] val jaccardComponents: String =
+    s"""p AS (SELECT doc_a, doc_b FROM ($jaccardPairsOracle)),
+      |edges(src, dst) AS (
+      |  SELECT doc_a, doc_b FROM p UNION SELECT doc_b, doc_a FROM p),
+      |reach(src, dst) AS (
+      |  SELECT src, dst FROM edges
+      |  UNION
+      |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
+      |comp AS (SELECT src AS doc_id, min(dst) AS mn FROM reach GROUP BY src)""".stripMargin
+
+  /** d23's oracle, also d28's: the persisted index changes the path,
+    * not the answer.
+    */
+  private[operators] val crossDedupOracle: Sql =
+    Sql("""WITH f AS (SELECT doc_id,
+        |    md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
+        |  FROM documents),
+        |inc AS (SELECT doc_id, fp FROM (
+        |  SELECT f.*, ROW_NUMBER() OVER (PARTITION BY fp
+        |      ORDER BY doc_id) AS rn
+        |  FROM f WHERE doc_id % 3 = 0) WHERE rn = 1),
+        |ex AS (SELECT DISTINCT fp FROM f WHERE doc_id % 3 <> 0)
+        |SELECT doc_id, fp FROM inc
+        |WHERE NOT EXISTS (SELECT 1 FROM ex WHERE ex.fp = inc.fp)
+        |ORDER BY doc_id""")
+
+  /** Cosine-threshold embedding pairs (shared by d6 and d13 oracles). */
+  private val embPairsOracle: String =
+    """SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
+      |  list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) AS cos
+      |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
+      |WHERE list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) >= 0.4""".stripMargin
+
+  /** Distinct-token md5-derived 60-bit hashes (shared by d4/d5 oracles). */
+  private val simhashTokenHashes: String =
+    """SELECT doc_id, CAST('0x' || substr(md5(t), 1, 15) AS BIGINT) AS hv FROM (
+      |    SELECT doc_id, unnest(list_distinct(
+      |      list_filter(string_split_regex(lower(text), '\s+'), x -> x <> ''))) AS t
+      |    FROM documents)""".stripMargin
 }

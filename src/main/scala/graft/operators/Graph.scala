@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.SparkEntry.{QueryDef, Sql, SqlFn}
 
 /** Graph analytics over relations the warehouse already holds — the
   * rung a data platform climbs after joins and windows: centrality
@@ -952,5 +953,317 @@ object Graph {
         sum(when(pmod(col("v"), lit(2)) === 1, 1L).otherwise(0L))
           .as("n_suppliers"))
       .orderBy(col("dist"))
+  }
+}
+
+/** The registered queries that call [[Graph]]: name, builder and oracle.
+  * A separate object, so that building the registry loads these lists
+  * and not the operator object, which loads when a query runs.
+  */
+object GraphQueries {
+  import Graph._
+
+  def queries: Seq[QueryDef] = Seq(
+    // PageRank on the customer–supplier trade graph, 3 unrolled
+    // iterations in fixed-point bigint (bit-identical across engines)
+    QueryDef("g1_pagerank", pageRank(_, _),
+      // g1: the fixed-point design makes three PageRank iterations pure
+      // bigint arithmetic — `div`/`//` truncate identically on the
+      // non-negative ranks, bigint sums are exact, so the unrolled CTEs
+      // below are bit-identical to the Spark loop.
+      Sql("""WITH e0 AS (SELECT DISTINCT 'c' || o_custkey AS src,
+        |    's' || l_suppkey AS dst
+        |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
+        |e AS (SELECT src, dst FROM e0
+        |      UNION ALL SELECT dst, src FROM e0),
+        |deg AS (SELECT src, count(*) AS deg FROM e GROUP BY src),
+        |ed AS (SELECT e.src, e.dst, deg.deg FROM e JOIN deg USING (src)),
+        |p AS (SELECT count(DISTINCT src) AS n FROM e),
+        |r0 AS (SELECT src AS v, 1000000000000 // (SELECT n FROM p) AS rank
+        |  FROM (SELECT DISTINCT src FROM e)),
+        |r1 AS (SELECT ed.dst AS v,
+        |    (15 * 1000000000000) // (100 * (SELECT n FROM p))
+        |      + (85 * sum(r0.rank // ed.deg)) // 100 AS rank
+        |  FROM ed JOIN r0 ON r0.v = ed.src GROUP BY ed.dst),
+        |r2 AS (SELECT ed.dst AS v,
+        |    (15 * 1000000000000) // (100 * (SELECT n FROM p))
+        |      + (85 * sum(r1.rank // ed.deg)) // 100 AS rank
+        |  FROM ed JOIN r1 ON r1.v = ed.src GROUP BY ed.dst),
+        |r3 AS (SELECT ed.dst AS v,
+        |    (15 * 1000000000000) // (100 * (SELECT n FROM p))
+        |      + (85 * sum(r2.rank // ed.deg)) // 100 AS rank
+        |  FROM ed JOIN r2 ON r2.v = ed.src GROUP BY ed.dst)
+        |SELECT v AS vertex, CAST(rank AS BIGINT) AS rank_fp,
+        |  CAST(rank AS DOUBLE) / 1e12 AS rank
+        |FROM r3 ORDER BY rank_fp DESC, vertex LIMIT 20""")),
+
+    // Exact triangle count of the part co-purchase graph (oriented
+    // two-join enumeration)
+    QueryDef("g2_triangles", triangleCount(_, _),
+      // g2: edges oriented small→large make each triangle enumerable
+      // exactly once; counts are integers, bit-identical across engines.
+      Sql("""WITH l AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
+        |  FROM lineitem),
+        |e AS (SELECT DISTINCT a.pk AS pa, b.pk AS pb
+        |  FROM l a JOIN l b ON a.ok = b.ok AND a.pk < b.pk),
+        |t AS (SELECT count(*) AS n_triangles
+        |  FROM e xy JOIN e yz ON xy.pb = yz.pa
+        |  WHERE EXISTS (SELECT 1 FROM e xz
+        |    WHERE xz.pa = xy.pa AND xz.pb = yz.pb)),
+        |nv AS (SELECT count(DISTINCT v) AS n_vertices FROM (
+        |  SELECT pa AS v FROM e UNION ALL SELECT pb FROM e)),
+        |ne AS (SELECT count(*) AS n_edges FROM e)
+        |SELECT nv.n_vertices, ne.n_edges, t.n_triangles
+        |FROM t, nv, ne""")),
+
+    // Local clustering coefficient per part (top-20), g2 refined to the
+    // per-vertex statistic — exact integer counts, one final division
+    QueryDef("g3_clustering", clusteringCoeff(_, _),
+      // g3: triangles enumerated once at a ≺ b ≺ c credit all three
+      // corners; counts are bigint and the single closing division of two
+      // exact integers IEEE-rounds identically on both engines.
+      Sql("""WITH l AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
+        |  FROM lineitem),
+        |e AS (SELECT DISTINCT a.pk AS pa, b.pk AS pb
+        |  FROM l a JOIN l b ON a.ok = b.ok AND a.pk < b.pk),
+        |tri AS (SELECT xy.pa AS a, xy.pb AS b, yz.pb AS c
+        |  FROM e xy JOIN e yz ON xy.pb = yz.pa
+        |  JOIN e xz ON xz.pa = xy.pa AND xz.pb = yz.pb),
+        |tv AS (SELECT v, count(*) AS n_tri FROM (
+        |    SELECT a AS v FROM tri
+        |    UNION ALL SELECT b FROM tri
+        |    UNION ALL SELECT c FROM tri) GROUP BY v),
+        |deg AS (SELECT v, count(*) AS d FROM (
+        |    SELECT pa AS v FROM e UNION ALL SELECT pb FROM e) GROUP BY v)
+        |SELECT deg.v AS partkey, CAST(deg.d AS BIGINT) AS degree,
+        |  CAST(coalesce(tv.n_tri, 0) AS BIGINT) AS n_tri,
+        |  2.0 * coalesce(tv.n_tri, 0) / (deg.d * (deg.d - 1)) AS clustering
+        |FROM deg LEFT JOIN tv ON tv.v = deg.v
+        |WHERE deg.d >= 2
+        |ORDER BY clustering DESC, n_tri DESC, partkey LIMIT 20""")),
+
+    // Degree assortativity (Newman 2002) in exact decimal moments; the
+    // symmetric marginals collapse the closing ratio to one division
+    QueryDef("g4_assortativity", assortativity(_, _),
+      // g4: moments summed exactly (DuckDB sum(BIGINT) → HUGEINT mirrors
+      // Spark's DECIMAL(38,0)); identical marginals by symmetrization, so
+      // the Pearson ratio is one division of two exact wide integers.
+      Sql("""WITH l AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
+        |  FROM lineitem),
+        |e AS (SELECT DISTINCT a.pk AS pa, b.pk AS pb
+        |  FROM l a JOIN l b ON a.ok = b.ok AND a.pk < b.pk),
+        |deg AS (SELECT v, count(*) AS d FROM (
+        |    SELECT pa AS v FROM e UNION ALL SELECT pb FROM e) GROUP BY v),
+        |sym AS (SELECT pa, pb FROM e UNION ALL SELECT pb AS pa, pa AS pb FROM e),
+        |dd AS (SELECT dx.d AS x, dy.d AS y FROM sym
+        |  JOIN deg dx ON sym.pa = dx.v JOIN deg dy ON sym.pb = dy.v),
+        |m AS (SELECT count(*) AS m2, sum(x) AS sx, sum(x * y) AS sxy,
+        |    sum(x * x) AS sxx FROM dd)
+        |SELECT (SELECT count(*) FROM deg) AS n_vertices,
+        |  (SELECT count(*) FROM e) AS n_edges,
+        |  CAST(2 * (SELECT count(*) FROM e) AS DOUBLE)
+        |    / CAST((SELECT count(*) FROM deg) AS DOUBLE) AS avg_degree,
+        |  CAST(m2 * sxy - sx * sx AS DOUBLE)
+        |    / CAST(m2 * sxx - sx * sx AS DOUBLE) AS assortativity
+        |FROM m""")),
+
+    // Full core decomposition via h-index iteration (Lü 2016): fixed
+    // unrolled rounds, all-integer updates, fixpoint spec-pinned
+    QueryDef("g5_coreness", coreness(_, _),
+      // g5: all-integer h-index updates, SAME fixed round count as the
+      // Spark side (equal by construction even before the fixpoint); the
+      // window form of the h-index (count of ranks rn with H ≥ rn) is
+      // order-tie-insensitive, so row_number ties cannot diverge it.
+      SqlFn(() => corenessOracle(rounds = 6))),
+
+    // Synchronous label-propagation communities, fixed unrolled rounds
+    QueryDef("g9_communities", communities(_, _),
+      SqlFn(() => lpaOracle(rounds = 3))),
+
+    // Bipartite projection: supplier pairs ranked by shared-customer
+    // Jaccard (d2's set-similarity mathematics on a relation)
+    QueryDef("g6_supplier_overlap", supplierOverlap(_, _),
+      // g6: bigint intersection/degree counts; the Jaccard is one
+      // division of exact integers, spelled identically on both sides.
+      // The fan-out cap (customers with > 1000 suppliers excluded from
+      // pair generation — the hub mitigation) is part of the contract,
+      // mirrored here so the gate stays exact.
+      Sql("""WITH cs AS (SELECT DISTINCT o_custkey AS c, l_suppkey AS sv
+        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
+        |deg AS (SELECT sv, count(*) AS d FROM cs GROUP BY sv),
+        |kept AS (SELECT c, sv FROM cs WHERE c IN (
+        |  SELECT c FROM cs GROUP BY c HAVING count(*) <= 1000)),
+        |pr AS (SELECT a.sv AS sa, b.sv AS sb, count(*) AS inter
+        |  FROM kept a JOIN kept b ON a.c = b.c AND a.sv < b.sv
+        |  GROUP BY 1, 2)
+        |SELECT pr.sa, pr.sb, pr.inter, da.d AS na, db.d AS nb,
+        |  CAST(pr.inter AS DOUBLE)
+        |    / CAST(da.d + db.d - pr.inter AS DOUBLE) AS jaccard
+        |FROM pr JOIN deg da ON pr.sa = da.sv
+        |  JOIN deg db ON pr.sb = db.sv
+        |ORDER BY jaccard DESC, sa, sb LIMIT 50""")),
+
+    // Connected components of the revenue-thresholded trade backbone
+    // (min-label fixpoint, the d9 kernel on a relational graph)
+    QueryDef("g7_backbone_components", backboneComponents(_, _),
+      // g7: DECIMAL edge revenues + decimal threshold → identical edge
+      // sets; the recursive-CTE closure's min-reachable label equals the
+      // Spark min-label fixpoint by definition of connectivity. The
+      // closure is oracle-side only (test scale).
+      Sql("""WITH RECURSIVE cs AS (SELECT o_custkey * 2 AS cv,
+        |    l_suppkey * 2 + 1 AS sv,
+        |    sum(CAST(l_extendedprice * (1.0 - l_discount)
+        |      AS DECIMAL(18,4))) AS rev
+        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+        |  GROUP BY 1, 2),
+        |e0 AS (SELECT cv AS src, sv AS dst FROM cs WHERE rev >= 200000),
+        |edges(src, dst) AS (
+        |  SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0),
+        |reach(src, dst) AS (
+        |  SELECT src, dst FROM edges
+        |  UNION
+        |  SELECT r.src, e.dst FROM reach r
+        |  JOIN edges e ON r.dst = e.src AND r.src <> e.dst),
+        |comp AS (SELECT src AS v, least(src, min(dst)) AS component
+        |  FROM reach GROUP BY src)
+        |SELECT component, count(*) AS n_vertices,
+        |  CAST(sum(CASE WHEN v % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n_customers,
+        |  CAST(sum(CASE WHEN v % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n_suppliers
+        |FROM comp GROUP BY component
+        |ORDER BY n_vertices DESC, component""")),
+
+    // Bounded BFS from a seed set: min-hop census per distance ring
+    // (level-synchronous frontier joins vs a recursive-CTE oracle)
+    QueryDef("g8_reachability", reachability(_, _),
+      // g8: recursive CTE enumerates (vertex, dist <= 4) pairs
+      // redundantly and min-groups; the frontier BFS reaches each vertex
+      // first at its min distance by construction — the two must agree.
+      Sql("""WITH RECURSIVE base AS (
+        |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
+        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
+        |edges AS (SELECT src, dst FROM base
+        |  UNION ALL SELECT dst, src FROM base),
+        |seeds AS (SELECT c_custkey * 2 AS v FROM customer
+        |  WHERE c_custkey % 500 = 0),
+        |bfs AS (
+        |  SELECT v, 0 AS dist FROM seeds
+        |  UNION
+        |  SELECT e.dst AS v, b.dist + 1 AS dist
+        |  FROM bfs b JOIN edges e ON e.src = b.v WHERE b.dist < 4),
+        |md AS (SELECT v, min(dist) AS dist FROM bfs GROUP BY v)
+        |SELECT dist, count(*) AS n_vertices,
+        |  CAST(sum(CASE WHEN v % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n_customers,
+        |  CAST(sum(CASE WHEN v % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n_suppliers
+        |FROM md GROUP BY dist ORDER BY dist""")),
+
+    // Bounded weighted SSSP: frontier Bellman-Ford over cheapest-lane
+    // edges, min-cost census per distance (vs unrolled min-group CTEs)
+    QueryDef("g10_shortest_paths", shortestPaths(_, _),
+      // g10: maxHops=4 Bellman-Ford rounds unrolled as nested min-group
+      // CTEs — round k holds min cost over paths of <= k edges, exactly
+      // the invariant the Spark frontier relaxation maintains. Integer
+      // weights (quantities are integral decimals), so bit-exact.
+      Sql("""WITH base AS (
+        |  SELECT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst,
+        |    min(CAST(l_quantity AS INT)) AS w
+        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+        |  GROUP BY 1, 2),
+        |edges AS (SELECT src, dst, w FROM base
+        |  UNION ALL SELECT dst, src, w FROM base),
+        |d0 AS (SELECT c_custkey * 2 AS v, 0 AS dist FROM customer
+        |  WHERE c_custkey % 500 = 0),
+        |d1 AS (SELECT v, min(dist) AS dist FROM (
+        |  SELECT v, dist FROM d0 UNION ALL
+        |  SELECT e.dst, d.dist + e.w FROM d0 d JOIN edges e ON e.src = d.v)
+        |  GROUP BY v),
+        |d2 AS (SELECT v, min(dist) AS dist FROM (
+        |  SELECT v, dist FROM d1 UNION ALL
+        |  SELECT e.dst, d.dist + e.w FROM d1 d JOIN edges e ON e.src = d.v)
+        |  GROUP BY v),
+        |d3 AS (SELECT v, min(dist) AS dist FROM (
+        |  SELECT v, dist FROM d2 UNION ALL
+        |  SELECT e.dst, d.dist + e.w FROM d2 d JOIN edges e ON e.src = d.v)
+        |  GROUP BY v),
+        |d4 AS (SELECT v, min(dist) AS dist FROM (
+        |  SELECT v, dist FROM d3 UNION ALL
+        |  SELECT e.dst, d.dist + e.w FROM d3 d JOIN edges e ON e.src = d.v)
+        |  GROUP BY v)
+        |SELECT dist, count(*) AS n_vertices,
+        |  CAST(sum(CASE WHEN v % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n_customers,
+        |  CAST(sum(CASE WHEN v % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n_suppliers
+        |FROM d4 GROUP BY dist ORDER BY dist""")),
+  )
+
+  /** g9's unrolled synchronous LPA: integer vertex-id labels (the
+    * Spark side's 2k / 2k+1 encoding, so tie-break order matches —
+    * STRING label ordering would disagree with the engine's long
+    * ordering), plurality argmax per round as a windowed row_number
+    * over (count desc, label asc), names rendered only at the end.
+    */
+  private def lpaOracle(rounds: Int): String = {
+    val sb = new StringBuilder
+    sb ++= """WITH e0 AS (SELECT DISTINCT o_custkey * 2 AS src,
+      |    l_suppkey * 2 + 1 AS dst
+      |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
+      |e AS (SELECT src, dst FROM e0
+      |      UNION ALL SELECT dst, src FROM e0),
+      |l0 AS (SELECT DISTINCT src AS v, src AS lab FROM e)""".stripMargin
+    for (k <- 1 to rounds) {
+      sb ++= s""",
+        |l$k AS (SELECT v, lab FROM (
+        |    SELECT e.src AS v, p.lab AS lab,
+        |      row_number() OVER (PARTITION BY e.src
+        |        ORDER BY count(*) DESC, p.lab) AS rn
+        |    FROM e JOIN l${k - 1} p ON e.dst = p.v
+        |    GROUP BY e.src, p.lab) WHERE rn = 1)""".stripMargin
+    }
+    sb ++= s"""
+      |, sz AS (SELECT lab, count(*) AS community_size
+      |    FROM l$rounds GROUP BY lab)
+      |SELECT CASE WHEN l.v % 2 = 0 THEN 'c' || (l.v // 2)
+      |    ELSE 's' || ((l.v - 1) // 2) END AS vertex,
+      |  CASE WHEN l.lab % 2 = 0 THEN 'c' || (l.lab // 2)
+      |    ELSE 's' || ((l.lab - 1) // 2) END AS community,
+      |  CAST(sz.community_size AS BIGINT) AS community_size
+      |FROM l$rounds l JOIN sz ON l.lab = sz.lab
+      |ORDER BY vertex""".stripMargin
+    sb.toString
+  }
+
+  /** g5's unrolled oracle: h-index iteration over the trade graph with
+    * the same fixed round budget as the Spark side. Per round, the
+    * h-index of each vertex's neighbor H multiset is computed as
+    * max{rn : H_(rn) ≥ rn} over the descending row_number ranking —
+    * tie order between equal H values cannot change the count.
+    */
+  private def corenessOracle(rounds: Int): String = {
+    val sb = new StringBuilder
+    sb ++= """WITH e0 AS (SELECT DISTINCT 'c' || o_custkey AS src,
+      |    's' || l_suppkey AS dst
+      |  FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
+      |e AS (SELECT src, dst FROM e0
+      |      UNION ALL SELECT dst, src FROM e0),
+      |deg AS (SELECT src, count(*) AS deg FROM e GROUP BY src),
+      |h0 AS (SELECT src AS v, deg AS h FROM deg)""".stripMargin
+    for (k <- 1 to rounds) {
+      sb ++= s""",
+        |h$k AS (SELECT v, coalesce(max(CASE WHEN hv >= rn THEN rn END), 0) AS h
+        |  FROM (SELECT e.src AS v, p.h AS hv,
+        |      row_number() OVER (PARTITION BY e.src ORDER BY p.h DESC) AS rn
+        |    FROM e JOIN h${k - 1} p ON e.dst = p.v)
+        |  GROUP BY v)""".stripMargin
+    }
+    sb ++= s"""
+      |SELECT deg.src AS vertex, deg.deg AS degree,
+      |  CAST(h$rounds.h AS INT) AS coreness
+      |FROM deg JOIN h$rounds ON deg.src = h$rounds.v
+      |ORDER BY coreness DESC, degree DESC, vertex""".stripMargin
+    sb.toString
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.Tables
+import graft.SparkEntry.{QueryDef, Sql}
 
 /** q88 — write-audit-publish MERGE/upsert into a VERSIONED persisted
   * table (r13 verdict #5): the lakehouse maintenance primitive the
@@ -616,4 +617,148 @@ object LakehouseMerge {
     changedRows(v3, readVersionAs(s, path, 2, v3.schema))
       .orderBy(col("o_custkey"))
   }
+}
+
+/** The registered queries that call [[LakehouseMerge]]: name, builder and oracle.
+  * A separate object, so that building the registry loads these lists
+  * and not the operator object, which loads when a query runs.
+  */
+object LakehouseMergeQueries {
+  import LakehouseMerge._
+
+  def queries: Seq[QueryDef] = Seq(
+    // Write-audit-publish MERGE into a versioned persisted table:
+    // base publish + delta merge + conservation audit, read through
+    // the manifest head; oracled against a full recompute
+    QueryDef("q88_upsert_publish", upsertOrdersSummary(_, _),
+      // q88: the oracle recomputes the summary over ALL orders directly —
+      // the engine side must conserve mass through base publish + merge
+      // publish + manifest-head read for the hashes to agree. Decimal
+      // sums exact on both sides; the one double is the final cast.
+      q88Oracle),
+
+    // Time travel: concurrent read of two published versions, exact
+    // per-customer insert/update deltas (snapshot diff on the store)
+    QueryDef("q89_version_diff", versionDiff(_, _),
+      // q89: the oracle derives the diff from the raw slices — insert =
+      // no base-slice order, update = both slices present; deltas are
+      // the delta-slice masses exactly (decimal-exact through the
+      // engine's two publishes).
+      Sql("""WITH delta AS (SELECT o_custkey, count(*) AS d_orders,
+        |    sum(CAST(o_totalprice AS DECIMAL(18,2))) AS d_price
+        |  FROM orders WHERE o_orderkey % 3 = 0 GROUP BY o_custkey),
+        |base AS (SELECT DISTINCT o_custkey FROM orders
+        |  WHERE o_orderkey % 3 <> 0)
+        |SELECT d.o_custkey,
+        |  CASE WHEN b.o_custkey IS NULL THEN 'insert' ELSE 'update' END
+        |    AS change,
+        |  CAST(d.d_orders AS BIGINT) AS n_orders_delta,
+        |  CAST(d.d_price AS DOUBLE) AS price_delta
+        |FROM delta d LEFT JOIN base b USING (o_custkey)
+        |ORDER BY d.o_custkey""")),
+
+    // DESCRIBE HISTORY: the versioned table's audit log straight from
+    // the append-only manifests (metadata-only; conservation ledger)
+    QueryDef("q92_table_history", tableHistory(_, _),
+      // q92: every version's masses recomputed from the raw slices (v1 =
+      // the base slice, v2 = all orders) — the manifests' conservation
+      // ledger must match a from-scratch recount for the hashes to
+      // agree. version is the INT literal both sides.
+      Sql("""WITH v1 AS (SELECT count(DISTINCT o_custkey) AS n_rows,
+        |    count(*) AS om, sum(CAST(o_totalprice AS DECIMAL(18,2))) AS pm
+        |  FROM orders WHERE o_orderkey % 3 <> 0),
+        |v2 AS (SELECT count(DISTINCT o_custkey) AS n_rows, count(*) AS om,
+        |    sum(CAST(o_totalprice AS DECIMAL(18,2))) AS pm FROM orders)
+        |SELECT 1 AS version, n_rows, om AS orders_mass,
+        |  CAST(pm AS DOUBLE) AS price_mass FROM v1
+        |UNION ALL
+        |SELECT 2 AS version, n_rows, om AS orders_mass,
+        |  CAST(pm AS DOUBLE) AS price_mass FROM v2
+        |ORDER BY version""")),
+
+    // Schema evolution: v3's delta adds a nullable column; untouched
+    // rows read as NULL (no backfill), time travel null-fills
+    QueryDef("q95_schema_evolution", evolvedOrdersSummary(_, _),
+      // q95: the evolved head recomputed from raw orders. n_urgent is
+      // NULL for customers the post-evolution slice (keys ≡0 mod 3)
+      // never touched — the no-backfill semantic is IN the oracle.
+      // Masses decimal-exact; the one double is the output cast.
+      Sql("""SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_orders,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+        |    AS total_price,
+        |  max(CAST(o_orderdate AS DATE)) AS last_orderdate,
+        |  CASE WHEN sum(CASE WHEN o_orderkey % 3 = 0 THEN 1 ELSE 0 END) > 0
+        |    THEN CAST(sum(CASE WHEN o_orderkey % 3 = 0
+        |      AND o_orderpriority LIKE '1-%' THEN 1 ELSE 0 END) AS BIGINT)
+        |    ELSE NULL END AS n_urgent
+        |FROM orders GROUP BY o_custkey ORDER BY o_custkey""")),
+
+    // Version diff ACROSS the evolution boundary: the pre-evolution
+    // side is read under the evolved schema (read-schema-merge)
+    QueryDef("q96_evolution_diff", evolutionDiff(_, _),
+      // q96: the diff across the evolution boundary is exactly the
+      // evolved slice's per-customer masses; insert = customer absent
+      // from the two pre-evolution slices. n_urgent_delta counts the
+      // slice's urgent orders (the null-filled old side is zero mass).
+      Sql("""WITH delta AS (SELECT o_custkey, count(*) AS d_orders,
+        |    sum(CAST(o_totalprice AS DECIMAL(18,2))) AS d_price,
+        |    sum(CASE WHEN o_orderpriority LIKE '1-%' THEN 1 ELSE 0 END)
+        |      AS d_urgent
+        |  FROM orders WHERE o_orderkey % 3 = 0 GROUP BY o_custkey),
+        |pre AS (SELECT DISTINCT o_custkey FROM orders
+        |  WHERE o_orderkey % 3 <> 0)
+        |SELECT d.o_custkey,
+        |  CASE WHEN p.o_custkey IS NULL THEN 'insert' ELSE 'update' END
+        |    AS change,
+        |  CAST(d.d_orders AS BIGINT) AS n_orders_delta,
+        |  CAST(d.d_price AS DOUBLE) AS price_delta,
+        |  CAST(d.d_urgent AS BIGINT) AS n_urgent_delta
+        |FROM delta d LEFT JOIN pre p USING (o_custkey)
+        |ORDER BY d.o_custkey""")),
+
+    // OPTIMIZE: compaction + range-clustering as an audited version
+    // publish (data-preserving by the mass audit; layout spec-pinned)
+    QueryDef("q97_optimize_compact", optimizedSummary(_, _),
+      // q97: OPTIMIZE must be invisible in the data — the post-compact
+      // reader view equals the full per-customer recompute exactly (the
+      // q88 oracle); the layout change (file count, clustering) is
+      // spec-pinned, not SQL-observable.
+      q88Oracle),
+
+    // CHANGE DATA FEED: the row-level change log of the whole version
+    // chain (insert/update + exact deltas per version), read under the
+    // head schema across the q95 evolution boundary
+    QueryDef("q100_change_feed", changeFeed(_, _),
+      // q100: the oracle rebuilds the whole feed from the raw mod-3
+      // slices — per (version, custkey) the slice masses are the
+      // deltas, first-appearance = insert, and the evolved column's
+      // delta is zero before v3 (null-filled history reads as zero
+      // mass). Conservation must hold through all three publishes for
+      // the hashes to agree; all-integer + exact decimal: bit-exact.
+      Sql("""WITH s AS (
+        |  SELECT CASE CAST(o_orderkey % 3 AS INT) WHEN 1 THEN 1
+        |      WHEN 2 THEN 2 ELSE 3 END AS version,
+        |    o_custkey, count(*) AS n,
+        |    sum(CAST(o_totalprice AS DECIMAL(18,2))) AS p,
+        |    sum(CASE WHEN o_orderpriority LIKE '1-%' THEN 1 ELSE 0 END)
+        |      AS u
+        |  FROM orders GROUP BY 1, 2)
+        |SELECT CAST(version AS INT) AS version, o_custkey,
+        |  CASE WHEN row_number() OVER (PARTITION BY o_custkey
+        |      ORDER BY version) = 1
+        |    THEN 'insert' ELSE 'update' END AS change,
+        |  CAST(n AS BIGINT) AS n_orders_delta,
+        |  CAST(p AS DOUBLE) AS price_delta,
+        |  CAST(CASE WHEN version = 3 THEN u ELSE 0 END AS BIGINT)
+        |    AS n_urgent_delta
+        |FROM s ORDER BY version, o_custkey""")),
+  )
+
+  /** The per-customer order summary recomputed over all orders. */
+  private val q88Oracle: Sql =
+    Sql("""SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_orders,
+      |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+      |    AS total_price,
+      |  max(CAST(o_orderdate AS DATE)) AS last_orderdate
+      |FROM orders GROUP BY o_custkey ORDER BY o_custkey""")
 }

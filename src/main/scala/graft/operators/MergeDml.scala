@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.SparkEntry.{QueryDef, Sql}
 
 /** Full tri-modal MERGE DML on the versioned row store — `WHEN
   * MATCHED [AND cond] DELETE / WHEN MATCHED UPDATE / WHEN NOT MATCHED
@@ -258,4 +259,85 @@ object MergeDml {
   private[graft] def history(s: SparkSession, dir: String): DataFrame =
     VersionedStore.manifests(s, ensureMerged(s, dir)).drop("data_dir")
       .orderBy(col("version"))
+}
+
+/** The registered queries that call [[MergeDml]]: name, builder and oracle.
+  * A separate object, so that building the registry loads these lists
+  * and not the operator object, which loads when a query runs.
+  */
+object MergeDmlQueries {
+  import MergeDml._
+
+  def queries: Seq[QueryDef] = Seq(
+    // Full tri-modal MERGE DML (matched-delete / matched-update /
+    // not-matched-insert) as one audited version publish; the action
+    // counts land in the manifest as a DML ledger
+    QueryDef("q102_merge_dml", mergedCustomers(_, _),
+      // q102: MERGE semantics collapse to one closed-form SELECT — kept
+      // odd keys unchanged, surviving even keys revised (+100), closed
+      // even keys gone (deleted if they existed, no-op if not). The
+      // engine must reproduce it through classify→stage→audit→publish.
+      // Exact decimal arithmetic on both sides: bit-exact.
+      Sql("""SELECT c_custkey, c_name, c_nationkey,
+        |  CAST(CASE WHEN c_custkey % 2 = 0
+        |    THEN CAST(c_acctbal AS DECIMAL(18,2)) + 100
+        |    ELSE CAST(c_acctbal AS DECIMAL(18,2)) END AS DOUBLE)
+        |    AS acctbal
+        |FROM customer
+        |WHERE NOT (c_custkey % 2 = 0 AND c_acctbal < 0)
+        |ORDER BY c_custkey""")),
+
+    // The DML merge's change feed: insert/update/delete events
+    // (deletes carry the pre-image — the event type q100's additive
+    // feed can never produce)
+    QueryDef("q103_dml_feed", dmlChangeFeed(_, _),
+      // q103: the event classification in closed form — every source
+      // key (even) emits exactly one event unless it is a
+      // never-existed closed account (the MERGE no-op).
+      Sql("""SELECT c_custkey,
+        |  CASE WHEN c_custkey % 4 = 0 THEN 'insert'
+        |       WHEN c_acctbal < 0 THEN 'delete'
+        |       ELSE 'update' END AS change,
+        |  CAST(CASE WHEN c_custkey % 4 <> 0 AND c_acctbal < 0
+        |    THEN CAST(c_acctbal AS DECIMAL(18,2))
+        |    ELSE CAST(c_acctbal AS DECIMAL(18,2)) + 100 END AS DOUBLE)
+        |    AS acctbal
+        |FROM customer
+        |WHERE c_custkey % 2 = 0
+        |  AND NOT (c_custkey % 4 = 0 AND c_acctbal < 0)
+        |ORDER BY c_custkey""")),
+
+    // The DML feed in the FULL CDF vocabulary (update events as
+    // pre+post image pairs) — what makes a downstream SUM maintainable
+    // from the feed alone (streaming MV spec rides on it)
+    QueryDef("q105_dml_feed_cdf", dmlChangeFeedCdf(_, _),
+      // q105: the 4-type vocabulary in closed form — update keys emit
+      // BOTH images (pre = raw balance, post = revised), inserts the
+      // post only, deletes the pre only.
+      Sql("""WITH e AS (
+        |  SELECT c_custkey, c_nationkey,
+        |    CAST(c_acctbal AS DECIMAL(18,2)) AS pre,
+        |    CAST(c_acctbal AS DECIMAL(18,2)) + 100 AS post,
+        |    CASE WHEN c_custkey % 4 = 0 THEN 'insert'
+        |         WHEN c_acctbal < 0 THEN 'delete'
+        |         ELSE 'update' END AS action
+        |  FROM customer
+        |  WHERE c_custkey % 2 = 0
+        |    AND NOT (c_custkey % 4 = 0 AND c_acctbal < 0))
+        |SELECT c_custkey, change, c_nationkey,
+        |  CAST(acctbal AS DOUBLE) AS acctbal
+        |FROM (
+        |  SELECT c_custkey, 'insert' AS change, c_nationkey,
+        |    post AS acctbal FROM e WHERE action = 'insert'
+        |  UNION ALL
+        |  SELECT c_custkey, 'delete', c_nationkey, pre
+        |  FROM e WHERE action = 'delete'
+        |  UNION ALL
+        |  SELECT c_custkey, 'update_preimage', c_nationkey, pre
+        |  FROM e WHERE action = 'update'
+        |  UNION ALL
+        |  SELECT c_custkey, 'update_postimage', c_nationkey, post
+        |  FROM e WHERE action = 'update')
+        |ORDER BY c_custkey, change""")),
+  )
 }

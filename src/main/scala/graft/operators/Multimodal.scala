@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.SparkEntry.{QueryDef, Sql, SqlFn}
 
 /** Multimodal-column plumbing (north-star extension): media payloads as
   * opaque `binary` columns + typed metadata, with decode/feature
@@ -900,4 +901,364 @@ object Multimodal {
       .groupBy(col("doc_id"), col("n"), col("b"))
       .agg(count(lit(1)).as("c"))
       .groupBy(col("doc_id"), col("n"))
+}
+
+/** The registered queries that call [[Multimodal]]: name, builder and oracle.
+  * A separate object, so that building the registry loads these lists
+  * and not the operator object, which loads when a query runs.
+  */
+object MultimodalQueries {
+  import Multimodal._
+
+  def queries: Seq[QueryDef] = Seq(
+    // Per-channel normalization stats (interleaved RGB stand-in):
+    // exact integer moments, one divide + one IEEE sqrt
+    QueryDef("m15_channel_stats", channelStats(_, _),
+      // m15: exact integer channel moments (strided list comprehension
+      // mirrors Spark's strided sequence walk); the derived doubles are
+      // one divide + one sqrt — both correctly-rounded IEEE ops.
+      Sql("""WITH d AS (SELECT doc_id,
+        |    [CAST(ascii(x) AS BIGINT) for x in string_split(text, '')]
+        |      AS codes,
+        |    CAST(length(text) AS BIGINT) AS n
+        |  FROM documents WHERE length(text) >= 3),
+        |ch AS (SELECT doc_id, unnest(range(0, 3)) AS channel, codes, n FROM d),
+        |v AS (SELECT doc_id, CAST(channel AS INT) AS channel,
+        |    [codes[CAST(i AS INT)] for i in range(1 + channel, n + 1, 3)]
+        |      AS xs
+        |  FROM ch),
+        |agg AS (SELECT doc_id, channel,
+        |    CAST(len(xs) AS BIGINT) AS n_samples,
+        |    CAST(list_sum(xs) AS BIGINT) AS sum_x,
+        |    CAST(list_sum([x * x for x in xs]) AS BIGINT) AS sum_x2
+        |  FROM v)
+        |SELECT doc_id, channel, n_samples, sum_x, sum_x2,
+        |  CAST(sum_x AS DOUBLE) / CAST(n_samples AS DOUBLE) AS mean,
+        |  sqrt(CAST(n_samples * sum_x2 - sum_x * sum_x AS DOUBLE)
+        |    / CAST(n_samples * n_samples AS DOUBLE)) AS stddev
+        |FROM agg ORDER BY doc_id, channel""")),
+
+    // Patch-pool embedding bridge: m11's plane pooled to an integer
+    // patch-sum vector, probes ranked by exact-arithmetic cosine
+    QueryDef("m16_patch_embed_topk", patchEmbedTopK(_, _),
+      // m16: integer patch-sum embeddings (exact in any fold order),
+      // explicit cosine dot/(sqrt(na)*sqrt(nb)) with the same tree as
+      // the Spark side — never list_cosine_similarity, whose internal
+      // op order is unspecified.
+      Sql("""WITH d AS (SELECT doc_id,
+        |    [CAST(ascii(x) AS BIGINT)
+        |      for x in string_split(text, '')[1:256]] AS codes
+        |  FROM documents WHERE length(text) >= 256),
+        |e AS (SELECT doc_id,
+        |    list_transform(range(0, 16), kk ->
+        |      list_sum(list_transform(range(0, 16), j ->
+        |        codes[CAST(((kk // 4) * 4 + (j // 4)) * 16
+        |          + (kk % 4) * 4 + (j % 4) + 1 AS INT)]))) AS emb
+        |  FROM d),
+        |v AS (SELECT doc_id, emb,
+        |    CAST(list_sum(list_transform(range(1, 17),
+        |      i -> emb[CAST(i AS INT)] * emb[CAST(i AS INT)])) AS BIGINT)
+        |      AS n2
+        |  FROM e),
+        |pairs AS (SELECT q.doc_id AS query_id, c.doc_id AS neighbor_id,
+        |    CAST(list_sum(list_transform(range(1, 17),
+        |      i -> q.emb[CAST(i AS INT)] * c.emb[CAST(i AS INT)]))
+        |      AS BIGINT) AS dot,
+        |    q.n2 AS na, c.n2 AS nb
+        |  FROM v q JOIN v c ON q.doc_id % 50 = 0
+        |    AND q.doc_id <> c.doc_id),
+        |sc AS (SELECT query_id, neighbor_id,
+        |    CAST(dot AS DOUBLE)
+        |      / (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE)))
+        |      AS cos
+        |  FROM pairs),
+        |rk AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
+        |    ORDER BY cos DESC, neighbor_id) AS INT) AS rank FROM sc)
+        |SELECT query_id, rank, neighbor_id, cos FROM rk
+        |WHERE rank <= 3 ORDER BY query_id, rank""")),
+
+    // Perceptual (average-hash) payload signature — integer-exact
+    // mean-threshold bits, full DuckDB oracle (m6's positional style)
+    QueryDef("m7_media_phash", mediaPHash(_, _),
+      // m7: every bit decision is integer arithmetic (sb·ct > st·cb), so
+      // the DuckDB mirror is bit-identical by construction — the same
+      // bucket partition floor(pos·60/n) over [0, n) sample positions.
+      Sql("""WITH d AS (SELECT doc_id, text, length(text) AS n
+        |  FROM documents WHERE length(text) > 0),
+        |s AS (SELECT doc_id, n, unnest(range(0, n)) AS pos, text FROM d),
+        |sc AS (SELECT doc_id,
+        |    CAST(pos * 60 // n AS INT) AS bk,
+        |    ascii(substr(text, CAST(pos + 1 AS INT), 1)) AS c
+        |  FROM s),
+        |b AS (SELECT doc_id, bk, sum(c) AS sb, count(*) AS cb
+        |  FROM sc GROUP BY doc_id, bk),
+        |t AS (SELECT doc_id, sum(sb) AS st, sum(cb) AS ct
+        |  FROM b GROUP BY doc_id)
+        |SELECT b.doc_id AS doc_id,
+        |  CAST(sum(CASE WHEN sb * ct > st * cb
+        |    THEN (1::BIGINT << bk) ELSE 0 END) AS BIGINT) AS phash
+        |FROM b JOIN t ON b.doc_id = t.doc_id
+        |GROUP BY b.doc_id ORDER BY b.doc_id""")),
+
+    // Near-duplicate payloads by aHash hamming radius, via the lossless
+    // multi-probe pigeonhole join (radius 12; all-pairs DuckDB oracle)
+    QueryDef("m8_media_phash_pairs", mediaPHashPairs(_, _),
+      // m8: exact all-pairs hamming in the oracle; the Spark side's
+      // multi-probe pigeonhole blocking is lossless for the radius, so
+      // the two must agree exactly.
+      Sql("""WITH d AS (SELECT doc_id, text, length(text) AS n
+        |  FROM documents WHERE length(text) > 0),
+        |s AS (SELECT doc_id, n, unnest(range(0, n)) AS pos, text FROM d),
+        |sc AS (SELECT doc_id,
+        |    CAST(pos * 60 // n AS INT) AS bk,
+        |    ascii(substr(text, CAST(pos + 1 AS INT), 1)) AS c
+        |  FROM s),
+        |b AS (SELECT doc_id, bk, sum(c) AS sb, count(*) AS cb
+        |  FROM sc GROUP BY doc_id, bk),
+        |t AS (SELECT doc_id, sum(sb) AS st, sum(cb) AS ct
+        |  FROM b GROUP BY doc_id),
+        |p AS (SELECT b.doc_id AS doc_id,
+        |    CAST(sum(CASE WHEN sb * ct > st * cb
+        |      THEN (1::BIGINT << bk) ELSE 0 END) AS BIGINT) AS phash
+        |  FROM b JOIN t ON b.doc_id = t.doc_id GROUP BY b.doc_id)
+        |SELECT a.doc_id AS doc_a, y.doc_id AS doc_b,
+        |  CAST(bit_count(xor(a.phash, y.phash)) AS INT) AS hamming
+        |FROM p a JOIN p y ON a.doc_id < y.doc_id
+        |WHERE bit_count(xor(a.phash, y.phash)) <= 12
+        |ORDER BY doc_a, doc_b""")),
+
+    // Shot-boundary detection: per-frame integer-exact aHash, lag
+    // window, hamming-threshold cuts (full DuckDB oracle)
+    QueryDef("m9_shot_boundaries", shotBoundaries(_, _),
+      // m9: same integer-exact bit rule as m7, but per NON-OVERLAPPING
+      // 64-byte frame with 16 contiguous 4-sample buckets; consecutive
+      // frames' signatures xor'd, boundary at hamming >= 9. Frame
+      // offsets are 1-based (fi*64 + 1), matching m6's convention.
+      Sql("""WITH d AS (SELECT doc_id, text, length(text) AS n
+        |  FROM documents WHERE length(text) >= 64),
+        |f AS (SELECT doc_id, unnest(range(0, (n - 64) // 64 + 1)) AS fi,
+        |    text FROM d),
+        |s AS (SELECT doc_id, fi, unnest(range(0, 64)) AS j, text FROM f),
+        |sc AS (SELECT doc_id, fi, j // 4 AS bk,
+        |    ascii(substr(text, CAST(fi * 64 + j + 1 AS INT), 1)) AS c
+        |  FROM s),
+        |b AS (SELECT doc_id, fi, bk, sum(c) AS sb
+        |  FROM sc GROUP BY doc_id, fi, bk),
+        |t AS (SELECT doc_id, fi, sum(sb) AS st
+        |  FROM b GROUP BY doc_id, fi),
+        |sig AS (SELECT b.doc_id, b.fi,
+        |    CAST(sum(CASE WHEN sb * 16 > st
+        |      THEN (1::BIGINT << CAST(bk AS INT)) ELSE 0 END) AS BIGINT) AS sig
+        |  FROM b JOIN t ON b.doc_id = t.doc_id AND b.fi = t.fi
+        |  GROUP BY b.doc_id, b.fi),
+        |lagd AS (SELECT doc_id, fi, sig,
+        |    lag(sig) OVER (PARTITION BY doc_id ORDER BY fi) AS prev
+        |  FROM sig)
+        |SELECT doc_id, CAST(fi AS INT) AS frame_idx,
+        |  CAST(fi * 64 + 1 AS INT) AS frame_offset,
+        |  CAST(bit_count(xor(sig, prev)) AS INT) AS dist,
+        |  bit_count(xor(sig, prev)) >= 9 AS is_boundary
+        |FROM lagd WHERE prev IS NOT NULL
+        |ORDER BY doc_id, frame_idx""")),
+
+    // VAD-style activity runs over integer frame energy (gaps-and-
+    // islands window idiom; bit-exact oracle)
+    QueryDef("m10_vad_segments", vadSegments(_, _),
+      // m10: integer Σx² energy gate + gaps-and-islands run grouping —
+      // every value integer arithmetic, bit-identical across engines.
+      Sql("""WITH d AS (SELECT doc_id, text, length(text) AS n
+        |  FROM documents WHERE length(text) >= 64),
+        |f AS (SELECT doc_id, unnest(range(0, (n - 64) // 64 + 1)) AS fi,
+        |    text FROM d),
+        |s AS (SELECT doc_id, fi,
+        |    ascii(substr(text, CAST(fi * 64 + j + 1 AS INT), 1)) AS c
+        |  FROM f CROSS JOIN (SELECT unnest(range(0, 64)) AS j)),
+        |fr AS (SELECT doc_id, fi, sum(c * c) AS ssq
+        |  FROM s GROUP BY doc_id, fi),
+        |a AS (SELECT doc_id, fi, ssq,
+        |    fi - row_number() OVER (PARTITION BY doc_id ORDER BY fi) AS grp
+        |  FROM fr WHERE ssq >= 628000),
+        |seg AS (SELECT doc_id, grp, min(fi) AS sf, max(fi) AS ef,
+        |    count(*) AS nf, sum(ssq) AS tssq
+        |  FROM a GROUP BY doc_id, grp)
+        |SELECT doc_id,
+        |  CAST(row_number() OVER (PARTITION BY doc_id ORDER BY sf)
+        |    AS INT) AS seg_idx,
+        |  CAST(sf AS INT) AS start_frame, CAST(ef AS INT) AS end_frame,
+        |  CAST(nf AS BIGINT) AS n_frames, CAST(tssq AS BIGINT) AS total_ssq
+        |FROM seg ORDER BY doc_id, seg_idx""")),
+
+    // ViT-style patchify: 16×16 byte plane → 4×4 patch grid, integer
+    // per-patch stats via 2-D row-major indexing (bit-exact oracle)
+    QueryDef("m11_patchify", patchify(_, _),
+      // m11: pure integer 2-D indexing — byte(r, c) = text[r·16 + c],
+      // patch (pi) covers rows pi//4·4.. and cols pi%4·4.. — identical
+      // row-major math on both engines.
+      Sql("""WITH d AS (SELECT doc_id, text FROM documents
+        |  WHERE length(text) >= 256),
+        |p AS (SELECT doc_id, text, unnest(range(16)) AS pi FROM d),
+        |b AS (SELECT doc_id, pi,
+        |    ascii(substr(text,
+        |      CAST(((pi // 4) * 4 + k // 4) * 16
+        |        + ((pi % 4) * 4 + k % 4) + 1 AS INT), 1)) AS c
+        |  FROM p CROSS JOIN (SELECT unnest(range(16)) AS k))
+        |SELECT doc_id, CAST(pi AS INT) AS patch_idx,
+        |  CAST(sum(c) AS BIGINT) AS byte_sum,
+        |  CAST(min(c) AS INT) AS byte_min, CAST(max(c) AS INT) AS byte_max
+        |FROM b GROUP BY doc_id, pi ORDER BY doc_id, patch_idx""")),
+
+    // DCT perceptual hash (the published pHash rule) in fixed-point
+    // integer arithmetic — bit-identical across engines, full oracle
+    QueryDef("m12_dct_phash", mediaDctHash(_, _),
+      // m12: the SAME fixed-point DCT matrix is baked into this SQL and
+      // the Spark expression (generated by one call in one process), so
+      // both sides run identical integer arithmetic end to end.
+      SqlFn(() => s"""$dctPhashCte
+        |SELECT doc_id, phash FROM ph ORDER BY doc_id""".stripMargin)),
+
+    // Near-dup pairs on the DCT hash: lossless multi-probe pigeonhole
+    // join (m8's shape over 63 bits), exact all-pairs oracle
+    QueryDef("m13_dct_phash_pairs", mediaDctHashPairs(_, _),
+      // m13: exact all-pairs hamming in the oracle; the Spark side's
+      // 7×9-bit multi-probe blocking is lossless for radius 12, so the
+      // two must agree exactly (m8's contract on the DCT hash).
+      SqlFn(() => s"""$dctPhashCte
+        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+        |  CAST(bit_count(xor(a.phash, b.phash)) AS INT) AS hamming
+        |FROM ph a JOIN ph b ON a.doc_id < b.doc_id
+        |WHERE bit_count(xor(a.phash, b.phash)) <= 12
+        |ORDER BY doc_a, doc_b""".stripMargin)),
+
+    // Byte-distribution triage (entropy bits/byte, mode, distinct):
+    // the no-decode corrupt/encrypted-blob gate before any decode
+    QueryDef("m14_byte_entropy", byteEntropy(_, _),
+      // m14: integer histogram; the statistic is transcendental-free
+      // (r12: ln ulp-drifts across engines) — Σc² is exact bigint on
+      // both sides and collision_prob is ONE divide of exact integers.
+      // Shannon bits live in byteEntropyBits under an epsilon spec.
+      Sql("""WITH d AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS n, text
+        |  FROM documents WHERE length(text) > 0),
+        |b AS (SELECT doc_id, n,
+        |    unnest([ascii(c) for c in string_split(text, '')]) AS b
+        |  FROM d),
+        |h AS (SELECT doc_id, n, b, count(*) AS c FROM b GROUP BY 1, 2, 3)
+        |SELECT doc_id, n AS n_bytes,
+        |  CAST(count(*) AS BIGINT) AS n_distinct_bytes,
+        |  CAST(max(c) AS BIGINT) AS mode_count,
+        |  CAST(sum(c * c) AS BIGINT) AS sum_c2,
+        |  CAST(sum(c * c) AS DOUBLE) / CAST(n * n AS DOUBLE)
+        |    AS collision_prob
+        |FROM h GROUP BY doc_id, n
+        |ORDER BY doc_id""")),
+
+    QueryDef("m1_media_meta", mediaMeta(_, _),
+      // Byte math mirrored via ascii()/substr() — the corpus is ASCII, so
+      // UTF-8 payload bytes == character codes.
+      Sql("""WITH m AS (SELECT doc_id, text,
+        |    CAST(octet_length(encode(text)) AS INT) AS n_bytes,
+        |    CAST(ascii(substr(text, 1, 1)) AS INT) AS first_byte,
+        |    CAST(ascii(substr(text, length(text), 1)) AS INT) AS last_byte,
+        |    CAST(list_sum(list_transform(range(1, least(16, length(text)) + 1),
+        |      i -> ascii(substr(text, CAST(i AS INT), 1)))) AS BIGINT) AS header_sum
+        |  FROM documents)
+        |SELECT doc_id, n_bytes, first_byte, last_byte, header_sum,
+        |  n_bytes % 640 AS width,
+        |  first_byte % 480 AS height,
+        |  CAST(3 AS INT) AS channels
+        |FROM m ORDER BY doc_id""")),
+
+    QueryDef("m2_media_fingerprint", mediaFingerprint(_, _),
+      Sql("""SELECT doc_id,
+        |  CAST(octet_length(encode(text)) AS INT) AS n_bytes,
+        |  md5(text) AS payload_md5
+        |FROM documents ORDER BY doc_id""")),
+
+    QueryDef("m3_frame_sample", frameSample(_, _),
+      // ASCII corpus → byte offsets == character offsets, so substr
+      // mirrors the payload slicing exactly.
+      Sql("""WITH d AS (SELECT doc_id, text, length(text) AS n
+        |  FROM documents WHERE length(text) >= 16),
+        |f AS (SELECT doc_id, text, unnest(range(1, n - 14, 64)) AS o FROM d)
+        |SELECT doc_id,
+        |  CAST((o - 1) // 64 AS INT) AS frame_idx,
+        |  CAST(o AS INT) AS frame_offset,
+        |  md5(substr(text, CAST(o AS INT), 16)) AS frame_md5
+        |FROM f ORDER BY doc_id, frame_offset""")),
+
+    QueryDef("m4_resize", mediaResize(_, _),
+      // strided char pick == strided byte pick on the ASCII corpus
+      Sql("""WITH d AS (SELECT doc_id, text, length(text) AS n FROM documents),
+        |r AS (SELECT doc_id, n,
+        |    array_to_string(list_transform(range(1, n + 1, 4),
+        |      i -> substr(text, CAST(i AS INT), 1)), '') AS resized
+        |  FROM d)
+        |SELECT doc_id, CAST(n AS INT) AS n_bytes,
+        |  CAST(length(resized) AS INT) AS resized_bytes,
+        |  md5(resized) AS resized_md5
+        |FROM r ORDER BY doc_id""")),
+
+    // Binary-content exact dedup — the pre-decode multimodal dedup pass
+    QueryDef("m5_media_dedup", mediaDedup(_, _),
+      Sql("""SELECT min(doc_id) AS keep_doc_id, md5(text) AS payload_md5,
+        |  count(*) AS n_copies
+        |FROM documents
+        |GROUP BY md5(text)
+        |ORDER BY keep_doc_id""")),
+
+    // Audio-style per-frame waveform stats (mean/RMS/peak) — one
+    // shuffle-free codegen'd generator + HOF-aggregate projection
+    QueryDef("m6_audio_energy", audioEnergy(_, _),
+      // m6: integer byte sums (ASCII payload == char codes, the m1
+      // equivalence) divided by the literal width — the doubles are
+      // bit-identical; same frame generator as m3's oracle at width 64.
+      Sql("""WITH d AS (SELECT doc_id, text, length(text) AS n
+        |  FROM documents WHERE length(text) >= 64),
+        |f AS (SELECT doc_id, text, unnest(range(1, n - 62, 64)) AS o FROM d),
+        |b AS (SELECT doc_id, o, [ascii(substr(text, CAST(o + j AS INT), 1))
+        |    for j in range(0, 64)] AS bytes
+        |  FROM f)
+        |SELECT doc_id,
+        |  CAST((o - 1) // 64 AS INT) AS frame_idx,
+        |  CAST(o AS INT) AS frame_offset,
+        |  list_sum(bytes) / 64.0 AS mean_amp,
+        |  sqrt(list_sum(list_transform(bytes, x -> x * x)) / 64.0) AS rms_amp,
+        |  CAST(list_max(bytes) AS INT) AS peak
+        |FROM b ORDER BY doc_id, frame_offset""")),
+  )
+
+  /** Shared DuckDB CTE computing m12's DCT perceptual hash relation
+    * `ph(doc_id, phash)` — the fixed-point matrix literal is generated
+    * by the same in-process call that feeds the Spark expression, so
+    * both engines run identical integer arithmetic (m12's contract);
+    * m13 reuses the CTE for its exact all-pairs mirror.
+    */
+  private def dctPhashCte: String = {
+    val mList = dctMatrix(16, 8).mkString("[", ", ", "]")
+    s"""WITH d AS (SELECT doc_id, text FROM documents
+      |  WHERE length(text) >= 256),
+      |mm AS (SELECT CAST(i.i // 16 AS INT) AS u, CAST(i.i % 16 AS INT) AS r,
+      |    ml.mv[CAST(i.i + 1 AS INT)] AS mv
+      |  FROM (SELECT $mList AS mv) ml,
+      |       (SELECT unnest(range(128)) AS i) i),
+      |px AS (SELECT doc_id, CAST(i.i // 16 AS INT) AS r,
+      |    CAST(i.i % 16 AS INT) AS c,
+      |    ascii(substr(text, CAST(i.i + 1 AS INT), 1)) AS val
+      |  FROM d, (SELECT unnest(range(256)) AS i) i),
+      |a AS (SELECT doc_id, mm.u AS u, px.c AS c, sum(mm.mv * px.val) AS av
+      |  FROM px JOIN mm ON px.r = mm.r GROUP BY doc_id, mm.u, px.c),
+      |cc AS (SELECT doc_id, a.u AS u, m2.u AS v, sum(a.av * m2.mv) AS coef
+      |  FROM a JOIN mm m2 ON a.c = m2.r GROUP BY doc_id, a.u, m2.u),
+      |nd AS (SELECT doc_id, u, v, coef,
+      |    row_number() OVER (PARTITION BY doc_id
+      |      ORDER BY coef, u, v) AS rk
+      |  FROM cc WHERE NOT (u = 0 AND v = 0)),
+      |med AS (SELECT doc_id, coef AS med FROM nd WHERE rk = 32),
+      |ph AS (SELECT cc.doc_id AS doc_id,
+      |  CAST(sum(CASE WHEN cc.coef > med.med
+      |    THEN (1::BIGINT << CAST(cc.u * 8 + cc.v - 1 AS INT))
+      |    ELSE 0 END) AS BIGINT) AS phash
+      |FROM cc JOIN med ON cc.doc_id = med.doc_id
+      |WHERE NOT (cc.u = 0 AND cc.v = 0)
+      |GROUP BY cc.doc_id)""".stripMargin
+  }
 }

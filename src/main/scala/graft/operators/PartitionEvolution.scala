@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.SparkEntry.{QueryDef, Sql}
 
 /** PARTITION-SPEC EVOLUTION on the versioned store — the table's
   * physical partitioning changes mid-life without rewriting history
@@ -130,4 +131,32 @@ object PartitionEvolution {
           .cast("decimal(28,2)").cast("double").as("total_price"))
       .orderBy(col("o_month"))
   }
+}
+
+/** The registered queries that call [[PartitionEvolution]]: name, builder and oracle.
+  * A separate object, so that building the registry loads these lists
+  * and not the operator object, which loads when a query runs.
+  */
+object PartitionEvolutionQueries {
+  import PartitionEvolution._
+
+  def queries: Seq[QueryDef] = Seq(
+    // PARTITION-SPEC EVOLUTION: history stays under the coarse spec
+    // (year), new data lands under the finer one (year, month); one
+    // read spans both — directory pruning on each version's own spec,
+    // residual row filter where the spec predates the column
+    QueryDef("q104_partition_evolution", monthlyRead(_, _),
+      // q104: evolution must be invisible in the data — the two-spec
+      // union read equals the plain monthly recompute. All-integer +
+      // exact decimal: bit-exact.
+      Sql("""SELECT CAST(month(CAST(o_orderdate AS DATE)) AS INT)
+        |    AS o_month,
+        |  CAST(count(*) AS BIGINT) AS n_orders,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+        |    AS total_price
+        |FROM orders
+        |WHERE year(CAST(o_orderdate AS DATE)) = 1998
+        |  AND month(CAST(o_orderdate AS DATE)) BETWEEN 1 AND 3
+        |GROUP BY 1 ORDER BY 1""")),
+  )
 }

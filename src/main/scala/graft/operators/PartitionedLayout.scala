@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.SparkEntry.{QueryDef, Sql}
 
 /** Hive-style partitioned layout — directory-level data skipping for
   * the time-filtered scan, the OTHER half of the physical-layout story
@@ -122,4 +123,48 @@ object PartitionedLayout {
         sum(col("value").cast("decimal(18,6)")).cast("double").as("sum_value"))
       .orderBy(col("event_date"), col("event_type"))
   }
+}
+
+/** The registered queries that call [[PartitionedLayout]]: name, builder and oracle.
+  * A separate object, so that building the registry loads these lists
+  * and not the operator object, which loads when a query runs.
+  */
+object PartitionedLayoutQueries {
+  import PartitionedLayout._
+
+  def queries: Seq[QueryDef] = Seq(
+    // Date-partitioned layout: the week filter resolves at directory-
+    // listing time (PartitionFilters, 7 of ~30 dirs read — spec-pinned)
+    QueryDef("q79_partition_pruning", weekSummary(_, _),
+      // q79: the oracle runs the same week filter/agg over the PLAIN
+      // events parquet — partitioning changes the I/O, not the answer.
+      // value folds as DECIMAL(18,6) on both engines; final cast to
+      // double (the q58 convention).
+      Sql("""WITH e AS (SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS event_date,
+        |    event_type, CAST(value AS DECIMAL(18,6)) AS v FROM events)
+        |SELECT event_date, event_type, count(*) AS n,
+        |  CAST(sum(v) AS DOUBLE) AS sum_value
+        |FROM e
+        |WHERE event_date BETWEEN DATE '2024-01-08' AND DATE '2024-01-14'
+        |GROUP BY 1, 2 ORDER BY 1, 2""")),
+
+    // DYNAMIC partition pruning: the dates come from filtering a dim
+    // table; DPP injects the runtime IN-subquery into the scan
+    QueryDef("q81_dynamic_pruning", campaignSummary(_, _),
+      // q81: the campaign dim is deterministic, so the oracle REBUILDS
+      // it (generate_series) and joins the plain events parquet — DPP
+      // changes which directories get read, not the answer.
+      Sql("""WITH cal AS (SELECT DATE '2024-01-01' + CAST(d - 1 AS INTEGER)
+        |    AS cal_date,
+        |    CASE WHEN d BETWEEN 5 AND 9 THEN 'A'
+        |         WHEN d BETWEEN 20 AND 22 THEN 'B' END AS flight
+        |  FROM generate_series(1, 31) t(d)),
+        |e AS (SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS event_date,
+        |    event_type, CAST(value AS DECIMAL(18,6)) AS v FROM events)
+        |SELECT event_date, event_type, count(*) AS n,
+        |  CAST(sum(v) AS DOUBLE) AS sum_value
+        |FROM e JOIN cal ON e.event_date = cal.cal_date
+        |WHERE cal.flight IN ('A', 'B')
+        |GROUP BY 1, 2 ORDER BY 1, 2""")),
+  )
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.SparkEntry.{QueryDef, Sql}
 
 /** Core relational operator battery (SURVEY.md §7.2 step 1-2).
   *
@@ -24,6 +25,25 @@ import graft.Tables
   *     materialization, per-partition heaps + single small merge).
   */
 object RelationalQueries {
+
+  // ── Aggregation (S4/M5/R1 generalized) ────────────────────────────────
+  /** Pricing summary: filtered scan, two-key group-by, sums and means
+    * of the line prices.
+    */
+  def pricingSummary(s: SparkSession, dir: String): DataFrame =
+    Tables.lineitem(s, dir)
+      .filter(col("l_shipdate") <= expr("TIMESTAMP '1998-09-02 00:00:00'"))
+      .groupBy(col("l_returnflag"), col("l_linestatus"))
+      .agg(
+        sum("l_quantity").as("sum_qty"),
+        sum("l_extendedprice").as("sum_base_price"),
+        sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("sum_disc_price"),
+        sum(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * (lit(1.0) + col("l_tax"))).as("sum_charge"),
+        avg("l_quantity").as("avg_qty"),
+        avg("l_extendedprice").as("avg_price"),
+        avg("l_discount").as("avg_disc"),
+        count(lit(1)).as("count_order"))
+      .orderBy("l_returnflag", "l_linestatus")
 
   // ── Filters & projection (F2/S4 generalized) ──────────────────────────
   /** Pushed-down predicate + column pruning: the parquet scan should
@@ -319,4 +339,213 @@ object RelationalQueries {
       .select(col("c_custkey"), col("c_nationkey"), col("c_acctbal"))
       .orderBy(col("c_custkey"))
   }
+}
+
+/** The registered queries that call [[RelationalQueries]]: name, builder and oracle.
+  * A separate object, so that building the registry loads these lists
+  * and not the operator object, which loads when a query runs.
+  */
+object RelationalQueriesQueries {
+  import RelationalQueries._
+
+  def queries: Seq[QueryDef] = Seq(
+    QueryDef("q1_pricing_summary", pricingSummary(_, _),
+      Sql("""SELECT l_returnflag, l_linestatus,
+        |  sum(l_quantity) AS sum_qty,
+        |  sum(l_extendedprice) AS sum_base_price,
+        |  sum(l_extendedprice * (1.0 - l_discount)) AS sum_disc_price,
+        |  sum(l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax)) AS sum_charge,
+        |  avg(l_quantity) AS avg_qty,
+        |  avg(l_extendedprice) AS avg_price,
+        |  avg(l_discount) AS avg_disc,
+        |  count(*) AS count_order
+        |FROM lineitem
+        |WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
+        |GROUP BY l_returnflag, l_linestatus
+        |ORDER BY l_returnflag, l_linestatus""")),
+
+    QueryDef("q2_filter_project", filterProject(_, _),
+      Sql("""SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice
+        |FROM lineitem
+        |WHERE l_quantity > 45 AND l_shipdate >= TIMESTAMP '2000-01-01 00:00:00'
+        |ORDER BY l_orderkey, l_linenumber""")),
+
+    QueryDef("q3_shipping_priority", shippingPriority(_, _),
+      Sql("""SELECT l_orderkey,
+        |  CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
+        |    AS DECIMAL(18,4))) AS DOUBLE) AS revenue, o_orderdate
+        |FROM customer, orders, lineitem
+        |WHERE c_mktsegment = 'BUILDING' AND c_custkey = o_custkey
+        |  AND l_orderkey = o_orderkey
+        |  AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
+        |GROUP BY l_orderkey, o_orderdate
+        |ORDER BY revenue DESC, l_orderkey
+        |LIMIT 10""")),
+
+    QueryDef("q4_star_broadcast", revenueByNation(_, _),
+      Sql("""SELECT r_name, n_name,
+        |  sum(l_extendedprice * (1.0 - l_discount)) AS revenue,
+        |  count(*) AS n_items
+        |FROM lineitem, supplier, nation, region
+        |WHERE l_suppkey = s_suppkey AND s_nationkey = n_nationkey
+        |  AND n_regionkey = r_regionkey
+        |GROUP BY r_name, n_name
+        |ORDER BY r_name, n_name""")),
+
+    QueryDef("q5_semi_join", semiJoin(_, _),
+      Sql("""SELECT c_custkey, c_name FROM customer c
+        |WHERE EXISTS (SELECT 1 FROM orders o
+        |  WHERE o.o_custkey = c.c_custkey
+        |    AND o_orderpriority = '1-URGENT' AND o_orderstatus = 'O')
+        |ORDER BY c_custkey""")),
+
+    QueryDef("q6_anti_join", antiJoin(_, _),
+      Sql("""SELECT c_custkey, c_name, c_acctbal FROM customer c
+        |WHERE NOT EXISTS (SELECT 1 FROM orders o
+        |  WHERE o.o_custkey = c.c_custkey AND year(o.o_orderdate) = 2001)
+        |ORDER BY c_custkey""")),
+
+    QueryDef("q7_left_outer", leftOuterJoin(_, _),
+      Sql("""SELECT n_name,
+        |  coalesce(cnt, 0) AS n_customers,
+        |  coalesce(bal, 0.0) AS total_acctbal
+        |FROM nation LEFT JOIN (
+        |  SELECT c_nationkey, count(*) AS cnt, sum(c_acctbal) AS bal
+        |  FROM customer GROUP BY c_nationkey
+        |) c ON n_nationkey = c_nationkey
+        |ORDER BY n_name""")),
+
+    QueryDef("q8_full_outer", fullOuterJoin(_, _),
+      Sql("""SELECT coalesce(nk_c, nk_s) AS nationkey,
+        |  coalesce(n_customers, 0) AS n_customers,
+        |  coalesce(n_suppliers, 0) AS n_suppliers
+        |FROM (SELECT c_nationkey AS nk_c, count(*) AS n_customers
+        |      FROM customer GROUP BY 1) c
+        |FULL OUTER JOIN (SELECT s_nationkey AS nk_s, count(*) AS n_suppliers
+        |      FROM supplier GROUP BY 1) s
+        |ON nk_c = nk_s
+        |ORDER BY nationkey""")),
+
+    QueryDef("q9_distinct_agg", distinctAgg(_, _),
+      Sql("""SELECT o_orderstatus,
+        |  count(DISTINCT o_custkey) AS n_custs,
+        |  count(DISTINCT o_orderpriority) AS n_prios,
+        |  CAST(sum(DISTINCT o_custkey) AS BIGINT) AS sum_distinct_cust,
+        |  count(*) AS n_orders
+        |FROM orders GROUP BY o_orderstatus
+        |ORDER BY o_orderstatus""")),
+
+    QueryDef("q10_rollup", rollupRevenue(_, _),
+      Sql("""SELECT coalesce(r_name, 'ALL') AS region,
+        |  coalesce(n_name, 'ALL') AS nation,
+        |  sum(c_acctbal) AS total_bal, count(*) AS n_custs
+        |FROM customer
+        |JOIN nation ON c_nationkey = n_nationkey
+        |JOIN region ON n_regionkey = r_regionkey
+        |GROUP BY ROLLUP(r_name, n_name)
+        |ORDER BY region, nation""")),
+
+    QueryDef("q11_grouping_sets", groupingSets(_, _),
+      Sql("""SELECT coalesce(o_orderstatus, 'ALL') AS status,
+        |  coalesce(o_orderpriority, 'ALL') AS priority,
+        |  sum(o_totalprice) AS total_price, count(*) AS n_orders
+        |FROM orders
+        |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
+        |ORDER BY status, priority""")),
+
+    QueryDef("q12_having", havingFilter(_, _),
+      Sql("""SELECT c_nationkey, sum(c_acctbal) AS total_bal, count(*) AS n_custs
+        |FROM customer GROUP BY c_nationkey
+        |HAVING sum(c_acctbal) > 10000.0
+        |ORDER BY c_nationkey""")),
+
+    QueryDef("q13_case_pivot", casePivot(_, _),
+      Sql("""SELECT o_orderstatus,
+        |  sum(CASE WHEN o_orderpriority = '1-URGENT' THEN o_totalprice ELSE 0.0 END) AS urgent_total,
+        |  sum(CASE WHEN o_orderpriority = '2-HIGH' THEN o_totalprice ELSE 0.0 END) AS high_total,
+        |  sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT','2-HIGH') THEN o_totalprice ELSE 0.0 END) AS other_total,
+        |  count(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 END) AS n_urgent
+        |FROM orders GROUP BY o_orderstatus
+        |ORDER BY o_orderstatus""")),
+
+    QueryDef("q14_window_rank", windowRank(_, _),
+      Sql("""SELECT o_custkey, o_orderkey, o_totalprice, rn, drk FROM (
+        |  SELECT o_custkey, o_orderkey, o_totalprice,
+        |    CAST(row_number() OVER w AS INT) AS rn,
+        |    CAST(dense_rank() OVER w AS INT) AS drk
+        |  FROM orders
+        |  WINDOW w AS (PARTITION BY o_custkey
+        |               ORDER BY o_totalprice DESC, o_orderkey)
+        |) WHERE rn <= 3
+        |ORDER BY o_custkey, rn""")),
+
+    QueryDef("q15_window_running", windowRunning(_, _),
+      Sql("""SELECT user_id, event_id, value,
+        |  CAST(sum(CAST(value AS DECIMAL(18,6))) OVER (PARTITION BY user_id
+        |    ORDER BY CAST(ts AS TIMESTAMP), event_id
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
+        |    AS running_value,
+        |  value - lag(value, 1) OVER (PARTITION BY user_id
+        |    ORDER BY CAST(ts AS TIMESTAMP), event_id) AS delta_prev
+        |FROM events
+        |ORDER BY user_id, event_id""")),
+
+    QueryDef("q16_topk", topkOrders(_, _),
+      Sql("""SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+        |ORDER BY o_totalprice DESC, o_orderkey
+        |LIMIT 25""")),
+
+    QueryDef("q17_set_ops", setOps(_, _),
+      Sql("""WITH w95 AS (SELECT DISTINCT o_custkey FROM orders
+        |             WHERE year(o_orderdate) = 1995),
+        |     w96 AS (SELECT DISTINCT o_custkey FROM orders
+        |             WHERE year(o_orderdate) = 1996)
+        |SELECT 'both' AS tag, o_custkey
+        |  FROM (SELECT * FROM w95 INTERSECT SELECT * FROM w96)
+        |UNION ALL
+        |SELECT 'only95' AS tag, o_custkey
+        |  FROM (SELECT * FROM w95 EXCEPT SELECT * FROM w96)
+        |UNION ALL
+        |SELECT 'only96' AS tag, o_custkey
+        |  FROM (SELECT * FROM w96 EXCEPT SELECT * FROM w95)
+        |ORDER BY tag, o_custkey""")),
+
+    QueryDef("q18_string_funcs", stringFuncs(_, _),
+      Sql("""SELECT p_partkey,
+        |  upper(p_name) AS upper_name,
+        |  lower(p_brand) AS lower_brand,
+        |  CAST(length(p_name) AS INT) AS name_len,
+        |  substring(p_name, 1, 5) AS name_pfx,
+        |  concat_ws('/', p_brand, p_type) AS brand_type,
+        |  regexp_extract(p_name, '([a-z]+)', 1) AS first_word,
+        |  regexp_replace(p_type, ' ', '_', 'g') AS type_snake,
+        |  trim(p_name) AS trimmed,
+        |  contains(p_name, 'a') AS has_a
+        |FROM part ORDER BY p_partkey""")),
+
+    QueryDef("q19_date_funcs", dateFuncs(_, _),
+      Sql("""SELECT CAST(year(o_orderdate) AS INT) AS yr,
+        |  CAST(month(o_orderdate) AS INT) AS mo,
+        |  count(*) AS n_orders, sum(o_totalprice) AS total
+        |FROM orders GROUP BY 1, 2
+        |ORDER BY yr, mo""")),
+
+    QueryDef("q20_math_funcs", mathFuncs(_, _),
+      Sql("""SELECT
+        |  sum(abs(l_discount - 0.05)) AS sum_abs,
+        |  sum(sqrt(l_quantity)) AS sum_sqrt,
+        |  sum(ln(l_extendedprice + 1.0)) AS sum_ln,
+        |  sum(pow(l_discount, 2)) AS sum_sq,
+        |  max(greatest(l_tax, l_discount)) AS max_rate,
+        |  min(least(l_tax, l_discount)) AS min_rate
+        |FROM lineitem""")),
+
+    QueryDef("q21_above_avg", aboveNationAvg(_, _),
+      Sql("""SELECT c_custkey, c_nationkey, c_acctbal FROM customer c
+        |JOIN (SELECT c_nationkey AS nk, avg(c_acctbal) AS nation_avg
+        |      FROM customer GROUP BY 1) a
+        |ON c.c_nationkey = a.nk
+        |WHERE c_acctbal > nation_avg
+        |ORDER BY c_custkey""")),
+  )
 }

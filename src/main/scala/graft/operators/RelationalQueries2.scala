@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.TextFunctions.hash64
+import graft.SparkEntry.{Approx, AtMost, Bound, QueryDef, Sql, SqlFn}
 
 /** Second relational battery: multiset set-ops, native pivot,
   * deterministic sampling, exact percentiles, statistical aggregates,
@@ -401,5 +402,199 @@ object RelationalQueries2 {
       .agg(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("revenue"),
         count(lit(1)).as("n_items"))
       .orderBy(col("o_orderstatus"))
+  }
+}
+
+/** The registered queries that call [[RelationalQueries2]]: name, builder and oracle.
+  * A separate object, so that building the registry loads these lists
+  * and not the operator object, which loads when a query runs.
+  */
+object RelationalQueries2Queries {
+  import RelationalQueries2._
+
+  def queries: Seq[QueryDef] = Seq(
+    QueryDef("q22_multiset_ops", multisetOps(_, _),
+      Sql("""WITH c95 AS (SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1995),
+        |     c96 AS (SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1996)
+        |SELECT 'except_all' AS tag, o_custkey
+        |  FROM (SELECT * FROM c95 EXCEPT ALL SELECT * FROM c96)
+        |UNION ALL
+        |SELECT 'intersect_all' AS tag, o_custkey
+        |  FROM (SELECT * FROM c95 INTERSECT ALL SELECT * FROM c96)
+        |ORDER BY tag, o_custkey""")),
+
+    QueryDef("q23_pivot", pivotPriorities(_, _),
+      Sql("""SELECT o_orderstatus,
+        |  sum(CASE WHEN o_orderpriority = '1-URGENT' THEN o_totalprice END) AS "1-URGENT",
+        |  sum(CASE WHEN o_orderpriority = '2-HIGH' THEN o_totalprice END) AS "2-HIGH",
+        |  sum(CASE WHEN o_orderpriority = '3-MEDIUM' THEN o_totalprice END) AS "3-MEDIUM",
+        |  sum(CASE WHEN o_orderpriority = '4-NOT SPECIFIED' THEN o_totalprice END) AS "4-NOT SPECIFIED",
+        |  sum(CASE WHEN o_orderpriority = '5-LOW' THEN o_totalprice END) AS "5-LOW"
+        |FROM orders GROUP BY o_orderstatus
+        |ORDER BY o_orderstatus""")),
+
+    QueryDef("q24_hash_sample", hashSample(_, _),
+      Sql("""SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
+        |WHERE CAST('0x' || substr(md5(l_orderkey || '_' || l_linenumber), 1, 15) AS BIGINT) % 100 < 10
+        |ORDER BY l_orderkey, l_linenumber""")),
+
+    QueryDef("q25_percentiles", percentiles(_, _),
+      Sql("""SELECT l_returnflag,
+        |  quantile_cont(l_quantity, 0.5) AS p50_qty,
+        |  quantile_cont(l_quantity, 0.9) AS p90_qty,
+        |  quantile_cont(l_extendedprice, 0.25) AS p25_price
+        |FROM lineitem GROUP BY l_returnflag
+        |ORDER BY l_returnflag""")),
+
+    QueryDef("q26_stats", stats(_, _),
+      // Two-pass deviation form mirrored from stats:
+      // both engines sum identical same-sign deviation products, so the
+      // results agree to near-ulp (single-pass moment aggregates diverge
+      // past ~9 significant digits from merge-order cancellation).
+      Sql("""WITH mu AS (
+        |  SELECT l_returnflag,
+        |    avg(l_quantity) AS mu_qty, avg(l_extendedprice) AS mu_price,
+        |    avg(l_discount) AS mu_disc, avg(l_tax) AS mu_tax
+        |  FROM lineitem GROUP BY l_returnflag)
+        |SELECT l.l_returnflag,
+        |  sqrt(sum((l_quantity - mu_qty) * (l_quantity - mu_qty))
+        |       / (count(*) - 1)) AS sd_qty,
+        |  sum((l_extendedprice - mu_price) * (l_extendedprice - mu_price))
+        |       / (count(*) - 1) AS var_price,
+        |  sum((l_quantity - mu_qty) * (l_extendedprice - mu_price))
+        |    / sqrt(sum((l_quantity - mu_qty) * (l_quantity - mu_qty))
+        |           * sum((l_extendedprice - mu_price) * (l_extendedprice - mu_price)))
+        |    AS corr_qty_price,
+        |  sum((l_discount - mu_disc) * (l_tax - mu_tax))
+        |       / (count(*) - 1) AS cov_disc_tax
+        |FROM lineitem l JOIN mu USING (l_returnflag)
+        |GROUP BY l.l_returnflag
+        |ORDER BY l_returnflag""")),
+
+    // HLL sketches are engine-specific — Spark's and DuckDB's
+    // approx_count_distinct disagree within their error bounds, so a hash
+    // compare is meaningless. Contract: the sketch's distinct order count
+    // within 5 % of the exact one.
+    QueryDef("q27_approx_distinct", approxDistinct(_, _),
+      Approx(Bound("q27_hll_rel_err", hllRelErr, AtMost(0.05)))),
+
+    // Skew join, production shape: only DETECTED hot keys are salted
+    // (none at this key cardinality → runtime tracks the plain join);
+    // result equals the PLAIN join oracle by design. The full-salt
+    // variant (saltedJoinRevenue) stays as the spec's reference.
+    // CAVEAT: the DuckDB oracle below is the plain join — salting is
+    // oracle-INVISIBLE by construction (it changes only shuffle layout,
+    // never the join result), so edits to the salt path must keep that
+    // invariant or the oracle will not catch a salt-induced bug; the
+    // PlanChecksSpec construction/broadcast assertions are the guard.
+    QueryDef("q28_skew_join", hotKeySaltedJoinRevenue(_, _),
+      Sql("""SELECT o_orderstatus,
+        |  sum(l_extendedprice * (1.0 - l_discount)) AS revenue,
+        |  count(*) AS n_items
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |GROUP BY o_orderstatus
+        |ORDER BY o_orderstatus""")),
+
+    QueryDef("q29_json_extract", jsonExtract(_, _),
+      Sql("""SELECT event_type,
+        |  CAST(sum(json_extract(props, '$.k')::INT) AS BIGINT) AS sum_k,
+        |  avg(json_extract(props, '$.k')::INT) AS avg_k,
+        |  count(json_extract(props, '$.k')) AS n_with_k
+        |FROM events GROUP BY event_type
+        |ORDER BY event_type""")),
+
+    QueryDef("q30_string_agg", stringAgg(_, _),
+      Sql("""SELECT o_orderpriority,
+        |  string_agg(DISTINCT o_orderstatus, ',' ORDER BY o_orderstatus) AS statuses,
+        |  count(DISTINCT o_custkey) AS n_custs
+        |FROM orders GROUP BY o_orderpriority
+        |ORDER BY o_orderpriority""")),
+
+    QueryDef("q31_explode_words", explodeWords(_, _),
+      Sql("""SELECT word, count(*) AS n FROM (
+        |  SELECT unnest(string_split(lower(p_name), ' ')) AS word FROM part)
+        |WHERE word <> '' GROUP BY word ORDER BY word""")),
+
+    QueryDef("q32_arg_max", argMax(_, _),
+      Sql("""WITH r AS (SELECT o_orderstatus, o_orderkey, o_totalprice,
+        |  row_number() OVER (PARTITION BY o_orderstatus
+        |    ORDER BY o_totalprice DESC, o_orderkey DESC) AS rmax,
+        |  row_number() OVER (PARTITION BY o_orderstatus
+        |    ORDER BY o_totalprice ASC, o_orderkey ASC) AS rmin
+        |  FROM orders)
+        |SELECT o_orderstatus,
+        |  max(CASE WHEN rmax = 1 THEN o_orderkey END) AS top_orderkey,
+        |  max(o_totalprice) AS top_price,
+        |  max(CASE WHEN rmin = 1 THEN o_orderkey END) AS bottom_orderkey
+        |FROM r GROUP BY o_orderstatus
+        |ORDER BY o_orderstatus""")),
+
+    QueryDef("q33_date_arith", dateArith(_, _),
+      Sql("""SELECT o_orderstatus,
+        |  avg(lag_days) AS avg_lag_days,
+        |  max(lag_days) AS max_lag_days,
+        |  min(lag_days) AS min_lag_days
+        |FROM (SELECT o_orderstatus,
+        |    CAST(datediff('day', o_orderdate::DATE, l_shipdate::DATE) AS INT) AS lag_days
+        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey)
+        |GROUP BY o_orderstatus ORDER BY o_orderstatus""")),
+
+    QueryDef("q36_window_range", windowRangeFrame(_, _),
+      Sql("""SELECT o_orderkey, o_orderstatus, o_totalprice,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(12,2))) OVER w AS DOUBLE)
+        |    AS rolling_1k,
+        |  count(*) OVER w AS n_within_1k
+        |FROM orders
+        |WINDOW w AS (PARTITION BY o_orderstatus ORDER BY o_totalprice
+        |             RANGE BETWEEN 1000 PRECEDING AND CURRENT ROW)
+        |ORDER BY o_orderkey""")),
+
+    QueryDef("q37_window_dist", windowDistributions(_, _),
+      Sql("""SELECT o_orderkey, o_orderstatus, o_totalprice,
+        |  CAST(ntile(4) OVER w AS INT) AS quartile,
+        |  percent_rank() OVER w AS pct_rank,
+        |  cume_dist() OVER w AS cume,
+        |  first_value(o_orderkey) OVER w AS cheapest_orderkey,
+        |  nth_value(o_orderkey, 2) OVER wf AS second_cheapest_orderkey,
+        |  last_value(o_orderkey) OVER wf AS priciest_orderkey
+        |FROM orders
+        |WINDOW w AS (PARTITION BY o_orderstatus
+        |             ORDER BY o_totalprice, o_orderkey),
+        |  wf AS (PARTITION BY o_orderstatus
+        |         ORDER BY o_totalprice, o_orderkey
+        |         ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
+        |ORDER BY o_orderkey""")),
+
+    // Same SQL text runs on both engines (spark.sql surface demo).
+    QueryDef("q38_scalar_subquery", scalarSubquery(_, _),
+      SqlFn(() => ScalarSubquerySql)),
+
+    QueryDef("q39_unpivot", unpivotRevenue(_, _),
+      // unpivot(pivot(x)) with null cells dropped == the plain long-form
+      // aggregation over the SAME fixed value list the pivot declares
+      // (the IN mirrors pivot's explicit-values contract: an out-of-list
+      // priority is excluded on both engines, not just by the pivot).
+      Sql("""SELECT o_orderstatus, o_orderpriority AS priority,
+        |  sum(o_totalprice) AS total
+        |FROM orders
+        |WHERE o_orderpriority IN
+        |  ('1-URGENT','2-HIGH','3-MEDIUM','4-NOT SPECIFIED','5-LOW')
+        |GROUP BY o_orderstatus, o_orderpriority
+        |ORDER BY o_orderstatus, priority""")),
+
+    QueryDef("q40_cube", cubeRevenue(_, _),
+      Sql("""SELECT coalesce(o_orderstatus, 'ALL') AS status,
+        |  coalesce(o_orderpriority, 'ALL') AS priority,
+        |  sum(o_totalprice) AS total_price, count(*) AS n_orders
+        |FROM orders
+        |GROUP BY CUBE(o_orderstatus, o_orderpriority)
+        |ORDER BY status, priority""")),
+  )
+
+  /** q27: |approx − exact| / exact distinct order count. */
+  private def hllRelErr(s: SparkSession, dir: String): Double = {
+    val r = approxDistinct(s, dir)
+      .select("approx_orders", "exact_orders").head()
+    math.abs(r.getLong(0).toDouble - r.getLong(1)) / r.getLong(1)
   }
 }

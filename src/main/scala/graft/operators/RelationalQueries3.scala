@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.SparkEntry.{QueryDef, Sql}
 
 /** Round-3 relational battery: correlated-subquery shapes (EXISTS /
   * NOT EXISTS / correlated aggregate), multi-fact star joins, ratio and
@@ -107,7 +108,10 @@ object RelationalQueries3 {
       .agg(avg(col("l_quantity")).as("avg_qty"))
     l.join(avgQty, l("l_partkey") === col("ap_partkey"))
       .filter(col("l_quantity") < lit(frac) * col("avg_qty"))
-      .agg(sum(col("l_extendedprice")).as("total_price"),
+      // DECIMAL(18,4) term sum (q58's merge-order lesson): exact
+      // associative addition → bit-exact vs the oracle in any order
+      .agg(sum(col("l_extendedprice").cast("decimal(18,4)")).cast("double")
+        .as("total_price"),
         count(lit(1)).as("n_items"))
   }
 
@@ -398,8 +402,9 @@ object RelationalQueries3 {
       .join(c, col("o_custkey") === col("c_custkey"))
       .groupBy(col("c_custkey"), col("c_name"), col("c_acctbal"),
         col("n_name"))
-      .agg(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-        .as("revenue"))
+      // DECIMAL(18,4) term sum (q58's merge-order lesson)
+      .agg(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
+        .cast("decimal(18,4)")).cast("double").as("revenue"))
       .orderBy(col("revenue").desc, col("c_custkey"))
       .limit(topK)
   }
@@ -1040,4 +1045,462 @@ object RelationalQueries3 {
         sum(col("price")).cast("double").as("total_price"))
       .orderBy(col("c_mktsegment"))
   }
+}
+
+/** The registered queries that call [[RelationalQueries3]]: name, builder and oracle.
+  * A separate object, so that building the registry loads these lists
+  * and not the operator object, which loads when a query runs.
+  */
+object RelationalQueries3Queries {
+  import RelationalQueries3._
+
+  def queries: Seq[QueryDef] = Seq(
+    // TPC-H Q2 shape: argmax supplier over the derived part↔supplier
+    // junction, region-pruned, heap-k presentation
+    QueryDef("q59_best_supplier", bestSupplierPerPart(_, _),
+      Sql("""WITH junction AS (SELECT DISTINCT l_partkey, l_suppkey, p_name
+        |  FROM lineitem JOIN part ON p_partkey = l_partkey
+        |  WHERE p_type = 'SMALL'),
+        |supp AS (SELECT s_suppkey, s_name, s_acctbal, n_name
+        |  FROM supplier
+        |  JOIN nation ON n_nationkey = s_nationkey
+        |  JOIN region ON r_regionkey = n_regionkey
+        |  WHERE r_name = 'EUROPE'),
+        |ranked AS (SELECT j.l_partkey AS p_partkey, j.p_name,
+        |    s.s_acctbal, s.s_suppkey, s.s_name, s.n_name,
+        |    row_number() OVER (PARTITION BY j.l_partkey
+        |      ORDER BY s.s_acctbal DESC, s.s_suppkey) AS rn
+        |  FROM junction j JOIN supp s ON j.l_suppkey = s.s_suppkey)
+        |SELECT p_partkey, p_name, s_acctbal, s_suppkey, s_name, n_name
+        |FROM ranked WHERE rn = 1
+        |ORDER BY s_acctbal DESC, p_partkey LIMIT 100""")),
+
+    QueryDef("q41_exists", existsLateShip(_, _),
+      Sql("""SELECT o_orderpriority, count(*) AS order_count
+        |FROM orders o
+        |WHERE EXISTS (SELECT 1 FROM lineitem l
+        |  WHERE l.l_orderkey = o.o_orderkey AND l.l_shipdate > o.o_orderdate)
+        |GROUP BY o_orderpriority
+        |ORDER BY o_orderpriority""")),
+
+    QueryDef("q42_not_exists", noBigOrderCustomers(_, _),
+      Sql("""SELECT c_mktsegment, count(*) AS n_customers,
+        |  CAST(sum(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE)
+        |    / CAST(count(*) AS DOUBLE) AS avg_acctbal
+        |FROM customer c
+        |WHERE NOT EXISTS (SELECT 1 FROM orders o
+        |  WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 400000.0)
+        |GROUP BY c_mktsegment
+        |ORDER BY c_mktsegment""")),
+
+    QueryDef("q43_cust_dist", custOrderDistribution(_, _),
+      Sql("""SELECT c_count, count(*) AS custdist FROM (
+        |  SELECT c.c_custkey, count(o.o_orderkey) AS c_count
+        |  FROM customer c LEFT JOIN orders o ON c.c_custkey = o.o_custkey
+        |  GROUP BY c.c_custkey)
+        |GROUP BY c_count
+        |ORDER BY c_count""")),
+
+    QueryDef("q44_promo_share", promoRevenueShare(_, _),
+      Sql("""SELECT date_trunc('month', l_shipdate) AS ship_month,
+        |  sum(CASE WHEN p_type = 'PROMO'
+        |      THEN l_extendedprice * (1.0 - l_discount) ELSE 0.0 END)
+        |    AS promo_revenue,
+        |  sum(l_extendedprice * (1.0 - l_discount)) AS total_revenue,
+        |  100.0 * sum(CASE WHEN p_type = 'PROMO'
+        |      THEN l_extendedprice * (1.0 - l_discount) ELSE 0.0 END)
+        |    / sum(l_extendedprice * (1.0 - l_discount)) AS promo_pct
+        |FROM lineitem JOIN part ON l_partkey = p_partkey
+        |WHERE l_shipdate >= TIMESTAMP '2000-01-01 00:00:00'
+        |  AND l_shipdate < TIMESTAMP '2001-01-01 00:00:00'
+        |GROUP BY date_trunc('month', l_shipdate)
+        |ORDER BY ship_month""")),
+
+    QueryDef("q45_small_qty", smallQtyRevenue(_, _),
+      // Decorrelated two-phase form on BOTH engines: identical row set,
+      // identical arithmetic (a correlated subquery would re-aggregate
+      // per row — same value, but the point is matched semantics).
+      Sql("""WITH pa AS (SELECT l_partkey AS ap_partkey, avg(l_quantity) AS avg_qty
+        |  FROM lineitem GROUP BY l_partkey)
+        |SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE)
+        |    AS total_price, count(*) AS n_items
+        |FROM lineitem JOIN pa ON l_partkey = ap_partkey
+        |WHERE l_quantity < 0.5 * avg_qty""")),
+
+    QueryDef("q46_regex", regexBattery(_, _),
+      Sql("""SELECT doc_id,
+        |  regexp_extract(text, 'sp\w+') AS first_sp_word,
+        |  length(regexp_replace(text, '[aeiou]', '', 'g')) AS len_no_vowels,
+        |  CAST(regexp_matches(text, 'join\s+order') AS INT) AS has_join_order,
+        |  len(string_split_regex(text, '\bscan\b')) - 1 AS n_scan
+        |FROM documents ORDER BY doc_id""")),
+
+    QueryDef("q47_array_funcs", arrayBattery(_, _),
+      Sql("""SELECT doc_id,
+        |  len(w) AS n_words,
+        |  len(list_distinct(w)) AS n_distinct,
+        |  array_to_string(list_sort(list_distinct(w))[1:3], ',')
+        |    AS first3_sorted,
+        |  w[-1] AS last_word,
+        |  CAST(list_contains(w, 'spark') AS INT) AS has_spark
+        |FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)
+        |ORDER BY doc_id""")),
+
+    QueryDef("q48_histogram", priceHistogram(_, _),
+      Sql("""SELECT bucket, n_orders, bucket_value,
+        |  100.0 * n_orders / sum(n_orders) OVER () AS pct_orders
+        |FROM (
+        |  SELECT CAST(floor(o_totalprice / 50000.0) AS BIGINT) AS bucket,
+        |    count(*) AS n_orders, sum(o_totalprice) AS bucket_value
+        |  FROM orders GROUP BY 1)
+        |ORDER BY bucket""")),
+
+    QueryDef("q49_local_supplier", localSupplierRevenue(_, _),
+      Sql("""SELECT n_name,
+        |  CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
+        |    AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
+        |  count(*) AS n_items
+        |FROM customer
+        |JOIN nation ON c_nationkey = n_nationkey
+        |JOIN region ON n_regionkey = r_regionkey
+        |JOIN orders ON c_custkey = o_custkey
+        |JOIN lineitem ON o_orderkey = l_orderkey
+        |JOIN supplier ON l_suppkey = s_suppkey
+        |  AND c_nationkey = s_nationkey
+        |WHERE r_name = 'ASIA'
+        |GROUP BY n_name
+        |ORDER BY n_name""")),
+
+    QueryDef("q50_top_supplier", topSupplier(_, _),
+      Sql("""WITH rev AS (
+        |  SELECT l_suppkey, sum(l_extendedprice * (1.0 - l_discount))
+        |    AS total_revenue
+        |  FROM lineitem
+        |  WHERE l_shipdate >= TIMESTAMP '2000-01-01 00:00:00'
+        |    AND l_shipdate < TIMESTAMP '2000-07-01 00:00:00'
+        |  GROUP BY l_suppkey)
+        |SELECT s_suppkey, s_name, total_revenue
+        |FROM rev JOIN supplier ON l_suppkey = s_suppkey
+        |WHERE total_revenue = (SELECT max(total_revenue) FROM rev)
+        |ORDER BY s_suppkey""")),
+
+    // TPC-H Q21 shape: EXISTS + NOT EXISTS on the same fact, same key
+    QueryDef("q53_sole_late_supplier", soleLateSupplier(_, _),
+      Sql("""WITH late AS (
+        |  SELECT l_orderkey, l_suppkey, o_orderstatus
+        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |  WHERE l_shipdate > o_orderdate + INTERVAL '30 days')
+        |SELECT s_name, count(*) AS numwait
+        |FROM late l1 JOIN supplier ON l1.l_suppkey = s_suppkey
+        |WHERE l1.o_orderstatus = 'F'
+        |  AND EXISTS (SELECT 1 FROM lineitem l2
+        |    WHERE l2.l_orderkey = l1.l_orderkey
+        |      AND l2.l_suppkey <> l1.l_suppkey)
+        |  AND NOT EXISTS (SELECT 1 FROM late l3
+        |    WHERE l3.l_orderkey = l1.l_orderkey
+        |      AND l3.l_suppkey <> l1.l_suppkey)
+        |GROUP BY s_name
+        |ORDER BY numwait DESC, s_name""")),
+
+    // Bilateral trade volume by ship year (TPC-H Q7's shape): nation
+    // pair broadcast-pruned onto supplier/customer before the facts
+    QueryDef("q54_volume_shipping", volumeShipping(_, _),
+      Sql("""SELECT supp_nation, cust_nation, l_year,
+        |  CAST(sum(CAST(volume AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+        |FROM (SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+        |    CAST(year(l_shipdate) AS INT) AS l_year,
+        |    l_extendedprice * (1.0 - l_discount) AS volume
+        |  FROM supplier, lineitem, orders, customer, nation n1, nation n2
+        |  WHERE s_suppkey = l_suppkey AND o_orderkey = l_orderkey
+        |    AND c_custkey = o_custkey AND s_nationkey = n1.n_nationkey
+        |    AND c_nationkey = n2.n_nationkey
+        |    AND ((n1.n_name = 'NATION_13' AND n2.n_name = 'NATION_19')
+        |      OR (n1.n_name = 'NATION_19' AND n2.n_name = 'NATION_13'))
+        |    AND l_shipdate BETWEEN '1995-01-01' AND '1996-12-31')
+        |GROUP BY supp_nation, cust_nation, l_year
+        |ORDER BY supp_nation, cust_nation, l_year""")),
+
+    // National market share in a region (TPC-H Q8's shape):
+    // conditional-sum share over a fully dimension-pruned star
+    QueryDef("q55_market_share", marketShare(_, _),
+      Sql("""SELECT o_year,
+        |  CAST(sum(CAST(CASE WHEN nation = 'NATION_3' THEN volume ELSE 0 END
+        |      AS DECIMAL(18,4))) AS DOUBLE)
+        |    / CAST(sum(CAST(volume AS DECIMAL(18,4))) AS DOUBLE) AS mkt_share
+        |FROM (SELECT CAST(year(o_orderdate) AS INT) AS o_year,
+        |    l_extendedprice * (1.0 - l_discount) AS volume,
+        |    n2.n_name AS nation
+        |  FROM part, supplier, lineitem, orders, customer,
+        |    nation n1, nation n2, region
+        |  WHERE p_partkey = l_partkey AND s_suppkey = l_suppkey
+        |    AND l_orderkey = o_orderkey AND o_custkey = c_custkey
+        |    AND c_nationkey = n1.n_nationkey
+        |    AND n1.n_regionkey = r_regionkey AND r_name = 'EUROPE'
+        |    AND s_nationkey = n2.n_nationkey
+        |    AND o_orderdate BETWEEN '1995-01-01' AND '1996-12-31'
+        |    AND p_type = 'ECONOMY')
+        |GROUP BY o_year ORDER BY o_year""")),
+
+    // Returned-item revenue top-20 (TPC-H Q10): heap-k, no total sort
+    QueryDef("q56_returned_revenue", returnedRevenue(_, _),
+      Sql("""SELECT c_custkey, c_name, c_acctbal, n_name,
+        |  CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
+        |    AS DECIMAL(18,4))) AS DOUBLE) AS revenue
+        |FROM customer, orders, lineitem, nation
+        |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
+        |  AND o_orderdate >= '1995-01-01' AND o_orderdate < '1996-01-01'
+        |  AND l_returnflag = 'R' AND c_nationkey = n_nationkey
+        |GROUP BY c_custkey, c_name, c_acctbal, n_name
+        |ORDER BY revenue DESC, c_custkey LIMIT 20""")),
+
+    // Disjunctive bracket revenue (TPC-H Q19): OR'd brand/size/qty
+    // brackets over one broadcast probe, zero fact shuffles
+    QueryDef("q57_bracket_revenue", bracketRevenue(_, _),
+      Sql("""SELECT CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
+        |    AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
+        |  count(*) AS n_items
+        |FROM lineitem JOIN part ON p_partkey = l_partkey
+        |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
+        |    AND l_quantity BETWEEN 1 AND 11)
+        |  OR (p_brand = 'Brand#2' AND p_size BETWEEN 1 AND 25
+        |    AND l_quantity BETWEEN 10 AND 20)
+        |  OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 35
+        |    AND l_quantity BETWEEN 20 AND 30)""")),
+
+    // Product-line profit by nation and year (TPC-H Q9 shape, cost
+    // proxied off p_retailprice): selective part probe FIRST
+    QueryDef("q58_profit", profitByNationYear(_, _),
+      Sql("""SELECT n_name, CAST(year(o_orderdate) AS INT) AS o_year,
+        |  CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
+        |      - 0.6 * p_retailprice * l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS profit
+        |FROM lineitem
+        |JOIN part ON p_partkey = l_partkey
+        |JOIN supplier ON s_suppkey = l_suppkey
+        |JOIN nation ON n_nationkey = s_nationkey
+        |JOIN orders ON o_orderkey = l_orderkey
+        |WHERE p_name LIKE '%red%'
+        |GROUP BY n_name, o_year
+        |ORDER BY n_name, o_year DESC""")),
+
+    // Large-volume orders (TPC-H Q18 shape): HAVING on the pre-join
+    // aggregate, co-partitioned orderkey join, TakeOrdered top-100
+    QueryDef("q67_big_orders", bigOrders(_, _),
+      Sql("""WITH big AS (SELECT l_orderkey, sum(l_quantity) AS sum_qty
+        |  FROM lineitem GROUP BY l_orderkey HAVING sum(l_quantity) > 250.0)
+        |SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice, sum_qty
+        |FROM big
+        |JOIN orders ON o_orderkey = l_orderkey
+        |JOIN customer ON c_custkey = o_custkey
+        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""")),
+
+    // Dormant customers (TPC-H Q22 shape): above-average balance, no
+    // orders since the cutoff; division-free exact-decimal threshold
+    QueryDef("q68_dormant_customers", lostCustomers(_, _),
+      // q68: no division, no double in the threshold decision — the
+      // 2-dp balances cast EXACTLY to DECIMAL(12,2) and `bal > avg` is
+      // evaluated as `bal·N > S` in decimal×bigint arithmetic, so both
+      // engines flip the same boundary customers. Only the final per-
+      // nation total casts to double.
+      Sql("""WITH c AS (SELECT c_custkey, c_nationkey,
+        |    CAST(c_acctbal AS DECIMAL(12,2)) AS bal FROM customer),
+        |st AS (SELECT sum(bal) AS s, count(*) AS n FROM c WHERE bal > 0),
+        |q AS (SELECT c.c_custkey, c.c_nationkey, c.bal FROM c, st
+        |  WHERE c.bal * st.n > st.s
+        |    AND NOT EXISTS (SELECT 1 FROM orders o
+        |      WHERE o.o_custkey = c.c_custkey
+        |        AND o.o_orderdate >= DATE '2000-01-01'))
+        |SELECT n.n_name AS nation, count(*) AS n_custs,
+        |  CAST(sum(q.bal) AS DOUBLE) AS total_acctbal
+        |FROM q JOIN nation n ON q.c_nationkey = n.n_nationkey
+        |GROUP BY 1 ORDER BY 1""")),
+
+    // TPC-H Q16 shape: distinct-supplier counts per surviving part
+    // spec, NOT-IN supplier blacklist as a broadcast anti join
+    QueryDef("q69_supplier_counts", supplierCounts(_, _),
+      // q69: integer count per group; NOT IN is safe here (s_suppkey is
+      // the non-null key), mirrored as the same anti-membership filter.
+      Sql("""WITH ps AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
+        |bad AS (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
+        |SELECT p.p_brand, p.p_type, p.p_size,
+        |  count(DISTINCT ps.l_suppkey) AS supplier_cnt
+        |FROM ps JOIN part p ON ps.l_partkey = p.p_partkey
+        |WHERE p.p_brand <> 'Brand#45'
+        |  AND p.p_type NOT LIKE 'PROMO%'
+        |  AND p.p_size IN (49, 14, 23, 45, 19, 3, 36, 9)
+        |  AND ps.l_suppkey NOT IN (SELECT s_suppkey FROM bad)
+        |GROUP BY 1, 2, 3
+        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""")),
+
+    // TPC-H Q20 shape: excess-stock suppliers via the flattened
+    // part-filter -> pair availability-vs-demand -> membership chain
+    QueryDef("q70_excess_stock", excessStockSuppliers(_, _),
+      // q70: avail is a bigint count, demand an exact DECIMAL(12,2) sum
+      // (q58's merge-order lesson), the threshold compare exact on both.
+      Sql("""WITH rp AS (SELECT p_partkey FROM part WHERE p_name LIKE 'red%'),
+        |ps AS (SELECT l_partkey, l_suppkey, count(*) AS avail,
+        |    sum(CASE WHEN year(l_shipdate) = 1998
+        |      THEN CAST(l_quantity AS DECIMAL(12,2))
+        |      ELSE CAST(0 AS DECIMAL(12,2)) END) AS demand
+        |  FROM lineitem JOIN rp ON l_partkey = p_partkey
+        |  GROUP BY 1, 2),
+        |q AS (SELECT l_suppkey, count(*) AS n_excess_parts
+        |  FROM ps WHERE 2 * avail > demand GROUP BY 1)
+        |SELECT s.s_suppkey, s.s_name, q.n_excess_parts
+        |FROM q JOIN supplier s ON q.l_suppkey = s.s_suppkey
+        |ORDER BY s_name""")),
+
+    // Customer-value deciles via the DISTRIBUTED global rank (range
+    // partition + per-partition offsets — no single-partition window)
+    QueryDef("q71_value_tiles", customerValueTiles(_, _),
+      // q71: the oracle states the SEMANTICS as a plain global
+      // row_number; the Spark side computes the identical rank via the
+      // distributed offset formulation. Decimal spend sums are exact, so
+      // ranks and tile cuts are engine-identical integers.
+      Sql("""WITH c AS (SELECT o_custkey,
+        |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(18,2))
+        |      AS spend
+        |  FROM orders GROUP BY 1),
+        |r AS (SELECT spend,
+        |    row_number() OVER (ORDER BY spend DESC, o_custkey) AS rk,
+        |    (SELECT count(*) FROM c) AS n FROM c)
+        |SELECT CAST((rk - 1) * 10 // n AS INT) AS tile,
+        |  count(*) AS n_customers,
+        |  CAST(sum(spend) AS DOUBLE) AS total_spend,
+        |  CAST(min(spend) AS DOUBLE) AS min_spend,
+        |  CAST(max(spend) AS DOUBLE) AS max_spend
+        |FROM r GROUP BY 1 ORDER BY 1""")),
+
+    // TPC-H Q4 shape: EXISTS-per-order late-line check as a residual-
+    // predicate LEFT SEMI join on the natural key
+    QueryDef("q72_late_priority", latePriorityOrders(_, _),
+      // q72: timestamp-vs-timestamp interval compare — integer
+      // microsecond arithmetic in both engines, no float in the decision
+      Sql("""SELECT o_orderpriority, count(*) AS n_late_orders
+        |FROM orders
+        |WHERE o_orderdate >= TIMESTAMP '1997-01-01'
+        |  AND o_orderdate < TIMESTAMP '1998-01-01'
+        |  AND EXISTS (SELECT 1 FROM lineitem
+        |    WHERE l_orderkey = o_orderkey
+        |      AND l_shipdate > o_orderdate + INTERVAL 30 DAY)
+        |GROUP BY 1 ORDER BY 1""")),
+
+    // Incremental aggregate maintenance: answer computed THROUGH the
+    // base⊕delta partial merge; the full-recompute oracle proves it
+    QueryDef("q74_incremental_agg", incrementalAgg(_, _),
+      // q74: the oracle is the FULL recompute — hash equality against
+      // the Spark side's base⊕delta merge path is the mergeability
+      // proof; decimal partials make both exact.
+      Sql("""SELECT l_returnflag, l_linestatus,
+        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
+        |  count(*) AS n_items,
+        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
+        |    / count(*) AS avg_qty,
+        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
+        |    / count(*) AS avg_price
+        |FROM lineitem
+        |GROUP BY l_returnflag, l_linestatus
+        |ORDER BY l_returnflag, l_linestatus""")),
+
+    // SCD-2 dimension versioning: the nightly MERGE INTO shape
+    QueryDef("q75_scd2_history", scd2History(_, _),
+      // q75: attributes ride unchanged (one engine-identical double add);
+      // dates and versions are literals — the MERGE membership is pure
+      // integer modulus, identical on both engines.
+      Sql("""WITH dim AS (SELECT c_custkey, c_name, c_mktsegment, c_acctbal
+        |  FROM customer),
+        |changes AS (SELECT c_custkey, c_name,
+        |    'MACHINERY' AS c_mktsegment, c_acctbal + 100.0 AS c_acctbal
+        |  FROM dim WHERE c_custkey % 7 = 0 AND c_custkey % 13 <> 0),
+        |touched AS (SELECT c_custkey FROM dim
+        |  WHERE c_custkey % 7 = 0 OR c_custkey % 13 = 0)
+        |SELECT d.c_custkey, d.c_name, d.c_mktsegment, d.c_acctbal,
+        |  1 AS version, DATE '2024-01-01' AS valid_from,
+        |  CASE WHEN t.c_custkey IS NOT NULL THEN DATE '2024-06-01' END
+        |    AS valid_to,
+        |  t.c_custkey IS NULL AS is_current
+        |FROM dim d LEFT JOIN touched t ON d.c_custkey = t.c_custkey
+        |UNION ALL
+        |SELECT c_custkey, c_name, c_mktsegment, c_acctbal,
+        |  2 AS version, DATE '2024-06-01' AS valid_from,
+        |  CAST(NULL AS DATE) AS valid_to, true AS is_current
+        |FROM changes
+        |ORDER BY c_custkey, version""")),
+
+    // Point-in-time reconstruction over the SCD-2 history (as-of walk
+    // vs an independent modulus-rule oracle)
+    QueryDef("q76_asof_dimension", asOfDimension(_, _),
+      // q76: each probe date's membership derived DIRECTLY from the
+      // modulus rules — independent of the history walk the Spark side
+      // does, so agreement audits the whole SCD-2 pipeline.
+      Sql("""WITH dim AS (SELECT c_custkey, c_mktsegment, c_acctbal
+        |  FROM customer),
+        |mar AS (SELECT DATE '2024-03-01' AS as_of, c_mktsegment,
+        |    c_acctbal FROM dim),
+        |jul AS (SELECT DATE '2024-07-01' AS as_of, c_mktsegment,
+        |    c_acctbal FROM dim
+        |  WHERE c_custkey % 7 <> 0 AND c_custkey % 13 <> 0
+        |  UNION ALL
+        |  SELECT DATE '2024-07-01', 'MACHINERY', c_acctbal + 100.0
+        |  FROM dim WHERE c_custkey % 7 = 0 AND c_custkey % 13 <> 0),
+        |u AS (SELECT * FROM mar UNION ALL SELECT * FROM jul)
+        |SELECT as_of, c_mktsegment, count(*) AS n_customers,
+        |  CAST(sum(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE)
+        |    AS total_acctbal
+        |FROM u GROUP BY 1, 2 ORDER BY as_of, c_mktsegment""")),
+
+    // Per-event point-in-time enrichment against the SCD-2 history
+    // (two probes per event cover v1, v2, and churned-NULL regimes)
+    QueryDef("q90_pit_enrich", pointInTimeEnrich(_, _),
+      // q90: the q75 history rebuilt inline, each event probed at its
+      // own date and +8 months; CAST(... AS DATE) keeps the shifted
+      // probe a DATE on both engines (DuckDB date+interval yields a
+      // timestamp), and both engines clamp month-ends identically
+      // (moot here: January days shift into September losslessly).
+      Sql("""WITH dim AS (SELECT c_custkey, c_name, c_mktsegment, c_acctbal
+        |  FROM customer),
+        |changes AS (SELECT c_custkey, c_name,
+        |    'MACHINERY' AS c_mktsegment, c_acctbal + 100.0 AS c_acctbal
+        |  FROM dim WHERE c_custkey % 7 = 0 AND c_custkey % 13 <> 0),
+        |touched AS (SELECT c_custkey FROM dim
+        |  WHERE c_custkey % 7 = 0 OR c_custkey % 13 = 0),
+        |hist AS (
+        |  SELECT d.c_custkey, d.c_mktsegment, d.c_acctbal,
+        |    1 AS version, DATE '2024-01-01' AS valid_from,
+        |    CASE WHEN t.c_custkey IS NOT NULL THEN DATE '2024-06-01' END
+        |      AS valid_to
+        |  FROM dim d LEFT JOIN touched t ON d.c_custkey = t.c_custkey
+        |  UNION ALL
+        |  SELECT c_custkey, c_mktsegment, c_acctbal,
+        |    2 AS version, DATE '2024-06-01' AS valid_from,
+        |    CAST(NULL AS DATE) AS valid_to
+        |  FROM changes),
+        |ev AS (SELECT event_id, user_id,
+        |    CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d0 FROM events),
+        |pr AS (SELECT event_id, user_id, 'asis' AS probe, d0 AS event_date
+        |    FROM ev
+        |  UNION ALL
+        |  SELECT event_id, user_id, 'shifted',
+        |    CAST(d0 + INTERVAL 8 MONTH AS DATE) FROM ev)
+        |SELECT p.event_id, p.probe, p.user_id, p.event_date,
+        |  h.c_mktsegment AS mktsegment, h.c_acctbal AS acctbal,
+        |  CAST(h.version AS INT) AS dim_version
+        |FROM pr p LEFT JOIN hist h ON p.user_id = h.c_custkey
+        |  AND h.valid_from <= p.event_date
+        |  AND (h.valid_to IS NULL OR h.valid_to > p.event_date)
+        |ORDER BY event_id, probe""")),
+
+    // The fourth join strategy: SHUFFLED HASH (both sides fact-sized,
+    // per-partition build fits memory — no broadcast, no sorts)
+    QueryDef("q82_shuffle_hash", shuffleHashSegments(_, _),
+      // q82: plain join/agg — the SHUFFLE_HASH hint changes the physical
+      // strategy, not the answer. DuckDB count(DISTINCT) is BIGINT like
+      // Spark's; price folds as DECIMAL(18,4), final cast to double.
+      Sql("""SELECT c_mktsegment, count(*) AS n_orders,
+        |  count(DISTINCT c_custkey) AS n_buyers,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE)
+        |    AS total_price
+        |FROM customer JOIN orders ON o_custkey = c_custkey
+        |GROUP BY 1 ORDER BY 1""")),
+  )
 }

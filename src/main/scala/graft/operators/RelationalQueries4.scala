@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.SparkEntry.{Approx, AtMost, Bound, QueryDef, Sql}
 
 /** Round-13 relational battery: the three TPC-H shapes still missing
   * from the sweep (Q6 / Q11 / Q12 — with them every one of the 22
@@ -250,4 +251,125 @@ object RelationalQueries4 {
         percentile_approx(col("value"), lit(0.99), lit(accuracy)).as("p99"),
         count(lit(1)).as("n_events"))
       .orderBy(col("event_type"))
+}
+
+/** The registered queries that call [[RelationalQueries4]]: name, builder and oracle.
+  * A separate object, so that building the registry loads these lists
+  * and not the operator object, which loads when a query runs.
+  */
+object RelationalQueries4Queries {
+  import RelationalQueries4._
+
+  def queries: Seq[QueryDef] = Seq(
+    // TPC-H Q6 shape: single-table scan-filter-aggregate; both
+    // filters + 3-col projection pushed to the scan
+    QueryDef("q83_revenue_forecast", revenueForecast(_, _),
+      // q83: TPC-H Q6 shape — decimal(18,2)×decimal(4,2) products (2 dp
+      // generated values cast exactly), exact decimal sum, one double cast.
+      Sql("""SELECT count(*) AS n_lines,
+        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
+        |    * CAST(l_discount AS DECIMAL(4,2))) AS DOUBLE) AS revenue
+        |FROM lineitem
+        |WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
+        |  AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
+        |  AND l_discount >= 0.04 AND l_discount <= 0.06
+        |  AND l_quantity < 24.0""")),
+
+    // TPC-H Q11 shape: grouped agg vs division-free global-fraction
+    // threshold (the scalar subquery reuses the grouped agg)
+    QueryDef("q84_important_parts", importantParts(_, _),
+      // q84: TPC-H Q11 shape — division-free mean-relative threshold
+      // (val·n·2 > total·3, i.e. 1.5× mean share — Q11's 1/SF scaling
+      // built in) in exact decimal; the scalar total reuses the
+      // grouped aggregate.
+      Sql("""WITH sup AS (SELECT s_suppkey FROM supplier
+        |    JOIN nation ON s_nationkey = n_nationkey
+        |    WHERE n_nationkey < 13),
+        |pp AS (SELECT l_partkey,
+        |    sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS val_dec
+        |  FROM lineitem JOIN sup ON l_suppkey = s_suppkey
+        |  GROUP BY 1),
+        |tot AS (SELECT sum(val_dec) AS total_dec, count(*) AS n_parts FROM pp)
+        |SELECT l_partkey, CAST(val_dec AS DOUBLE) AS part_value
+        |FROM pp, tot WHERE val_dec * n_parts * 2 > total_dec * 3
+        |ORDER BY part_value DESC, l_partkey""")),
+
+    // TPC-H Q12 shape: fulfilment-lag buckets × two-way conditional
+    // priority counts — all-integer arithmetic
+    QueryDef("q85_fulfilment_priority", fulfilmentPriority(_, _),
+      // q85: TPC-H Q12 shape — all-integer lag buckets + conditional
+      // counts; sums cast BIGINT (DuckDB sum(int) is HUGEINT).
+      Sql("""SELECT CASE
+        |    WHEN date_diff('day', CAST(o_orderdate AS DATE),
+        |      CAST(l_shipdate AS DATE)) <= 15 THEN 'FAST'
+        |    WHEN date_diff('day', CAST(o_orderdate AS DATE),
+        |      CAST(l_shipdate AS DATE)) <= 45 THEN 'MEDIUM'
+        |    ELSE 'SLOW' END AS speed_class,
+        |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
+        |    THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
+        |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
+        |    THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
+        |  AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
+        |GROUP BY 1 ORDER BY 1""")),
+
+    // Robust anomaly gate: median/MAD as exact lower-median ORDER
+    // STATISTICS over decimal daily sums (no interpolation, no stddev)
+    QueryDef("q86_mad_anomaly", madAnomaly(_, _),
+      // q86: median/MAD as LOWER-MEDIAN order statistics (rank
+      // ⌈n/2⌉ via row_number — never interpolated, the t32 lesson) over
+      // exact DECIMAL(18,6) daily sums; doubles only in the final casts.
+      Sql("""WITH daily AS (SELECT event_type,
+        |    CAST(date_trunc('day', CAST(ts AS TIMESTAMP)) AS DATE) AS day,
+        |    sum(CAST(value AS DECIMAL(18,6))) AS dv
+        |  FROM events WHERE ts IS NOT NULL AND event_type IS NOT NULL
+        |  GROUP BY 1, 2),
+        |rmed AS (SELECT event_type, dv,
+        |    row_number() OVER (PARTITION BY event_type ORDER BY dv, day) AS rn,
+        |    count(*) OVER (PARTITION BY event_type) AS n
+        |  FROM daily),
+        |med AS (SELECT event_type, dv AS med FROM rmed WHERE rn = (n + 1) // 2),
+        |dev AS (SELECT d.event_type, d.day, d.dv, m.med,
+        |    abs(d.dv - m.med) AS adev
+        |  FROM daily d JOIN med m ON d.event_type = m.event_type),
+        |rmad AS (SELECT event_type, day, adev,
+        |    row_number() OVER (PARTITION BY event_type ORDER BY adev, day) AS rn,
+        |    count(*) OVER (PARTITION BY event_type) AS n
+        |  FROM dev),
+        |mad AS (SELECT event_type, adev AS mad FROM rmad WHERE rn = (n + 1) // 2)
+        |SELECT d.event_type, d.day, CAST(d.dv AS DOUBLE) AS day_value,
+        |  CAST(d.med AS DOUBLE) AS median_value,
+        |  CAST(x.mad AS DOUBLE) AS mad_value
+        |FROM dev d JOIN mad x ON d.event_type = x.event_type
+        |WHERE d.adev > x.mad * 4
+        |ORDER BY d.event_type, d.day""")),
+
+    // Mergeable quantile sketch (p50/p95/p99): approximate tier — no
+    // SQL oracle. Contract: every (event_type, p) cell within the
+    // sketch's rank-error guarantee, n/accuracy + 2 ranks.
+    QueryDef("q87_approx_quantiles", approxQuantiles(_, _),
+      Approx(Bound("q87_rank_err_ratio", quantileRankErrRatio, AtMost(1.0)))),
+  )
+
+  /** q87: the worst (event_type, p) cell's rank error as a share of the
+    * sketch's guarantee, |rank − p·n| / (⌊n / accuracy⌋ + 2), where rank
+    * counts the type's values ≤ the approximate quantile.
+    */
+  private def quantileRankErrRatio(s: SparkSession, dir: String): Double = {
+    val cells = approxQuantiles(s, dir)
+      .select(col("event_type"), col("n_events"), explode(array(
+        Seq(0.5 -> "p50", 0.95 -> "p95", 0.99 -> "p99").map { case (p, c) =>
+          struct(lit(p).as("p"), col(c).as("q")) }: _*)).as("cell"))
+      .select(col("event_type"), col("n_events"), col("cell.p"), col("cell.q"))
+    val values = Tables.events(s, dir)
+      .filter(col("value").isNotNull && col("event_type").isNotNull)
+      .select(col("event_type"), col("value"))
+    val slack = floor(col("n_events") / QuantileAccuracy) + 2
+    cells.join(values, "event_type")
+      .groupBy(col("event_type"), col("n_events"), col("p"), col("q"))
+      .agg(count_if(col("value") <= col("q")).as("rank"))
+      .agg(coalesce(max(abs(col("rank") - col("p") * col("n_events")) / slack), lit(0.0)))
+      .head().getDouble(0)
+  }
 }

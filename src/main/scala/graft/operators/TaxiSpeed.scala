@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.TaxiCsv
+import graft.sources.{TaxiCsv, TaxiDataGen}
+import graft.SparkEntry.{QueryDef, SqlFn, oracleSfName}
 
 /** The reference's flagship query: average NYC-taxi trip speed (mph) by
   * day of week (Sample.cs:137-240, README.md:105-110), in both the
@@ -96,4 +97,75 @@ object TaxiSpeed {
     byDow.coalesce(1).write.mode("overwrite")
       .option("header", "true") // csv only; ignored elsewhere
       .format(format).save(path)
+}
+
+/** The registered queries that call [[TaxiSpeed]]: name, builder and oracle.
+  * A separate object, so that building the registry loads these lists
+  * and not the operator object, which loads when a query runs.
+  */
+object TaxiSpeedQueries {
+  import TaxiSpeed._
+
+  def queries: Seq[QueryDef] = Seq(
+    // 12-file taxi corpus derived deterministically from `events`
+    // (TaxiDataGen): real text-scan ingest with the 17-field/int-probe
+    // accept rule, try-parse timestamps, speed derivation and both §2.2
+    // reduce modes. Month 12 is header-only, so faithful mode's
+    // listing-derived group domain (a zero-accepted-rows file still
+    // contributes a zero vector, Sample.cs:196-199) is exercised for real.
+    QueryDef("taxi_avg_speed_faithful", (s, dir) =>
+      faithfulAvgByDowListed(s, TaxiDataGen.ensure(s, dir))
+        .orderBy("day"),
+      // Re-reads the SAME generated CSV bytes (read_text → line split) and
+      // re-applies only the accept/speed/aggregation semantics — the gate
+      // checks the pipeline, not the generator. The corpus path is keyed
+      // by oracleSfName, the scale Verify ran the Spark side on. As on
+      // the Spark side, each file's means are taken in line order before
+      // the zero-fill join (a join ahead of the avg reorders its sum) and
+      // are summed in filename order, the Spark side's listing order.
+      SqlFn(() => s"""WITH $taxiKept,
+        |files AS (SELECT DISTINCT filename FROM raw),
+        |days AS (SELECT * FROM (VALUES (CAST(0 AS INT)),(1),(2),(3),(4),(5),(6)) d(day)),
+        |means AS (SELECT filename, day, avg(speed_mph) AS m FROM kept GROUP BY filename, day),
+        |per_file AS (
+        |  SELECT fi.filename, d.day, coalesce(m.m, 0.0) AS pf
+        |  FROM files fi CROSS JOIN days d
+        |  LEFT JOIN means m ON m.filename = fi.filename AND m.day = d.day)
+        |SELECT day, avg(pf ORDER BY filename) AS avg_speed_mph
+        |FROM per_file GROUP BY day ORDER BY day""".stripMargin)),
+
+    QueryDef("taxi_avg_speed_weighted", (s, dir) =>
+      weightedAvgByDow(TaxiCsv.trips(s, TaxiDataGen.ensure(s, dir)))
+        .orderBy("day"),
+      SqlFn(() => s"""WITH $taxiKept
+        |SELECT day, avg(speed_mph) AS avg_speed_mph
+        |FROM kept GROUP BY day ORDER BY day""".stripMargin)),
+  )
+
+  /** Shared DuckDB prelude for the taxi oracles: raw CSV bytes → lines →
+    * the reference's accept rule (17 fields + int probe) → typed trips →
+    * speed with the try_divide-equivalent NULL-on-zero-duration → the
+    * finite-speed filter (negative speeds kept). Mirrors
+    * TaxiCsv.acceptedLines/trips + withSpeed semantically.
+    */
+  private def taxiKept: String =
+    s"""raw AS (
+      |  SELECT filename, unnest(string_split(content, chr(10))) AS line
+      |  FROM read_text('${TaxiDataGen.BaseDir}/$oracleSfName/*.csv')),
+      |fs AS (SELECT filename, string_split(line, ',') AS f FROM raw),
+      |ok AS (SELECT filename, f FROM fs
+      |  WHERE len(f) = 17 AND try_cast(f[1] AS INTEGER) IS NOT NULL),
+      |trips AS (SELECT filename,
+      |    try_cast(f[2] AS TIMESTAMP) AS pickup_ts,
+      |    try_cast(f[3] AS TIMESTAMP) AS dropoff_ts,
+      |    try_cast(f[5] AS DOUBLE) AS trip_distance
+      |  FROM ok),
+      |sp AS (SELECT filename,
+      |    CAST(dayofweek(pickup_ts) AS INT) AS day,
+      |    CASE WHEN epoch(dropoff_ts) - epoch(pickup_ts) <> 0
+      |         THEN trip_distance / ((epoch(dropoff_ts) - epoch(pickup_ts)) / 3600.0)
+      |    END AS speed_mph
+      |  FROM trips WHERE trip_distance > 0),
+      |kept AS (SELECT filename, day, speed_mph FROM sp
+      |  WHERE speed_mph IS NOT NULL AND isfinite(speed_mph))""".stripMargin
 }

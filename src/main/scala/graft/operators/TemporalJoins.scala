@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.SparkEntry.{QueryDef, Sql}
 
 /** Temporal join operators — the join categories the reference lacks
   * entirely (SURVEY.md §2.3: range joins, as-of joins), built Spark-
@@ -201,4 +202,96 @@ object TemporalJoins {
         col("v").isNull.as("filled"))
       .orderBy(col("user_id"), col("hour"))
   }
+}
+
+/** The registered queries that call [[TemporalJoins]]: name, builder and oracle.
+  * A separate object, so that building the registry loads these lists
+  * and not the operator object, which loads when a query runs.
+  */
+object TemporalJoinsQueries {
+  import TemporalJoins._
+
+  def queries: Seq[QueryDef] = Seq(
+    // Temporal joins (absent categories in the reference, §2.3)
+    QueryDef("q34_range_join", rangeJoin(_, _),
+      Sql("""WITH e AS (SELECT user_id, event_id,
+        |    epoch_us(CAST(ts AS TIMESTAMP)) / 1000000.0 AS sec
+        |  FROM events)
+        |SELECT a.user_id, count(*) AS n_pairs, avg(b.sec - a.sec) AS avg_gap_s
+        |FROM e a JOIN e b
+        |  ON a.user_id = b.user_id AND b.sec > a.sec AND b.sec - a.sec <= 60
+        |GROUP BY a.user_id ORDER BY a.user_id""")),
+
+    QueryDef("q35_asof_join", asOfJoin(_, _),
+      Sql("""SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS purchase_ts,
+        |  last_click_ts
+        |FROM (
+        |  SELECT event_id, user_id, ts, event_type,
+        |    last_value(CASE WHEN event_type = 'click'
+        |                    THEN CAST(ts AS TIMESTAMP) END IGNORE NULLS)
+        |      OVER (PARTITION BY user_id
+        |            ORDER BY CAST(ts AS TIMESTAMP), event_id
+        |            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+        |      AS last_click_ts
+        |  FROM events)
+        |WHERE event_type = 'purchase'
+        |ORDER BY event_id""")),
+
+    // The NATIVE two-relation as-of join (custom LogicalPlan +
+    // SparkStrategy + SparkPlan via SparkSessionExtensions)
+    QueryDef("q77_asof_native", asOfNativeEvents(_, _),
+      // q77: DuckDB runs its NATIVE ASOF LEFT JOIN — the rare oracle
+      // where the reference engine has the operator built in. Inclusive
+      // (p.ts >= c.ts); only the matched timestamp is emitted, so
+      // same-ts tie resolution cannot differ between engines.
+      Sql("""WITH e AS (SELECT event_id, user_id, event_type,
+        |    CAST(ts AS TIMESTAMP) AS ts FROM events),
+        |p AS (SELECT event_id, user_id, ts FROM e
+        |  WHERE event_type = 'purchase'),
+        |c AS (SELECT user_id AS c_user, ts AS c_ts FROM e
+        |  WHERE event_type = 'click')
+        |SELECT p.event_id, p.user_id, p.ts AS purchase_ts,
+        |  c.c_ts AS last_click_ts
+        |FROM p ASOF LEFT JOIN c
+        |  ON p.user_id = c.c_user AND p.ts >= c.c_ts
+        |ORDER BY event_id""")),
+
+    // Its forward+tolerance variant (pandas merge_asof parity)
+    QueryDef("q80_asof_forward", asOfForwardEvents(_, _),
+      // q80: DuckDB's native FORWARD asof (`c.ts <= p.p_ts` = smallest
+      // p_ts >= c.ts); the 2h tolerance nulls the match via CASE exactly
+      // as the exec's tolerance check does.
+      Sql("""WITH e AS (SELECT event_id, user_id, event_type,
+        |    CAST(ts AS TIMESTAMP) AS ts FROM events),
+        |c AS (SELECT event_id, user_id, ts FROM e
+        |  WHERE event_type = 'click'),
+        |p AS (SELECT user_id AS p_user, ts AS p_ts FROM e
+        |  WHERE event_type = 'purchase')
+        |SELECT c.event_id, c.user_id, c.ts AS click_ts,
+        |  CASE WHEN p.p_ts <= c.ts + INTERVAL 2 HOUR THEN p.p_ts
+        |  END AS next_purchase_ts
+        |FROM c ASOF LEFT JOIN p
+        |  ON c.user_id = p.p_user AND c.ts <= p.p_ts
+        |ORDER BY event_id""")),
+
+    // Time-series resample: dense hourly grid + forward-fill (LOCF)
+    QueryDef("q60_gap_fill", gapFill(_, _),
+      Sql("""WITH hourly AS (SELECT user_id,
+        |    date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hour,
+        |    avg(value) AS v
+        |  FROM events GROUP BY 1, 2),
+        |spans AS (SELECT user_id, min(hour) AS h0, max(hour) AS h1
+        |  FROM hourly GROUP BY user_id),
+        |grid AS (SELECT user_id,
+        |    unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS hour
+        |  FROM spans),
+        |j AS (SELECT g.user_id, g.hour, h.v
+        |  FROM grid g LEFT JOIN hourly h USING (user_id, hour))
+        |SELECT user_id, hour,
+        |  last_value(v IGNORE NULLS) OVER (PARTITION BY user_id
+        |    ORDER BY hour
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value,
+        |  v IS NULL AS filled
+        |FROM j ORDER BY user_id, hour""")),
+  )
 }

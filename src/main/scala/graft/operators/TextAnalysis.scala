@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.TextFunctions._
+import graft.SparkEntry.{QueryDef, Sql, SqlFn}
 
 /** Text-analysis operators over the `documents` table: token counting,
   * heuristic language-ID, quality scoring, and content fingerprinting
@@ -1824,5 +1825,890 @@ object TextAnalysis {
       .filter(col("rank") <= k)
       .select(col("doc_id"), col("rank"), col("phrase"), col("score"))
       .orderBy(col("doc_id"), col("rank"))
+  }
+}
+
+/** The registered queries that call [[TextAnalysis]]: name, builder and oracle.
+  * A separate object, so that building the registry loads these lists
+  * and not the operator object, which loads when a query runs.
+  */
+object TextAnalysisQueries {
+  import TextAnalysis._
+
+  def queries: Seq[QueryDef] = Seq(
+    // Gopher repetition signal: per-doc duplicate word-3-gram fraction
+    QueryDef("t33_dup_ngrams", dupNgramFraction(_, _),
+      // t33: exact string 3-grams (no hashing), integer counts, ONE
+      // double division; 1-based DuckDB list indexing vs 0-based Spark.
+      Sql("""WITH w AS (SELECT doc_id,
+        |    regexp_split_to_array(trim(lower(text)), '\s+') AS ws
+        |  FROM documents),
+        |g AS (SELECT doc_id,
+        |    [ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
+        |     for i in range(1, len(ws) - 1)] AS gs
+        |  FROM w WHERE len(ws) >= 3)
+        |SELECT doc_id, len(gs) AS n_ngrams,
+        |  len(gs) - len(list_distinct(gs)) AS n_dup,
+        |  CAST(len(gs) - len(list_distinct(gs)) AS DOUBLE)
+        |    / CAST(len(gs) AS DOUBLE) AS dup_frac
+        |FROM g ORDER BY doc_id""")),
+
+    QueryDef("t1_token_stats", tokenStats(_, _),
+      Sql("""WITH t AS (SELECT doc_id, text,
+        |  list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS toks
+        |  FROM documents)
+        |SELECT doc_id,
+        |  CAST(len(toks) AS INT) AS n_tokens,
+        |  CAST(len(list_distinct(toks)) AS INT) AS n_distinct_tokens,
+        |  CAST(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]|[^a-z0-9\s]')) AS INT) AS n_wordpieces,
+        |  CAST(list_sum(list_transform(toks, x -> length(x))) AS DOUBLE) / len(toks) AS mean_token_len
+        |FROM t ORDER BY doc_id""")),
+
+    QueryDef("t2_lang_id", langId(_, _),
+      Sql("""WITH t AS (SELECT doc_id, lang AS labeled_lang,
+        |  list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS toks
+        |  FROM documents),
+        |h AS (SELECT doc_id, labeled_lang,
+        |  CAST(len(list_filter(toks, x -> x IN ('the','a','and','of','to','in','is'))) AS INT) AS hits_en,
+        |  CAST(len(list_filter(toks, x -> x IN ('der','die','das','und','ist','ein'))) AS INT) AS hits_de,
+        |  CAST(len(list_filter(toks, x -> x IN ('el','la','de','y','es','un'))) AS INT) AS hits_es,
+        |  CAST(len(list_filter(toks, x -> x IN ('le','la','et','les','est','une'))) AS INT) AS hits_fr,
+        |  CAST(len(list_filter(toks, x -> x IN ('的','是','了','在','和'))) AS INT) AS hits_zh
+        |  FROM t)
+        |SELECT doc_id, labeled_lang,
+        |  CASE
+        |    WHEN hits_en >= hits_de AND hits_en >= hits_es AND hits_en >= hits_fr AND hits_en >= hits_zh THEN 'en'
+        |    WHEN hits_de >= hits_en AND hits_de >= hits_es AND hits_de >= hits_fr AND hits_de >= hits_zh THEN 'de'
+        |    WHEN hits_es >= hits_en AND hits_es >= hits_de AND hits_es >= hits_fr AND hits_es >= hits_zh THEN 'es'
+        |    WHEN hits_fr >= hits_en AND hits_fr >= hits_de AND hits_fr >= hits_es AND hits_fr >= hits_zh THEN 'fr'
+        |    ELSE 'zh' END AS predicted_lang,
+        |  hits_en, hits_de, hits_es, hits_fr, hits_zh
+        |FROM h ORDER BY doc_id""")),
+
+    QueryDef("t3_quality", qualityScore(_, _),
+      Sql("""WITH t AS (SELECT doc_id, text,
+        |  list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS toks
+        |  FROM documents)
+        |SELECT doc_id,
+        |  CAST(length(text) AS DOUBLE) AS n_chars,
+        |  CAST(len(toks) AS DOUBLE) AS n_tokens,
+        |  CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS DOUBLE) / length(text) AS punct_ratio,
+        |  CAST(len(regexp_extract_all(text, '[A-Z]')) AS DOUBLE) / length(text) AS upper_ratio,
+        |  CAST(len(list_filter(toks, x -> x IN ('the','a','and','of','to','in','is'))) AS DOUBLE) / len(toks) AS stopword_ratio,
+        |  0.5 * (CAST(len(list_filter(toks, x -> x IN ('the','a','and','of','to','in','is'))) AS DOUBLE) / len(toks))
+        |   + 0.3 * (1.0 - CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS DOUBLE) / length(text))
+        |   + 0.2 * least(CAST(len(toks) AS DOUBLE) / 100.0, 1.0) AS quality_score
+        |FROM t ORDER BY doc_id""")),
+
+    QueryDef("t4_fingerprint", fingerprints(_, _),
+      Sql("""WITH t AS (SELECT doc_id, text,
+        |  list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS toks
+        |  FROM documents)
+        |SELECT doc_id,
+        |  md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp_md5,
+        |  CAST('0x' || substr(md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))), 1, 15) AS BIGINT) AS fp_hash64,
+        |  list_reduce(list_prepend(0::BIGINT,
+        |    list_transform(toks, x -> CAST('0x' || substr(md5(x), 1, 15) AS BIGINT) % 2147483647)),
+        |    (acc, h) -> (acc * 1000003 + h) % 2147483647) AS fp_rolling
+        |FROM t ORDER BY doc_id""")),
+
+    QueryDef("t5_repetition", repetition(_, _),
+      Sql("""WITH t AS (SELECT doc_id,
+        |  list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS toks
+        |  FROM documents),
+        |g AS (SELECT doc_id, toks,
+        |  CASE WHEN len(toks) >= 2
+        |    THEN [toks[i] || ' ' || toks[i+1] for i in range(1, len(toks))]
+        |    ELSE [] END AS g2
+        |  FROM t),
+        |base AS (SELECT doc_id,
+        |    CAST(len(toks) AS INT) AS n_tokens,
+        |    CAST(len(list_distinct(toks)) AS INT) AS n_distinct_tokens,
+        |    g2,
+        |    CAST(len(g2) AS INT) AS n_2grams,
+        |    CAST(len(list_distinct(g2)) AS INT) AS n_distinct_2grams
+        |  FROM g),
+        |top AS (SELECT doc_id, max(c) AS top_2gram_count FROM (
+        |    SELECT doc_id, gr, count(*) AS c
+        |    FROM (SELECT doc_id, unnest(g2) AS gr FROM base)
+        |    GROUP BY doc_id, gr)
+        |  GROUP BY doc_id)
+        |SELECT b.doc_id, n_tokens,
+        |  1.0 - CAST(n_distinct_tokens AS DOUBLE) / nullif(n_tokens, 0) AS dup_token_ratio,
+        |  n_2grams,
+        |  1.0 - CAST(n_distinct_2grams AS DOUBLE) / nullif(n_2grams, 0) AS dup_2gram_ratio,
+        |  top_2gram_count,
+        |  CAST(top_2gram_count AS DOUBLE) / nullif(n_2grams, 0) AS top_2gram_frac
+        |FROM base b LEFT JOIN top USING (doc_id)
+        |ORDER BY doc_id""")),
+
+    // r13 verdict #1: registered form is the rational-idf companion
+    // (exact arithmetic, full hash oracle); ln idf drifts in the last ulp
+    QueryDef("t6_tfidf", tfidfTopKLin(_, _),
+      // t6 (rational-idf registered form): tfidf_lin is one double
+      // divide of two exact bigint products — bit-identical; the exact
+      // integer evidence columns hash trivially.
+      Sql("""WITH toks AS (SELECT doc_id,
+        |    unnest(list_filter(string_split_regex(lower(text), '\s+'),
+        |      x -> x <> '')) AS term
+        |  FROM documents),
+        |tf AS (SELECT doc_id, term, count(*) AS cnt FROM toks GROUP BY 1, 2),
+        |tfw AS (SELECT *,
+        |    count(*) OVER (PARTITION BY term) AS dfr,
+        |    sum(cnt) OVER (PARTITION BY doc_id) AS n_tok
+        |  FROM tf),
+        |n AS (SELECT count(*) AS nd FROM documents),
+        |scored AS (SELECT doc_id, term, cnt, dfr, n_tok, nd,
+        |    CAST(cnt * nd AS DOUBLE) / CAST(n_tok * dfr AS DOUBLE)
+        |      AS tfidf_lin
+        |  FROM tfw CROSS JOIN n),
+        |rk AS (SELECT *, CAST(row_number() OVER (
+        |    PARTITION BY doc_id ORDER BY tfidf_lin DESC, term) AS INT) AS rank
+        |  FROM scored)
+        |SELECT doc_id, rank, term, CAST(cnt AS BIGINT) AS cnt,
+        |  CAST(dfr AS BIGINT) AS dfr, CAST(n_tok AS BIGINT) AS n_tok,
+        |  CAST(nd AS BIGINT) AS nd, tfidf_lin FROM rk
+        |WHERE rank <= 3 ORDER BY doc_id, rank""")),
+
+    // Corpus n-gram statistics: top-k bigrams per language
+    QueryDef("t7_bigram_topk", bigramTopK(_, _),
+      // Bigram counts are fully deterministic (non-distinct grams, count
+      // tie broken on the bigram text), so the top-k mirrors exactly.
+      Sql("""WITH toks AS (SELECT lang,
+        |  list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS w
+        |  FROM documents),
+        |bg AS (SELECT lang, unnest(CASE WHEN len(w) >= 2
+        |    THEN [w[i] || ' ' || w[i+1] for i in range(1, len(w))]
+        |    ELSE [] END) AS bigram
+        |  FROM toks),
+        |cnt AS (SELECT lang, bigram, count(*) AS cnt FROM bg GROUP BY 1, 2),
+        |rk AS (SELECT *, CAST(row_number() OVER (
+        |    PARTITION BY lang ORDER BY cnt DESC, bigram) AS INT) AS rank
+        |  FROM cnt)
+        |SELECT lang, rank, bigram, cnt FROM rk WHERE rank <= 5
+        |ORDER BY lang, rank""")),
+
+    // Per-language median quality gate (keep the top half per stratum)
+    QueryDef("t8_quality_filter", qualityFilter(_, _),
+      // Score formula identical to the hash-green t3 oracle (both sides
+      // share qualityExpr on the Spark side); Spark exact `percentile`
+      // interpolates the same way DuckDB quantile_cont does, and the
+      // strict > gate excludes exact-median rows in both engines.
+      Sql("""WITH t AS (SELECT doc_id, lang, text,
+        |  list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS toks
+        |  FROM documents),
+        |scored AS (SELECT doc_id, lang,
+        |  0.5 * (CAST(len(list_filter(toks, x -> x IN ('the','a','and','of','to','in','is'))) AS DOUBLE) / len(toks))
+        |   + 0.3 * (1.0 - CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS DOUBLE) / length(text))
+        |   + 0.2 * least(CAST(len(toks) AS DOUBLE) / 100.0, 1.0) AS quality_score
+        |  FROM t),
+        |med AS (SELECT lang, quantile_cont(quality_score, 0.5) AS lang_median
+        |  FROM scored GROUP BY lang)
+        |SELECT s.doc_id, s.lang, s.quality_score, m.lang_median
+        |FROM scored s JOIN med m USING (lang)
+        |WHERE s.quality_score > m.lang_median
+        |ORDER BY s.doc_id""")),
+
+    // Corpus mix table: per-(lang, source) doc/token/char mass + share
+    QueryDef("t9_mix_stats", mixStats(_, _),
+      // DuckDB sum(BIGINT) widens to HUGEINT — cast back so the schema
+      // compare sees int64 on both sides.
+      Sql("""WITH per AS (SELECT lang, source, count(*) AS n_docs,
+        |  CAST(sum(len(list_filter(string_split_regex(lower(text), '\s+'), x -> x <> ''))) AS BIGINT) AS n_tokens,
+        |  CAST(sum(length(text)) AS BIGINT) AS n_chars
+        |  FROM documents GROUP BY lang, source)
+        |SELECT lang, source, n_docs, n_tokens, n_chars,
+        |  CAST(n_tokens AS DOUBLE) / (SELECT sum(n_tokens) FROM per) AS token_share
+        |FROM per ORDER BY lang, source""")),
+
+    // Unigram-LM quality proxy, registered as the EXACT arithmetic-mean
+    // probability companion (r13 verdict #1); -ln form is spec-gated
+    QueryDef("t10_unigram_logprob", unigramMeanProb(_, _),
+      // t10 (exact registered form): the sums are exact integers and
+      // mean_token_prob is one double divide — bit-identical.
+      Sql("""WITH toks AS (SELECT doc_id,
+        |    unnest(list_filter(string_split_regex(lower(text), '\s+'),
+        |      x -> x <> '')) AS t
+        |  FROM documents),
+        |cnt AS (SELECT t, count(*) AS c FROM toks GROUP BY t),
+        |tot AS (SELECT count(*) AS n,
+        |    (SELECT count(*) FROM cnt) AS v FROM toks)
+        |SELECT doc_id, CAST(count(*) AS INT) AS n_tokens,
+        |  CAST(sum(c + 1) AS BIGINT) AS sum_cp1,
+        |  CAST(sum(c + 1) AS DOUBLE) / CAST(count(*) * (n + v) AS DOUBLE)
+        |    AS mean_token_prob
+        |FROM toks JOIN cnt USING (t) CROSS JOIN tot
+        |GROUP BY doc_id, n, v ORDER BY doc_id""")),
+
+    // PII scrub: email/IPv4/phone -> typed placeholders, per-class counts
+    QueryDef("t11_pii_redact", piiRedact(_, _),
+      // t11: the raw column is derived identically on both engines so the
+      // oracle checks Java-regex-vs-RE2 agreement on real matches; the
+      // patterns stay inside the two dialects' intersection.
+      Sql("""WITH raw AS (SELECT doc_id,
+        |    text || ' contact user' || doc_id || '@mail.example.com from 10.0.'
+        |      || (doc_id % 256) || '.7 call +1 415 555 0' || (doc_id % 100)
+        |      AS raw
+        |  FROM documents)
+        |SELECT doc_id,
+        |  CAST(len(regexp_extract_all(raw,
+        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS INT)
+        |    AS n_emails,
+        |  CAST(len(regexp_extract_all(raw,
+        |    '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS INT) AS n_ips,
+        |  CAST(len(regexp_extract_all(regexp_replace(regexp_replace(raw,
+        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
+        |    '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g'),
+        |    '\+\d[\d ]{6,}\d')) AS INT) AS n_phones,
+        |  regexp_replace(regexp_replace(regexp_replace(raw,
+        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
+        |    '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g'),
+        |    '\+\d[\d ]{6,}\d', '<PHONE>', 'g') AS redacted
+        |FROM raw ORDER BY doc_id""")),
+
+    // Token-budget sequence packing: per-shard cumulative-count bins
+    QueryDef("t12_sequence_pack", sequencePack(_, _),
+      Sql("""WITH t AS (SELECT doc_id, doc_id % 8 AS shard,
+        |    len(list_filter(string_split_regex(lower(text), '\s+'),
+        |      x -> x <> '')) AS n_tok
+        |  FROM documents),
+        |c AS (SELECT doc_id, shard, n_tok,
+        |    sum(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
+        |  FROM t)
+        |SELECT doc_id, CAST(shard AS INT) AS shard, CAST(n_tok AS INT) AS n_tok,
+        |  CAST(floor((cum - n_tok) / 256) AS INT) AS bin,
+        |  CAST((cum - n_tok) % 256 AS INT) AS bin_offset
+        |FROM c ORDER BY doc_id""")),
+
+    // Gopher-rule bundle: fixed-threshold prose filters + keep verdict
+    QueryDef("t13_gopher_quality", gopherQuality(_, _),
+      // t13: every count is length-difference or list arithmetic (no
+      // regex alternation, whose overlapping-match semantics differ by
+      // engine); DuckDB's divide-by-zero -> NULL matches try_divide.
+      Sql("""WITH t AS (SELECT doc_id, text,
+        |  list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS toks,
+        |  string_split(text, chr(10)) AS lines
+        |  FROM documents),
+        |m AS (SELECT doc_id,
+        |  CAST(len(toks) AS INT) AS n_words,
+        |  CAST(list_sum(list_transform(toks, x -> length(x))) AS DOUBLE)
+        |    / len(toks) AS mean_word_len,
+        |  ((length(text) - length(replace(text, '#', '')))
+        |    + (length(text) - length(replace(text, '...', ''))) / 3)
+        |    / len(toks) AS symbol_ratio,
+        |  CAST(len(list_filter(lines, l -> substr(ltrim(l), 1, 1) IN ('-', '*', '•'))) AS DOUBLE)
+        |    / len(lines) AS bullet_frac,
+        |  CAST(len(list_filter(lines, l -> ends_with(rtrim(l), '...'))) AS DOUBLE)
+        |    / len(lines) AS ellipsis_frac,
+        |  CAST(len(list_filter(toks, x -> regexp_matches(x, '[a-z]'))) AS DOUBLE)
+        |    / len(toks) AS alpha_frac,
+        |  CAST(len(list_filter(['the','a','and','of','to','in','is'],
+        |    w -> list_contains(toks, w))) AS INT) AS stop_kinds
+        |  FROM t)
+        |SELECT *, COALESCE(
+        |  n_words >= 50 AND n_words <= 100000
+        |  AND mean_word_len >= 3.0 AND mean_word_len <= 10.0
+        |  AND symbol_ratio <= 0.1 AND bullet_frac <= 0.9
+        |  AND ellipsis_frac <= 0.3 AND alpha_frac >= 0.8
+        |  AND stop_kinds >= 2, FALSE) AS keep
+        |FROM m ORDER BY doc_id""")),
+
+    // Exact heavy hitters: Misra-Gries candidate sketch + exact recount
+    QueryDef("t14_heavy_hitters", heavyHitters(_, _),
+      // t14: the MG sketch only generates candidates — the registered
+      // result is exactly this HAVING query (threshold n/(k+1), k=64),
+      // so the oracle is plain SQL despite the custom aggregate.
+      Sql("""WITH tok AS (SELECT unnest(list_filter(
+        |    string_split_regex(lower(text), '\s+'), x -> x <> '')) AS token
+        |  FROM documents),
+        |tot AS (SELECT count(*) AS n FROM tok)
+        |SELECT token, count(*) AS cnt,
+        |  CAST(count(*) AS DOUBLE) / (SELECT n FROM tot) AS share
+        |FROM tok GROUP BY token
+        |HAVING count(*) * 65 > (SELECT n FROM tot)
+        |ORDER BY cnt DESC, token""")),
+
+    // Context-window chunking: overlapping token windows per doc
+    QueryDef("t21_chunk", chunk(_, _),
+      Sql("""WITH toks AS (SELECT doc_id,
+        |    list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS w
+        |  FROM documents),
+        |sz AS (SELECT doc_id, w, len(w) AS n FROM toks WHERE len(w) > 0),
+        |st AS (SELECT doc_id, n, w,
+        |    unnest(range(1, n + 1, 48)) AS start
+        |  FROM sz)
+        |SELECT doc_id, CAST((start - 1) // 48 AS INT) AS chunk_idx,
+        |  CAST(start AS INT) AS start_tok,
+        |  CAST(least(64, n - start + 1) AS INT) AS n_tok,
+        |  array_to_string(w[start : least(start + 63, n)], ' ') AS chunk_text
+        |FROM st ORDER BY doc_id, chunk_idx""")),
+
+    // Vocabulary OOV rate vs the corpus top-k vocab (tokenizer coverage)
+    QueryDef("t22_vocab_oov", vocabOov(_, _),
+      Sql("""WITH toks AS (SELECT doc_id,
+        |    unnest(list_filter(string_split_regex(lower(text), '\s+'),
+        |      x -> x <> '')) AS t
+        |  FROM documents),
+        |vocab AS (SELECT t FROM (
+        |    SELECT t, count(*) AS cnt FROM toks GROUP BY t)
+        |  ORDER BY cnt DESC, t LIMIT 512),
+        |sel AS (SELECT k.doc_id, v.t AS vt
+        |  FROM toks k LEFT JOIN vocab v ON k.t = v.t)
+        |SELECT doc_id, CAST(count(*) AS INT) AS n_tokens,
+        |  CAST(count(*) FILTER (vt IS NULL) AS INT) AS n_oov,
+        |  CAST(count(*) FILTER (vt IS NULL) AS DOUBLE) / count(*) AS oov_rate
+        |FROM sel GROUP BY doc_id ORDER BY doc_id""")),
+
+    // Token-ID encoding against the deterministic top-k vocab (the
+    // training encode step), flattened to (doc_id, pos, token_id)
+    QueryDef("t23_encode", encode(_, _),
+      Sql("""WITH w AS (SELECT doc_id,
+        |    list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS w
+        |  FROM documents),
+        |ix AS (SELECT doc_id, w, unnest(range(1, len(w) + 1)) AS i FROM w),
+        |toks AS (SELECT doc_id, CAST(i - 1 AS INT) AS pos,
+        |    w[CAST(i AS INT)] AS t
+        |  FROM ix),
+        |vocab AS (SELECT t,
+        |    CAST(row_number() OVER (ORDER BY cnt DESC, t) - 1 AS INT) AS token_id
+        |  FROM (SELECT t, count(*) AS cnt FROM toks GROUP BY t
+        |    ORDER BY cnt DESC, t LIMIT 512))
+        |SELECT k.doc_id, k.pos,
+        |  CAST(coalesce(v.token_id, 512) AS INT) AS token_id
+        |FROM toks k LEFT JOIN vocab v ON k.t = v.t
+        |ORDER BY doc_id, pos""")),
+
+    // Per-doc shingle novelty vs everything ingested before it (window
+    // min over the hashed shingle — one shuffle, no self-join)
+    QueryDef("t24_novelty", noveltyScores(_, _),
+      // t24: the d2-standard shingle sets, hashed with the SAME md5
+      // 60-bit rule as the Spark side (so even a hash collision cannot
+      // diverge the engines), first-occurrence via a window min
+      SqlFn(() => s"""${DedupQueries.shingleSets},
+        |ex AS (SELECT doc_id,
+        |    CAST('0x' || substr(md5(unnest(t)), 1, 15) AS BIGINT) AS g
+        |  FROM sz),
+        |fd AS (SELECT doc_id, g,
+        |    min(doc_id) OVER (PARTITION BY g) AS first_doc FROM ex)
+        |SELECT doc_id, count(*) AS n_shingles,
+        |  CAST(sum(CASE WHEN first_doc = doc_id THEN 1 ELSE 0 END)
+        |    AS BIGINT) AS n_novel,
+        |  CAST(sum(CASE WHEN first_doc = doc_id THEN 1 ELSE 0 END)
+        |    AS DOUBLE) / CAST(count(*) AS DOUBLE) AS novelty
+        |FROM fd GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+
+    // Count-Min frequency sketch — deterministic hashes, so unlike the
+    // HLL (q27) it carries a full bit-identical DuckDB oracle
+    QueryDef("t25_countmin", countMin(_, _),
+      // t25: the sketch is pure integer arithmetic over deterministic
+      // md5-convention hashes — cells, estimates, and overcounts are
+      // bit-identical across engines. Built from the (token, count)
+      // aggregate on both sides (cell sums are identical either way).
+      Sql("""WITH toks AS (SELECT unnest(list_filter(
+        |    string_split_regex(lower(text), '\s+'), x -> x <> '')) AS tok
+        |  FROM documents),
+        |counts AS (SELECT tok, count(*) AS n FROM toks GROUP BY tok),
+        |rows_ AS (SELECT unnest(range(4)) AS r),
+        |cells AS (SELECT r,
+        |    CAST(CAST('0x' || substr(md5('cm' || r || '_' || tok), 1, 15)
+        |      AS BIGINT) % 512 AS INT) AS cell,
+        |    sum(n) AS cn
+        |  FROM counts CROSS JOIN rows_ GROUP BY 1, 2),
+        |q AS (SELECT tok, n FROM counts ORDER BY n DESC, tok LIMIT 20),
+        |qc AS (SELECT tok, n, r,
+        |    CAST(CAST('0x' || substr(md5('cm' || r || '_' || tok), 1, 15)
+        |      AS BIGINT) % 512 AS INT) AS cell
+        |  FROM q CROSS JOIN rows_)
+        |SELECT qc.tok AS tok, CAST(qc.n AS BIGINT) AS exact_n,
+        |  CAST(min(cn) AS BIGINT) AS cm_est,
+        |  CAST(min(cn) - qc.n AS BIGINT) AS overcount
+        |FROM qc JOIN cells ON qc.r = cells.r AND qc.cell = cells.cell
+        |GROUP BY qc.tok, qc.n ORDER BY exact_n DESC, tok""")),
+
+    // Flesch / Flesch–Kincaid readability: integer counts + one double
+    // formula per doc — engine-identical, shuffle-free scan
+    QueryDef("t26_readability", readability(_, _),
+      // t26: the three counts are integers (tokens / [.!?]+ runs /
+      // per-word [aeiouy]+ vowel groups, each floored at 1) and each
+      // score is one double expression over them — engine-identical.
+      Sql("""WITH d AS (SELECT doc_id, text,
+        |    list_filter(string_split_regex(lower(text), '\s+'),
+        |      x -> x <> '') AS toks
+        |  FROM documents),
+        |c AS (SELECT doc_id,
+        |    CAST(len(toks) AS INT) AS n_words,
+        |    CAST(greatest(1, len(regexp_extract_all(text, '[.!?]+')))
+        |      AS INT) AS n_sentences,
+        |    CAST(list_sum(list_transform(toks, x ->
+        |      greatest(1, len(regexp_extract_all(x, '[aeiouy]+')))))
+        |      AS BIGINT) AS n_syllables
+        |  FROM d WHERE len(toks) >= 1)
+        |SELECT doc_id, n_words, n_sentences, n_syllables,
+        |  206.835 - 1.015 * (CAST(n_words AS DOUBLE) / n_sentences)
+        |    - 84.6 * (CAST(n_syllables AS DOUBLE) / n_words) AS flesch,
+        |  0.39 * (CAST(n_words AS DOUBLE) / n_sentences)
+        |    + 11.8 * (CAST(n_syllables AS DOUBLE) / n_words)
+        |    - 15.59 AS fk_grade
+        |FROM c ORDER BY doc_id""")),
+
+    // Sentence-aware soft-cap chunking (RAG/context prep); packing is
+    // integer arithmetic so chunks + text are engine-identical
+    QueryDef("t27_sentence_chunks", sentenceChunks(_, _),
+      // t27: sentence split + integer soft-cap packing — chunk ids,
+      // counts, and the ORDER-BY-rebuilt chunk text are all
+      // engine-identical.
+      Sql("""WITH parts AS (SELECT doc_id,
+        |    string_split_regex(text, '[.!?]+') AS ps FROM documents),
+        |s0 AS (SELECT doc_id, i AS sidx, trim(ps[i]) AS sent
+        |  FROM parts, LATERAL (SELECT unnest(range(1, len(ps) + 1)) AS i)),
+        |s1 AS (SELECT doc_id, sidx, sent,
+        |    len(list_filter(string_split_regex(lower(sent), '\s+'),
+        |      x -> x <> '')) AS ntok
+        |  FROM s0),
+        |s2 AS (SELECT doc_id, sidx, sent, ntok,
+        |    coalesce(sum(ntok) OVER (PARTITION BY doc_id ORDER BY sidx
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum
+        |  FROM s1 WHERE ntok > 0),
+        |s3 AS (SELECT doc_id, sidx, sent, ntok,
+        |    CAST(cum // 48 AS INT) AS chunk_id FROM s2)
+        |SELECT doc_id, chunk_id,
+        |  CAST(count(*) AS INT) AS n_sentences,
+        |  CAST(sum(ntok) AS BIGINT) AS n_tokens,
+        |  string_agg(sent, ' ' ORDER BY sidx) AS chunk_text
+        |FROM s3 GROUP BY doc_id, chunk_id
+        |ORDER BY doc_id, chunk_id""")),
+
+    // Collocation mining by lift (phrase detection): bigint counts +
+    // one exact-integer division — hash-gated, no transcendental
+    QueryDef("t28_collocations", collocations(_, _),
+      // t28: all counts bigint; N·c₂ and cₐ·c_b are exact doubles, the
+      // one division IEEE-rounds identically — full hash gate.
+      Sql("""WITH base AS (SELECT doc_id,
+        |    list_filter(string_split_regex(lower(text), '\s+'),
+        |      x -> x <> '') AS w
+        |  FROM documents),
+        |toks AS (SELECT unnest(w) AS t FROM base),
+        |cnt AS (SELECT t, count(*) AS c FROM toks GROUP BY t),
+        |tot AS (SELECT count(*) AS n FROM toks),
+        |pairs AS (SELECT
+        |    unnest(w[1:len(w)-1]) AS wa, unnest(w[2:len(w)]) AS wb
+        |  FROM base WHERE len(w) >= 2),
+        |bcnt AS (SELECT wa, wb, count(*) AS n_pair FROM pairs
+        |  GROUP BY wa, wb HAVING count(*) >= 5)
+        |SELECT wa, wb, n_pair,
+        |  CAST(n * n_pair AS DOUBLE) / CAST(ca.c * cb.c AS DOUBLE) AS lift
+        |FROM bcnt
+        |  JOIN cnt ca ON bcnt.wa = ca.t
+        |  JOIN cnt cb ON bcnt.wb = cb.t
+        |  CROSS JOIN tot
+        |ORDER BY lift DESC, wa, wb LIMIT 30""")),
+
+    // BPE merge learning (Sennrich 2016): the tokenizer-training
+    // primitive — integer pair counts + deterministic argmax + an
+    // exact boundary-wrapped replace, unrolled-CTE hash oracle
+    QueryDef("t29_bpe_merges", bpeMerges(_, _),
+      // t29: pure integer counts, deterministic (pc desc, l, r) argmax,
+      // and the SAME boundary-wrapped replace as Spark's — unrolled CTE
+      // per merge step, full hash gate.
+      SqlFn(() => bpeOracle(steps = 6))),
+
+    // BPE ENCODE: apply t29's learned merges corpus-wide (the
+    // learn->encode tokenizer loop closed); per-doc piece accounting
+    QueryDef("t35_bpe_encode", bpeEncode(_, _),
+      SqlFn(() => bpeEncodeOracle(steps = 6))),
+
+    // Per-language token-budget report: tokenizer fertility + packing
+    // efficiency at a fixed sequence length (pre-run cost estimate)
+    QueryDef("t30_token_budget", tokenBudgetReport(_, _),
+      // t30: bigint masses + integer ceils; fertility and padding are
+      // each ONE division of exact integers (IEEE-identical).
+      Sql("""WITH d AS (SELECT lang,
+        |    CAST(len(list_filter(string_split_regex(lower(text), '\s+'),
+        |      x -> x <> '')) AS BIGINT) AS nw,
+        |    CAST(len(regexp_extract_all(lower(text),
+        |      '[a-z]+|[0-9]|[^a-z0-9\s]')) AS BIGINT) AS np
+        |  FROM documents),
+        |a AS (SELECT lang, count(*) AS n_docs,
+        |    CAST(sum(nw) AS BIGINT) AS n_words,
+        |    CAST(sum(np) AS BIGINT) AS n_wordpieces,
+        |    CAST(sum((np + 511) // 512) AS BIGINT) AS n_seqs_doc_packed
+        |  FROM d GROUP BY lang)
+        |SELECT lang, n_docs, n_words, n_wordpieces,
+        |  CASE WHEN n_words > 0
+        |    THEN CAST(n_wordpieces AS DOUBLE) / CAST(n_words AS DOUBLE)
+        |  END AS fertility,
+        |  n_seqs_doc_packed,
+        |  (n_wordpieces + 511) // 512 AS n_seqs_ideal,
+        |  CASE WHEN n_seqs_doc_packed > 0
+        |    THEN CAST(n_seqs_doc_packed * 512 - n_wordpieces AS DOUBLE)
+        |      / CAST(n_seqs_doc_packed * 512 AS DOUBLE)
+        |  END AS padding_frac
+        |FROM a ORDER BY lang""")),
+
+    // fastText-shape linear classifier inference: feature-hash +
+    // integer-milli weight fold, decision and logit engine-exact
+    QueryDef("t31_classifier_filter", classifierFilter(_, _),
+      // t31: integer-milli weights from the shared md5 hash convention
+      // (hash64 is in [0, 2^60), so plain % equals pmod); the logit is
+      // an exact BIGINT sum, mean_logit ONE bigint/double divide, and
+      // the keep decision a pure integer compare — nothing drifts.
+      Sql("""WITH t AS (SELECT doc_id,
+        |    coalesce(list_filter(string_split_regex(lower(text), '\s+'),
+        |      x -> x <> ''), []) AS toks
+        |  FROM documents),
+        |s AS (SELECT doc_id,
+        |    CAST(len(toks) AS BIGINT) AS n_tokens,
+        |    CAST(coalesce(list_sum(list_transform(toks, x ->
+        |      CAST('0x' || substr(md5('cfw_' ||
+        |        CAST(CAST('0x' || substr(md5('cf_' || x), 1, 15) AS BIGINT)
+        |          % 4096 AS VARCHAR)), 1, 15) AS BIGINT) % 2001 - 1000)),
+        |      0) AS BIGINT) AS logit_milli
+        |  FROM t)
+        |SELECT doc_id, n_tokens, logit_milli,
+        |  CASE WHEN n_tokens > 0
+        |    THEN CAST(logit_milli AS DOUBLE) / (1000.0 * CAST(n_tokens AS DOUBLE))
+        |  END AS mean_logit,
+        |  logit_milli > 0 AS keep
+        |FROM s ORDER BY doc_id""")),
+
+    // Per-source JSD drift vs the corpus unigram distribution —
+    // token-sorted folds + absent-token closed form, no vocab cross
+    QueryDef("t32_mixture_drift", mixtureDrift(_, _),
+      // t32: exact-count divides, transcendental-free |p−q| terms (r12:
+      // ln differs in the last ulp between JVM and DuckDB libm, so the
+      // hash-gated statistic is TVD; JSD lives in mixtureDriftJsd under
+      // an epsilon spec), TOKEN-SORTED list_reduce folds (left fold from
+      // the first element equals Spark's 0.0-seeded fold exactly since
+      // 0.0 + x == x), and the absent-token mass 0.5·(1 − Σ_present q).
+      Sql("""WITH toks AS (SELECT source,
+        |    unnest(list_filter(string_split_regex(lower(text), '\s+'),
+        |      x -> x <> '')) AS token
+        |  FROM documents),
+        |cst AS (SELECT source, token, count(*) AS c_st FROM toks GROUP BY 1, 2),
+        |ns AS (SELECT source, sum(c_st) AS n_s FROM cst GROUP BY 1),
+        |ct AS (SELECT token, sum(c_st) AS c_t FROM cst GROUP BY 1),
+        |tot AS (SELECT sum(c_t) AS n_tot FROM ct),
+        |pq AS (SELECT source, token,
+        |    CAST(c_st AS DOUBLE) / CAST(n_s AS DOUBLE) AS p,
+        |    CAST(c_t AS DOUBLE) / CAST(n_tot AS DOUBLE) AS q
+        |  FROM cst JOIN ct USING (token) JOIN ns USING (source)
+        |  CROSS JOIN tot),
+        |terms AS (SELECT source, token, q, abs(p - q) AS term FROM pq),
+        |g AS (SELECT source, max(n_s) AS n_tokens,
+        |    list_sort(list(struct_pack(token := token, term := term,
+        |      q := q))) AS xs
+        |  FROM terms JOIN ns USING (source) GROUP BY source)
+        |SELECT source, CAST(n_tokens AS BIGINT) AS n_tokens,
+        |  CAST(len(xs) AS INT) AS vocab_source,
+        |  0.5 * list_reduce(list_transform(xs, x -> x.term), (a, b) -> a + b)
+        |    + 0.5 * (1.0 -
+        |      list_reduce(list_transform(xs, x -> x.q), (a, b) -> a + b))
+        |    AS tvd
+        |FROM g ORDER BY source""")),
+
+    // Okapi BM25 ranking for a fixed query term set (lexical
+    // retrieval), registered with the ln-free RSJ-odds idf variant
+    // (r13 verdict #1); classic ln idf is spec-gated
+    QueryDef("t15_bm25_rank", bm25RankLin(_, _),
+      // t15: per-term BM25 contributions summed in FIXED query-term order
+      // (table, scan, join) on BOTH engines — see bm25Rank's determinism
+      // note; all constant arithmetic is written with the same literal
+      // ops ((1.2 + 1.0), not 2.2) so the doubles are bit-identical.
+      // t15 (RSJ-odds registered form): w's expression tree is written
+      // with the same parenthesization as the Spark Column tree — every
+      // op is a correctly-rounded IEEE basic op over deterministic
+      // inputs, so the scores are bit-identical (no ln anywhere). The
+      // ::DOUBLE casts on every fractional literal matter: DuckDB parses
+      // bare 1.2/0.5 as DECIMAL and routes the adjacent ops through
+      // decimal arithmetic — a DIFFERENT tree that landed 1 ulp off on 4
+      // rows at sf0.01 (caught by the bit-exact local gate, r14).
+      Sql("""WITH toks AS (SELECT doc_id,
+        |    unnest(list_filter(string_split_regex(lower(text), '\s+'),
+        |      x -> x <> '')) AS term
+        |  FROM documents),
+        |tf AS (SELECT doc_id, term, count(*) AS cnt FROM toks GROUP BY 1, 2),
+        |tfw AS (SELECT *, sum(cnt) OVER (PARTITION BY doc_id) AS n_tok FROM tf),
+        |n AS (SELECT count(*) AS nd FROM documents),
+        |st AS (SELECT sum(cnt) * 1.0::DOUBLE / count(DISTINCT doc_id)
+        |  AS avgdl FROM tf),
+        |hits AS (SELECT *, count(*) OVER (PARTITION BY term) AS dfr
+        |  FROM tfw WHERE term IN ('table', 'scan', 'join')),
+        |wv AS (SELECT doc_id, term,
+        |    (((nd - dfr + 0.5::DOUBLE) / (dfr + 0.5::DOUBLE))
+        |      * (cnt * (1.2::DOUBLE + 1.0::DOUBLE)))
+        |      / (cnt + 1.2::DOUBLE * (1.0::DOUBLE - 0.75::DOUBLE
+        |        + 0.75::DOUBLE * n_tok / avgdl)) AS w
+        |  FROM hits CROSS JOIN n CROSS JOIN st),
+        |sc AS (SELECT doc_id,
+        |    coalesce(sum(CASE WHEN term = 'table' THEN w END), 0.0)
+        |      + coalesce(sum(CASE WHEN term = 'scan' THEN w END), 0.0)
+        |      + coalesce(sum(CASE WHEN term = 'join' THEN w END), 0.0)
+        |      AS bm25_lin
+        |  FROM wv GROUP BY doc_id),
+        |rk AS (SELECT doc_id, bm25_lin, CAST(row_number() OVER (
+        |    ORDER BY bm25_lin DESC, doc_id) AS INT) AS rank FROM sc)
+        |SELECT doc_id, rank, bm25_lin FROM rk WHERE rank <= 20
+        |ORDER BY rank""")),
+
+    // Bigram fluency signal, registered as the exact count-moment +
+    // ratio-of-sums companion (r13 verdict #1), free of per-pair -ln
+    // drift
+    QueryDef("t16_bigram_logprob", bigramMoments(_, _),
+      // t16 (count-moment registered form): zipped double-unnest of the
+      // shifted token-list slices builds the adjacent pairs; the sums
+      // are exact integers whatever the merge order, and the pooled
+      // scores are the same fixed divide/multiply trees on both sides.
+      Sql("""WITH base AS (SELECT doc_id,
+        |    list_filter(string_split_regex(lower(text), '\s+'),
+        |      x -> x <> '') AS w
+        |  FROM documents),
+        |toks AS (SELECT doc_id, unnest(w) AS t FROM base),
+        |cnt AS (SELECT t, count(*) AS c FROM toks GROUP BY t),
+        |tot AS (SELECT count(*) AS n,
+        |    (SELECT count(*) FROM cnt) AS v FROM toks),
+        |pairs AS (SELECT doc_id,
+        |    unnest(w[1:len(w)-1]) AS wp, unnest(w[2:len(w)]) AS wc
+        |  FROM base WHERE len(w) >= 2),
+        |bcnt AS (SELECT wp, wc, count(*) AS c2 FROM pairs GROUP BY wp, wc)
+        |SELECT doc_id, CAST(count(*) AS INT) AS n_bigrams,
+        |  CAST(sum(c2) AS BIGINT) AS sum_c2,
+        |  CAST(sum(cp.c) AS BIGINT) AS sum_cp,
+        |  CAST(sum(cc.c) AS BIGINT) AS sum_cc,
+        |  CAST(sum(c2) AS DOUBLE) / CAST(sum(cp.c) AS DOUBLE) AS pooled_cond,
+        |  CAST(sum(cc.c) + count(*) AS DOUBLE)
+        |    / CAST(count(*) * (n + v) AS DOUBLE) AS pooled_backoff,
+        |  0.7 * (CAST(sum(c2) AS DOUBLE) / CAST(sum(cp.c) AS DOUBLE))
+        |    + 0.3 * (CAST(sum(cc.c) + count(*) AS DOUBLE)
+        |      / CAST(count(*) * (n + v) AS DOUBLE)) AS pooled_interp
+        |FROM pairs JOIN bcnt USING (wp, wc)
+        |  JOIN cnt cp ON pairs.wp = cp.t
+        |  JOIN cnt cc ON pairs.wc = cc.t
+        |  CROSS JOIN tot
+        |GROUP BY doc_id, n, v ORDER BY doc_id""")),
+
+    // Zipf health check, registered as the exact rank-octave histogram
+    // (r13 verdict #1), free of the ln-ln OLS fit's amplified ulp drift
+    QueryDef("t17_zipf_fit", zipfOctaves(_, _),
+      // t17 (octave-histogram registered form): ⌊log₂ rank⌋ via the same
+      // integer CASE ladder as the Spark side — exact at power-of-two
+      // boundaries where floor(ln/ln2) sits one ulp away; all outputs
+      // exact integers.
+      Sql("""WITH toks AS (SELECT unnest(list_filter(
+        |    string_split_regex(lower(text), '\s+'), x -> x <> '')) AS t
+        |  FROM documents),
+        |cnt AS (SELECT t, count(*) AS c FROM toks GROUP BY t),
+        |top AS (SELECT t, c FROM cnt ORDER BY c DESC, t LIMIT 1000),
+        |rk AS (SELECT c, row_number() OVER (ORDER BY c DESC, t) AS rank
+        |  FROM top),
+        |oc AS (SELECT c, CAST(CASE
+        |    WHEN rank < 2 THEN 0 WHEN rank < 4 THEN 1 WHEN rank < 8 THEN 2
+        |    WHEN rank < 16 THEN 3 WHEN rank < 32 THEN 4 WHEN rank < 64 THEN 5
+        |    WHEN rank < 128 THEN 6 WHEN rank < 256 THEN 7
+        |    WHEN rank < 512 THEN 8 WHEN rank < 1024 THEN 9
+        |    WHEN rank < 2048 THEN 10 WHEN rank < 4096 THEN 11
+        |    ELSE 12 END AS INT) AS octave FROM rk)
+        |SELECT octave, CAST(count(*) AS BIGINT) AS n_terms,
+        |  CAST(sum(c) AS BIGINT) AS sum_count,
+        |  CAST(min(c) AS BIGINT) AS min_count,
+        |  CAST(max(c) AS BIGINT) AS max_count
+        |FROM oc GROUP BY octave ORDER BY octave""")),
+
+    // Heaps'-law growth curve: cumulative tokens vs cumulative distinct
+    // vocabulary, via per-term first-bucket (no ordered scan)
+    QueryDef("t18_heaps_curve", heapsCurve(_, _),
+      // t18: both engines' `/` on integers is double division, but their
+      // double→INT casts DIFFER — Spark truncates, DuckDB rounds — so the
+      // bucket floor is explicit; the cumulative sums are the same
+      // triangular self-join, no window.
+      Sql("""WITH mx AS (SELECT max(doc_id) AS mx FROM documents),
+        |toks AS (SELECT CAST(floor(doc_id * 10 / (mx + 1)) AS INT) AS bucket,
+        |    unnest(list_filter(string_split_regex(lower(text), '\s+'),
+        |      x -> x <> '')) AS t
+        |  FROM documents, mx),
+        |th AS (SELECT bucket, count(*) AS n_tokens FROM toks GROUP BY bucket),
+        |fs AS (SELECT t, min(bucket) AS bucket FROM toks GROUP BY t),
+        |vh AS (SELECT bucket, count(*) AS n_new_terms FROM fs GROUP BY bucket),
+        |h AS (SELECT coalesce(th.bucket, vh.bucket) AS bucket,
+        |    coalesce(n_tokens, 0) AS n_tokens,
+        |    coalesce(n_new_terms, 0) AS n_new_terms
+        |  FROM th FULL JOIN vh ON th.bucket = vh.bucket)
+        |SELECT a.bucket, CAST(sum(b.n_tokens) AS BIGINT) AS cum_tokens,
+        |  CAST(sum(b.n_new_terms) AS BIGINT) AS cum_vocab
+        |FROM h a JOIN h b ON b.bucket <= a.bucket
+        |GROUP BY a.bucket ORDER BY a.bucket""")),
+
+    // CCNet-style per-language perplexity terciles (head/middle/tail)
+    QueryDef("t19_ccnet_buckets", ccnetBuckets(_, _),
+      // t19: t10's scoring CTE verbatim, rounded to 6 decimals on BOTH
+      // sides before the tercile compare (see ccnetBuckets scaladoc);
+      // quantile_cont mirrors Spark's exact linear-interpolated
+      // `percentile` at position p*(n-1).
+      Sql("""WITH toks AS (SELECT doc_id,
+        |    unnest(list_filter(string_split_regex(lower(text), '\s+'),
+        |      x -> x <> '')) AS t
+        |  FROM documents),
+        |cnt AS (SELECT t, count(*) AS c FROM toks GROUP BY t),
+        |tot AS (SELECT count(*) AS n,
+        |    (SELECT count(*) FROM cnt) AS v FROM toks),
+        |scored AS (SELECT doc_id,
+        |    round(avg(-ln((c + 1.0) / (n + v))), 6) AS score
+        |  FROM toks JOIN cnt USING (t) CROSS JOIN tot GROUP BY doc_id),
+        |sl AS (SELECT s.doc_id, d.lang, s.score
+        |  FROM scored s JOIN documents d USING (doc_id)),
+        |cuts AS (SELECT lang,
+        |    quantile_cont(score, CAST(1 AS DOUBLE) / 3) AS t1,
+        |    quantile_cont(score, CAST(2 AS DOUBLE) / 3) AS t2
+        |  FROM sl GROUP BY lang)
+        |SELECT sl.doc_id, sl.lang, sl.score,
+        |  CASE WHEN score <= t1 THEN 'head'
+        |       WHEN score <= t2 THEN 'middle'
+        |       ELSE 'tail' END AS bucket
+        |FROM sl JOIN cuts USING (lang) ORDER BY sl.doc_id""")),
+
+    // DSIR importance weights: per-token mean log ratio of a target-
+    // slice unigram LM over the raw-corpus LM (data-selection score)
+    QueryDef("t20_dsir_weights", dsirWeights(_, _),
+      Sql("""WITH toks AS (SELECT doc_id, lang,
+        |    unnest(list_filter(string_split_regex(lower(text), '\s+'),
+        |      x -> x <> '')) AS t
+        |  FROM documents),
+        |raw AS (SELECT t, count(*) AS cr FROM toks GROUP BY t),
+        |tgt AS (SELECT t, count(*) AS ct FROM toks
+        |  WHERE lang = 'en' GROUP BY t),
+        |tot AS (SELECT (SELECT count(*) FROM toks) AS nr,
+        |  (SELECT count(*) FROM raw) AS v,
+        |  (SELECT count(*) FROM toks WHERE lang = 'en') AS nt)
+        |SELECT doc_id, CAST(count(*) AS INT) AS n_tokens,
+        |  avg(ln((coalesce(ct, 0) + 1.0) / (nt + v))
+        |    - ln((cr + 1.0) / (nr + v))) AS avg_log_ratio
+        |FROM toks JOIN raw USING (t) LEFT JOIN tgt USING (t)
+        |CROSS JOIN tot
+        |GROUP BY doc_id ORDER BY doc_id""")),
+
+    // RAKE keyphrases: degree/frequency word scores over stopword-free
+    // phrase runs, order-pinned phrase-score folds, top-3 per doc
+    QueryDef("t34_rake_keywords", rakeKeywords(_, _),
+      // t34: post-filter positions (the t23 ix pattern), running-stopword
+      // phrase ids, integer degree/freq, ONE double divide per word, and
+      // the phrase fold rides a pos-ORDERED list through list_reduce —
+      // same left-assoc order as Spark's aggregate over the sorted array.
+      Sql("""WITH w AS (SELECT doc_id,
+        |    list_filter(string_split_regex(lower(text), '\s+'),
+        |      x -> x <> '') AS ws
+        |  FROM documents),
+        |ix AS (SELECT doc_id, ws, unnest(range(1, len(ws) + 1)) AS i FROM w),
+        |seg AS (SELECT doc_id, CAST(i AS INT) AS pos, ws[CAST(i AS INT)] AS t,
+        |    CASE WHEN ws[CAST(i AS INT)] IN
+        |      ('the', 'a', 'and', 'of', 'to', 'in', 'is')
+        |      THEN 1 ELSE 0 END AS st
+        |  FROM ix),
+        |ph AS (SELECT doc_id, pos, t, st,
+        |    sum(st) OVER (PARTITION BY doc_id ORDER BY pos
+        |      ROWS UNBOUNDED PRECEDING) AS phrase_id
+        |  FROM seg),
+        |pw AS (SELECT doc_id, phrase_id, pos, t FROM ph WHERE st = 0),
+        |plen AS (SELECT doc_id, phrase_id, pos, t,
+        |    count(*) OVER (PARTITION BY doc_id, phrase_id) AS plen
+        |  FROM pw),
+        |wsc AS (SELECT doc_id, t,
+        |    CAST(sum(plen) AS DOUBLE) / count(*) AS score
+        |  FROM plen GROUP BY doc_id, t),
+        |psc AS (SELECT p.doc_id, p.phrase_id,
+        |    string_agg(p.t, ' ' ORDER BY p.pos) AS phrase,
+        |    list_reduce(list(s.score ORDER BY p.pos), (a, b) -> a + b)
+        |      AS phrase_score
+        |  FROM pw p JOIN wsc s ON p.doc_id = s.doc_id AND p.t = s.t
+        |  GROUP BY p.doc_id, p.phrase_id),
+        |uniq AS (SELECT doc_id, phrase, max(phrase_score) AS score
+        |  FROM psc GROUP BY doc_id, phrase),
+        |rk AS (SELECT doc_id, phrase, score,
+        |    row_number() OVER (PARTITION BY doc_id
+        |      ORDER BY score DESC, phrase) AS rank
+        |  FROM uniq)
+        |SELECT doc_id, CAST(rank AS INT) AS rank, phrase, score
+        |FROM rk WHERE rank <= 3 ORDER BY doc_id, rank""")),
+  )
+
+  /** t29's learning CTEs (t29 and t35 share them): the word-TYPE
+    * relation `wc`, the boundary-wrapped `w0`, then per step k the pair
+    * counts `p<k>`, the argmax merge `t<k>` and the replaced `w<k>`.
+    */
+  private def bpeLearnCtes(steps: Int): StringBuilder = {
+    val sb = new StringBuilder
+    sb ++= """WITH wc AS (SELECT w, count(*) AS cnt FROM (
+      |    SELECT unnest(list_filter(string_split_regex(lower(text), '\s+'),
+      |      x -> x <> '')) AS w FROM documents) GROUP BY w),
+      |w0 AS (SELECT chr(1) || array_to_string(string_split(w, ''),
+      |    chr(2) || chr(1)) || chr(2) AS wrapped, cnt FROM wc)""".stripMargin
+    for (k <- 1 to steps) {
+      sb ++= s""",
+        |p$k AS (SELECT l, r, sum(cnt) AS pc FROM (
+        |    SELECT cnt, unnest(syms[1:len(syms) - 1]) AS l,
+        |      unnest(syms[2:len(syms)]) AS r
+        |    FROM (SELECT cnt, string_split(
+        |        substr(wrapped, 2, length(wrapped) - 2),
+        |        chr(2) || chr(1)) AS syms FROM w${k - 1})
+        |    WHERE len(syms) >= 2)
+        |  GROUP BY l, r),
+        |t$k AS (SELECT l, r, pc FROM p$k ORDER BY pc DESC, l, r LIMIT 1),
+        |w$k AS (SELECT replace(w.wrapped,
+        |    chr(1) || t.l || chr(2) || chr(1) || t.r || chr(2),
+        |    chr(1) || t.l || t.r || chr(2)) AS wrapped, w.cnt
+        |  FROM w${k - 1} w CROSS JOIN t$k t)""".stripMargin
+    }
+    sb
+  }
+
+  /** t29's unrolled oracle: per step k, pair counts over w{k-1}, the
+    * (count desc, left, right) argmax, and the boundary-wrapped
+    * replace producing w{k}. chr(1)/chr(2) mirror the Spark side's
+    * u0001/u0002 symbol markers; DuckDB's replace shares Java's
+    * non-overlapping left-to-right scan (prototype-verified).
+    */
+  private def bpeOracle(steps: Int): String = {
+    val sb = bpeLearnCtes(steps)
+    sb ++= (1 to steps).map(k =>
+      s"""
+      |SELECT $k AS step, l AS left_sym, r AS right_sym,
+      |  CAST(pc AS BIGINT) AS pair_count
+      |FROM t$k""".stripMargin).mkString("", " UNION ALL", "")
+    sb ++= "\nORDER BY step"
+    sb.toString
+  }
+
+  /** t35's oracle: t29's learning CTEs verbatim (word-TYPE relation,
+    * argmax merge per step, boundary-wrapped replace), then the
+    * application replayed per doc-word instance with the same
+    * replaces in the same learned order; per-doc exact counts close
+    * with one ratio-of-sums divide.
+    */
+  private def bpeEncodeOracle(steps: Int): String = {
+    val sb = bpeLearnCtes(steps)
+    sb ++= """,
+      |dw AS (SELECT doc_id,
+      |    unnest(list_filter(string_split_regex(lower(text), '\s+'),
+      |      x -> x <> '')) AS w FROM documents),
+      |d0 AS (SELECT doc_id, CAST(length(w) AS BIGINT) AS n_chars,
+      |    chr(1) || array_to_string(string_split(w, ''),
+      |      chr(2) || chr(1)) || chr(2) AS wrapped FROM dw)""".stripMargin
+    for (k <- 1 to steps) {
+      sb ++= s""",
+        |d$k AS (SELECT doc_id, n_chars, replace(d.wrapped,
+        |    chr(1) || t.l || chr(2) || chr(1) || t.r || chr(2),
+        |    chr(1) || t.l || t.r || chr(2)) AS wrapped
+        |  FROM d${k - 1} d CROSS JOIN t$k t)""".stripMargin
+    }
+    sb ++= s"""
+      |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
+      |  CAST(sum(n_chars) AS BIGINT) AS n_chars,
+      |  CAST(sum(len(string_split(substr(wrapped, 2, length(wrapped) - 2),
+      |    chr(2) || chr(1)))) AS BIGINT) AS n_pieces,
+      |  CAST(sum(n_chars) AS DOUBLE)
+      |    / CAST(sum(len(string_split(substr(wrapped, 2,
+      |      length(wrapped) - 2), chr(2) || chr(1)))) AS DOUBLE)
+      |    AS compression
+      |FROM d$steps GROUP BY doc_id ORDER BY doc_id""".stripMargin
+    sb.toString
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.SparkEntry.{QueryDef, Sql, SqlFn}
 
 /** Time-series analytics over the `events` feed — the monitoring rung
   * of a training-data pipeline (ingest volumes, per-source quality
@@ -196,4 +197,95 @@ object TimeSeries {
         max(col("epoch_hour")).as("max_hour"))
       .orderBy(col("bucket"))
   }
+}
+
+/** The registered queries that call [[TimeSeries]]: name, builder and oracle.
+  * A separate object, so that building the registry loads these lists
+  * and not the operator object, which loads when a query runs.
+  */
+object TimeSeriesQueries {
+  import TimeSeries._
+
+  def queries: Seq[QueryDef] = Seq(
+    // Per-user EWMA over the hourly mean series: a left fold in hour
+    // order, identical IEEE op sequence to the oracle's list_reduce
+    QueryDef("q61_ewma", ewma(_, _),
+      // q61: list_reduce seeds with the first element and folds left —
+      // the same op sequence as Spark's aggregate(slice(xs,2,n-1), x0, f)
+      // with the same coefficient literals, so the doubles are identical.
+      Sql("""WITH hourly AS (SELECT user_id,
+        |    date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hour,
+        |    avg(value) AS v
+        |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
+        |  GROUP BY 1, 2 HAVING avg(value) IS NOT NULL),
+        |ser AS (SELECT user_id,
+        |    list_sort(list({'hour': hour, 'v': v})) AS xs
+        |  FROM hourly GROUP BY user_id)
+        |SELECT user_id, CAST(len(xs) AS INT) AS n_hours,
+        |  xs[len(xs)].hour AS last_hour,
+        |  list_reduce(list_transform(xs, e -> e.v),
+        |    (a, x) -> 0.3::DOUBLE * x + 0.7::DOUBLE * a) AS ewma
+        |FROM ser ORDER BY user_id""")),
+
+    // Rolling z-score anomalies from explicit frame sums (no built-in
+    // stddev — engines' internal algorithms differ in the last ulps)
+    QueryDef("q62_anomaly", anomalies(_, _),
+      // q62: variance from explicit frame sums with the identical
+      // expression tree as the Spark side — never a built-in stddev.
+      // q62 (r14): frame stats fold the WINDOW-ORDERED frame list
+      // sequentially on both engines (q61's pinned-fold trick lifted to
+      // frames) — Spark's aggregate HOF and this list_reduce run the
+      // identical IEEE add sequence, so s/s2 are bit-identical;
+      // ex-ULP_DRIFT_ALLOWED.
+      Sql("""WITH hourly AS (SELECT user_id,
+        |    date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hour,
+        |    avg(value) AS v
+        |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
+        |  GROUP BY 1, 2 HAVING avg(value) IS NOT NULL),
+        |fr AS (SELECT user_id, hour, v, list(v) OVER w AS fr
+        |  FROM hourly
+        |  WINDOW w AS (PARTITION BY user_id ORDER BY hour
+        |    ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING)),
+        |st AS (SELECT user_id, hour, v,
+        |    len(fr) AS n,
+        |    list_reduce(list_prepend(0.0, fr), (a, x) -> a + x) AS s,
+        |    list_reduce(list_prepend(0.0, [x * x for x in fr]),
+        |      (a, x) -> a + x) AS s2
+        |  FROM fr),
+        |m AS (SELECT user_id, hour, v, n, s / n AS mean, s2
+        |  FROM st WHERE n >= 12),
+        |sd AS (SELECT user_id, hour, v, mean,
+        |    sqrt(greatest((s2 - n * mean * mean) / (n - 1), 0)) AS sd
+        |  FROM m)
+        |SELECT user_id, hour, v AS value, (v - mean) / sd AS zscore
+        |FROM sd WHERE sd > 0 AND abs((v - mean) / sd) > 3
+        |ORDER BY user_id, hour""")),
+
+    // Z-order clustering stats: per-z-bucket min/max of BOTH dims —
+    // the write-side multi-dimensional data-skipping layout
+    QueryDef("q73_zorder_stats", zorderStats(_, _),
+      // q73: exact integer affine to 16-bit coordinates, unrolled bigint
+      // bit interleave — the Spark expression's literal twin
+      SqlFn(() => {
+        val z = (0 until 16).map { i =>
+          s"((u16 // ${1L << i}) % 2) * ${1L << (2 * i + 1)}" +
+            s" + ((h16 // ${1L << i}) % 2) * ${1L << (2 * i)}"
+        }.mkString(" + ")
+        s"""WITH ev AS (SELECT user_id,
+          |    epoch_ms(CAST(ts AS TIMESTAMP)) // 3600000 AS epoch_hour
+          |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL),
+          |b AS (SELECT min(user_id) AS min_u, max(user_id) AS max_u,
+          |    min(epoch_hour) AS min_h, max(epoch_hour) AS max_h FROM ev),
+          |n AS (SELECT user_id, epoch_hour,
+          |    (user_id - min_u) * 65535 // greatest(max_u - min_u, 1) AS u16,
+          |    (epoch_hour - min_h) * 65535 // greatest(max_h - min_h, 1) AS h16
+          |  FROM ev CROSS JOIN b),
+          |zz AS (SELECT user_id, epoch_hour, ($z) AS z FROM n)
+          |SELECT CAST(z // ${1L << 27} AS INT) AS bucket,
+          |  count(*) AS n_rows,
+          |  min(user_id) AS min_user, max(user_id) AS max_user,
+          |  min(epoch_hour) AS min_hour, max(epoch_hour) AS max_hour
+          |FROM zz GROUP BY 1 ORDER BY 1""".stripMargin
+      })),
+  )
 }

@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.SparkEntry.{QueryDef, Sql}
+import graft.Tables
 
 /** The reference's reduce semantics, generalized: an *unweighted mean of
   * per-group means over a dense key domain* (SURVEY.md §2.2).
@@ -87,4 +89,54 @@ object TwoLevelMean {
   def weighted(df: DataFrame, keyCol: Column, valueCol: Column,
       keyName: String = "key", outName: String = "mean"): DataFrame =
     df.groupBy(keyCol.as(keyName)).agg(avg(valueCol).as(outName))
+}
+
+/** The registered queries that call [[TwoLevelMean]]: name, builder and oracle.
+  * A separate object, so that building the registry loads these lists
+  * and not the operator object, which loads when a query runs.
+  */
+object TwoLevelMeanQueries {
+  import TwoLevelMean._
+
+  def queries: Seq[QueryDef] = Seq(
+    // Faithful mode: unweighted mean of zero-filled per-group means;
+    // user_id % 4 plays the reference's one-mapper-per-file grouping.
+    // The group domain 0..3 is KNOWN up front (as the reference's file
+    // listing is) — the faithful zero-fill collapses algebraically to
+    // sum/N and the plan scans `events` exactly once.
+    QueryDef("events_speed_faithful", (s, dir) =>
+      faithful(
+        Tables.events(s, dir).select((col("user_id") % 4).as("grp"),
+          (dayofweek(col("ts")) - 1).cast("int").as("day"), col("value")),
+        col("grp"), col("day"), col("value"), 0 to 6,
+        0 to 3, keyName = "day", outName = "avg_value"
+      ).orderBy("day"),
+      // group domain is the fixed 0..3 (mirrors the Spark side's — the
+      // reference's "listing-known" file set, not data-derived). As on
+      // the Spark side, the per-group means are taken before the
+      // zero-fill join (a join ahead of the avg reorders its sum) and
+      // are summed in ascending grp order.
+      Sql("""WITH base AS (
+        |  SELECT user_id % 4 AS grp, CAST(dayofweek(ts) AS INT) AS day, value
+        |  FROM events
+        |), groups AS (SELECT * FROM (VALUES (0),(1),(2),(3)) g(grp)),
+        |days AS (SELECT * FROM (VALUES (CAST(0 AS INT)),(1),(2),(3),(4),(5),(6)) d(day)),
+        |means AS (SELECT grp, day, avg(value) AS m FROM base GROUP BY grp, day),
+        |per_grp AS (
+        |  SELECT g.grp, d.day, coalesce(m.m, 0.0) AS per_grp_avg
+        |  FROM groups g CROSS JOIN days d
+        |  LEFT JOIN means m ON m.grp = g.grp AND m.day = d.day
+        |)
+        |SELECT day, avg(per_grp_avg ORDER BY grp) AS avg_value
+        |FROM per_grp GROUP BY day ORDER BY day""")),
+
+    // Weighted (corrected) mode: plain global mean per day.
+    QueryDef("events_speed_weighted", (s, dir) =>
+      weighted(
+        Tables.events(s, dir), (dayofweek(col("ts")) - 1).cast("int"), col("value"),
+        keyName = "day", outName = "avg_value"
+      ).orderBy("day"),
+      Sql("""SELECT CAST(dayofweek(ts) AS INT) AS day, avg(value) AS avg_value
+        |FROM events GROUP BY day ORDER BY day""")),
+  )
 }

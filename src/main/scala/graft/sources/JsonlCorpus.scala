@@ -5,6 +5,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.SparkEntry.{QueryDef, SqlFn, oracleSfName}
 
 /** JSONL (newline-delimited JSON) corpus source — the de-facto exchange
   * format of LLM training corpora (one JSON object per document). The
@@ -88,4 +89,29 @@ object JsonlCorpus {
         md5(col("text")).as("text_md5"))
       .orderBy(col("doc_id"))
   }
+}
+
+/** The registered queries that call [[JsonlCorpus]]: name, builder and oracle.
+  * A separate object, so that building the registry loads these lists
+  * and not the operator object, which loads when a query runs.
+  */
+object JsonlCorpusQueries {
+  import JsonlCorpus._
+
+  def queries: Seq[QueryDef] = Seq(
+    // JSONL corpus ingest (the LLM-corpus exchange format): permissive
+    // per-line parse, null-keyed/corrupt lines dropped identically on
+    // both engines, md5 text digest proving decode fidelity
+    QueryDef("docs_jsonl_ingest", (s, dir) => ingest(s, dir),
+      // JSONL ingest: DuckDB reads the same generated bytes; its
+      // ignore_errors skips what PERMISSIVE nulls out, and the shared
+      // doc_id IS NOT NULL keeps the survivor sets identical
+      SqlFn(() => s"""SELECT doc_id, lang, source, n_chars, md5(text) AS text_md5
+        |FROM read_json('${BaseDir}/$oracleSfName/*.json',
+        |  format='newline_delimited', ignore_errors=true,
+        |  columns={doc_id: 'BIGINT', text: 'VARCHAR', lang: 'VARCHAR',
+        |           source: 'VARCHAR', n_chars: 'BIGINT'})
+        |WHERE doc_id IS NOT NULL
+        |ORDER BY doc_id""".stripMargin)),
+  )
 }

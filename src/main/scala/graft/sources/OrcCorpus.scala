@@ -4,6 +4,7 @@ import java.io.File
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.SparkEntry.{QueryDef, Sql}
 
 /** ORC corpus source — the second columnar format large warehouses
   * actually hold (Hive-era estates are ORC; a migration engine that
@@ -70,4 +71,31 @@ object OrcCorpus {
         expr("bit_xor(h)").as("content_xor"))
       .orderBy(col("lang"))
   }
+}
+
+/** The registered queries that call [[OrcCorpus]]: name, builder and oracle.
+  * A separate object, so that building the registry loads these lists
+  * and not the operator object, which loads when a query runs.
+  */
+object OrcCorpusQueries {
+  import OrcCorpus._
+
+  def queries: Seq[QueryDef] = Seq(
+    // ORC write→read round-trip reduced to an order-free content
+    // checksum (DuckDB reads no ORC; the oracle recomputes the
+    // checksum from the source-of-truth parquet)
+    QueryDef("docs_orc_roundtrip", (s, dir) => roundTrip(s, dir),
+      // ORC round-trip: DuckDB has no ORC reader, so the oracle computes
+      // the identical order-free reduction from the parquet documents
+      // table the files were generated from — counts, char totals, and
+      // a bit_xor content checksum over the corpus-standard md5 hash of
+      // every (doc_id|text); any dropped/dup/corrupt row flips it.
+      Sql("""SELECT lang, count(*) AS n_docs,
+        |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
+        |  bit_xor(CAST(CAST('0x' || substr(md5(
+        |      coalesce(CAST(doc_id AS VARCHAR), 'null') || '|'
+        |        || coalesce(text, 'null')), 1, 15) AS BIGINT) AS BIGINT))
+        |    AS content_xor
+        |FROM documents GROUP BY lang ORDER BY lang""")),
+  )
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.SparkEntry.{QueryDef, Sql}
 
 /** Event-time window operators over the `events` stream table. The
   * reference has no streaming surface at all (SURVEY.md §2.3) — this is
@@ -249,4 +250,144 @@ object EventsWindows {
       .groupBy(window(col("ts"), "1 hour").as("w"))
       .agg(approx_count_distinct(col("user_id"), rsd).as("uniques"))
       .select(col("w.start").as("win_start"), col("uniques"))
+}
+
+/** The registered queries that call [[EventsWindows]]: name, builder and oracle.
+  * A separate object, so that building the registry loads these lists
+  * and not the operator object, which loads when a query runs.
+  */
+object EventsWindowsQueries {
+  import EventsWindows._
+
+  def queries: Seq[QueryDef] = Seq(
+    QueryDef("w1_tumbling_window", tumbling(_, _),
+      Sql("""SELECT time_bucket(INTERVAL '1 hour', CAST(ts AS TIMESTAMP)) AS win_start,
+        |  event_type, count(*) AS n, sum(value) AS total
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""")),
+
+    QueryDef("w2_sliding_window", sliding(_, _),
+      Sql("""WITH e AS (SELECT CAST(ts AS TIMESTAMP) AS ts, event_type, value FROM events),
+        |x AS (
+        |  SELECT time_bucket(INTERVAL '30 minutes', ts) AS win_start, event_type, value FROM e
+        |  UNION ALL
+        |  SELECT time_bucket(INTERVAL '30 minutes', ts) - INTERVAL '30 minutes', event_type, value FROM e)
+        |SELECT win_start, event_type, count(*) AS n,
+        |  CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total
+        |FROM x GROUP BY 1, 2 ORDER BY 1, 2""")),
+
+    QueryDef("w3_session_window", sessions(_, _),
+      // Gaps-and-islands mirror of Spark session_window: break when the
+      // gap from the previous event is >= 5 minutes; session end is
+      // last event + gap.
+      Sql("""WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts FROM events),
+        |d AS (SELECT user_id, ts,
+        |    CASE WHEN lag(ts) OVER w IS NULL
+        |           OR ts - lag(ts) OVER w >= INTERVAL '5 minutes' THEN 1 ELSE 0 END AS brk
+        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
+        |g AS (SELECT user_id, ts,
+        |    sum(brk) OVER (PARTITION BY user_id ORDER BY ts
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
+        |  FROM d)
+        |SELECT user_id, min(ts) AS session_start,
+        |  max(ts) + INTERVAL '5 minutes' AS session_end,
+        |  count(*) AS n_events
+        |FROM g GROUP BY user_id, sid
+        |ORDER BY user_id, session_start""")),
+
+    // Batch mirror of watermarked dropDuplicates (keyed first event)
+    QueryDef("w4_first_event", firstEvents(_, _),
+      Sql("""WITH e AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id,
+        |    event_type, value FROM events),
+        |r AS (SELECT *, CAST(row_number() OVER (
+        |    PARTITION BY user_id, event_type ORDER BY ts, event_id) AS INT)
+        |      AS rn
+        |  FROM e)
+        |SELECT user_id, event_type, ts AS first_ts, event_id, value
+        |FROM r WHERE rn = 1 ORDER BY user_id, event_type""")),
+
+    // Batch mirror of the watermarked stream-stream interval join
+    QueryDef("w5_funnel_join", clickToPurchase(_, _),
+      Sql("""WITH e AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id,
+        |    event_type FROM events),
+        |c AS (SELECT user_id, event_id AS click_id, ts AS click_ts
+        |  FROM e WHERE event_type = 'click'),
+        |b AS (SELECT user_id AS b_user, event_id AS purchase_id,
+        |    ts AS purchase_ts
+        |  FROM e WHERE event_type = 'purchase')
+        |SELECT user_id, click_id, purchase_id, click_ts, purchase_ts
+        |FROM c JOIN b ON user_id = b_user
+        |  AND purchase_ts >= click_ts
+        |  AND purchase_ts < click_ts + INTERVAL '10 minutes'
+        |ORDER BY user_id, click_id, purchase_id""")),
+
+    // Windowed top-k (trending): streaming agg + rank over closed windows
+    QueryDef("w6_window_topk", windowTopK(_, _),
+      Sql("""WITH c AS (
+        |  SELECT time_bucket(INTERVAL '1 hour', CAST(ts AS TIMESTAMP)) AS win_start,
+        |    event_type, count(*) AS n
+        |  FROM events GROUP BY 1, 2),
+        |r AS (SELECT *, CAST(row_number() OVER (
+        |    PARTITION BY win_start ORDER BY n DESC, event_type) AS INT) AS rank
+        |  FROM c)
+        |SELECT win_start, rank, event_type, n FROM r
+        |WHERE rank <= 3 ORDER BY win_start, rank""")),
+
+    // Batch mirror of the watermarked LEFT OUTER stream-stream join:
+    // first purchase per click, null-extended abandonment rows
+    QueryDef("w7_click_attribution", clickAttribution(_, _),
+      Sql("""WITH e AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id,
+        |    event_type FROM events),
+        |c AS (SELECT user_id, event_id AS click_id, ts AS click_ts
+        |  FROM e WHERE event_type = 'click'),
+        |b AS (SELECT user_id AS b_user, event_id AS purchase_id,
+        |    ts AS purchase_ts
+        |  FROM e WHERE event_type = 'purchase'),
+        |j AS (SELECT c.user_id, c.click_id, c.click_ts,
+        |    b.purchase_id, b.purchase_ts
+        |  FROM c LEFT JOIN b ON c.user_id = b.b_user
+        |    AND b.purchase_ts >= c.click_ts
+        |    AND b.purchase_ts < c.click_ts + INTERVAL '10 minutes'),
+        |r AS (SELECT *, row_number() OVER (PARTITION BY click_id
+        |    ORDER BY purchase_ts, purchase_id) AS rn FROM j)
+        |SELECT user_id, click_id, click_ts, purchase_id, purchase_ts,
+        |  purchase_id IS NOT NULL AS converted
+        |FROM r WHERE rn = 1 ORDER BY user_id, click_id""")),
+
+    // Windowed unique visitors: exact batch truth; the streaming mirror
+    // is the HLL sketch form, error-gated vs this in StreamingSpec
+    QueryDef("w8_window_uniques", windowUniques(_, _),
+      Sql("""SELECT time_bucket(INTERVAL '1 hour', CAST(ts AS TIMESTAMP))
+        |    AS win_start,
+        |  count(DISTINCT user_id) AS uniques
+        |FROM events GROUP BY 1 ORDER BY 1""")),
+
+    // Multi-touch linear attribution: reverse interval join + equal
+    // split + drift-safe decimal hourly sums
+    QueryDef("w10_multi_touch", multiTouchAttribution(_, _),
+      // w7: within a click's rank partition either every purchase column
+      // is non-null or the single row is the null-extended one, so the
+      // rank-1 pick needs no explicit NULLS ordering on either engine.
+      // w10: the per-click credit is value / exact-int touch count (one
+      // IEEE divide), summed as DECIMAL(18,6) per hour — no merge-order
+      // drift (the q58 rule); presentation cast to double.
+      Sql("""WITH e AS (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id,
+        |    event_type, value FROM events
+        |  WHERE user_id IS NOT NULL AND ts IS NOT NULL),
+        |b AS (SELECT user_id, event_id AS purchase_id, ts AS p_ts, value
+        |  FROM e WHERE event_type = 'purchase' AND value IS NOT NULL),
+        |c AS (SELECT user_id AS c_user, event_id AS click_id, ts AS c_ts
+        |  FROM e WHERE event_type = 'click'),
+        |p AS (SELECT purchase_id, value, c_ts
+        |  FROM b JOIN c ON user_id = c_user
+        |    AND c_ts <= p_ts AND c_ts > p_ts - INTERVAL '30 minutes'),
+        |n AS (SELECT *, count(*) OVER (PARTITION BY purchase_id) AS n_touch
+        |  FROM p),
+        |cr AS (SELECT c_ts,
+        |    CAST(value / CAST(n_touch AS DOUBLE) AS DECIMAL(18,6)) AS credit
+        |  FROM n)
+        |SELECT date_trunc('hour', c_ts) AS click_hour,
+        |  count(*) AS n_touches,
+        |  CAST(sum(credit) AS DOUBLE) AS attributed_revenue
+        |FROM cr GROUP BY 1 ORDER BY 1""")),
+  )
 }

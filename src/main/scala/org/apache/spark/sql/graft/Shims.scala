@@ -33,6 +33,33 @@ object Shims {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** The schema `spark.read.parquet(path)` would infer, read from the
+    * file's footer on the driver — Spark infers it with a one-task job
+    * (`mergeSchemasInParallel`) that ships the Hadoop conf to read this
+    * same footer. None when `path` is not one existing file; the
+    * caller then keeps Spark's own read (and its errors).
+    */
+  def parquetFileSchema(spark: org.apache.spark.sql.SparkSession,
+      path: String): Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+      ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+    val conf = state.newHadoopConf()
+    val p = new Path(path)
+    val status = try Some(p.getFileSystem(conf).getFileStatus(p))
+      catch { case _: java.io.FileNotFoundException => None }
+    status.filter(_.isFile).map { st =>
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(st, conf), SKIP_ROW_GROUPS)
+      ParquetFileFormat.readSchemaFromFooter(new Footer(st.getPath, footer),
+        new ParquetToSparkSchemaConverter(state.conf))
+    }
+  }
+
   /** Drain the SparkListener bus (`listenerBus` is private[spark]) so a
     * spec can deterministically assert how many jobs an operation
     * scheduled — listener events are posted asynchronously.
